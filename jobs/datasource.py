@@ -450,19 +450,16 @@ class OrcEnginePushdownReader(OrcEngineReader):
 
 def _resolve_range(partition: OrcRangePartition,
                    filters: list[tuple]) -> OrcInputPartition:
-    """Task-side half of distributed planning: read the ~KB tail,
-    claim the stripes whose offset lies in [start, end), drop the
-    statistics-precluded ones (the same stripes_matching tier the
-    driver-side planner applies), and hand the equivalent stripe
-    split (plus the parsed tail, so the decode reads it once) to
-    _read_split."""
-    from engine.orc_read import read_orc_tail, stripes_matching
+    """Task-side half of distributed planning: read the ~KB tail and
+    claim the range's statistics-surviving stripes with
+    jobs.orc_read.claim_stripes (the one stripe claim read_orc_dir's
+    byte ranges use too), handing the equivalent stripe split (plus
+    the parsed tail, so the decode reads it once) to _read_split."""
+    from engine.orc_read import read_orc_tail
+    from jobs.orc_read import claim_stripes
     info = read_orc_tail(partition.path)
-    keep = set(stripes_matching(info, filters or None))
-    stripes = tuple(
-        i for i, si in enumerate(info.stripes)
-        if i in keep and partition.start <= si[1] < partition.end)
-    return OrcInputPartition(partition.path, stripes), info
+    stripes = claim_stripes(info, partition.start, partition.end, filters)
+    return OrcInputPartition(partition.path, tuple(stripes)), info
 
 
 def _read_split(partition: OrcInputPartition, schema: StructType,

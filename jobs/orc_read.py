@@ -1,20 +1,23 @@
 """Distributed ORC file ingestion (SURVEY.md §2.5 M6 as a *file*
 surface, the read twin of jobs/orc_write.py).
 
-Two-stage plan, nothing funnels through the driver:
+One narrow Spark stage, no shuffle, nothing funnels through the driver:
 
-1. **Plan** — the file list is parallelized and each task range-reads
-   only the ~KB file tails (engine.orc_read.read_orc_tail), emitting
-   one split row per stripe ``(path, stripe, n_rows)``. The driver
-   opens exactly ONE tail, to learn the schema. At 100 TB this is the
-   shape that matters: a million-file listing costs the cluster a
-   million tail reads (KBs each), not a million whole-file reads, and
-   no per-file work happens on the driver.
-2. **Decode** — splits are spread round-robin across the target
-   parallelism; each task groups its splits by file and range-reads
-   just those stripes' bytes (engine.orc_read.read_orc_stripes), so a
-   file split 100 ways costs each task 1/100th of its bytes. Column
-   projection skips unprojected streams entirely (never inflated).
+1. **Cut** — the driver cuts each file into equal byte ranges from
+   its size alone (``byte_ranges``: a file gets a share of
+   ``parallelism`` proportional to its bytes, at least one range) and
+   deals the ranges round-robin to the decode tasks. It opens exactly
+   ONE tail, to learn the schema. At 100 TB this is the shape that
+   matters: a million-file listing costs the driver a million
+   ``os.stat`` calls, not a million tail reads.
+2. **Claim and decode** — each task reads its file's ~KB tail once
+   (engine.orc_read.read_orc_tail), claims the stripes whose offset
+   lies in its range and that the statistics may match
+   (``claim_stripes``, the same claim the orcx range partitions use),
+   and range-reads just those stripes' bytes
+   (engine.orc_read.read_orc_stripes), so one file cut 100 ways costs
+   each task 1/100th of its bytes. Column projection skips
+   unprojected streams entirely (never inflated).
 
 The decoders are this engine's vectorized codecs, so files written by
 ORC C++ (pyarrow), orc-core Java (spark.write.orc), or
@@ -196,37 +199,89 @@ def merged_orc_schema(files: list[str],
     return pa.schema(list(fields.items()))
 
 
+def byte_ranges(sizes: list[int],
+                parallelism: int) -> list[tuple[int, int, int]]:
+    """Cut files of ``sizes`` bytes into ``(file index, start, stop)``
+    byte ranges from their sizes alone: a file gets
+    ``max(1, round(size * parallelism / total))`` equal ranges, so N
+    equal files with N >= parallelism get one range each and one big
+    file gets ``parallelism``. The ranges of a file tile [0, size)."""
+    total = sum(sizes) or 1
+    out = []
+    for f, size in enumerate(sizes):
+        n = max(1, round(size * parallelism / total))
+        out += [(f, size * k // n, size * (k + 1) // n) for k in range(n)]
+    return out
+
+
+def claim_stripes(info, start: int, stop: int,
+                  filters: list[tuple] | None = None) -> list[int]:
+    """The stripes the byte range [start, stop) of a file owns: those
+    whose StripeInformation.offset lies in it (the parquet/Hive split
+    convention, so ranges that tile a file claim each stripe exactly
+    once), less the ones its statistics preclude
+    (engine.orc_read.stripes_matching — pruned stripes cost ZERO
+    stripe-byte reads; a file without statistics keeps all)."""
+    from engine.orc_read import stripes_matching
+    return [i for i in stripes_matching(info, filters)
+            if start <= info.stripes[i][1] < stop]
+
+
+def _range_frame(spark: SparkSession, files: list[str],
+                 parallelism: int) -> DataFrame:
+    """The files' byte ranges as ``(path, start, stop)`` rows of a
+    local relation: no shuffle and no Python pass before the decode.
+    Spark scans local rows in contiguous slices, one row per task up
+    to its leaf parallelism; past that, the rows are dealt round-robin
+    first, so a big file's consecutive ranges still land in different
+    tasks."""
+    ranges = byte_ranges([os.path.getsize(p) for p in files], parallelism)
+    n = max(1, min(len(ranges), parallelism))
+    dealt = [r for t in range(n) for r in ranges[t::n]]
+    return spark.createDataFrame(pa.table(
+        {"path": pa.array([files[f] for f, _, _ in dealt], pa.string()),
+         "start": pa.array([a for _, a, _ in dealt], pa.int64()),
+         "stop": pa.array([b for _, _, b in dealt], pa.int64())}))
+
+
+def _claimed(batches, filters: list[tuple] | None):
+    """Task side of the range plan: for each file of the task's
+    ranges, ``(path, tail, claimed stripes)`` — one tail read per file,
+    however many of its ranges the task holds."""
+    from engine.orc_read import read_orc_tail
+    spans: dict[str, list[tuple[int, int]]] = {}
+    for batch in batches:
+        for p, a, b in zip(*(c.to_pylist() for c in batch.columns)):
+            spans.setdefault(p, []).append((a, b))
+    for p, rs in spans.items():
+        info = read_orc_tail(p)
+        yield p, info, sorted(i for a, b in rs
+                              for i in claim_stripes(info, a, b, filters))
+
+
 def plan_orc_splits(spark: SparkSession, files: list[str],
                     filters: list[tuple] | None = None) -> DataFrame:
-    """Stage 1: distributed tail reads -> one row per stripe that MAY
-    match ``filters`` (see engine.orc_read.stripes_matching — pruning
-    happens against the per-stripe statistics in each file's Metadata
-    section, so pruned stripes cost ZERO stripe-byte reads; a file
-    without statistics keeps all its stripes). The lazy result is
-    safe to cache/checkpoint as a scan manifest."""
-    paths = spark.createDataFrame([(f,) for f in files], "path string")
-    n_plan = max(1, min(len(files), spark.sparkContext.defaultParallelism))
-
+    """One row per stripe that MAY match ``filters``, from tail reads
+    in the tasks on the same byte ranges read_orc_dir decodes
+    (``claim_stripes``). The lazy result is safe to cache/checkpoint
+    as a scan manifest."""
     def tails(batches):
         import pyarrow as pa
+        for p, info, keep in _claimed(batches, filters):
+            # type= matters: for a fully-pruned file keep == [] and
+            # an untyped pa.array([]) infers null type, producing a
+            # batch whose schema differs from sibling batches
+            # (ArrowInvalid at the mapInArrow writer)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([p] * len(keep), type=pa.string()),
+                 pa.array(keep, type=pa.int64()),
+                 pa.array([info.stripes[i][5] for i in keep],
+                          type=pa.int64())],
+                names=["path", "stripe", "n_rows"])
 
-        from engine.orc_read import read_orc_tail, stripes_matching
-        for batch in batches:
-            for p in batch.column("path").to_pylist():
-                info = read_orc_tail(p)
-                keep = stripes_matching(info, filters)
-                # type= matters: for a fully-pruned file keep == [] and
-                # an untyped pa.array([]) infers null type, producing a
-                # batch whose schema differs from sibling batches
-                # (ArrowInvalid at the mapInArrow writer)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([p] * len(keep), type=pa.string()),
-                     pa.array(keep, type=pa.int64()),
-                     pa.array([info.stripes[i][5] for i in keep],
-                              type=pa.int64())],
-                    names=["path", "stripe", "n_rows"])
-
-    return paths.repartition(n_plan).mapInArrow(tails, SPLIT_DDL)
+    return _range_frame(spark, files,
+                        spark.sparkContext.defaultParallelism
+                        ).mapInArrow(tails, SPLIT_DDL)
 
 
 def read_orc_dir_stats(spark: SparkSession, path: str,
@@ -374,9 +429,18 @@ def read_orc_dir(spark: SparkSession, path: str,
     job above 64 files, so the driver never fans a huge listing
     through threads.
 
+    ``parallelism``: about how many byte ranges to cut the files into
+    (default: the context's defaultParallelism), in proportion to
+    their sizes and at least one per file (``byte_ranges``). Each
+    range decodes in one task — one task per file when there are at
+    least this many equal files, ``parallelism`` tasks sharing the
+    stripes of a single big file — up to Spark's leaf parallelism
+    (``spark.sql.leafNodeDefaultParallelism``, default
+    defaultParallelism), past which a task takes several ranges.
+
     ``filters``: [(column, op, literal)] conjunction pushed down in
-    THREE tiers — planning drops statistics-precluded stripes before
-    any stripe byte is read (engine.orc_read.stripes_matching); each
+    THREE tiers — each task drops the statistics-precluded stripes of
+    its range before any stripe byte is read (claim_stripes); each
     decode task then drops statistics-precluded ROW GROUPS inside its
     stripes and seeks directly to the survivors via the ROW_INDEX
     positions (engine.orc_read.row_groups_matching); finally the same
@@ -418,19 +482,15 @@ def read_orc_dir(spark: SparkSession, path: str,
     target = to_arrow_schema(spark_schema)
     names = arrow_schema.names
 
-    splits = plan_orc_splits(spark, files, filters)
     n_dec = parallelism or spark.sparkContext.defaultParallelism
 
     def decode(batches):
         import pyarrow as pa
 
-        from engine.orc_read import read_orc_stripes, read_orc_tail
-        by_path: dict[str, list[int]] = {}
-        for batch in batches:
-            for row in batch.to_pylist():
-                by_path.setdefault(row["path"], []).append(row["stripe"])
-        for p, stripes in sorted(by_path.items()):
-            info = read_orc_tail(p)
+        from engine.orc_read import read_orc_stripes
+        for p, info, stripes in _claimed(batches, filters):
+            if not stripes:
+                continue
             got = info.types[0].field_names
             absent = [c for c in names if c not in got]
             if absent and not allow_missing_columns:
@@ -438,7 +498,7 @@ def read_orc_dir(spark: SparkSession, path: str,
                     f"{p}: ORC schema {got} lacks projected {names}; "
                     "pass allow_missing_columns=True to null-fill "
                     "columns this file predates")
-            tbl = read_orc_stripes(p, sorted(stripes),
+            tbl = read_orc_stripes(p, stripes,
                                    columns=[c for c in names
                                             if c not in absent],
                                    convention=convention, info=info,
@@ -451,7 +511,7 @@ def read_orc_dir(spark: SparkSession, path: str,
                     pa.nulls(len(tbl), target.field(c).type))
             yield from tbl.select(names).cast(target).to_batches()
 
-    out = splits.repartition(n_dec).mapInArrow(decode, spark_schema)
+    out = _range_frame(spark, files, n_dec).mapInArrow(decode, spark_schema)
     if filters:
         out = out.where(_filter_column(filters))
     if out_columns is not None and out_columns != columns:

@@ -338,6 +338,31 @@ def test_distributed_read_of_own_writer(spark):
     assert a.equals(b)
 
 
+def test_read_plan_is_one_stage_spread_over_ranges(spark, tmp_path):
+    """read_orc_dir plans inside the decode tasks: the executed plan
+    has no shuffle, and one multi-stripe file read at parallelism=4
+    is cut into byte ranges whose stripes decode in several tasks."""
+    from pyspark.sql import functions as F
+
+    from jobs.orc_read import read_orc_dir
+    n = 40_000
+    x = RNG.integers(-10 ** 12, 10 ** 12, n)
+    write_orc(pa.table({"x": pa.array(x, type=pa.int64())}),
+              str(tmp_path / "one.orc"), stripe_rows=2000)
+    assert len(read_orc_tail(str(tmp_path / "one.orc")).stripes) == 20
+    df = read_orc_dir(spark, str(tmp_path), parallelism=4)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    parts = df.select(F.spark_partition_id().alias("p"), "x").collect()
+    assert sorted(r["x"] for r in parts) == sorted(x.tolist())
+    assert len({r["p"] for r in parts}) >= 2
+    got = read_orc_dir(spark, str(tmp_path), parallelism=4,
+                       filters=[("x", ">=", 0)])
+    assert "Exchange" not in \
+        got._jdf.queryExecution().executedPlan().toString()
+    assert got.count() == int((x >= 0).sum())
+
+
 # --- row-group seek + pruning via ROW_INDEX ------------------------------
 
 

@@ -180,3 +180,31 @@ def test_concat_equals_whole_property(chunks, stripe_rows):
         for p in paths:
             if os.path.exists(p):
                 os.unlink(p)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.tuples(st.integers(4, 10 ** 7),
+                          st.lists(st.integers(0, 10 ** 7), max_size=40)),
+                min_size=1, max_size=12),
+       st.integers(1, 64))
+def test_byte_ranges_claim_each_stripe_once_property(files, parallelism):
+    """jobs.orc_read's range plan without Spark: every file is cut into
+    max(1, round(size * parallelism / total)) ranges tiling [0, size),
+    and every stripe (offset past the 3-byte magic, below the size) is
+    claimed by exactly one of its file's ranges."""
+    from types import SimpleNamespace
+
+    from jobs.orc_read import byte_ranges, claim_stripes
+
+    sizes = [size for size, _ in files]
+    ranges = byte_ranges(sizes, parallelism)
+    total = sum(sizes)
+    for f, (size, raw) in enumerate(files):
+        mine = [(a, b) for g, a, b in ranges if g == f]
+        assert len(mine) == max(1, round(size * parallelism / total))
+        assert mine[0][0] == 0 and mine[-1][1] == size
+        assert all(r[1] == s[0] for r, s in zip(mine, mine[1:]))
+        offsets = sorted({3 + o % (size - 3) for o in raw})
+        info = SimpleNamespace(stripes=[{1: o} for o in offsets])
+        claimed = [i for a, b in mine for i in claim_stripes(info, a, b)]
+        assert sorted(claimed) == list(range(len(offsets)))

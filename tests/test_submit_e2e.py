@@ -28,7 +28,10 @@ def _spark_submit() -> str | None:
     exe = shutil.which("spark-submit")
     if exe:
         return exe
-    import pyspark
+    try:
+        import pyspark
+    except ImportError:
+        return None
     cand = os.path.join(os.path.dirname(pyspark.__file__), "bin",
                         "spark-submit")
     return cand if os.path.exists(cand) else None
@@ -52,8 +55,10 @@ def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
     cwd.mkdir()
     script = str(tmp_path / "submit_main.py")
     shutil.copyfile(os.path.join(repo, "jobs", "submit.py"), script)
+    # SPARK_HOME/SPARK_CONF_DIR could inject local spark-defaults or
+    # python paths; the pyspark-bundled spark-submit resolves its own
     env = {k: v for k, v in os.environ.items()
-           if k not in ("PYTHONPATH",)}
+           if k not in ("PYTHONPATH", "SPARK_HOME", "SPARK_CONF_DIR")}
     env["ARROW_DEFAULT_MEMORY_POOL"] = "system"
     env["PYSPARK_PYTHON"] = sys.executable
     env["PYSPARK_DRIVER_PYTHON"] = sys.executable

@@ -992,7 +992,7 @@ def _q_skew_spread(spark, sf_dir):
 
 def _q_lineage_stats(spark, sf_dir):
     """§2.6 lineage manifest, fully oracle-checked: runs the REAL
-    encode job (one shuffle -> mapInArrow -> parquet append + manifest
+    encode job (one shuffle -> mapInArrow part-files + manifest
     commit, jobs/encode.py) with the portable salt, then returns each
     committed partition's lineage (n_rows, n_values) from the manifest
     JSON. The oracle recomputes the whole partition assignment —

@@ -1,14 +1,17 @@
 """Distributed encode job (SURVEY.md §3.3): token table -> blocks table.
 
 Pipeline (all custom logic lives inside the Arrow kernel; the Spark
-layer is scan -> one shuffle -> mapInArrow -> sink):
+layer is scan -> one shuffle -> mapInArrow -> collect, ONE write job):
 
     spark.read.parquet(input)
       -> plan_partitions: token-weighted range buckets on n_tok,
          heavy values subdivided by a doc_id salt       # skew defusal
       -> broadcast-join bucket map + repartition(pid)   # ONE shuffle
-      -> mapInArrow(encode_kernel, BLOCKS_DDL)          # engine/blocks.py
-      -> parquet append + manifest commit               # jobs/table_io.py
+      -> mapInArrow(encode_kernel, PARTS_DDL)           # engine/blocks.py
+         each task streams its blocks into
+         data/part-<part_id>.parquet and yields ONE
+         lineage row                                    # table_io.write_part
+      -> collect() the lineage rows + manifest commit   # jobs/table_io.py
 
 Skew story at 10^12 rows: Spark's own RangePartitioner balances ROW
 counts with a nondeterministic sample seed — wrong on both axes here
@@ -32,10 +35,13 @@ F-MAIN). Same single-shuffle plan, same balance bound, deterministic
 for a fixed snapshot + scan config.
 
 Resumability: the kernel consults the manifest's committed part ids
-(broadcast) and emits nothing for finished partitions; a crashed run's
-superseded blocks are deduplicated on read by (part_id, block_id,
-attempt). Block ids are pure functions of (part_id, block index) — no
-wall clock, no RNG anywhere in the path.
+(broadcast) and writes nothing for finished partitions. A part's file
+name is a pure function of its part id and is published atomically, so
+a retried, speculative or re-run task overwrites its own file; the
+table is exactly the files the committed parts list, so a crashed
+run's uncommitted files are never read and no read needs to
+deduplicate. Block ids are pure functions of (part_id, block index) —
+no wall clock, no RNG anywhere in the path.
 """
 
 from __future__ import annotations
@@ -145,18 +151,51 @@ def portable_salt(col: str = "doc_id"):
     return (d[0] * 16 + d[1]).cast("int")
 
 
-def _kernel(skip_parts: set[int], block_rows: int, attempt: int,
-            codec: str = "none"):
+# one lineage row per written part: what the manifest commits
+PARTS_DDL = ("part_id bigint, file string, n_rows bigint, "
+             "n_values bigint, n_blocks bigint, out_bytes bigint, "
+             "in_bytes bigint, wall_ms double")
+
+
+def _kernel(out_path: str, block_rows: int, attempt: int,
+            codec: str = "none", skip_parts=frozenset(),
+            epoch: int | None = None):
+    """mapInArrow kernel: encode the task's partition into blocks,
+    stream them into the part's file (table_io.write_part) and yield
+    its lineage row (PARTS_DDL). ``epoch`` (streaming) makes the part
+    id ``(epoch << 16) | partition``."""
     def encode_kernel(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
         part = TaskContext.get().partitionId()
         if part in skip_parts:
             return
+        if epoch is not None:
+            part = (epoch << 16) | part
         drop = ("salt", "pid", "_ord")
         clean = (b.drop_columns([c for c in drop if c in b.schema.names])
                  for b in batches)
-        yield from encode_batches(clean, part_id=part,
-                                  block_rows=block_rows, attempt=attempt,
-                                  codec=codec)
+        sums = {"n_rows": 0, "n_values": 0, "n_blocks": 0,
+                "out_bytes": 0, "in_bytes": 0, "wall_ms": 0.0}
+
+        def tally(blocks):
+            for b in blocks:
+                lin = b.column("lineage")
+                for k, col in (("n_rows", b.column("n_rows")),
+                               ("n_values", b.column("n_values")),
+                               ("out_bytes", lin.field("out_bytes")),
+                               ("in_bytes", lin.field("in_bytes")),
+                               ("wall_ms", lin.field("wall_ms"))):
+                    sums[k] += pc.sum(col).as_py()
+                sums["n_blocks"] += b.num_rows
+                yield b
+
+        file = table_io.write_part(out_path, part, tally(encode_batches(
+            clean, part_id=part, block_rows=block_rows, attempt=attempt,
+            codec=codec)))
+        if file is not None:
+            yield pa.RecordBatch.from_pylist(
+                [{"part_id": part, "file": file} | sums])
     return encode_kernel
 
 
@@ -170,8 +209,9 @@ def encode_table(spark: SparkSession, df: DataFrame, out_path: str,
     """Run the encode pipeline; returns a metrics dict.
 
     ``df`` must have the input_hint schema (doc_id, tokens, n_tok,
-    source). Appends block rows to ``out_path`` and commits finished
-    partitions to the manifest.
+    source). Each encode task writes its partition's part-file under
+    ``out_path`` and the driver commits the tasks' lineage rows to the
+    manifest: one Spark job after planning, no sink and no re-read.
 
     Partition strategies (both token-weighted, both deterministic):
     - ``ntok_range`` (default): range buckets on n_tok with doc_id
@@ -190,8 +230,6 @@ def encode_table(spark: SparkSession, df: DataFrame, out_path: str,
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
 
-    import os
-    fresh = not os.path.isdir(table_io.data_dir(out_path))
     done = table_io.committed_parts(out_path) if resume else {}
     skip = set(done)
     if attempt is None:
@@ -264,37 +302,10 @@ def encode_table(spark: SparkSession, df: DataFrame, out_path: str,
         # bits/token on F-MAIN
         parted = (salted.repartition(num_partitions, "pid")
                   .sortWithinPartitions("pid", "n_tok", "doc_id"))
-    blocks = parted.mapInArrow(
-        _kernel(skip, block_rows, attempt, codec), BLOCKS_DDL)
-
-    ddir = table_io.data_dir(out_path)
-    # the block payloads are already codec-wrapped; parquet-level
-    # recompression would only burn CPU on incompressible bytes (at
-    # the sink AND at every subsequent scan)
-    blocks.write.mode("append").option("compression", "uncompressed") \
-        .parquet(ddir)
-
-    # gather per-part lineage from what was just written and commit;
-    # read deduplicated (a crashed run may have left superseded blocks);
-    # a dir we just created cannot hold superseded blocks -> plain scan
-    written = spark.read.parquet(ddir) if fresh \
-        else read_blocks(spark, out_path)
-    agg = (written
-           .where(~F.col("part_id").isin(list(skip)) if skip else F.lit(True))
-           .groupBy("part_id")
-           .agg(F.sum("n_rows").alias("n_rows"),
-                F.sum("n_values").alias("n_values"),
-                F.count("*").alias("n_blocks"),
-                F.sum("lineage.out_bytes").alias("out_bytes"),
-                F.sum("lineage.in_bytes").alias("in_bytes"),
-                F.sum("lineage.wall_ms").alias("wall_ms"))
-           ).collect()
-    parts = [{k: (int(r[k]) if r[k] is not None else 0)
-              for k in ("part_id", "n_rows", "n_values", "n_blocks",
-                        "out_bytes", "in_bytes")}
-             | {"wall_ms": float(r["wall_ms"] or 0.0)}
-             for r in agg]
-    new_parts = [p for p in parts if p["part_id"] not in skip]
+    kernel = _kernel(out_path, block_rows, attempt, codec, skip)
+    new_parts = sorted((r.asDict() for r in
+                        parted.mapInArrow(kernel, PARTS_DDL).collect()),
+                       key=lambda p: p["part_id"])
     if new_parts:
         table_io.commit(out_path, new_parts,
                         {"num_partitions": num_partitions,
@@ -312,23 +323,15 @@ def encode_table(spark: SparkSession, df: DataFrame, out_path: str,
 
 
 def read_blocks(spark: SparkSession, out_path: str) -> DataFrame:
-    """Blocks table, deduplicated: a crashed run can leave superseded
-    block rows for partitions that were later re-encoded; keep the
-    newest attempt per (part_id, block_id). Encode is deterministic so
-    duplicates are byte-identical anyway — this guards row counts.
-
-    The duplicate probe reads only two pruned metadata columns (a tiny
-    map-side-combined agg); the full-table window shuffle runs ONLY
-    when a crash actually left duplicates, so the normal read path is
-    a plain scan — at 10^12 rows the probe touches ~0.01% of the bytes.
-    """
-    raw = spark.read.parquet(table_io.data_dir(out_path))
-    dups = (raw.groupBy("part_id", "block_id").count()
-            .where(F.col("count") > 1).limit(1).count())
-    if dups == 0:
-        return raw
-    from pyspark.sql import Window
-    w = Window.partitionBy("part_id", "block_id") \
-        .orderBy(F.col("lineage.attempt").desc())
-    return (raw.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1).drop("_rn"))
+    """The blocks table: exactly the files its committed parts list
+    (table_io.part_files), or an empty frame when nothing is committed.
+    A file no commit lists (a crashed run's, a stray copy) is never
+    read, and a re-encoded part overwrote its own file, so no block
+    appears twice and building the frame runs no Spark job (up to
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` files,
+    32 by default, Spark stats them on the driver; past that it lists
+    them in a job)."""
+    files = table_io.part_files(out_path)
+    if not files:
+        return spark.createDataFrame([], BLOCKS_DDL)
+    return spark.read.schema(BLOCKS_DDL).parquet(*files)

@@ -147,32 +147,11 @@ def merged_orc_schema(files: list[str],
     to int64, float to double; orc-core ConvertTreeReader semantics).
     Field order is first-seen. Probing reads only the ~KB tails:
     threaded driver-side below ``distributed_threshold`` files, as a
-    one-stage Spark job above it (one tail read per task row, tiny
-    serialized schemas back to the driver) so a million-file listing
-    never serializes through driver threads."""
+    one-stage Spark job above it (``_tail_schemas``) so a million-file
+    listing never serializes through driver threads."""
     from engine.orc_read import read_orc_tail
     if spark is not None and len(files) > distributed_threshold:
-        paths = spark.createDataFrame([(f,) for f in files],
-                                      "path string")
-        n_plan = max(1, min(len(files),
-                            spark.sparkContext.defaultParallelism))
-
-        def tails(batches):
-            import pyarrow as pa
-
-            from engine.orc_read import read_orc_tail
-            for batch in batches:
-                for p in batch.column("path").to_pylist():
-                    buf = read_orc_tail(p).schema().serialize()
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array([p], type=pa.large_string()),
-                         pa.array([buf.to_pybytes()],
-                                  type=pa.large_binary())],
-                        names=["path", "schema"])
-
-        rows = (paths.repartition(n_plan)
-                .mapInArrow(tails, "path string, schema binary")
-                .collect())
+        rows = _tail_schemas(spark, files).collect()
         # collect() order follows task/partition order, not the file
         # listing: re-sort by the input list so "first-seen" field
         # order (and thus the merged schema) is deterministic
@@ -227,21 +206,57 @@ def claim_stripes(info, start: int, stop: int,
             if start <= info.stripes[i][1] < stop]
 
 
+def _dealt_frame(spark: SparkSession, table: pa.Table,
+                 parallelism: int) -> DataFrame:
+    """``table``'s rows as a local relation: no shuffle and no Python
+    pass before the task kernel. Spark scans local rows in contiguous
+    slices, one row per task up to its leaf parallelism; past that,
+    the rows are dealt round-robin over ``parallelism`` slices first,
+    so consecutive rows (a big file's ranges, a listing's neighbours)
+    still land in different tasks."""
+    n = max(1, min(table.num_rows, parallelism))
+    return spark.createDataFrame(table.take(
+        [i for t in range(n) for i in range(t, table.num_rows, n)]))
+
+
 def _range_frame(spark: SparkSession, files: list[str],
                  parallelism: int) -> DataFrame:
     """The files' byte ranges as ``(path, start, stop)`` rows of a
-    local relation: no shuffle and no Python pass before the decode.
-    Spark scans local rows in contiguous slices, one row per task up
-    to its leaf parallelism; past that, the rows are dealt round-robin
-    first, so a big file's consecutive ranges still land in different
-    tasks."""
+    dealt local relation (``_dealt_frame``)."""
     ranges = byte_ranges([os.path.getsize(p) for p in files], parallelism)
-    n = max(1, min(len(ranges), parallelism))
-    dealt = [r for t in range(n) for r in ranges[t::n]]
-    return spark.createDataFrame(pa.table(
-        {"path": pa.array([files[f] for f, _, _ in dealt], pa.string()),
-         "start": pa.array([a for _, a, _ in dealt], pa.int64()),
-         "stop": pa.array([b for _, _, b in dealt], pa.int64())}))
+    return _dealt_frame(spark, pa.table(
+        {"path": pa.array([files[f] for f, _, _ in ranges], pa.string()),
+         "start": pa.array([a for _, a, _ in ranges], pa.int64()),
+         "stop": pa.array([b for _, _, b in ranges], pa.int64())}),
+        parallelism)
+
+
+def _path_frame(spark: SparkSession, files: list[str]) -> DataFrame:
+    """One ``path`` row per file, dealt over the default parallelism:
+    the input of the tail-only jobs."""
+    return _dealt_frame(spark, pa.table({"path": pa.array(files,
+                                                          pa.string())}),
+                        spark.sparkContext.defaultParallelism)
+
+
+def _tail_schemas(spark: SparkSession, files: list[str]) -> DataFrame:
+    """``(path, schema)`` rows, one tail read per file in the tasks:
+    each file's Arrow schema, IPC-serialized, for merged_orc_schema."""
+    def tails(batches):
+        import pyarrow as pa
+
+        from engine.orc_read import read_orc_tail
+        for batch in batches:
+            for p in batch.column("path").to_pylist():
+                buf = read_orc_tail(p).schema().serialize()
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array([p], type=pa.large_string()),
+                     pa.array([buf.to_pybytes()],
+                              type=pa.large_binary())],
+                    names=["path", "schema"])
+
+    return _path_frame(spark, files).mapInArrow(
+        tails, "path string, schema binary")
 
 
 def _claimed(batches, filters: list[tuple] | None):
@@ -347,8 +362,6 @@ def read_orc_dir_stats(spark: SparkSession, path: str,
     ddl = ", ".join(
         f"{f.name} {from_arrow_schema(pa.schema([f]))[0].dataType.simpleString()}"
         for f in out_schema)
-    paths = spark.createDataFrame([(f,) for f in files], "path string")
-    n_plan = max(1, min(len(files), spark.sparkContext.defaultParallelism))
 
     def tails(batches):
         import pyarrow as pa
@@ -397,7 +410,7 @@ def read_orc_dir_stats(spark: SparkSession, path: str,
                 yield pa.RecordBatch.from_arrays(
                     arrs, schema=out_schema)
 
-    return paths.repartition(n_plan).mapInArrow(tails, ddl)
+    return _path_frame(spark, files).mapInArrow(tails, ddl)
 
 
 def read_orc_dir(spark: SparkSession, path: str,

@@ -3,36 +3,27 @@ rows arriving as parquet files into the blocks table.
 
 The reference is a batch storage library with no streaming surface, so
 this is engine-side capability (like pipeline/): a file-source
-``readStream`` feeding the SAME deterministic encode pipeline through
-``foreachBatch`` — each micro-batch appends blocks with
-``part_id = (stream epoch << 16) | shuffle partition`` so block ids
-stay unique and lineage records the epoch (part_id is int64 in
-BLOCKS_SCHEMA, so epochs far beyond 2^31 are safe). Exactly-once at the block
-level comes from the Spark checkpoint (epoch replays overwrite the
-same deterministic block ids and the reader deduplicates by
-(part_id, block_id, attempt) — jobs/encode.read_blocks).
+``readStream`` feeding the SAME per-part encode kernel as
+jobs/encode.py through ``foreachBatch``. Each micro-batch's tasks
+write their own part-files with
+``part_id = (stream epoch << 16) | shuffle partition`` (part_id is
+int64 in BLOCKS_SCHEMA, so epochs far beyond 2^31 are safe), and the
+sink commits those parts, each tagged with its epoch.
+
+Exactly-once without read-time deduplication: a part's file name is a
+pure function of its part id, so an epoch Spark replays after a crash
+before its commit overwrites the same files atomically, and an epoch
+whose parts are already committed returns before writing anything.
+Readers see only committed parts (jobs/encode.read_blocks).
 """
 
 from __future__ import annotations
 
-from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from engine.blocks import BLOCKS_DDL, DEFAULT_BLOCK_ROWS, encode_batches
+from engine.blocks import DEFAULT_BLOCK_ROWS
 from jobs import table_io
-from jobs.encode import SALT_BUCKETS
-
-
-def _epoch_kernel(epoch: int, block_rows: int, codec: str):
-    def kernel(batches):
-        part = TaskContext.get().partitionId()
-        clean = (b.drop_columns([c for c in ("salt", "pid")
-                                 if c in b.schema.names]) for b in batches)
-        yield from encode_batches(clean,
-                                  part_id=(epoch << 16) | part,
-                                  block_rows=block_rows, attempt=0,
-                                  codec=codec)
-    return kernel
+from jobs.encode import PARTS_DDL, SALT_BUCKETS, _kernel
 
 
 def start_streaming_encode(spark: SparkSession, input_dir: str,
@@ -42,25 +33,25 @@ def start_streaming_encode(spark: SparkSession, input_dir: str,
                            num_partitions: int = 4,
                            trigger_once: bool = False):
     """Start the streaming encode query; returns the StreamingQuery."""
-    from engine.blocks import TOKEN_SCHEMA  # noqa: F401 (doc)
-
     stream = (spark.readStream
               .schema("doc_id string, tokens array<int>, n_tok int, "
                       "source string")
               .parquet(input_dir))
 
-    ddir = table_io.data_dir(out_path)
-
     def sink(df: DataFrame, epoch: int) -> None:
+        done = table_io.committed_parts(out_path).values()
+        if any(p.get("epoch") == epoch for p in done):
+            return
         salted = df.withColumn(
             "pid", F.pmod(F.xxhash64("doc_id"), F.lit(SALT_BUCKETS)))
-        blocks = (salted.repartition(num_partitions, "pid")
-                  .mapInArrow(_epoch_kernel(epoch, block_rows, codec),
-                              BLOCKS_DDL))
-        blocks.write.mode("append") \
-            .option("compression", "uncompressed").parquet(ddir)
-        table_io.commit(out_path, [{"part_id": -1, "epoch": int(epoch)}],
-                        {"streaming": True})
+        rows = (salted.repartition(num_partitions, "pid")
+                .mapInArrow(_kernel(out_path, block_rows, 0, codec,
+                                    epoch=epoch), PARTS_DDL)
+                .collect())
+        if rows:
+            table_io.commit(out_path,
+                            [r.asDict() | {"epoch": epoch} for r in rows],
+                            {"streaming": True, "epoch": epoch})
 
     writer = (stream.writeStream
               .option("checkpointLocation", checkpoint_dir)

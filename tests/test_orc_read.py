@@ -953,6 +953,11 @@ def test_merged_schema_distributed_order_deterministic(spark):
     distributed = merged_orc_schema(files, spark=spark,
                                     distributed_threshold=1)
     assert distributed.equals(threaded)
+    # the distributed probe spreads the files without a shuffle
+    from jobs.orc_read import _tail_schemas
+    probe = _tail_schemas(spark, files)
+    assert "Exchange" not in \
+        probe._jdf.queryExecution().executedPlan().toString()
 
 
 def test_type_widening_merged_schema(spark):
@@ -1560,6 +1565,8 @@ def test_tail_only_dir_stats_both_writers(spark):
         else:
             df.repartition(3).write.mode("overwrite").orc(out)
         st = read_orc_dir_stats(spark, out, ["id", "s"])
+        assert "Exchange" not in \
+            st._jdf.queryExecution().executedPlan().toString()
         agg = st.agg(F.sum("n_rows").alias("n"),
                      F.min("min_id").alias("mi"),
                      F.max("max_id").alias("ma"),

@@ -2,7 +2,9 @@
 blocks table -> decode job -> bit-identity; resumability; skew
 partitioning sanity."""
 
+import glob
 import os
+import shutil
 
 import numpy as np
 import pytest
@@ -70,24 +72,94 @@ def test_resume_after_partial_commit(spark, token_parquet, tmp_path):
     df = spark.read.parquet(token_parquet)
     encode_table(spark, df, out, num_partitions=4, block_rows=2000)
     # simulate a crash that committed only half the parts: rewrite the
-    # manifest keeping 2 parts, delete their sibling data files' rows is
-    # not needed — blocks of uncommitted parts are superseded on re-run
+    # manifest keeping 2 parts; the other parts' files stay on disk
     parts = table_io.committed_parts(out)
     keep = dict(list(parts.items())[:2])
     mdir = os.path.join(out, "_manifest")
     for f in os.listdir(mdir):
         os.remove(os.path.join(mdir, f))
     table_io.commit(out, list(keep.values()))
-    # ALSO remove data files of the "lost" parts to simulate the crash
-    # (data written but manifest missing is superseded; here we emulate
-    # the inverse: manifest trimmed, data kept -> dedup by part filter)
     m = encode_table(spark, df, out, num_partitions=4, block_rows=2000)
     assert m["n_parts_skipped"] == 2
     dec = decode_table(spark, out)
-    # blocks for re-encoded parts may exist twice in the data dir; the
-    # reader must deduplicate by (part_id, block_id) using the manifest
     report = verify_identity(df, dec)
     assert report["identical"], report
+    # the re-encoded parts overwrote their own files: one file per
+    # committed part, and nothing else in the data dir
+    on_disk = sorted(glob.glob(os.path.join(out, "data", "part-*.parquet")))
+    assert len(on_disk) == len(table_io.committed_parts(out)) == 4
+    assert on_disk == sorted(table_io.part_files(out))
+    assert sorted(os.listdir(os.path.join(out, "data"))) == \
+        [os.path.basename(f) for f in on_disk]
+
+
+def test_unlisted_files_are_not_read(spark, token_parquet, tmp_path):
+    # the table is the files its committed parts list: a stray copy of
+    # a part-file and a stale temp file in data/ change nothing
+    from jobs.decode import lookup_doc_ids
+    out = str(tmp_path / "blocks")
+    df = spark.read.parquet(token_parquet)
+    encode_table(spark, df, out, num_partitions=4, block_rows=500)
+    ddir = os.path.join(out, "data")
+    first = table_io.part_files(out)[0]
+    shutil.copy(first, os.path.join(ddir, "part-99999.parquet"))
+    shutil.copy(first, os.path.join(
+        ddir, "." + os.path.basename(first) + ".0123abcd.tmp"))
+    report = verify_identity(df, decode_table(spark, out))
+    assert report["identical"], report
+    # look up rows of the copied part: read twice, they would come
+    # back twice
+    from engine.blocks import BLOCKS_DDL, TOKEN_DDL, decode_batches
+    ids = [r["doc_id"] for r in spark.read.schema(BLOCKS_DDL)
+           .parquet(first).mapInArrow(decode_batches, TOKEN_DDL)
+           .select("doc_id").limit(20).collect()]
+    assert ids
+    got = [r["doc_id"] for r in lookup_doc_ids(spark, out, ids).collect()]
+    assert sorted(got) == sorted(ids)
+
+
+def _job_ids(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_reads_and_encode_run_no_extra_jobs(spark, token_parquet,
+                                            tmp_path, monkeypatch):
+    # a lookup on a committed table is ONE Spark job (no duplicate
+    # probe), and encode_table runs exactly its planning jobs plus the
+    # write job: nothing after the write (no sink re-read for lineage)
+    from pyspark.sql import functions as F
+
+    from jobs.decode import lookup_doc_ids
+    from jobs.encode import plan_input_ranges
+    out = str(tmp_path / "blocks")
+    df = spark.read.parquet(token_parquet)
+    _, plan_jobs = _job_ids(spark, "plan", lambda: plan_input_ranges(
+        df.withColumn("_ord", F.monotonically_increasing_id()), 32))
+    at_commit = []
+    real_commit = table_io.commit
+
+    def commit(*args, **kwargs):
+        at_commit.extend(spark.sparkContext.statusTracker()
+                         .getJobIdsForGroup("encode"))
+        return real_commit(*args, **kwargs)
+
+    monkeypatch.setattr(table_io, "commit", commit)
+    _, enc_jobs = _job_ids(spark, "encode", lambda: encode_table(
+        spark, df, out, num_partitions=4, block_rows=500,
+        strategy="doc_range"))
+    assert len(enc_jobs) == len(plan_jobs) + 1, (enc_jobs, plan_jobs)
+    assert sorted(at_commit) == enc_jobs
+    doc = df.first()["doc_id"]
+    rows, jobs = _job_ids(spark, "lookup", lambda: lookup_doc_ids(
+        spark, out, [doc]).collect())
+    assert [r["doc_id"] for r in rows] == [doc]
+    assert len(jobs) == 1, jobs
 
 
 def test_partitioning_spreads_tokens(spark, token_parquet, tmp_path):
@@ -196,6 +268,7 @@ def test_doc_range_empty_input(spark, tmp_path):
                          strategy="doc_range")
     assert m["n_rows"] == 0 and m["n_parts"] == 0
     assert any("round-robin" in str(x.message) for x in w)
+    assert decode_table(spark, out).count() == 0
 
 
 def test_ntok_range_block_determinism(spark, token_parquet, tmp_path):

@@ -59,11 +59,10 @@ def test_selective_decode_prunes_blocks(spark, setup):
     assert got == want
 
 
-def test_encode_single_shuffle(spark, setup):
+def test_encode_single_shuffle(spark, setup, tmp_path):
     inp, _ = setup
     df = spark.read.parquet(inp)
-    from jobs.encode import SALT_BUCKETS, _kernel
-    from engine.blocks import BLOCKS_DDL
+    from jobs.encode import PARTS_DDL, SALT_BUCKETS, _kernel
     bm = plan_partitions(df, 32)
     salted = (df.withColumn("salt", F.pmod(F.xxhash64("doc_id"),
                                            F.lit(SALT_BUCKETS)))
@@ -73,7 +72,7 @@ def test_encode_single_shuffle(spark, setup):
                   F.pmod("salt", F.lit(32))))
               .select("doc_id", "tokens", "n_tok", "source", "pid"))
     blocks = salted.repartition(4, "pid").mapInArrow(
-        _kernel(set(), 500, 0), BLOCKS_DDL)
+        _kernel(str(tmp_path / "blocks"), 500, 0), PARTS_DDL)
     plan = plan_of(blocks)
     # exactly ONE shuffle exchange (the pid repartition); the bucket
     # map joins as a broadcast (BroadcastExchange is not a shuffle)

@@ -1,8 +1,11 @@
 """Streaming encode test: file-source readStream -> foreachBatch encode
 -> blocks table -> decode bit-identity (jobs/streaming.py)."""
 
+import os
+
 import pytest
 
+from jobs import table_io
 from jobs.decode import decode_table, verify_identity
 from jobs.streaming import start_streaming_encode
 from jobs.synth import write_token_table
@@ -25,13 +28,32 @@ def test_streaming_encode_bit_identity(spark, tmp_path):
     rep = verify_identity(df, dec)
     assert rep["identical"], rep
 
-    # restart with no new files: no duplicate blocks
+    # restart with no new files: no duplicate blocks, and neither a
+    # new commit nor a new data file
+    commits = table_io.commits(out)
+    files = sorted(os.listdir(table_io.data_dir(out)))
     q2 = start_streaming_encode(spark, inp, out, ckpt,
                                 block_rows=500, num_partitions=2,
                                 trigger_once=True)
     q2.awaitTermination(120)
     rep2 = verify_identity(df, decode_table(spark, out))
     assert rep2["identical"], rep2
+    assert table_io.commits(out) == commits
+    assert sorted(os.listdir(table_io.data_dir(out))) == files
+
+    # crash after the table commit, before the checkpoint's: Spark
+    # replays the epochs, and the sink skips what is committed
+    for name in os.listdir(os.path.join(ckpt, "commits")):
+        os.remove(os.path.join(ckpt, "commits", name))
+    q3 = start_streaming_encode(spark, inp, out, ckpt,
+                                block_rows=500, num_partitions=2,
+                                trigger_once=True)
+    q3.awaitTermination(120)
+    assert not q3.isActive and q3.lastProgress is not None
+    assert table_io.commits(out) == commits
+    assert sorted(os.listdir(table_io.data_dir(out))) == files
+    rep3 = verify_identity(df, decode_table(spark, out))
+    assert rep3["identical"], rep3
 
 
 def test_stream_offset_model_checker_slice():

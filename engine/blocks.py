@@ -166,13 +166,13 @@ def _present(arr: pa.Array) -> tuple[bytes, int, pa.Array]:
         arr.drop_null()
 
 
-def _encode_int_column(values: np.ndarray, present: bytes, n_nulls: int,
-                       with_stats: bool = True) -> dict:
+def _encode_int_column(values: np.ndarray, present: bytes,
+                       n_nulls: int) -> dict:
     v = np.ascontiguousarray(values, dtype=np.int64)
     out = {"kind": KIND_RLEV2,
            "data": rle2.encode_rlev2(v, signed=True).tobytes(),
            "present": present, "n_nulls": n_nulls}
-    if with_stats and v.size:
+    if v.size:
         out.update(vmin=int(v.min()), vmax=int(v.max()), vsum=int(v.sum()))
     else:
         out.update(vmin=0, vmax=0, vsum=0)
@@ -190,8 +190,7 @@ def _decode_int_column(col: dict, n: int) -> tuple[np.ndarray, np.ndarray | None
     return vals, valid
 
 
-def _encode_str_column(arr: pa.Array, fsst_min_gain: float = 0.95,
-                       fsst_cache: dict | None = None,
+def _encode_str_column(arr: pa.Array, fsst_cache: dict | None = None,
                        cache_key: str | None = None) -> dict:
     present, n_nulls, arr = _present(arr)
     n = len(arr)
@@ -219,7 +218,8 @@ def _encode_str_column(arr: pa.Array, fsst_min_gain: float = 0.95,
     if table.symbols:
         codes, clens = fsst.encode_fsst(data, lens, table)
         symtab = table.serialize()
-        if codes.size + symtab.size < data.size * fsst_min_gain:
+        # FSST must save at least 5% over the direct bytes
+        if codes.size + symtab.size < data.size * 0.95:
             return {"kind": KIND_FSST, "data": codes.tobytes(),
                     "length": rle2.encode_rlev2(
                         clens, signed=False).tobytes(),
@@ -304,7 +304,7 @@ def _unwrap_codec(col: dict, codec: str, kind: str) -> dict:
 def encode_block(batch: pa.RecordBatch, part_id: int = 0,
                  block_idx: int = 0, row_start: int = 0,
                  attempt: int = 0, codec: str = "none",
-                 dirs: bool = True, fsst_cache: dict | None = None) -> dict:
+                 fsst_cache: dict | None = None) -> dict:
     """Encode one slab of token-table rows into a block row (plain dict
     matching BLOCKS_SCHEMA)."""
     t0 = time.perf_counter()
@@ -351,20 +351,15 @@ def encode_block(batch: pa.RecordBatch, part_id: int = 0,
                                           with_sizes=True)
     vstream, vcs, vcc = rle2.encode_rlev2(vals, signed=True,
                                           with_sizes=True)
-    if dirs:
-        lsizes, lcounts = rle2.group_chunks(lcs, lcc)
-        vsizes, vcounts = rle2.group_chunks(vcs, vcc)
-        # directories are tiny and repetitive -> always zlib-framed
-        ldir = compress.compress_stream(
-            rle2.encode_rlev2(np.concatenate([lsizes, lcounts]),
-                              signed=False), "zlib")
-        vdir = compress.compress_stream(
-            rle2.encode_rlev2(np.concatenate([vsizes, vcounts]),
-                              signed=False), "zlib")
-    else:
-        # size-optimal mode: no directory, decode walks headers
-        lsizes = vsizes = np.zeros(0, dtype=np.int64)
-        ldir = vdir = _EMPTY
+    lsizes, lcounts = rle2.group_chunks(lcs, lcc)
+    vsizes, vcounts = rle2.group_chunks(vcs, vcc)
+    # directories are tiny and repetitive -> always zlib-framed
+    ldir = compress.compress_stream(
+        rle2.encode_rlev2(np.concatenate([lsizes, lcounts]),
+                          signed=False), "zlib")
+    vdir = compress.compress_stream(
+        rle2.encode_rlev2(np.concatenate([vsizes, vcounts]),
+                          signed=False), "zlib")
     tokens_col = {"kind": KIND_RLEV2, "present": _EMPTY, "n_nulls": 0,
                   "vmin": int(vals.min()) if vals.size else 0,
                   "vmax": int(vals.max()) if vals.size else 0,
@@ -624,8 +619,9 @@ def decode_block_rows(row: dict, r0: int, r1: int, columns=None
 
     Returns ``(record_batch, token_stream_bytes_touched)`` — the
     second element is the evidence that decoded bytes scale with
-    strides touched. Blocks written with ``dirs=False`` have no
-    directory and fall back to a full decode + slice.
+    strides touched. A block with no token lengths or no token values
+    (all lists null, or all empty) has an empty directory and falls
+    back to a full decode + slice.
     """
     cols = ALL_COLUMNS if columns is None else \
         tuple(c for c in ALL_COLUMNS if c in set(columns))
@@ -661,7 +657,7 @@ def decode_block_rows(row: dict, r0: int, r1: int, columns=None
     vdir = fetch(pos, pos + vdlen)
     pos += vdlen
     vbase = pos
-    if ldlen == 0 or vdlen == 0:  # dirs=False mode: no seek positions
+    if ldlen == 0 or vdlen == 0:  # nothing to seek in
         full = decode_block(row, columns=cols)
         return full.slice(r0, r1 - r0), len(tok["data"])
 
@@ -796,8 +792,7 @@ def _slab_bounds(lens: np.ndarray, block_rows: int, block_values: int,
 def encode_batches(batches, part_id: int = 0,
                    block_rows: int = DEFAULT_BLOCK_ROWS,
                    block_values: int = DEFAULT_BLOCK_VALUES,
-                   attempt: int = 0, codec: str = "none",
-                   dirs: bool = True):
+                   attempt: int = 0, codec: str = "none"):
     """Encode a stream of Arrow batches into blocks-table batches.
 
     Slices incoming rows into slabs capped by BOTH ``block_rows`` and
@@ -825,8 +820,7 @@ def encode_batches(batches, part_id: int = 0,
             slab = tbl.slice(i, j - i).combine_chunks()
             rows.append(encode_block(slab.to_batches()[0], part_id,
                                      block_idx, row_start, attempt,
-                                     codec=codec, dirs=dirs,
-                                     fsst_cache=fsst_cache))
+                                     codec=codec, fsst_cache=fsst_cache))
             row_start += j - i
             block_idx += 1
         return rows, consumed

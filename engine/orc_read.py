@@ -189,26 +189,35 @@ class _TypeNode:
         self.scale = 0
 
 
+def _postscript(tail, size: int) -> tuple[int, dict]:
+    """``(length, fields)`` of the PostScript of a file of ``size``
+    bytes whose last bytes are ``tail``. Raises ValueError unless it carries the ORC
+    magic (field 8000) and its footer and metadata fit in the file —
+    so a truncated or non-ORC file fails before any seek."""
+    ps_len = tail[-1] if len(tail) else 0
+    try:
+        ps = {fno: v for fno, _, v in _fields(tail[-1 - ps_len: -1])}
+    except (IndexError, ValueError):
+        ps = {}
+    if 1 + ps_len > len(tail) or bytes(ps.get(8000, b"")) != b"ORC":
+        raise ValueError("not an ORC file: no PostScript magic")
+    need = 1 + ps_len + ps.get(1, 0) + ps.get(5, 0)
+    if need > size:
+        raise ValueError(f"truncated ORC file: its tail needs {need} "
+                         f"bytes, the file has {size}")
+    return ps_len, ps
+
+
 class OrcFileInfo:
     """Parsed tail: types, stripes, writer, compression."""
 
     def __init__(self, data):
         self.data = data
-        ps_len = data[-1]
-        ps = data[-1 - ps_len: -1]
-        footer_len = 0
-        self.compression = COMP_NONE
-        self.block_size = 256 * 1024
-        metadata_len = 0
-        for fno, _, v in _fields(ps):
-            if fno == 1:
-                footer_len = v
-            elif fno == 2:
-                self.compression = v
-            elif fno == 3:
-                self.block_size = v
-            elif fno == 5:
-                metadata_len = v
+        ps_len, ps = _postscript(data, len(data))
+        footer_len = ps.get(1, 0)
+        self.compression = ps.get(2, COMP_NONE)
+        self.block_size = ps.get(3, 256 * 1024)
+        metadata_len = ps.get(5, 0)
         self.metadata_len = metadata_len
         # Metadata (per-stripe ColumnStatistics) sits just before the
         # Footer; keep the raw slice, parse lazily in stripe_stats()
@@ -1152,30 +1161,20 @@ def _resolve_convention(info: OrcFileInfo, convention: str | None) -> str:
     return "cpp" if info.writer == 1 else "java"
 
 
-def read_orc_info(path: str) -> OrcFileInfo:
-    with open(path, "rb") as f:
-        return OrcFileInfo(memoryview(f.read()))
-
-
 def read_orc_tail(path: str, probe: int = 64 * 1024) -> OrcFileInfo:
-    """Planning-only parse that reads JUST the file tail (PostScript +
-    Footer) — what a driver scheduling stripe splits over many files
-    needs; ~KBs per file instead of the whole object. The returned
-    info cannot decode streams (``tail_only``)."""
+    """Parse that reads JUST the file tail (PostScript + Footer +
+    Metadata) — ~KBs per file instead of the whole object. The
+    returned info cannot decode streams (``tail_only``); pass it to
+    :func:`read_orc_stripes`. A file that is not ORC, or too short for
+    the tail its PostScript describes, raises ValueError."""
     import os
     size = os.path.getsize(path)
     with open(path, "rb") as f:
         k = min(size, probe)
         f.seek(size - k)
         tail = f.read(k)
-        ps_len = tail[-1]
-        footer_len = metadata_len = 0
-        for fno, _, v in _fields(tail[-1 - ps_len: -1]):
-            if fno == 1:
-                footer_len = v
-            elif fno == 5:
-                metadata_len = v
-        need = 1 + ps_len + footer_len + metadata_len
+        ps_len, ps = _postscript(tail, size)
+        need = 1 + ps_len + ps.get(1, 0) + ps.get(5, 0)
         if need > len(tail):
             f.seek(size - need)
             tail = f.read(need)
@@ -1370,10 +1369,11 @@ def read_orc(path: str, columns: list[str] | None = None,
              filters: list[tuple] | None = None) -> pa.Table:
     """Read an ORC file into an Arrow table with this engine's decoders.
 
-    ``columns`` projects top-level fields (unprojected columns' streams
-    are never decompressed or decoded). ``stripe_indices`` restricts to
-    a subset of stripes — the split unit the distributed reader
-    (jobs/orc_read.py) parallelizes over.
+    It reads the tail and then range-reads the stripes
+    (:func:`read_orc_stripes`). ``columns`` projects top-level fields
+    (unprojected columns' streams are never read). ``stripe_indices``
+    restricts to a subset of stripes — the split unit the distributed
+    reader (jobs/orc_read.py) parallelizes over.
 
     ``filters`` ([(column, op, literal)] conjunction, ops as in
     :func:`stripes_matching`) prune in two tiers and return a SUPERSET
@@ -1383,18 +1383,8 @@ def read_orc(path: str, columns: list[str] | None = None,
     surviving groups through positions-based stream seeks — works on
     files written by this engine, ORC C++, or orc-core alike.
     """
-    info = read_orc_info(path)
-    conv = _resolve_convention(info, convention)
-    root = info.types[0]
-    sel, out_schema = _select(info, columns)
+    info = read_orc_tail(path)
     if stripe_indices is None:
-        stripe_indices = stripes_matching(info, filters) if filters \
-            else range(len(info.stripes))
-    batches = []
-    for i in stripe_indices:
-        dec = _StripeDecoder(info, info.stripes[i], conv)
-        batches.extend(
-            _stripe_batches(dec, root, sel, out_schema, filters))
-    if not batches:
-        return out_schema.empty_table()
-    return pa.Table.from_batches(batches, schema=out_schema)
+        stripe_indices = stripes_matching(info, filters)
+    return read_orc_stripes(path, stripe_indices, columns, convention,
+                            info=info, filters=filters)

@@ -25,25 +25,21 @@ source would:
   translated predicates (EqualTo/GreaterThan/.../In, IsNull/IsNotNull
   — which Catalyst attaches to nearly every comparison — and nested
   columns as dotted paths) and forwards the representable conjuncts to the
-  engine's THREE pruning tiers (planning-time stripe statistics,
-  per-row-group statistics + bloom filters, ROW_INDEX seek —
+  engine's THREE pruning tiers (stripe statistics, per-row-group
+  statistics + bloom filters, ROW_INDEX seek — all in the task,
   jobs/orc_read.py docstring). Every filter is returned to Spark as
   well, so Spark re-applies them exactly: the engine tiers prune
   supersets; correctness never depends on them.
-* **Split planning** — ``partitions()`` lists the directory, reads
-  only the ~KB file tails, drops statistics-precluded stripes, and
-  bins surviving stripes into splits of ``split_mb`` (default 64 MB)
-  so a thousand-stripe file fans out across the cluster while tiny
-  files don't each cost a task. Tail reads are threaded driver-side
-  I/O up to ``distributed_planning_threshold`` files (default 4096);
-  past it (or with ``distributed_planning=true``) the driver plans
-  byte-range splits from file SIZES alone — zero tail I/O — and each
-  task resolves + statistics-prunes its own range's stripes
-  (``OrcRangePartition``), so a million-file listing plans at
-  os.stat speed and prunes on the executors. (DSv2 ``partitions()``
-  runs in Spark's planning worker, which has no SparkSession — the
-  scalable move is deferring tail reads to ``read()``, not
-  distributing them from the driver.)
+* **Split planning** — ``partitions()`` lists the directory and cuts
+  each file into ``split_mb`` byte ranges (default 64 MB) from its
+  size alone (``OrcRangePartition``): no tail is read on the driver,
+  so a million-file listing plans at ``os.stat`` speed, and every
+  file costs at least one task. Each task reads its file's ~KB tail
+  once, claims the stripes whose offset lies in its range, prunes the
+  statistics-precluded ones and decodes the rest
+  (jobs.orc_read.decode_ranges, the task side ``read_orc_dir`` uses
+  too). (DSv2 ``partitions()`` runs in Spark's planning worker, which
+  has no SparkSession, so the tail reads belong in ``read()``.)
 * **Column pruning** — the reader decodes only the fields of the
   schema Spark passes (pass ``.schema(...)`` or ``columns`` to
   project); unprojected columns' stream bytes are never read
@@ -80,6 +76,7 @@ explicitly.
 from __future__ import annotations
 
 import json
+import math
 import os
 import uuid
 from dataclasses import dataclass
@@ -158,21 +155,13 @@ def _to_engine_filters(filters: Sequence[Filter]) -> list[tuple]:
 
 
 @dataclass
-class OrcInputPartition(InputPartition):
-    """One read split: a run of surviving stripes of one file."""
-    path: str
-    stripes: tuple
-
-
-@dataclass
 class OrcRangePartition(InputPartition):
-    """One distributed-planning split: a byte range [start, end) of
-    one file, planned from the directory listing's file sizes ALONE —
-    zero tail reads on the driver. The task owns the stripes whose
-    StripeInformation.offset falls inside its range (the parquet/Hive
-    split-assignment convention), resolves them from the ~KB tail it
-    reads itself, and prunes statistics-precluded stripes there, so
-    both planning I/O and pruning CPU scale with the executors."""
+    """One read split: a byte range [start, end) of one file, planned
+    from the listing's file sizes alone. The task owns the stripes
+    whose StripeInformation.offset falls inside its range (the
+    parquet/Hive split convention, jobs.orc_read.claim_stripes), so
+    planning I/O and pruning CPU scale with the executors. An empty
+    ``path`` marks an empty scan."""
     path: str
     start: int
     end: int
@@ -188,36 +177,31 @@ class OrcCommitMessage(WriterCommitMessage):
 class OrcEngineDataSource(DataSource):
     """``spark.read.format("orcx")`` / ``df.write.format("orcx")``.
 
-    Read options: ``path`` (file or directory), ``columns``
-    (comma-separated projection; or pass ``.schema(...)``),
-    ``convention`` (pre-1970 timestamp convention, default per-file),
-    ``merge_schema`` (true: resolve the scan schema from EVERY file
-    tail — union of fields, widest of types along orc-core's
-    ConvertTreeReader widening axes int8→int16→int32→int64 and
-    float→double; files are cast up per task, columns a file
-    predates null-fill),
-    ``split_mb`` (target split size, default 64),
-    ``distributed_planning`` (``auto``/``true``/``false``, default
-    auto: above ``distributed_planning_threshold`` files — default
-    4096 — plan byte-range splits from file sizes with zero driver
-    tail reads; tasks resolve and prune their own stripes),
-    ``pushdown``
-    (true: Catalyst filter pushdown via pushFilters — requires the
-    session conf register(spark, enable_pushdown=True) sets, and see
-    the plan-reuse caveat), ``use_manifest``
-    (true: read exactly the ``_SUCCESS``-committed snapshot instead
-    of the directory listing — stragglers and in-progress jobs in the
-    same directory are invisible), ``filters`` (JSON conjunction of
-    ``[column, op, literal]`` triples, ops ``= < <= > >= in
-    starts_with`` plus the valueless ``is_null`` / ``not_null`` —
-    nullness prunes via the hasNull/numberOfValues ColumnStatistics
-    slots, ``starts_with`` via string min/max prefix ranges; nested
-    fields as dotted paths). Explicit ``filters`` prune
-    stripes/row-groups like pushed filters do, but live on THIS
-    load()'s options — no global pushdown conf, no plan-reuse hazard
-    — and are re-applied EXACTLY on the decoded batches inside
-    ``read()``, so results match the predicate even though the engine
-    tiers prune at stripe/row-group granularity.
+    Read options:
+
+    * ``path`` — a file, a directory or a glob.
+    * ``columns`` — comma-separated projection (or ``.schema(...)``).
+    * ``convention`` — pre-1970 timestamp convention (default: per
+      file, from ``Footer.writer``).
+    * ``merge_schema`` — true: the scan schema is the union of every
+      file tail's fields at the widest type (int8→…→int64,
+      float→double; orc-core ConvertTreeReader); each file is cast up
+      in its task and columns it predates null-fill.
+    * ``split_mb`` — positive; the byte range one task reads (default
+      64). Every file gets at least one task.
+    * ``use_manifest`` — true: read exactly the ``_SUCCESS``-committed
+      snapshot instead of the listing, so stragglers and in-progress
+      jobs in the same directory are invisible.
+    * ``pushdown`` — true: Catalyst filter pushdown via pushFilters;
+      needs the session conf ``register(spark, enable_pushdown=True)``
+      sets, and see the plan-reuse caveat.
+    * ``filters`` — a JSON conjunction of ``[column, op, literal]``
+      triples: ops ``= < <= > >= starts_with``, ``in`` with a JSON list,
+      and the valueless ``is_null`` / ``not_null``; nested fields as
+      dotted paths. They prune stripes and row groups like pushed
+      filters, but live on THIS load()'s options (no session conf, no
+      plan-reuse hazard), and the task applies them exactly to the
+      decoded rows.
 
     Write options: ``compression`` (zlib default | snappy | lz4 |
     zstd | brotli | none), ``stripe_rows``, ``row_index_stride``,
@@ -249,7 +233,7 @@ class OrcEngineDataSource(DataSource):
             # ConvertTreeReader semantics). Threaded here — DSv2
             # schema() runs in the planning worker, which has no
             # SparkSession to distribute through; the per-file cast
-            # up to this schema happens task-side in _read_split.
+            # up to this schema happens task-side in decode_ranges.
             from jobs.orc_read import merged_orc_schema
             arrow = merged_orc_schema(files, spark=None)
         else:
@@ -290,6 +274,7 @@ class OrcEngineDataSource(DataSource):
 def _parse_option_filters(options) -> list[tuple]:
     """The ``filters`` read option: a JSON list of [column, op,
     literal] triples (conjunction)."""
+    from jobs.orc_read import FILTER_OPS
     raw = options.get("filters")
     if not raw:
         return []
@@ -298,54 +283,39 @@ def _parse_option_filters(options) -> list[tuple]:
     for item in spec:
         col, op = item[0], item[1]
         val = item[2] if len(item) > 2 else None
-        if op in ("is_null", "not_null"):
-            out.append((col, op, None))
-        elif op in ("=", "==", "<", "<=", ">", ">=", "in",
-                    "starts_with"):
-            if val is None:
-                # fail loud at planning: a missing/null literal would
-                # silently match zero rows downstream (SQL NULL
-                # comparison semantics via an all-null Arrow mask)
-                raise ValueError(
-                    f"filters option: op {op!r} on {col!r} needs a "
-                    "literal — [column, op, value]")
-            out.append((col, op, tuple(val) if op == "in" else val))
-        else:
+        if op not in FILTER_OPS:
             raise ValueError(f"filters option: unsupported op {op!r}")
+        if op in ("is_null", "not_null"):
+            val = None
+        elif val is None:
+            # fail loud at planning: a missing/null literal would
+            # silently match zero rows downstream (SQL NULL
+            # comparison semantics via an all-null Arrow mask)
+            raise ValueError(
+                f"filters option: op {op!r} on {col!r} needs a "
+                "literal — [column, op, value]")
+        elif op == "in":
+            if not isinstance(val, list):
+                raise ValueError(
+                    f"filters option: op 'in' on {col!r} needs a JSON "
+                    f"list of members, got {val!r}")
+            val = tuple(val)
+        out.append((col, op, val))
     return out
 
 
-def _apply_filters_exact(tbl, filters: list[tuple]):
-    """Exact arrow-side conjunction filter (SQL null semantics: a
-    null comparison never matches). Dotted names resolve through
-    struct fields."""
-    import pyarrow.compute as pc
-    mask = None
-    for col, op, val in filters:
-        arr = tbl.column(col) if "." not in col else pc.struct_field(
-            tbl.column(col.split(".")[0]), col.split(".")[1:])
-        if op == "is_null":
-            m = pc.is_null(arr)
-        elif op == "not_null":
-            m = pc.is_valid(arr)
-        elif op in ("=", "=="):
-            m = pc.equal(arr, val)
-        elif op == "<":
-            m = pc.less(arr, val)
-        elif op == "<=":
-            m = pc.less_equal(arr, val)
-        elif op == ">":
-            m = pc.greater(arr, val)
-        elif op == ">=":
-            m = pc.greater_equal(arr, val)
-        elif op == "starts_with":
-            m = pc.starts_with(arr, pattern=val)
-        else:  # in
-            import pyarrow as pa
-            m = pc.is_in(arr, value_set=pa.array(list(val)))
-        m = pc.fill_null(m, False)
-        mask = m if mask is None else pc.and_(mask, m)
-    return tbl.filter(mask) if mask is not None else tbl
+def _read(partition: OrcRangePartition, schema: StructType, options,
+          filters: list[tuple] = (), exact: list[tuple] = ()) -> Iterator:
+    """Decode one partition's byte range for the batch and stream
+    readers (jobs.orc_read.decode_ranges)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from jobs.orc_read import decode_ranges
+    merge = options.get("merge_schema", "false").lower() == "true"
+    ranges = [(partition.path, partition.start, partition.end)] \
+        if partition.path else []
+    return decode_ranges(ranges, to_arrow_schema(schema), filters, exact,
+                         options.get("convention"), merge)
 
 
 class OrcEngineReader(DataSourceReader):
@@ -355,14 +325,16 @@ class OrcEngineReader(DataSourceReader):
         self._options = options
         self._filters: list[tuple] = []
         self._opt_filters = _parse_option_filters(options)
+        mb = float(options.get("split_mb", "64"))
+        if not (mb > 0 and math.isfinite(mb)):
+            raise ValueError(f"split_mb must be a positive number, "
+                             f"got {mb!r}")
+        self._split = max(1, int(mb * (1 << 20)))
 
     def _all_filters(self) -> list[tuple]:
         return self._filters + self._opt_filters
 
     def partitions(self) -> Sequence[InputPartition]:
-        from concurrent.futures import ThreadPoolExecutor
-
-        from engine.orc_read import read_orc_tail, stripes_matching
         from jobs.orc_read import EmptyOrcDirError, list_orc_files
 
         use_m = self._options.get("use_manifest",
@@ -377,60 +349,14 @@ class OrcEngineReader(DataSourceReader):
             # fail-loud corruption signals (no _SUCCESS manifest,
             # manifest naming deleted files) must still raise, or a
             # broken snapshot would read as silently empty.
-            return [OrcInputPartition("", ())]
-        target = int(float(self._options.get("split_mb", "64")) * (1 << 20))
+            return [OrcRangePartition("", 0, 0)]
+        return [OrcRangePartition(p, s, s + self._split)
+                for p in files
+                for s in range(0, max(os.path.getsize(p), 1), self._split)]
 
-        # distributed planning: above the threshold (or forced by the
-        # option) the driver stops reading tails entirely — it bins
-        # each file into split_mb byte ranges from its SIZE (an
-        # os.stat per file, no I/O on file bytes) and defers stripe
-        # resolution + statistics pruning to the tasks. DSv2
-        # partitions() runs in Spark's planning worker where no
-        # SparkSession exists, so "distribute the tail reads" can
-        # only mean "move them into read()" — which also prunes in
-        # parallel, unlike any driver-side plan.
-        dp = self._options.get("distributed_planning", "auto").lower()
-        dp_thresh = int(self._options.get(
-            "distributed_planning_threshold", "4096"))
-        if dp == "true" or (dp == "auto" and len(files) > dp_thresh):
-            out = []
-            for p in files:
-                size = os.path.getsize(p)
-                for s in range(0, max(size, 1), target):
-                    out.append(OrcRangePartition(p, s, s + target))
-            return out or [OrcInputPartition(files[0], ())]
-
-        def plan(p: str) -> list[OrcInputPartition]:
-            info = read_orc_tail(p)
-            keep = stripes_matching(info, self._all_filters() or None)
-            splits, run, sz = [], [], 0
-            for i in keep:
-                si = info.stripes[i]
-                run.append(i)
-                sz += si[2] + si[3] + si[4]  # index+data+footer bytes
-                if sz >= target:
-                    splits.append(OrcInputPartition(p, tuple(run)))
-                    run, sz = [], 0
-            if run:
-                splits.append(OrcInputPartition(p, tuple(run)))
-            return splits
-
-        # tail reads are ~KB I/O; thread them (planning, not decode)
-        with ThreadPoolExecutor(max_workers=min(32, len(files))) as ex:
-            planned = list(ex.map(plan, files))
-        out = [s for per_file in planned for s in per_file]
-        # zero surviving stripes: one empty split keeps the scan valid
-        return out or [OrcInputPartition(files[0], ())]
-
-    def read(self, partition: OrcInputPartition) -> Iterator:
-        info = None
-        if isinstance(partition, OrcRangePartition):
-            partition, info = _resolve_range(partition,
-                                             self._all_filters())
-        yield from _read_split(partition, self._schema, self._options,
-                               self._all_filters(),
-                               exact_filters=self._opt_filters,
-                               info=info)
+    def read(self, partition: OrcRangePartition) -> Iterator:
+        return _read(partition, self._schema, self._options,
+                     self._all_filters(), self._opt_filters)
 
 
 class OrcEnginePushdownReader(OrcEngineReader):
@@ -446,81 +372,6 @@ class OrcEnginePushdownReader(OrcEngineReader):
         # hand every filter back: the engine tiers prune (supersets),
         # Spark's re-evaluation keeps the result exact
         return filters
-
-
-def _resolve_range(partition: OrcRangePartition,
-                   filters: list[tuple]) -> OrcInputPartition:
-    """Task-side half of distributed planning: read the ~KB tail and
-    claim the range's statistics-surviving stripes with
-    jobs.orc_read.claim_stripes (the one stripe claim read_orc_dir's
-    byte ranges use too), handing the equivalent stripe split (plus
-    the parsed tail, so the decode reads it once) to _read_split."""
-    from engine.orc_read import read_orc_tail
-    from jobs.orc_read import claim_stripes
-    info = read_orc_tail(partition.path)
-    stripes = claim_stripes(info, partition.start, partition.end, filters)
-    return OrcInputPartition(partition.path, tuple(stripes)), info
-
-
-def _read_split(partition: OrcInputPartition, schema: StructType,
-                options, filters: list[tuple],
-                exact_filters: list[tuple] = (),
-                info=None) -> Iterator:
-    """Task-side split decode shared by the batch and stream readers:
-    engine stripe-range read (``filters`` prune row groups as a
-    superset) -> (optional) schema-evolution null-fill -> EXACT
-    arrow-side application of ``exact_filters`` (the option-provided
-    conjunction Spark knows nothing about) -> cast to Spark's Arrow
-    convention -> RecordBatches."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from engine.orc_read import read_orc_stripes, read_orc_tail
-
-    target = to_arrow_schema(schema)
-    if not partition.stripes:
-        yield from target.empty_table().to_batches()
-        return
-    merge = options.get("merge_schema", "false").lower() == "true"
-    if info is None:
-        info = read_orc_tail(partition.path)
-    names = list(target.names)
-    got = info.types[0].field_names
-    absent = [c for c in names if c not in got]
-    if absent and not merge:
-        raise ValueError(
-            f"{partition.path}: ORC schema {got} lacks projected "
-            f"{names}; set merge_schema=true to null-fill columns "
-            "this file predates")
-    # an option filter may reference a non-projected column: decode
-    # its top-level root too, filter exactly, then drop it. A filter
-    # on a column the file PREDATES sees null for every row: is_null
-    # is vacuously true (drop the conjunct), everything else —
-    # comparisons AND not_null — matches no row (empty split).
-    absent_col = [f for f in exact_filters
-                  if (f[0] if f[0] in got else f[0].split(".")[0])
-                  not in got]
-    if any(f[1] != "is_null" for f in absent_col):
-        yield from target.empty_table().to_batches()
-        return
-    exact_filters = [f for f in exact_filters if f not in absent_col]
-    roots = [f[0] if f[0] in got else f[0].split(".")[0]
-             for f in exact_filters]
-    # dict.fromkeys: two filters on one non-projected column (the
-    # classic range filter lo <= c <= hi) must add its root ONCE — a
-    # duplicated projection column makes tbl.column() ambiguous
-    extra = list(dict.fromkeys(r for r in roots if r not in names))
-    tbl = read_orc_stripes(
-        partition.path, list(partition.stripes),
-        columns=[c for c in names if c not in absent] + extra,
-        convention=options.get("convention"),
-        info=info, filters=filters or None)
-    if exact_filters:
-        tbl = _apply_filters_exact(tbl, exact_filters)
-    for c in absent:
-        tbl = tbl.append_column(
-            target.field(c), pa.nulls(len(tbl), target.field(c).type))
-    yield from tbl.select(names).cast(target).to_batches()
 
 
 def _write_part(batches: Iterator, out_dir: str, options,
@@ -620,9 +471,9 @@ class OrcEngineStreamReader(DataSourceStreamReader):
     file's mtime is its visibility time and the watermark never runs
     ahead of an in-flight publish. Files dropped in by other means
     must carry a fresh mtime (``touch``) or they may land behind the
-    watermark and be skipped. Each micro-batch reads whole files
-    (stripe splits within a file still fan out), decoded by the same
-    engine path as the batch reader."""
+    watermark and be skipped. Each micro-batch reads each new file as
+    one whole-file byte range, planned without a tail read and decoded
+    by the same task side as the batch reader."""
 
     def __init__(self, path: str, schema: StructType, options):
         self._dir = path
@@ -691,21 +542,18 @@ class OrcEngineStreamReader(DataSourceStreamReader):
         return off
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        from engine.orc_read import read_orc_tail
-
         end_t, end_b = end["t"], set(end["boundary"])
         splits = []
         for m, f in self._new_since(start):
             if m > end_t or (m == end_t and f not in end_b):
                 continue  # published after this batch's end offset
             p = os.path.join(self._dir, f)
-            info = read_orc_tail(p)
-            splits.append(OrcInputPartition(p, tuple(range(len(info.stripes)))))
+            splits.append(OrcRangePartition(p, 0, os.path.getsize(p)))
         # Spark requires >=1 partition per batch; an empty marker reads 0 rows
-        return splits or [OrcInputPartition("", ())]
+        return splits or [OrcRangePartition("", 0, 0)]
 
-    def read(self, partition: OrcInputPartition) -> Iterator:
-        yield from _read_split(partition, self._schema, self._options, [])
+    def read(self, partition: OrcRangePartition) -> Iterator:
+        return _read(partition, self._schema, self._options)
 
     def commit(self, end: dict) -> None:
         # offsets derive from the listing; remember the committed end

@@ -13,11 +13,13 @@ One narrow Spark stage, no shuffle, nothing funnels through the driver:
 2. **Claim and decode** — each task reads its file's ~KB tail once
    (engine.orc_read.read_orc_tail), claims the stripes whose offset
    lies in its range and that the statistics may match
-   (``claim_stripes``, the same claim the orcx range partitions use),
-   and range-reads just those stripes' bytes
+   (``claim_stripes``), range-reads just those stripes' bytes
    (engine.orc_read.read_orc_stripes), so one file cut 100 ways costs
-   each task 1/100th of its bytes. Column projection skips
-   unprojected streams entirely (never inflated).
+   each task 1/100th of its bytes, and applies the ``filters`` exactly
+   to the decoded rows. Column projection skips unprojected streams
+   entirely (never inflated). ``decode_ranges`` is this task side,
+   and the orcx batch and stream readers (jobs/datasource.py) decode
+   their byte-range partitions through it too.
 
 The decoders are this engine's vectorized codecs, so files written by
 ORC C++ (pyarrow), orc-core Java (spark.write.orc), or
@@ -41,6 +43,10 @@ from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 from jobs.table_io import _require_local
 
 SPLIT_DDL = "path string, stripe bigint, n_rows bigint"
+# the filter ops of every pruning tier and of the exact filter;
+# is_null and not_null take no literal
+FILTER_OPS = ("=", "==", "<", "<=", ">", ">=", "in", "starts_with",
+              "is_null", "not_null")
 
 
 class EmptyOrcDirError(FileNotFoundError):
@@ -259,19 +265,102 @@ def _tail_schemas(spark: SparkSession, files: list[str]) -> DataFrame:
         tails, "path string, schema binary")
 
 
-def _claimed(batches, filters: list[tuple] | None):
+def _rows(batches):
+    """The ``(path, start, stop)`` rows of a task's range batches."""
+    for batch in batches:
+        yield from zip(*(c.to_pylist() for c in batch.columns))
+
+
+def _claimed(ranges, filters: list[tuple] | None):
     """Task side of the range plan: for each file of the task's
-    ranges, ``(path, tail, claimed stripes)`` — one tail read per file,
-    however many of its ranges the task holds."""
+    ``(path, start, stop)`` ranges, ``(path, tail, claimed stripes)``
+    — one tail read per file, however many of its ranges the task
+    holds."""
     from engine.orc_read import read_orc_tail
     spans: dict[str, list[tuple[int, int]]] = {}
-    for batch in batches:
-        for p, a, b in zip(*(c.to_pylist() for c in batch.columns)):
-            spans.setdefault(p, []).append((a, b))
+    for p, a, b in ranges:
+        spans.setdefault(p, []).append((a, b))
     for p, rs in spans.items():
         info = read_orc_tail(p)
         yield p, info, sorted(i for a, b in rs
                               for i in claim_stripes(info, a, b, filters))
+
+
+_COMPARE = {"=": "equal", "==": "equal", "<": "less", "<=": "less_equal",
+            ">": "greater", ">=": "greater_equal"}
+
+
+def _apply_filters_exact(tbl: pa.Table, filters: list[tuple]) -> pa.Table:
+    """Exact arrow-side conjunction filter (SQL null semantics: a
+    null comparison never matches). Dotted names resolve through
+    struct fields."""
+    import pyarrow.compute as pc
+    mask = None
+    for col, op, val in filters:
+        arr = tbl.column(col) if "." not in col else pc.struct_field(
+            tbl.column(col.split(".")[0]), col.split(".")[1:])
+        if op in ("is_null", "not_null"):
+            m = pc.is_null(arr) if op == "is_null" else pc.is_valid(arr)
+        elif op == "starts_with":
+            m = pc.starts_with(arr, pattern=val)
+        elif op == "in":
+            m = pc.is_in(arr, value_set=pa.array(list(val)))
+        else:
+            m = getattr(pc, _COMPARE[op])(arr, val)
+        m = pc.fill_null(m, False)
+        mask = m if mask is None else pc.and_(mask, m)
+    return tbl.filter(mask) if mask is not None else tbl
+
+
+def decode_ranges(ranges, target: pa.Schema,
+                  filters: list[tuple] | None = None,
+                  exact: list[tuple] | None = None,
+                  convention: str | None = None,
+                  null_fill: bool = False):
+    """The task side of every ORC scan (read_orc_dir, the orcx batch
+    and stream readers): RecordBatches at ``target``, Spark's Arrow
+    schema, for the ``(path, start, stop)`` byte ``ranges``. The
+    ranges claim their files' stripes (``claim_stripes``, one tail
+    read per file); ``filters`` prune stripes and row groups (a
+    superset); ``exact`` then applies exactly to the decoded rows. A
+    projected column a file predates null-fills if ``null_fill`` is
+    set, else raises; an ``exact`` column it predates is null in
+    every row, so only ``is_null`` matches there."""
+    from engine.orc_read import read_orc_stripes
+    names = list(target.names)
+    for p, info, stripes in _claimed(ranges, filters):
+        if not stripes:
+            continue
+        got = info.types[0].field_names
+        absent = [c for c in names if c not in got]
+        if absent and not null_fill:
+            raise ValueError(
+                f"{p}: ORC schema {got} lacks projected {names}; "
+                "null-fill columns this file predates with "
+                "allow_missing_columns=True (read_orc_dir) or "
+                "merge_schema=true (orcx)")
+
+        def root(c):
+            # a nested filter column projects its top-level struct
+            return c if c in got else c.split(".")[0]
+        predated = [f for f in exact or () if root(f[0]) not in got]
+        if any(f[1] != "is_null" for f in predated):
+            continue
+        live = [f for f in exact or () if f not in predated]
+        # dict.fromkeys: a range filter lo <= c <= hi adds c once
+        extra = list(dict.fromkeys(
+            root(f[0]) for f in live if root(f[0]) not in names))
+        tbl = read_orc_stripes(
+            p, stripes, columns=[c for c in names if c not in absent]
+            + extra, convention=convention, info=info,
+            filters=filters or None)
+        tbl = _apply_filters_exact(tbl, live)
+        for c in absent:
+            # typed nulls at the target type: the standard added-column
+            # semantics (rows predate the column)
+            tbl = tbl.append_column(
+                target.field(c), pa.nulls(len(tbl), target.field(c).type))
+        yield from tbl.select(names).cast(target).to_batches()
 
 
 def plan_orc_splits(spark: SparkSession, files: list[str],
@@ -282,7 +371,7 @@ def plan_orc_splits(spark: SparkSession, files: list[str],
     as a scan manifest."""
     def tails(batches):
         import pyarrow as pa
-        for p, info, keep in _claimed(batches, filters):
+        for p, info, keep in _claimed(_rows(batches), filters):
             # type= matters: for a fully-pruned file keep == [] and
             # an untyped pa.array([]) infers null type, producing a
             # batch whose schema differs from sibling batches
@@ -451,18 +540,19 @@ def read_orc_dir(spark: SparkSession, path: str,
     (``spark.sql.leafNodeDefaultParallelism``, default
     defaultParallelism), past which a task takes several ranges.
 
-    ``filters``: [(column, op, literal)] conjunction pushed down in
-    THREE tiers — each task drops the statistics-precluded stripes of
-    its range before any stripe byte is read (claim_stripes); each
-    decode task then drops statistics-precluded ROW GROUPS inside its
-    stripes and seeks directly to the survivors via the ROW_INDEX
-    positions (engine.orc_read.row_groups_matching); finally the same
-    predicates re-apply as an exact Spark filter on the decoded rows,
-    so the result is exact, not a superset. Filter columns are
-    auto-added to the decode projection if missing from ``columns``
-    (and pruned from the result); a dotted filter column
-    (``meta.score``) prunes on the nested field's own statistics and
-    projects its top-level root struct.
+    ``filters``: [(column, op, literal)] conjunction, ops
+    ``FILTER_OPS``, applied inside the decode tasks in THREE tiers
+    (decode_ranges): each task drops the statistics-precluded stripes
+    of its range before any stripe byte is read (claim_stripes); it
+    then drops statistics-precluded ROW GROUPS inside its stripes and
+    seeks directly to the survivors via the ROW_INDEX positions
+    (engine.orc_read.row_groups_matching); finally the same predicates
+    apply exactly to the decoded Arrow rows, so the result is exact,
+    not a superset, and only matching rows leave the task. A filter
+    column need not be in ``columns``; a dotted one (``meta.score``)
+    prunes on the nested field's own statistics. A filter or
+    projected column missing from the probed schema raises KeyError,
+    an unknown op ValueError, before any Spark job runs.
     """
     files = list_orc_files(path, use_manifest=use_manifest)
     from engine.orc_read import read_orc_tail
@@ -471,20 +561,18 @@ def read_orc_dir(spark: SparkSession, path: str,
         allow_missing_columns = True
     else:
         arrow_schema = read_orc_tail(files[0]).schema()
-    out_columns = columns
-    if columns is not None and filters:
-        # a nested filter column projects its top-level root struct
-        roots = [f[0] if arrow_schema.get_field_index(f[0]) >= 0
-                 else f[0].split(".")[0] for f in filters]
-        # dict.fromkeys: a range filter contributes its column once
-        columns = columns + list(dict.fromkeys(
-            r for r in roots if r not in columns))
+    bad = [f[1] for f in filters or () if f[1] not in FILTER_OPS]
+    if bad:
+        raise ValueError(f"unsupported filter op {bad[0]!r}")
+    # a nested filter column (meta.score) resolves through its root
+    roots = [f[0] if arrow_schema.get_field_index(f[0]) >= 0
+             else f[0].split(".")[0] for f in filters or ()]
+    missing = [c for c in (columns or []) + roots
+               if arrow_schema.get_field_index(c) < 0]
+    if missing:
+        raise KeyError(f"columns not in ORC schema: {missing}")
     if columns is not None:
-        missing = [c for c in columns if arrow_schema.get_field_index(c) < 0]
-        if missing:
-            raise KeyError(f"columns not in ORC schema: {missing}")
-        arrow_schema = pa.schema(
-            [arrow_schema.field(c) for c in columns])
+        arrow_schema = pa.schema([arrow_schema.field(c) for c in columns])
     # prefer_timestamp_ntz=False: Spark's own ORC reader maps the
     # plain `timestamp` kind to TIMESTAMP (LTZ) — match it, so this
     # reader is a drop-in for spark.read.orc on the same files
@@ -493,70 +581,11 @@ def read_orc_dir(spark: SparkSession, path: str,
     # Spark's own arrow convention (us timestamps, utf8 not
     # large_utf8) — the kernel casts each stripe batch into it
     target = to_arrow_schema(spark_schema)
-    names = arrow_schema.names
-
-    n_dec = parallelism or spark.sparkContext.defaultParallelism
 
     def decode(batches):
-        import pyarrow as pa
+        yield from decode_ranges(_rows(batches), target, filters, filters,
+                                 convention, allow_missing_columns)
 
-        from engine.orc_read import read_orc_stripes
-        for p, info, stripes in _claimed(batches, filters):
-            if not stripes:
-                continue
-            got = info.types[0].field_names
-            absent = [c for c in names if c not in got]
-            if absent and not allow_missing_columns:
-                raise ValueError(
-                    f"{p}: ORC schema {got} lacks projected {names}; "
-                    "pass allow_missing_columns=True to null-fill "
-                    "columns this file predates")
-            tbl = read_orc_stripes(p, stripes,
-                                   columns=[c for c in names
-                                            if c not in absent],
-                                   convention=convention, info=info,
-                                   filters=filters)
-            for c in absent:
-                # typed nulls at the probed schema's type: the standard
-                # added-column semantics (rows predate the column)
-                tbl = tbl.append_column(
-                    target.field(c),
-                    pa.nulls(len(tbl), target.field(c).type))
-            yield from tbl.select(names).cast(target).to_batches()
-
-    out = _range_frame(spark, files, n_dec).mapInArrow(decode, spark_schema)
-    if filters:
-        out = out.where(_filter_column(filters))
-    if out_columns is not None and out_columns != columns:
-        out = out.select(*out_columns)
-    return out
-
-
-def _filter_column(filters: list[tuple]):
-    """The exact Spark predicate equivalent to the pruning filters."""
-    from pyspark.sql import functions as F
-    cond = None
-    for name, op, val in filters:
-        c = F.col(name)
-        if op == "is_null":
-            e = c.isNull()
-        elif op == "not_null":
-            e = c.isNotNull()
-        elif op in ("=", "=="):
-            e = c == val
-        elif op == "in":
-            e = c.isin(list(val))
-        elif op == "starts_with":
-            e = c.startswith(val)
-        elif op == "<":
-            e = c < val
-        elif op == "<=":
-            e = c <= val
-        elif op == ">":
-            e = c > val
-        elif op == ">=":
-            e = c >= val
-        else:
-            raise ValueError(f"unsupported filter op {op!r}")
-        cond = e if cond is None else cond & e
-    return cond
+    return _range_frame(
+        spark, files, parallelism or spark.sparkContext.defaultParallelism
+    ).mapInArrow(decode, spark_schema)

@@ -262,16 +262,30 @@ def test_block_codec_roundtrip():
         assert_identical(tbl, dec)
 
 
-def test_no_directory_mode_roundtrip():
-    tbl = token_table(2000)
-    batches = list(encode_batches(tbl.to_batches(), dirs=False))
-    dec = pa.Table.from_batches(list(decode_batches(batches)))
-    assert_identical(tbl, dec)
-    # no-dir blobs are smaller
-    b2 = list(encode_batches(tbl.to_batches(), dirs=True))
-    sz = lambda bs: sum(r["lineage"]["out_bytes"]
-                        for b in bs for r in b.to_pylist())
-    assert sz(batches) < sz(b2)
+@pytest.mark.parametrize("codec", ["none", "mixed"])
+def test_decode_block_rows_empty_directories(codec):
+    """A block whose token lists are all null (empty length and value
+    directories) or all empty (empty value directory) has nothing to
+    seek in: decode_block_rows falls back to a full decode and returns
+    the same rows as slicing decode_block."""
+    from engine.blocks import decode_block_rows
+    base = token_table(40)
+    n = base.num_rows
+    for tokens, n_tok in (
+            (pa.nulls(n, pa.list_(pa.int32())), pa.nulls(n, pa.int32())),
+            (pa.array([[]] * n, pa.list_(pa.int32())),
+             pa.array([0] * n, pa.int32()))):
+        tbl = base.set_column(base.schema.get_field_index("tokens"),
+                              "tokens", tokens)
+        tbl = tbl.set_column(tbl.schema.get_field_index("n_tok"),
+                             "n_tok", n_tok)
+        row = encode_block(tbl.to_batches()[0], codec=codec)
+        full = decode_block(row)
+        assert full.to_pylist() == tbl.to_pylist()
+        for a, b in ((0, n), (3, 17), (n - 1, n)):
+            part, touched = decode_block_rows(row, a, b)
+            assert part.to_pylist() == full.slice(a, b - a).to_pylist()
+            assert touched == len(row["tokens"]["data"])  # full decode
 
 
 def test_mixed_profile_stream_codecs():

@@ -71,17 +71,26 @@ def test_filter_pushdown_exact(spark_ds, orc_dir):
     assert sorted(r.n_tok for r in got) == list(range(1400, 1500))
 
 
+def _claimed_stripes(rd) -> list[int]:
+    """Per partition of ``rd``, how many stripes its task claims after
+    statistics pruning by the reader's pushed and option filters."""
+    from engine.orc_read import read_orc_tail
+    from jobs.orc_read import claim_stripes
+    return [len(claim_stripes(read_orc_tail(p.path), p.start, p.end,
+                              rd._all_filters()))
+            for p in rd.partitions()]
+
+
 def test_pushdown_prunes_splits(orc_dir):
     src = OrcEngineDataSource({"path": orc_dir, "split_mb": "0.001",
                                "pushdown": "true"})
     schema = src.schema()
     unfiltered = src.reader(schema)
-    n_all = len([p for p in unfiltered.partitions() if p.stripes])
+    n_all = len([n for n in _claimed_stripes(unfiltered) if n])
     rd = src.reader(schema)
     rd.pushFilters([GreaterThanOrEqual(("n_tok",), 1400)])
-    kept = [p for p in rd.partitions() if p.stripes]
     # n_tok 1400..1499 = the last file's last stripe only
-    assert sum(len(p.stripes) for p in kept) == 1
+    assert sum(_claimed_stripes(rd)) == 1
     assert n_all >= 15  # 3 files x 5 stripes, tiny split target
 
 
@@ -159,22 +168,17 @@ def test_merge_schema_null_fill(spark_ds, tmp_path):
 
 
 def test_distributed_planning_parity(spark_ds, orc_dir):
-    """distributed_planning=true reads bit-identical rows through
-    byte-range splits (zero driver tail reads), with filters pruning
-    task-side; the auto threshold flips the same way."""
+    """Byte-range splits of any size (planned with zero driver tail
+    reads) read bit-identical rows, with filters pruning task-side."""
     base = sorted(map(tuple, (spark_ds.read.format("orcx")
                               .load(orc_dir).collect())))
-    for opts in ({"distributed_planning": "true"},
-                 {"distributed_planning": "true", "split_mb": "0.01"},
-                 {"distributed_planning_threshold": "1"}):
-        r = spark_ds.read.format("orcx")
-        for k, v in opts.items():
-            r = r.option(k, v)
-        got = sorted(map(tuple, r.load(orc_dir).collect()))
-        assert got == base, opts
+    for split_mb in ("0.01", "0.001"):
+        got = sorted(map(tuple, (spark_ds.read.format("orcx")
+                                 .option("split_mb", split_mb)
+                                 .load(orc_dir).collect())))
+        assert got == base, split_mb
     # filters still prune (and stay exact) through range splits
     got = (spark_ds.read.format("orcx")
-           .option("distributed_planning", "true")
            .option("split_mb", "0.01")
            .option("filters", '[["n_tok", ">=", 1400]]')
            .load(orc_dir).collect())
@@ -184,10 +188,9 @@ def test_distributed_planning_parity(spark_ds, orc_dir):
 def test_distributed_planning_partitions_are_ranges(orc_dir):
     """The planner itself: range splits cover every file without a
     single tail read, and each stripe lands in exactly one range."""
-    from jobs.datasource import (OrcEngineReader, OrcRangePartition,
-                                 _resolve_range)
-    reader = OrcEngineReader(orc_dir, None, {
-        "distributed_planning": "true", "split_mb": "0.01"})
+    from jobs.datasource import OrcEngineReader, OrcRangePartition
+    from jobs.orc_read import claim_stripes
+    reader = OrcEngineReader(orc_dir, None, {"split_mb": "0.01"})
     parts = reader.partitions()
     assert parts and all(isinstance(p, OrcRangePartition)
                          for p in parts)
@@ -203,11 +206,11 @@ def test_distributed_planning_partitions_are_ranges(orc_dir):
         assert spans[0][0] == 0
         assert all(a[1] == b[0] for a, b in zip(spans, spans[1:]))
         assert spans[-1][1] >= os.path.getsize(path)
+    from engine.orc_read import read_orc_tail
     for p in parts:
-        resolved, info = _resolve_range(p, [])
-        claimed[p.path] += len(resolved.stripes)
+        claimed[p.path] += len(claim_stripes(read_orc_tail(p.path),
+                                             p.start, p.end))
     for path, n in claimed.items():
-        from engine.orc_read import read_orc_tail
         assert n == len(read_orc_tail(path).stripes)
 
 
@@ -232,7 +235,7 @@ def test_merge_schema_type_widening(spark_ds, tmp_path):
 
 
 def test_merge_schema_with_distributed_planning(spark_ds, tmp_path):
-    """merge_schema + distributed_planning compose: range splits
+    """merge_schema + sub-file byte ranges compose: range splits
     resolve their stripes task-side AND cast each file up to the
     merged (widest, union-of-fields) schema, null-filling columns a
     file predates."""
@@ -247,7 +250,7 @@ def test_merge_schema_with_distributed_planning(spark_ds, tmp_path):
               os.path.join(d, "part-1.orc"))
     df = (spark_ds.read.format("orcx")
           .option("merge_schema", "true")
-          .option("distributed_planning", "true").load(d))
+          .option("split_mb", "0.0001").load(d))
     assert dict(df.dtypes) == {"id": "bigint", "x": "double",
                                "extra": "bigint"}
     got = sorted(map(tuple, df.collect()))
@@ -336,8 +339,7 @@ def test_option_filters_exact_without_pushdown_conf(spark, orc_dir):
         "path": orc_dir, "split_mb": "0.001",
         "filters": _json.dumps([["n_tok", ">=", 1400]])})
     rd = src.reader(src.schema())
-    assert sum(len(p.stripes) for p in rd.partitions()
-               if p.stripes) == 1
+    assert sum(_claimed_stripes(rd)) == 1
     # filter on a non-projected column still applies exactly
     only_id = (spark.read.format("orcx").schema("doc_id string")
                .option("filters", _json.dumps([["n_tok", "in",
@@ -432,6 +434,50 @@ def test_filters_option_missing_literal_fails_loud(spark_ds, orc_dir):
          .load(orc_dir).collect())
 
 
+def test_split_mb_must_be_positive(orc_dir):
+    """A zero, negative or NaN ``split_mb`` raises ValueError when the
+    reader is built."""
+    src = OrcEngineDataSource({"path": orc_dir})
+    schema = src.schema()
+    for bad in ("0", "-1", "nan"):
+        with pytest.raises(ValueError, match="split_mb"):
+            OrcEngineDataSource({"path": orc_dir, "split_mb": bad}) \
+                .reader(schema).partitions()
+
+
+def test_filters_option_in_needs_a_list(orc_dir):
+    """An ``in`` literal must be a JSON list: a string is not split
+    into its characters and a number raises ValueError, not
+    TypeError."""
+    import json as _json
+    src = OrcEngineDataSource({"path": orc_dir})
+    schema = src.schema()
+    for lit in ("abc", 5):
+        opts = {"path": orc_dir,
+                "filters": _json.dumps([["doc_id", "in", lit]])}
+        with pytest.raises(ValueError, match="JSON list"):
+            OrcEngineDataSource(opts).reader(schema)
+
+
+def test_planning_reads_no_tail(orc_dir, monkeypatch):
+    """Batch and stream planning cut byte ranges from file sizes
+    alone: with every tail read failing, both still plan."""
+    import engine.orc_read
+    from jobs.datasource import OrcEngineReader, OrcEngineStreamReader
+
+    def no_tail(*_a, **_k):
+        raise AssertionError("tail read while planning")
+    monkeypatch.setattr(engine.orc_read, "read_orc_tail", no_tail)
+    parts = OrcEngineReader(orc_dir, None, {}).partitions()
+    assert sorted(p.path for p in parts) == sorted(
+        os.path.join(orc_dir, f) for f in os.listdir(orc_dir))
+    rd = OrcEngineStreamReader(orc_dir, None, {})
+    parts = rd.partitions(rd.initialOffset(), rd.latestOffset())
+    assert len(parts) == 3
+    assert all((p.start, p.end) == (0, os.path.getsize(p.path))
+               for p in parts)
+
+
 def test_stream_reader_incremental_pickup(spark_ds, tmp_path):
     """readStream.format("orcx") tails a directory: each availableNow
     run consumes exactly the files published since the checkpoint's
@@ -478,10 +524,10 @@ def test_stream_reader_offsets_unit(spark_ds, tmp_path):
     o0 = rd.initialOffset()
     o1 = rd.latestOffset()
     assert o1["t"] > 0 and o1["boundary"] == ["f1.orc"]
-    parts = [p for p in rd.partitions(o0, o1) if p.stripes]
+    parts = [p for p in rd.partitions(o0, o1) if p.path]
     assert len(parts) == 1 and parts[0].path.endswith("f1.orc")
     # nothing new between o1 and o1
-    assert [p for p in rd.partitions(o1, o1) if p.stripes] == []
+    assert [p for p in rd.partitions(o1, o1) if p.path] == []
 
 
 def test_stream_reader_retention_safe(tmp_path):
@@ -503,7 +549,7 @@ def test_stream_reader_retention_safe(tmp_path):
               os.path.join(d, "f1.orc"))
     o2 = rd.latestOffset()
     assert o2 != o1
-    parts = [p for p in rd.partitions(o1, o2) if p.stripes]
+    parts = [p for p in rd.partitions(o1, o2) if p.path]
     assert len(parts) == 1 and parts[0].path.endswith("f1.orc")
 
 
@@ -537,7 +583,7 @@ def test_stream_reader_rate_limit_pacing(tmp_path):
     rd2.commit(o1)
     o2 = rd2.latestOffset()
     assert rd2._new_since(o2) == []              # o2 covered f2
-    parts = [p for p in rd2.partitions(o1, o2) if p.stripes]
+    parts = [p for p in rd2.partitions(o1, o2) if p.path]
     assert len(parts) == 1 and parts[0].path.endswith("f2.orc")
 
 
@@ -581,7 +627,7 @@ def test_stream_reader_same_mtime_cohort(tmp_path):
     for _ in range(2):
         nxt = rd.latestOffset()
         batch = [os.path.basename(p.path)
-                 for p in rd.partitions(off, nxt) if p.stripes]
+                 for p in rd.partitions(off, nxt) if p.path]
         assert len(batch) == 1 and batch[0] not in served
         served.extend(batch)
         rd.commit(nxt)
@@ -775,3 +821,14 @@ def test_write_timestamp_instant_option(spark_ds, tmp_path):
           if p.endswith(".orc")][0]
     k2 = {t.kind for t in read_orc_tail(f2).types}
     assert 9 in k2 and 18 not in k2
+
+
+def test_orcx_and_read_orc_dir_fuzz_slice(spark_ds):
+    """A slice of the orcx end-to-end fuzzer (tools/fuzz_cross_impl.py
+    ``run_spark_seed``) runs in-suite: random schemas, projections,
+    split sizes, ``filters`` and schema widening, read through orcx
+    AND read_orc_dir, each compared with the same filter applied to
+    the original table."""
+    from tools.fuzz_cross_impl import run_spark_seed
+    for seed in range(8):
+        assert run_spark_seed(spark_ds, seed) == []

@@ -1546,6 +1546,25 @@ def test_corrupt_files_fail_loud():
     os.unlink(f)
 
 
+def test_truncated_tail_raises_value_error():
+    """read_orc_tail checks the PostScript magic and that the tail it
+    describes fits in the file: a 1-byte file and a file cut to 20% of
+    its bytes both raise ValueError."""
+    t = pa.table({"k": pa.array(range(5000), type=pa.int64())})
+    f = tempfile.mktemp(suffix=".orc")
+    write_orc(t, f, stripe_rows=1000)
+    raw = open(f, "rb").read()
+    for keep in (1, len(raw) // 5):
+        g = tempfile.mktemp()
+        with open(g, "wb") as fh:
+            fh.write(raw[:keep])
+        with pytest.raises(ValueError):
+            read_orc_tail(g)
+        os.unlink(g)
+    assert read_orc_tail(f).num_rows == 5000
+    os.unlink(f)
+
+
 def test_tail_only_dir_stats_both_writers(spark):
     """read_orc_dir_stats computes per-file COUNT/MIN/MAX from file
     tails alone, over directories written by the engine writer AND by

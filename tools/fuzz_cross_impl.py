@@ -379,12 +379,12 @@ def run_seed(seed: int) -> list[str]:
             fails.append("B raised: " + traceback.format_exc(limit=3))
         # F: projection + stripe-subset reads on the engine file
         try:
-            from engine.orc_read import read_orc_info
+            from engine.orc_read import read_orc_tail
             names = list(t.schema.names)
             k = int(rng.integers(1, len(names) + 1))
             proj = sorted(rng.choice(names, size=k, replace=False).tolist(),
                           key=names.index)
-            info = read_orc_info(ep)
+            info = read_orc_tail(ep)
             nstripes = len(info.stripes)
             # StripeInformation dicts keyed by proto field number;
             # field 5 = number_of_rows
@@ -480,7 +480,8 @@ _WIDE = {pa.int8(): pa.int16(), pa.int16(): pa.int32(),
 def run_spark_seed(spark, seed: int) -> list[str]:
     """One orcx end-to-end check: chunked engine files in a dir ->
     spark.read.format('orcx') with a random projection and an exact
-    per-load `filters` option == the same operation on the original.
+    per-load `filters` option, and read_orc_dir with the same
+    projection and filters, each == the same operation on the original.
     Randomly also: write through the orcx WRITE path instead of
     write_orc; cross-read the dir with spark.read.orc (orc-core, a
     third independent reader); widen one column's type in the later
@@ -537,13 +538,10 @@ def run_spark_seed(spark, seed: int) -> list[str]:
         if do_widen:
             reader = reader.option("merge_schema", "true")
         if rng.random() < 0.3:
-            # range-split planner (zero driver tail I/O): must read
-            # the same multiset as the driver-side tail planner
-            reader = reader.option("distributed_planning", "true")
-        if rng.random() < 0.3:
             # tiny split bins fan one file across many splits
             reader = reader.option("split_mb", "1")
         mask = None
+        filters = None
         fcands = [f.name for f in t.schema
                   if pa.types.is_integer(f.type) or pa.types.is_string(f.type)]
         if fcands and n and rng.random() < 0.7:
@@ -561,24 +559,35 @@ def run_spark_seed(spark, seed: int) -> list[str]:
             else:
                 op = None
             if mask is not None:
+                filters = [(fc, op, lit)]
                 reader = reader.option(
                     "filters", _json.dumps([[fc, op, lit]]))
         expect = (t.filter(mask) if mask is not None else t).select(proj)
-        try:
-            rows = reader.load(d).collect()
-        except Exception:
-            return [f"spark seed={seed} raised: "
-                    + traceback.format_exc(limit=3)]
-        got = _multiset(rows, expect.schema, proj)
         want = _multiset([[row[p] for p in proj]
                           for row in expect.to_pylist()],
                          expect.schema, proj)
-        if got != want:
-            d1 = got - want
-            d2 = want - got
-            fails.append(f"spark seed={seed}: orcx multiset mismatch "
-                         f"(+{sum(d1.values())}/-{sum(d2.values())}): "
-                         f"extra={list(d1)[:2]} missing={list(d2)[:2]}")
+        # the same read through read_orc_dir: both surfaces decode in
+        # jobs.orc_read.decode_ranges
+        from jobs.orc_read import read_orc_dir
+        for surface, load in (
+                ("orcx", lambda: reader.load(d)),
+                ("read_orc_dir", lambda: read_orc_dir(
+                    spark, d, columns=proj, filters=filters,
+                    merge_schemas=do_widen))):
+            try:
+                rows = load().collect()
+            except Exception:
+                fails.append(f"spark seed={seed} {surface} raised: "
+                             + traceback.format_exc(limit=3))
+                continue
+            got = _multiset(rows, expect.schema, proj)
+            if got != want:
+                d1 = got - want
+                d2 = want - got
+                fails.append(
+                    f"spark seed={seed}: {surface} multiset mismatch "
+                    f"(+{sum(d1.values())}/-{sum(d2.values())}): "
+                    f"extra={list(d1)[:2]} missing={list(d2)[:2]}")
         if not do_widen and not orcx_write:
             # third independent reader: orc-core via spark.read.orc
             # over the engine-written dir, full-table compare
@@ -608,8 +617,8 @@ def main() -> int:
     ap.add_argument("--start", type=int, default=0)
     ap.add_argument("-j", type=int, default=1)
     ap.add_argument("--spark", type=int, default=0,
-                    help="additionally run N orcx end-to-end seeds "
-                         "in one local Spark session")
+                    help="additionally run N orcx and read_orc_dir "
+                         "end-to-end seeds in one local Spark session")
     args = ap.parse_args()
     seeds = range(args.start, args.start + args.seeds)
     fails: list[str] = []

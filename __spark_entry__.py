@@ -857,8 +857,9 @@ def _q_orc_rowgroup_seek(spark, sf_dir):
     consumed by orc-core's own seeks in tests/test_orc_file.py) — and
     the distributed reader prunes statistics-precluded row groups and
     seeks its decoders straight to the survivors
-    (engine.orc_read.row_groups_matching + decode_rg), then re-applies
-    the predicate exactly. Single-stripe files make the row-group tier
+    (engine.orc_read.row_groups_matching, then _StripeDecoder.decode
+    from each group's positions), then re-applies the predicate
+    exactly. Single-stripe files make the row-group tier
     the only pruning surface, so a match proves THAT tier."""
     import tempfile
 

@@ -45,25 +45,5 @@ def _tune_arrow() -> None:
         pass
 
 
-def _tune_thp() -> None:
-    """Enable transparent huge pages if the sandbox allows.
-
-    This sandbox's minor page faults cost ~1ms each and serialize
-    globally (measured: encode tasks spent 8x more sys than user time);
-    2MB pages cut fault count 512x. Best-effort, idempotent, reversible
-    system knob — a no-op where /sys is read-only.
-    """
-    path = "/sys/kernel/mm/transparent_hugepage/enabled"
-    try:
-        with open(path) as f:
-            if "[always]" in f.read():
-                return
-        with open(path, "w") as f:
-            f.write("always")
-    except OSError:
-        pass
-
-
 _tune_malloc()
 _tune_arrow()
-_tune_thp()

@@ -711,7 +711,7 @@ def _frame(data: bytes, block: int,
 
 def _state_slots(col: _Col, kind: int) -> int:
     """Number of decoder-state slots AFTER a stream's offset slot(s) in
-    a RowIndexEntry (mirrors engine/orc_read._RgCursor): bit streams
+    a RowIndexEntry (mirrors engine/orc_read._Cursor): bit streams
     carry [byte-RLE run, bit] = 2, RLE/byte-RLE streams [values in
     run] = 1, raw byte streams (float/string/binary/decimal DATA) 0."""
     if kind == PRESENT:

@@ -669,28 +669,6 @@ def _parse_stripe_footer(sf) -> tuple[list, list, str]:
     return streams, encodings, tz
 
 
-def _stripe_streams(info: OrcFileInfo, si: dict):
-    """Parse one stripe's footer -> ({(col, kind): raw_slice}, encodings,
-    timezone). Slices are NOT decompressed yet — projection decides."""
-    off, ilen, dlen, flen = si[1], si[2], si[3], si[4]
-    sf = _deframe(info.data[off + ilen + dlen: off + ilen + dlen + flen],
-                  info.compression)
-    streams, encodings, tz = _parse_stripe_footer(sf)
-    smap = {}
-    imap = {}
-    bmap = {}
-    pos = off
-    for scol, skind, slen in streams:
-        if skind == ROW_INDEX:
-            imap[scol] = info.data[pos: pos + slen]
-        elif skind == BLOOM_FILTER_UTF8:
-            bmap[scol] = info.data[pos: pos + slen]
-        elif skind not in _INDEX_KINDS:
-            smap[(scol, skind)] = info.data[pos: pos + slen]
-        pos += slen
-    return smap, imap, bmap, encodings, tz
-
-
 # --- column decode ---------------------------------------------------------
 
 _UTC_NAMES = ("UTC", "GMT", "Etc/UTC", "")
@@ -716,10 +694,16 @@ def _wall_from_utcbase(ns: np.ndarray, tz: str) -> np.ndarray:
 
 
 class _StripeDecoder:
-    def __init__(self, info: OrcFileInfo, si: dict, convention: str):
+    """Decodes the columns of one stripe from the streams
+    :func:`_stripe_window` read. A column outside the read set raises
+    KeyError on any stream access — never wrong bytes, never a
+    stream silently taken as absent."""
+
+    def __init__(self, info: OrcFileInfo, si: dict, window: tuple,
+                 convention: str):
         self.info = info
-        self.smap, self.imap, self.bmap, self.encodings, tz = \
-            _stripe_streams(info, si)
+        self.smap, self.imap, self.bmap, self.encodings, tz, self.cols = \
+            window
         self.tz = tz
         if tz not in _UTC_NAMES:
             # validate eagerly so a bad zone name fails at stripe open,
@@ -795,154 +779,29 @@ class _StripeDecoder:
             out.append(bf)
         return out
 
-    def stream(self, col: int, kind: int) -> bytes:
-        raw = self.smap.get((col, kind))
-        if raw is None:
-            return b""
-        return _deframe(raw, self.info.compression)
+    def _raw(self, col: int, kind: int):
+        """Raw (still chunk-framed) bytes of one stream; None when the
+        writer emitted no such stream."""
+        if col not in self.cols:
+            raise KeyError(f"streams of column {col} were not read — "
+                           "not in the projected column set")
+        return self.smap.get((col, kind))
 
-    def _ints(self, col: int, kind: int, n: int, signed: bool):
-        """Integer-ish stream under the column's declared encoding."""
-        enc = self.encodings[col][0]
-        buf = self.stream(col, kind)
-        if enc in (ENC_DIRECT_V2, ENC_DICTIONARY_V2):
-            return rle2.decode_rlev2(buf, n, signed=signed)
-        return rle1.decode_rlev1(buf, n, signed=signed)
-
-    def decode(self, col: int, n: int) -> pa.Array:
-        t = self.info.types[col]
-        pres_raw = self.smap.get((col, PRESENT))
-        if pres_raw is not None:
-            if t.kind == K_UNION:
-                # Arrow union arrays carry no top-level validity, so a
-                # nullable ORC union has no faithful Arrow mapping
-                raise NotImplementedError(
-                    "nullable UNION columns are not readable")
-            valid = rle1.decode_bool(self.stream(col, PRESENT), n)
-            nn = int(valid.sum())
-        else:
-            valid = None
-            nn = n
-        vals = self._decode_values(col, t, nn)
-        if valid is None:
-            return vals
-        idx = np.cumsum(valid, dtype=np.int64) - 1
-        take = pa.array(idx, type=pa.int64(), mask=~valid)
-        return vals.take(take)
-
-    def _decode_values(self, col: int, t: _TypeNode, nn: int) -> pa.Array:
-        k = t.kind
-        if k == K_STRUCT:
-            children = [self.decode(sub, nn) for sub in t.subtypes]
-            if not children:
-                return pa.array([{}] * nn)
-            return pa.StructArray.from_arrays(children,
-                                              names=t.field_names)
-        if k in (K_LIST, K_MAP):
-            lens = self._ints(col, LENGTH, nn, signed=False)
-            offs = cumsum0(lens)
-            cn = int(offs[-1]) if nn else 0
-            if k == K_LIST:
-                child = self.decode(t.subtypes[0], cn)
-                return pa.LargeListArray.from_arrays(
-                    pa.array(offs, type=pa.int64()), child)
-            keys = self.decode(t.subtypes[0], cn)
-            items = self.decode(t.subtypes[1], cn)
-            return pa.MapArray.from_arrays(
-                pa.array(offs, type=pa.int32()), keys, items)
-        if k == K_UNION:
-            tags = rle1.decode_byte_rle(self.stream(col, DATA), nn)
-            return _union_from_parts(
-                tags, [self.decode(sub, int((tags == i).sum()))
-                       for i, sub in enumerate(t.subtypes)])
-        if k == K_BOOLEAN:
-            bits = rle1.decode_bool(self.stream(col, DATA), nn)
-            return pa.array(bits, type=pa.bool_())
-        if k == K_BYTE:
-            v = rle1.decode_byte_rle(self.stream(col, DATA), nn)
-            return pa.array(v.view(np.int8), type=pa.int8())
-        if k in (K_SHORT, K_INT, K_LONG):
-            v = self._ints(col, DATA, nn, signed=True)
-            at = {K_SHORT: pa.int16(), K_INT: pa.int32(),
-                  K_LONG: pa.int64()}[k]
-            return pa.array(v, type=pa.int64()).cast(at)
-        if k in (K_FLOAT, K_DOUBLE):
-            v = T.decode_floats(self.stream(col, DATA), nn,
-                                double=(k == K_DOUBLE))
-            return pa.array(v)
-        if k == K_DATE:
-            v = self._ints(col, DATA, nn, signed=True)
-            return pa.array(v.astype(np.int32)).cast(pa.date32())
-        if k in (K_TIMESTAMP, K_TIMESTAMP_INSTANT):
-            ns = T.decode_timestamp(self.stream(col, DATA),
-                                    self.stream(col, SECONDARY), nn,
-                                    convention=self.convention)
-            # TIMESTAMP is wall-clock: re-base + re-render through the
-            # writer zone; TIMESTAMP_INSTANT is defined tz-independent
-            # (always UTC base), no adjustment
-            if k == K_TIMESTAMP and self.tz not in _UTC_NAMES:
-                ns = _wall_from_utcbase(ns, self.tz)
-            tz = "UTC" if k == K_TIMESTAMP_INSTANT else None
-            return pa.array(ns).cast(pa.timestamp("ns", tz=tz))
-        if k == K_DECIMAL:
-            lo, hi = d128.decode_unbounded_varints(
-                self.stream(col, DATA), nn)
-            # SECONDARY carries each value's OWN scale: orc-core's
-            # HiveDecimal strips trailing zeros (1.00 @ scale 2 is
-            # stored unscaled=1 scale=0), so rescale to the declared
-            # type scale; ORC C++ and this engine write scale ==
-            # declared for every value, making this a no-op there
-            scales = self._ints(col, SECONDARY, nn, signed=True)
-            diff = t.scale - scales
-            if nn and diff.any():
-                lo, hi = d128.rescale_limbs(lo, hi, diff)
-            raw = np.empty(2 * nn, dtype=np.uint64)
-            raw[0::2] = lo
-            raw[1::2] = hi.view(np.uint64) if hi.dtype != np.uint64 \
-                else hi
-            typ = pa.decimal128(t.precision or 38, t.scale)
-            return pa.Array.from_buffers(
-                typ, nn, [None, pa.py_buffer(raw.tobytes())])
-        if k in (K_STRING, K_VARCHAR, K_CHAR):
-            enc_kind = self.encodings[col][0]
-            if enc_kind in (ENC_DICTIONARY, ENC_DICTIONARY_V2):
-                ids = self._ints(col, DATA, nn, signed=False)
-                return self._dict_keys(col).take(pa.array(ids))
-            lens = self._ints(col, LENGTH, nn, signed=False)
-            data = np.frombuffer(self.stream(col, DATA), dtype=np.uint8)
-            return strings_from_bytes(data, lens)
-        if k == K_BINARY:
-            lens = self._ints(col, LENGTH, nn, signed=False)
-            data = np.frombuffer(self.stream(col, DATA), dtype=np.uint8)
-            offs = cumsum0(lens)
-            return pa.LargeBinaryArray.from_buffers(
-                pa.large_binary(), nn,
-                [None, pa.py_buffer(offs.tobytes()),
-                 pa.py_buffer(data.tobytes())])
-        raise NotImplementedError(f"ORC type kind {k} is not readable")
-
-    def _dict_keys(self, col: int) -> pa.Array:
-        """Stripe-wide dictionary keys (dictionary streams carry no
-        row-group positions — readers load them whole)."""
-        dsz = self.encodings[col][1]
-        klens = self._ints(col, LENGTH, dsz, signed=False)
-        return strings_from_bytes(
-            np.frombuffer(self.stream(col, DICTIONARY_DATA),
-                          dtype=np.uint8), klens)
-
-    # --- row-group seek decode (ROW_INDEX positions) -----------------
-
-    def decode_rg(self, col: int, g: int, n: int) -> pa.Array:
-        """Decode ``n`` consecutive rows of ``col`` starting at row
-        group ``g`` (``n`` may span several adjacent groups), seeking
-        every stream via the group's recorded positions — the bytes
-        before the seek targets are never RLE-walked, and with
+    def decode(self, col: int, n: int, g: int | None = None) -> pa.Array:
+        """``n`` rows of ``col``. With ``g`` None every stream is read
+        from its beginning and its run counts must come out exactly.
+        With a row group ``g`` every stream starts at the group's
+        ROW_INDEX positions (``n`` may span several adjacent groups):
+        the bytes before the seek targets are never RLE-walked, and in
         compressed files only chunks from the recorded chunk offset on
         are inflated."""
         t = self.info.types[col]
-        cur = _RgCursor(self, col, g)
-        if (col, PRESENT) in self.smap:
+        present = self._raw(col, PRESENT) is not None
+        cur = _Cursor(self, col, g)
+        if present:
             if t.kind == K_UNION:
+                # Arrow union arrays carry no top-level validity, so a
+                # nullable ORC union has no faithful Arrow mapping
                 raise NotImplementedError(
                     "nullable UNION columns are not readable")
             valid = cur.bools(PRESENT, n)
@@ -950,42 +809,40 @@ class _StripeDecoder:
         else:
             valid = None
             nn = n
-        vals = self._decode_values_rg(col, t, nn, g, cur)
+        vals = self._values(col, t, nn, g, cur)
         if valid is None:
             return vals
         idx = np.cumsum(valid, dtype=np.int64) - 1
         take = pa.array(idx, type=pa.int64(), mask=~valid)
         return vals.take(take)
 
-    def _rle_v2(self, col: int) -> bool:
-        return self.encodings[col][0] in (ENC_DIRECT_V2, ENC_DICTIONARY_V2)
-
-    def _decode_values_rg(self, col: int, t: _TypeNode, nn: int, g: int,
-                          cur: "_RgCursor") -> pa.Array:
+    def _values(self, col: int, t: _TypeNode, nn: int, g: int | None,
+                cur: "_Cursor") -> pa.Array:
+        """The ``nn`` non-null values of ``col``; each type reads its
+        streams in the order writers record their positions."""
         k = t.kind
-        v2 = self._rle_v2(col)
         if k == K_STRUCT:
-            children = [self.decode_rg(sub, g, nn) for sub in t.subtypes]
+            children = [self.decode(sub, nn, g) for sub in t.subtypes]
             if not children:
                 return pa.array([{}] * nn)
             return pa.StructArray.from_arrays(children,
                                               names=t.field_names)
         if k in (K_LIST, K_MAP):
-            lens = cur.rle_ints(LENGTH, nn, signed=False, v2=v2)
+            lens = cur.ints(LENGTH, nn, signed=False)
             offs = cumsum0(lens)
             cn = int(offs[-1]) if nn else 0
             if k == K_LIST:
-                child = self.decode_rg(t.subtypes[0], g, cn)
+                child = self.decode(t.subtypes[0], cn, g)
                 return pa.LargeListArray.from_arrays(
                     pa.array(offs, type=pa.int64()), child)
-            keys = self.decode_rg(t.subtypes[0], g, cn)
-            items = self.decode_rg(t.subtypes[1], g, cn)
+            keys = self.decode(t.subtypes[0], cn, g)
+            items = self.decode(t.subtypes[1], cn, g)
             return pa.MapArray.from_arrays(
                 pa.array(offs, type=pa.int32()), keys, items)
         if k == K_UNION:
             tags = cur.byte_rle(DATA, nn)
             return _union_from_parts(
-                tags, [self.decode_rg(sub, g, int((tags == i).sum()))
+                tags, [self.decode(sub, int((tags == i).sum()), g)
                        for i, sub in enumerate(t.subtypes)])
         if k == K_BOOLEAN:
             bits = cur.bools(DATA, nn)
@@ -994,29 +851,35 @@ class _StripeDecoder:
             v = cur.byte_rle(DATA, nn)
             return pa.array(v.view(np.int8), type=pa.int8())
         if k in (K_SHORT, K_INT, K_LONG):
-            v = cur.rle_ints(DATA, nn, signed=True, v2=v2)
+            v = cur.ints(DATA, nn, signed=True)
             at = {K_SHORT: pa.int16(), K_INT: pa.int32(),
                   K_LONG: pa.int64()}[k]
             return pa.array(v, type=pa.int64()).cast(at)
         if k in (K_FLOAT, K_DOUBLE):
-            w = 8 if k == K_DOUBLE else 4
-            v = T.decode_floats(cur.raw(DATA)[: nn * w], nn,
-                                double=(k == K_DOUBLE))
+            v = T.decode_floats(cur.raw(DATA), nn, double=(k == K_DOUBLE))
             return pa.array(v)
         if k == K_DATE:
-            v = cur.rle_ints(DATA, nn, signed=True, v2=v2)
+            v = cur.ints(DATA, nn, signed=True)
             return pa.array(v.astype(np.int32)).cast(pa.date32())
         if k in (K_TIMESTAMP, K_TIMESTAMP_INSTANT):
-            secs = cur.rle_ints(DATA, nn, signed=True, v2=v2)
-            enc = cur.rle_ints(SECONDARY, nn, signed=False, v2=v2)
+            secs = cur.ints(DATA, nn, signed=True)
+            enc = cur.ints(SECONDARY, nn, signed=False)
             ns = T.timestamp_from_parts(secs, enc, self.convention)
+            # TIMESTAMP is wall-clock: re-base + re-render through the
+            # writer zone; TIMESTAMP_INSTANT is defined tz-independent
+            # (always UTC base), no adjustment
             if k == K_TIMESTAMP and self.tz not in _UTC_NAMES:
                 ns = _wall_from_utcbase(ns, self.tz)
             tz = "UTC" if k == K_TIMESTAMP_INSTANT else None
             return pa.array(ns).cast(pa.timestamp("ns", tz=tz))
         if k == K_DECIMAL:
             lo, hi = d128.decode_unbounded_varints(cur.raw(DATA), nn)
-            scales = cur.rle_ints(SECONDARY, nn, signed=True, v2=v2)
+            # SECONDARY carries each value's OWN scale: orc-core's
+            # HiveDecimal strips trailing zeros (1.00 @ scale 2 is
+            # stored unscaled=1 scale=0), so rescale to the declared
+            # type scale; ORC C++ and this engine write scale ==
+            # declared for every value, making this a no-op there
+            scales = cur.ints(SECONDARY, nn, signed=True)
             diff = t.scale - scales
             if nn and diff.any():
                 lo, hi = d128.rescale_limbs(lo, hi, diff)
@@ -1030,21 +893,28 @@ class _StripeDecoder:
         if k in (K_STRING, K_VARCHAR, K_CHAR):
             if self.encodings[col][0] in (ENC_DICTIONARY,
                                           ENC_DICTIONARY_V2):
-                ids = cur.rle_ints(DATA, nn, signed=False, v2=v2)
+                ids = cur.ints(DATA, nn, signed=False)
                 return self._dict_keys(col).take(pa.array(ids))
             data = np.frombuffer(cur.raw(DATA), dtype=np.uint8)
-            lens = cur.rle_ints(LENGTH, nn, signed=False, v2=v2)
+            lens = cur.ints(LENGTH, nn, signed=False)
             return strings_from_bytes(data[: int(lens.sum())], lens)
         if k == K_BINARY:
             data = np.frombuffer(cur.raw(DATA), dtype=np.uint8)
-            lens = cur.rle_ints(LENGTH, nn, signed=False, v2=v2)
+            lens = cur.ints(LENGTH, nn, signed=False)
             offs = cumsum0(lens)
             return pa.LargeBinaryArray.from_buffers(
                 pa.large_binary(), nn,
                 [None, pa.py_buffer(offs.tobytes()),
                  pa.py_buffer(data[: int(offs[-1])].tobytes())])
-        raise NotImplementedError(
-            f"ORC type kind {k} is not readable via row-group seek")
+        raise NotImplementedError(f"ORC type kind {k} is not readable")
+
+    def _dict_keys(self, col: int) -> pa.Array:
+        """Stripe-wide dictionary keys (dictionary streams carry no
+        row-group positions — readers load them whole)."""
+        cur = _Cursor(self, col, None)
+        klens = cur.ints(LENGTH, self.encodings[col][1], signed=False)
+        return strings_from_bytes(
+            np.frombuffer(cur.raw(DICTIONARY_DATA), dtype=np.uint8), klens)
 
 
 def _union_from_parts(tags: np.ndarray,
@@ -1062,10 +932,13 @@ def _union_from_parts(tags: np.ndarray,
         field_names=[f"_union_{i}" for i in range(len(children))])
 
 
-class _RgCursor:
-    """Consumes one RowIndexEntry's positions in the reader's stream
-    order (the format's implicit contract: PRESENT first, then the
-    type's streams — mirroring TreeWriter recordPosition order).
+class _Cursor:
+    """Reads one column's streams in the order ``decode`` asks for
+    them. With no row group every stream starts at its beginning, skips
+    nothing, and run counts must come out exact. With a row group it
+    consumes that RowIndexEntry's positions in the same order (the
+    format's implicit contract: PRESENT first, then the type's streams
+    — mirroring TreeWriter recordPosition order).
 
     Slot layout per stream: uncompressed files record [byte offset],
     compressed files [chunk offset, offset in inflated chunk]; RLE
@@ -1075,54 +948,48 @@ class _RgCursor:
     mid-run states (their writers don't break runs at group
     boundaries), this engine's writer records zero skips."""
 
-    def __init__(self, dec: _StripeDecoder, col: int, g: int):
+    def __init__(self, dec: _StripeDecoder, col: int, g: int | None):
         self.dec = dec
-        self.pos = dec.row_index(col)[g]["pos"]
         self.col = col
+        self.pos = None if g is None else dec.row_index(col)[g]["pos"]
         self.i = 0
-        self.comp = dec.info.compression != COMP_NONE
+        self.exact = g is None
+        self.v2 = dec.encodings[col][0] in (ENC_DIRECT_V2,
+                                            ENC_DICTIONARY_V2)
 
-    def _stream(self, kind: int) -> bytes:
-        raw = self.dec.smap.get((self.col, kind))
-        if raw is None:
-            return b""
-        if self.comp:
-            coff = int(self.pos[self.i])
-            sub = int(self.pos[self.i + 1])
-            self.i += 2
-            return _deframe(raw[coff:],
-                            self.dec.info.compression)[sub:]
-        off = int(self.pos[self.i])
-        self.i += 1
-        return bytes(raw[off:])
-
-    def _skip(self) -> int:
+    def _next(self) -> int:
+        if self.pos is None:
+            return 0
         v = int(self.pos[self.i])
         self.i += 1
         return v
 
-    def rle_ints(self, kind: int, n: int, signed: bool,
-                 v2: bool) -> np.ndarray:
-        buf = self._stream(kind)
-        k = self._skip()
-        if v2:
-            return rle2.decode_rlev2(buf, k + n, signed=signed,
-                                     exact=False)[k:]
-        return rle1.decode_rlev1(buf, k + n, signed=signed,
-                                 exact=False)[k:]
+    def raw(self, kind: int) -> bytes:
+        raw = self.dec._raw(self.col, kind)
+        if raw is None:
+            return b""
+        comp = self.dec.info.compression
+        if comp == COMP_NONE:
+            return bytes(raw[self._next():])
+        coff = self._next()
+        sub = self._next()
+        return _deframe(raw[coff:], comp)[sub:]
+
+    def ints(self, kind: int, n: int, signed: bool) -> np.ndarray:
+        buf = self.raw(kind)
+        k = self._next()
+        rle = rle2.decode_rlev2 if self.v2 else rle1.decode_rlev1
+        return rle(buf, k + n, signed=signed, exact=self.exact)[k:]
 
     def bools(self, kind: int, n: int) -> np.ndarray:
-        buf = self._stream(kind)
-        s = self._skip() * 8 + self._skip()
-        return rle1.decode_bool(buf, s + n, exact=False)[s:]
+        buf = self.raw(kind)
+        s = self._next() * 8 + self._next()
+        return rle1.decode_bool(buf, s + n, exact=self.exact)[s:]
 
     def byte_rle(self, kind: int, n: int) -> np.ndarray:
-        buf = self._stream(kind)
-        k = self._skip()
-        return rle1.decode_byte_rle(buf, k + n, exact=False)[k:]
-
-    def raw(self, kind: int) -> bytes:
-        return self._stream(kind)
+        buf = self.raw(kind)
+        k = self._next()
+        return rle1.decode_byte_rle(buf, k + n, exact=self.exact)[k:]
 
 
 def _stripe_batches(dec: _StripeDecoder, root: _TypeNode, sel: list[int],
@@ -1147,7 +1014,7 @@ def _stripe_batches(dec: _StripeDecoder, root: _TypeNode, sel: list[int],
     batches = []
     for g0, cnt in runs:
         n = min(cnt * stride, dec.n_rows - g0 * stride)
-        arrays = [dec.decode_rg(root.subtypes[j], g0, n) for j in sel]
+        arrays = [dec.decode(root.subtypes[j], n, g0) for j in sel]
         batches.append(pa.record_batch(arrays, schema=out_schema))
     return batches
 
@@ -1183,59 +1050,6 @@ def read_orc_tail(path: str, probe: int = 64 * 1024) -> OrcFileInfo:
     return info
 
 
-class _SegmentData:
-    """Expose a sparse set of absolute-offset byte ranges as if the
-    whole file were in memory — the data object behind stream-level
-    I/O projection (only the projected columns' stream ranges were
-    actually read). Every consumer slice falls inside one segment
-    because segments are unions of whole adjacent streams; a slice
-    outside the read set raises instead of returning wrong bytes."""
-
-    __slots__ = ("starts", "ends", "bufs")
-
-    def __init__(self, segments: list[tuple[int, memoryview]]):
-        segments = sorted(segments, key=lambda s: s[0])
-        self.starts = [s for s, _ in segments]
-        self.ends = [s + len(b) for s, b in segments]
-        self.bufs = [b for _, b in segments]
-
-    def __getitem__(self, sl):
-        import bisect
-        i = bisect.bisect_right(self.starts, sl.start) - 1
-        if i < 0 or sl.stop > self.ends[i]:
-            # _stripe_streams slices EVERY stream eagerly; unprojected
-            # ones must not fail until (unless) something touches them
-            return _Unread(sl.start, sl.stop)
-        base = self.starts[i]
-        return self.bufs[i][sl.start - base: sl.stop - base]
-
-
-class _Unread:
-    """Placeholder for a stream byte range that was not read (not in
-    the projected column set). Any attempt to consume it fails loudly
-    instead of yielding wrong bytes."""
-
-    __slots__ = ("start", "stop")
-
-    def __init__(self, start: int, stop: int):
-        self.start = start
-        self.stop = stop
-
-    def _boom(self):
-        raise KeyError(
-            f"byte range [{self.start}, {self.stop}) was not read — "
-            "stream not in the projected column set")
-
-    def __bytes__(self):
-        self._boom()
-
-    def __len__(self):
-        self._boom()
-
-    def __getitem__(self, _):
-        self._boom()
-
-
 def _subtree(info: OrcFileInfo, flat: int) -> list[int]:
     """Flat column ids of ``flat`` and every descendant (pre-order
     numbering: a subtree is contiguous... only per spec for writers
@@ -1249,17 +1063,22 @@ def _subtree(info: OrcFileInfo, flat: int) -> list[int]:
 
 def _stripe_window(f, info: OrcFileInfo, si: dict,
                    sel: list[int], filters: list[tuple] | None,
-                   io_stats: dict | None = None) -> _SegmentData:
+                   io_stats: dict | None = None) -> tuple:
     """Range-read ONE stripe's needed bytes: the stripe footer, the
     projected columns' data streams, and (when filtering) their
     ROW_INDEX plus the filter columns' bloom streams. Unprojected
     columns' bytes are never read from the file — the I/O analog of
-    decode-side projection (a 2-of-20-column scan reads ~2/20ths)."""
+    decode-side projection (a 2-of-20-column scan reads ~2/20ths).
+
+    Returns ``(smap, imap, bmap, encodings, tz, cols)``: the read data
+    streams by ``(col, kind)``, ROW_INDEX and BLOOM_FILTER_UTF8 streams
+    by column (raw, still chunk-framed), the footer's
+    ``[(enc_kind, dict_size)]`` and writerTimezone, and the set of
+    columns whose streams were read."""
     off, ilen, dlen, flen = si[1], si[2], si[3], si[4]
     f.seek(off + ilen + dlen)
-    sf_raw = memoryview(f.read(flen))
-    streams, _, _ = _parse_stripe_footer(_deframe(sf_raw,
-                                                  info.compression))
+    streams, encodings, tz = _parse_stripe_footer(
+        _deframe(f.read(flen), info.compression))
     root = info.types[0]
     need = {0}
     for j in sel:
@@ -1270,6 +1089,7 @@ def _stripe_window(f, info: OrcFileInfo, si: dict,
         need.update(_subtree(info, fc))
         if op in ("=", "==", "in"):
             eq_cols.add(fc)
+    kept = []            # (col, kind, start, stop, range index)
     ranges = []          # [start, stop) of needed streams, in order
     pos = off
     for scol, skind, slen in streams:
@@ -1282,32 +1102,29 @@ def _stripe_window(f, info: OrcFileInfo, si: dict,
                 ranges[-1][1] = pos + slen
             else:
                 ranges.append([pos, pos + slen])
+        if keep:
+            kept.append((scol, skind, pos, pos + slen, len(ranges) - 1))
         pos += slen
-    segments = [(off + ilen + dlen, sf_raw)]
+    bufs = []
     for start, stop in ranges:
         f.seek(start)
-        segments.append((start, memoryview(f.read(stop - start))))
+        bufs.append(memoryview(f.read(stop - start)))
+    smap, imap, bmap = {}, {}, {}
+    for scol, skind, start, stop, r in kept:
+        b = bufs[r][start - ranges[r][0]: stop - ranges[r][0]] \
+            if stop > start else b""
+        if skind == ROW_INDEX:
+            imap[scol] = b
+        elif skind == BLOOM_FILTER_UTF8:
+            bmap[scol] = b
+        else:
+            smap[(scol, skind)] = b
     if io_stats is not None:
         io_stats["bytes_read"] = io_stats.get("bytes_read", 0) \
             + flen + sum(b - a for a, b in ranges)
         io_stats["stripe_bytes"] = io_stats.get("stripe_bytes", 0) \
             + ilen + dlen + flen
-    return _SegmentData(segments)
-
-
-class _ShiftedData:
-    """Expose a stripe's byte range as if it sat at its absolute file
-    offset — _StripeDecoder/_stripe_streams slice ``info.data`` with
-    absolute offsets, so a range-read stripe just shifts the base."""
-
-    __slots__ = ("buf", "base")
-
-    def __init__(self, buf, base: int):
-        self.buf = buf
-        self.base = base
-
-    def __getitem__(self, sl):
-        return self.buf[sl.start - self.base: sl.stop - self.base]
+    return smap, imap, bmap, encodings, tz, need
 
 
 def _select(info: OrcFileInfo, columns: list[str] | None
@@ -1338,11 +1155,13 @@ def read_orc_stripes(path: str, stripe_indices: list[int],
     task needs (a 100-stripe file split 100 ways costs each task
     1/100th of the bytes, not a whole-file read per task; a 2-of-N
     column projection reads only those columns' streams, not the
-    stripe). ``filters`` additionally prune and seek at row-group
-    granularity inside each stripe (see :func:`read_orc`).
-    ``io_stats`` (a dict) accumulates {bytes_read, stripe_bytes} for
-    observability/tests."""
-    import copy
+    stripe). Each stripe's footer is parsed once, by the read that
+    fetches its streams, and one decoder serves the stripe: it reads
+    every stream from its beginning, or — when ``filters`` prune row
+    groups inside the stripe (see :func:`read_orc`) — only the
+    surviving groups, starting each stream at the group's ROW_INDEX
+    positions. ``io_stats`` (a dict) accumulates {bytes_read,
+    stripe_bytes} for observability/tests."""
     if info is None:
         info = read_orc_tail(path)
     conv = _resolve_convention(info, convention)
@@ -1352,10 +1171,8 @@ def read_orc_stripes(path: str, stripe_indices: list[int],
     with open(path, "rb") as f:
         for i in stripe_indices:
             si = info.stripes[i]
-            win = copy.copy(info)
-            win.data = _stripe_window(f, info, si, sel, filters,
-                                      io_stats)
-            dec = _StripeDecoder(win, si, conv)
+            win = _stripe_window(f, info, si, sel, filters, io_stats)
+            dec = _StripeDecoder(info, si, win, conv)
             batches.extend(
                 _stripe_batches(dec, root, sel, out_schema, filters))
     if not batches:

@@ -720,7 +720,7 @@ def group_chunks(sizes: np.ndarray, counts: np.ndarray,
 
 
 def decode_rlev2(buf, n: int, signed: bool = True,
-                 sizes=None, groups=None, exact: bool = True) -> np.ndarray:
+                 groups=None, exact: bool = True) -> np.ndarray:
     """Decode an ORC RLEv2 stream into ``n`` int64 values.
 
     Decodes any spec-conformant stream (cross-implementation: streams
@@ -728,7 +728,6 @@ def decode_rlev2(buf, n: int, signed: bool = True,
     Fully batched: a vectorized speculative size/count table reduces the
     sequential header walk to two scalar loads per chunk; all payloads
     then decode in per-(kind,width) groups with no per-chunk Python.
-    ``sizes`` (exact per-chunk byte sizes) skips the walk entirely;
     ``groups`` (per-group byte sizes from :func:`group_chunks`) runs
     the group-parallel walk — the directory the block format stores.
 
@@ -742,18 +741,7 @@ def decode_rlev2(buf, n: int, signed: bool = True,
     want = n
     bufarr = np.ascontiguousarray(np.frombuffer(bytes(buf), dtype=np.uint8))
     m = bufarr.size
-    if sizes is not None:
-        # chunk directory: no walk, no speculative tables
-        sizes = np.asarray(sizes, dtype=np.int64)
-        starts = cumsum0(sizes)[:-1]
-        h = bufarr[starts].astype(np.int64)
-        tag = h >> 6
-        b1 = bufarr[np.minimum(starts + 1, m - 1)].astype(np.int64)
-        counts = np.where(tag == 0, (h & 7) + 3,
-                          (((h & 1) << 8) | b1) + 1)
-        if int(counts.sum()) != n:
-            raise ValueError("chunk directory does not match stream")
-    elif groups is not None:
+    if groups is not None:
         starts, counts = _group_walk(bufarr, groups)
         if int(counts.sum()) != n:
             raise ValueError("group directory does not match stream")

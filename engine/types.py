@@ -107,8 +107,10 @@ def timestamp_from_parts(secs_rel: np.ndarray, enc: np.ndarray,
                          convention: str = "cpp") -> np.ndarray:
     """Combine decoded DATA (seconds relative to the 2015 epoch) and
     SECONDARY (packed nanos) arrays into epoch nanos — the stream-
-    independent half of :func:`decode_timestamp`, used by the
-    row-group seek path which decodes the streams with skip state."""
+    independent half of :func:`decode_timestamp`, used by the ORC
+    stripe decoder, which decodes the two streams itself (under the
+    column's RLE version, from a row group's positions or from each
+    stream's beginning)."""
     secs = secs_rel + BASE_TIMESTAMP_EPOCH
     zeros = (enc & 7).astype(np.int64)          # two's-complement & : 0..7
     vals = (enc >> 3).astype(np.int64)          # arithmetic shift: signed

@@ -685,18 +685,81 @@ def test_io_projection_cpp_compressed():
     os.unlink(f)
 
 
+@pytest.mark.parametrize("writer", ["engine", "cpp", "cpp-0.11"])
+@pytest.mark.parametrize("codec", ["none", "zlib", "zstd"])
+def test_row_groups_decode_as_their_share_of_the_stripe(writer, codec):
+    """Every top-level column (children included through the
+    recursion) of every stripe, decoded row group by row group from
+    its ROW_INDEX positions, concatenates to the whole-stripe decode.
+    Engine files restart every run at a group boundary; ORC C++ runs
+    cross the boundaries, so its positions carry non-zero skips. ORC
+    C++ 0.11 files use RLEv1 for every integer stream."""
+    from engine.orc_read import (ENC_DICTIONARY, ENC_DICTIONARY_V2,
+                                 _StripeDecoder, _stripe_window)
+    t = _mixed_table(5000)
+    f = tempfile.mktemp(suffix=".orc")
+    if writer == "engine":
+        write_orc(t, f, stripe_rows=3000, row_index_stride=700,
+                  compression=codec)
+    else:
+        orc.write_table(t, f, row_index_stride=700,
+                        dictionary_key_size_threshold=0.5,
+                        file_version=writer[4:] or "0.12",
+                        compression="uncompressed" if codec == "none"
+                        else codec)
+    info = read_orc_tail(f)
+    root = info.types[0]
+    sel = list(range(len(root.subtypes)))
+    dict_strings = set()
+    with open(f, "rb") as fh:
+        for si in info.stripes:
+            # any resolvable filter makes the window read ROW_INDEX
+            win = _stripe_window(fh, info, si, sel, [("i32", ">=", 0)])
+            dec = _StripeDecoder(info, si, win, "cpp")
+            n = si[5]
+            sizes = [min(700, n - r) for r in range(0, n, 700)]
+            for name, col in zip(root.field_names, root.subtypes):
+                whole = dec.decode(col, n)
+                parts = [dec.decode(col, m, g)
+                         for g, m in enumerate(sizes)]
+                assert pa.concat_arrays(parts).equals(whole), name
+            dict_strings |= {
+                name for name, col in zip(root.field_names, root.subtypes)
+                if dec.encodings[col][0] in (ENC_DICTIONARY,
+                                             ENC_DICTIONARY_V2)}
+    assert dict_strings == {"s_dict"}
+    os.unlink(f)
+
+
+def test_reads_orc_cpp_v011_timestamps():
+    """ORC C++ 0.11 files write timestamp DATA and SECONDARY as RLEv1;
+    a whole-stripe read decodes them under that encoding."""
+    t = _mixed_table(3000)
+    f = tempfile.mktemp(suffix=".orc")
+    orc.write_table(t, f, file_version="0.11")
+    _assert_tables_equal(read_orc(f), t)
+    os.unlink(f)
+
+
 def test_io_projection_unread_fails_loudly():
     """Touching a stream outside the projected set raises (never
-    returns wrong bytes): simulated by asking the decoder for an
-    unprojected column through a hand-built window."""
-    from engine.orc_read import _SegmentData
-    seg = _SegmentData([(100, memoryview(b"x" * 50))])
-    assert bytes(seg[slice(120, 130)]) == b"x" * 10
-    missing = seg[slice(400, 500)]
+    returns wrong bytes): a decoder opened on a stripe read for column
+    ``a`` alone decodes ``a`` and refuses ``b``."""
+    from engine.orc_read import _StripeDecoder, _stripe_window
+    t = pa.table({"a": pa.array(range(2000), type=pa.int64()),
+                  "b": pa.array([f"v{i}" for i in range(2000)])})
+    f = tempfile.mktemp(suffix=".orc")
+    orc.write_table(t, f, compression="zlib")
+    info = read_orc_tail(f)
+    si = info.stripes[0]
+    with open(f, "rb") as fh:
+        win = _stripe_window(fh, info, si, [0], None)
+    dec = _StripeDecoder(info, si, win, "cpp")
+    a, b = info.types[0].subtypes
+    assert dec.decode(a, si[5]).to_pylist() == list(range(2000))
     with pytest.raises(KeyError, match="not read"):
-        bytes(missing)
-    with pytest.raises(KeyError, match="not read"):
-        len(missing)
+        dec.decode(b, si[5])
+    os.unlink(f)
 
 
 # --- LZ4 chunk codec (read-compatibility path) ------------------------
@@ -1383,14 +1446,16 @@ spark.stop()
              if p.endswith(".orc"))
     import engine.orc_read as orr
     info = read_orc_tail(f)
-    _, _, _, _, tz = orr._stripe_streams(info, info.stripes[0])
+    with open(f, "rb") as fh:
+        _, _, _, _, tz, _ = orr._stripe_window(fh, info, info.stripes[0],
+                                               [0], None)
     assert tz == "America/Los_Angeles"
     expect = orc.read_table(f)
     got = read_orc(f)
     assert got.column("ts").to_pylist() == \
         expect.column("ts").to_pylist()
     # row-group seek path: an id filter prunes to one 1000-row group,
-    # ts decodes via _RgCursor with the same zone math
+    # ts decodes from the group's positions with the same zone math
     got = read_orc(f, filters=[("id", ">=", 5500)])
     assert 0 < got.num_rows < 3000
     keep = {r["id"]: r["ts"] for r in got.to_pylist()}

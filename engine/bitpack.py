@@ -50,10 +50,6 @@ for _i, _f in enumerate(FIXED_BITS):
     _WIDTH_TO_CODE[_f] = _i
 _CODE_TO_WIDTH = np.array(FIXED_BITS, dtype=np.int64)
 
-# int32 variants for the byte-granular speculative decode tables
-_CODE_TO_WIDTH32 = _CODE_TO_WIDTH.astype(np.int32)
-_CLOSEST32 = _CLOSEST.astype(np.int32)
-
 # composed: raw bit length 0..64 -> 5-bit width code of the closest
 # fixed width, in ONE table gather (the planner's histogram pass runs
 # this over every value — two chained 14M-element gathers were a

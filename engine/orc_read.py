@@ -156,15 +156,25 @@ def _chunk_decomp(comp_kind: int):
         "lzo/lz4/zlib/snappy/zstd/brotli/none")
 
 
-def _deframe(buf, comp_kind: int) -> bytes:
-    """Inflate a chunk-framed region (footer or stream) fully."""
+def _deframe(buf, comp_kind: int, stop: tuple[int, int] | None = None
+             ) -> bytes:
+    """Inflate a chunk-framed region (footer or stream). With ``stop =
+    (chunk, need)`` inflation ends once the chunk at framed offset
+    ``chunk`` and those after it have given ``need`` bytes; otherwise
+    the whole region is inflated."""
     if comp_kind == COMP_NONE or len(buf) == 0:
         return bytes(buf)
     decomp = _chunk_decomp(comp_kind)
     out = bytearray()
     pos = 0
     n = len(buf)
+    mark = None
     while pos < n:
+        if stop is not None:
+            if mark is None and pos >= stop[0]:
+                mark = len(out)
+            if mark is not None and len(out) - mark >= stop[1]:
+                break
         header = int.from_bytes(buf[pos: pos + 3], "little")
         pos += 3
         length = header >> 1
@@ -673,6 +683,12 @@ def _parse_stripe_footer(sf) -> tuple[list, list, str]:
 
 _UTC_NAMES = ("UTC", "GMT", "Etc/UTC", "")
 
+# The longest run any ORC integer, byte or boolean encoding writes: an
+# RLEv2 PATCHED_BASE run of 512 64-bit values with an 8-byte base and
+# 31 64-bit patch entries. A row-group seek reads this far past the
+# next group's position, where a foreign writer's run may cross it.
+_MAX_RUN_BYTES = 4 + 8 + (512 + 31) * 64 // 8
+
 
 def _wall_from_utcbase(ns: np.ndarray, tz: str) -> np.ndarray:
     """Wall-clock epoch nanos for a non-UTC ``writerTimezone`` stripe.
@@ -787,17 +803,18 @@ class _StripeDecoder:
                            "not in the projected column set")
         return self.smap.get((col, kind))
 
-    def decode(self, col: int, n: int, g: int | None = None) -> pa.Array:
+    def decode(self, col: int, n: int, g: int | None = None,
+               ng: int = 1) -> pa.Array:
         """``n`` rows of ``col``. With ``g`` None every stream is read
         from its beginning and its run counts must come out exactly.
-        With a row group ``g`` every stream starts at the group's
-        ROW_INDEX positions (``n`` may span several adjacent groups):
-        the bytes before the seek targets are never RLE-walked, and in
-        compressed files only chunks from the recorded chunk offset on
-        are inflated."""
+        With a row group ``g`` the ``n`` rows are those of the ``ng``
+        groups from ``g`` on, and every stream starts at group ``g``'s
+        ROW_INDEX positions and ends near group ``g + ng``'s: only the
+        bytes of those groups (plus one run) are inflated, copied and
+        RLE-walked."""
         t = self.info.types[col]
         present = self._raw(col, PRESENT) is not None
-        cur = _Cursor(self, col, g)
+        cur = _Cursor(self, col, g, ng)
         if present:
             if t.kind == K_UNION:
                 # Arrow union arrays carry no top-level validity, so a
@@ -809,7 +826,7 @@ class _StripeDecoder:
         else:
             valid = None
             nn = n
-        vals = self._values(col, t, nn, g, cur)
+        vals = self._values(col, t, nn, g, ng, cur)
         if valid is None:
             return vals
         idx = np.cumsum(valid, dtype=np.int64) - 1
@@ -817,12 +834,12 @@ class _StripeDecoder:
         return vals.take(take)
 
     def _values(self, col: int, t: _TypeNode, nn: int, g: int | None,
-                cur: "_Cursor") -> pa.Array:
+                ng: int, cur: "_Cursor") -> pa.Array:
         """The ``nn`` non-null values of ``col``; each type reads its
         streams in the order writers record their positions."""
         k = t.kind
         if k == K_STRUCT:
-            children = [self.decode(sub, nn, g) for sub in t.subtypes]
+            children = [self.decode(sub, nn, g, ng) for sub in t.subtypes]
             if not children:
                 return pa.array([{}] * nn)
             return pa.StructArray.from_arrays(children,
@@ -832,17 +849,17 @@ class _StripeDecoder:
             offs = cumsum0(lens)
             cn = int(offs[-1]) if nn else 0
             if k == K_LIST:
-                child = self.decode(t.subtypes[0], cn, g)
+                child = self.decode(t.subtypes[0], cn, g, ng)
                 return pa.LargeListArray.from_arrays(
                     pa.array(offs, type=pa.int64()), child)
-            keys = self.decode(t.subtypes[0], cn, g)
-            items = self.decode(t.subtypes[1], cn, g)
+            keys = self.decode(t.subtypes[0], cn, g, ng)
+            items = self.decode(t.subtypes[1], cn, g, ng)
             return pa.MapArray.from_arrays(
                 pa.array(offs, type=pa.int32()), keys, items)
         if k == K_UNION:
             tags = cur.byte_rle(DATA, nn)
             return _union_from_parts(
-                tags, [self.decode(sub, int((tags == i).sum()), g)
+                tags, [self.decode(sub, int((tags == i).sum()), g, ng)
                        for i, sub in enumerate(t.subtypes)])
         if k == K_BOOLEAN:
             bits = cur.bools(DATA, nn)
@@ -946,12 +963,22 @@ class _Cursor:
     [bytes consumed in byte-RLE run, bits consumed in byte]. Skips are
     honored by over-decoding and dropping — ORC C++/Java files record
     mid-run states (their writers don't break runs at group
-    boundaries), this engine's writer records zero skips."""
+    boundaries), this engine's writer records zero skips.
 
-    def __init__(self, dec: _StripeDecoder, col: int, g: int | None):
+    A seek of groups ``[g, g + ng)`` stops each stream at group ``g +
+    ng``'s position plus ``_MAX_RUN_BYTES``, the run that may cross
+    it; the stripe's last group reads to the stream's end."""
+
+    def __init__(self, dec: _StripeDecoder, col: int, g: int | None,
+                 ng: int = 1):
         self.dec = dec
         self.col = col
-        self.pos = None if g is None else dec.row_index(col)[g]["pos"]
+        self.pos = self.end = None
+        if g is not None:
+            ridx = dec.row_index(col)
+            self.pos = ridx[g]["pos"]
+            if g + ng < len(ridx):
+                self.end = ridx[g + ng]["pos"]
         self.i = 0
         self.exact = g is None
         self.v2 = dec.encodings[col][0] in (ENC_DIRECT_V2,
@@ -969,11 +996,17 @@ class _Cursor:
         if raw is None:
             return b""
         comp = self.dec.info.compression
+        end = self.end
+        i = self.i
         if comp == COMP_NONE:
-            return bytes(raw[self._next():])
+            off = self._next()
+            hi = len(raw) if end is None else end[i] + _MAX_RUN_BYTES
+            return bytes(raw[off:hi])
         coff = self._next()
         sub = self._next()
-        return _deframe(raw[coff:], comp)[sub:]
+        stop = None if end is None else \
+            (end[i] - coff, end[i + 1] + _MAX_RUN_BYTES)
+        return _deframe(raw[coff:], comp, stop)[sub:]
 
     def ints(self, kind: int, n: int, signed: bool) -> np.ndarray:
         buf = self.raw(kind)
@@ -1014,7 +1047,7 @@ def _stripe_batches(dec: _StripeDecoder, root: _TypeNode, sel: list[int],
     batches = []
     for g0, cnt in runs:
         n = min(cnt * stride, dec.n_rows - g0 * stride)
-        arrays = [dec.decode(root.subtypes[j], n, g0) for j in sel]
+        arrays = [dec.decode(root.subtypes[j], n, g0, cnt) for j in sel]
         batches.append(pa.record_batch(arrays, schema=out_schema))
     return batches
 

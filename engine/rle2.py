@@ -562,50 +562,60 @@ def encode_rlev2(values, signed: bool = True, aligned: bool = True,
 # decode
 # ---------------------------------------------------------------------------
 
-def _speculative_tables(b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """(sizes_at, counts_at): for EVERY byte position, the byte size and
-    value count of the chunk that would start there. Vectorized; entries
-    at non-header positions are speculative garbage that the header walk
-    never visits. This turns the sequential header walk into two scalar
-    loads per chunk."""
-    m = b.size
-    pad = np.zeros(m + 8, dtype=np.uint8)
-    pad[:m] = b
-    tag = b >> 6  # uint8
-    w_code = (b >> 1) & 31
-    widths = bp._CODE_TO_WIDTH32[w_code]
-    cnt9 = ((b & 1).astype(np.int32) << 8) + pad[1: m + 1] + 1
-    sizes = np.empty(m, dtype=np.int32)
-    counts = np.where(tag == 0, (b & 7).astype(np.int32) + 3, cnt9)
+# int tables for the scalar walk, and the zero bytes that its header
+# and varint reads past a stream's end land in
+_WIDTH = bp.FIXED_BITS
+_CLOSEST_L = bp._CLOSEST.tolist()
+_SR_COUNT = [(h & 7) + 3 for h in range(0x40)]
+_SR_SIZE = [2 + (h >> 3) for h in range(0x40)]
+_PAD = bytes(24)
 
-    m0 = tag == 0  # SHORT_REPEAT
-    sizes[m0] = 2 + ((b[m0] >> 3) & 7)
-    m1 = tag == 1  # DIRECT
-    sizes[m1] = 2 + (cnt9[m1] * widths[m1] + 7) // 8
-    p = np.flatnonzero(tag == 2)  # PATCHED_BASE
-    if p.size:
-        h3 = pad[p + 2]
-        h4 = pad[p + 3]
-        bw = (((h3 >> 5) & 7) + 1).astype(np.int32)
-        pw = bp._CODE_TO_WIDTH32[h3 & 31]
-        pgw = (((h4 >> 5) & 7) + 1).astype(np.int32)
-        pl = (h4 & 31).astype(np.int32)
-        cfb = bp._CLOSEST32[np.minimum(pgw + pw, 64)]
-        sizes[p] = 4 + bw + (cnt9[p] * widths[p] + 7) // 8 \
-            + (pl * cfb + 7) // 8
-    p = np.flatnonzero(tag == 3)  # DELTA
-    if p.size:
-        # distance to the next varint terminator, via a reversed
-        # running-minimum (no searchsorted)
-        pos_all = np.arange(m, dtype=np.int32)
-        A = np.where((b & 0x80) == 0, pos_all, np.int32(m))
-        term_pos = np.minimum.accumulate(A[::-1])[::-1]
-        term_dist = np.maximum(term_pos - pos_all + 1, 1)
-        l1 = term_dist[np.minimum(p + 2, m - 1)].astype(np.int64)
-        l2 = term_dist[np.minimum(p + 2 + l1, m - 1)]
-        dw = np.where(w_code[p] == 0, 0, widths[p])
-        sizes[p] = 2 + l1 + l2 + (np.maximum(cnt9[p] - 2, 0) * dw + 7) // 8
-    return sizes, counts
+
+def _walk(b: bytes, m: int, n: int) -> tuple[list[int], int]:
+    """(run starts, values produced) of the first ``m`` bytes of ``b``
+    (``b`` zero-padded by ``_PAD``), walked header to header with int
+    arithmetic until ``n`` values are produced. A run whose header or
+    payload ends past byte ``m`` raises ValueError."""
+    starts: list[int] = []
+    add = starts.append
+    sr_count, sr_size = _SR_COUNT, _SR_SIZE
+    pos = 0
+    produced = 0
+    while produced < n:
+        if pos >= m:
+            raise ValueError("RLEv2 stream truncated")
+        add(pos)
+        h = b[pos]
+        if h < 0x40:                                # SHORT_REPEAT
+            produced += sr_count[h]
+            pos += sr_size[h]
+            continue
+        c = ((h & 1) << 8 | b[pos + 1]) + 1
+        w = _WIDTH[(h >> 1) & 31]
+        if h < 0x80:                                # DIRECT
+            size = 2 + (c * w + 7) // 8
+        elif h < 0xC0:                              # PATCHED_BASE
+            h3 = b[pos + 2]
+            h4 = b[pos + 3]
+            cfb = _CLOSEST_L[min((h4 >> 5) + 1 + _WIDTH[h3 & 31], 64)]
+            size = 5 + (h3 >> 5) + (c * w + 7) // 8 \
+                + ((h4 & 31) * cfb + 7) // 8
+        else:                                       # DELTA
+            p = pos + 2
+            while b[p] & 0x80:                      # base varint
+                p += 1
+            p += 1
+            while b[p] & 0x80:                      # first-delta varint
+                p += 1
+            p += 1
+            size = p - pos
+            if c > 2 and h & 0x3E:                  # packed |deltas|
+                size += ((c - 2) * w + 7) // 8
+        pos += size
+        produced += c
+    if pos > m:
+        raise ValueError("RLEv2 stream truncated")
+    return starts, produced
 
 
 def _varint_len_at(pad: np.ndarray, pos: np.ndarray) -> np.ndarray:
@@ -614,15 +624,15 @@ def _varint_len_at(pad: np.ndarray, pos: np.ndarray) -> np.ndarray:
     return np.argmax((win & 0x80) == 0, axis=1).astype(np.int64) + 1
 
 
-def _sizes_counts_at(b: np.ndarray, pad: np.ndarray, pos: np.ndarray
+def _sizes_counts_at(pad: np.ndarray, pos: np.ndarray
                      ) -> tuple[np.ndarray, np.ndarray]:
-    """(sizes, counts) of the chunks starting at the given positions —
-    the lazy, position-batch form of :func:`_speculative_tables` (no
-    whole-buffer tables; only queried headers are parsed)."""
-    h = b[pos]
+    """(sizes, counts) of the chunks starting at the given positions of
+    a zero-padded stream: the vectorized header parse
+    :func:`_group_walk` makes for every group at once."""
+    h = pad[pos]
     tag = h >> 6
     w_code = (h >> 1) & 31
-    widths = bp._CODE_TO_WIDTH32[w_code].astype(np.int64)
+    widths = bp._CODE_TO_WIDTH[w_code]
     cnt9 = ((h & 1).astype(np.int64) << 8) + pad[pos + 1] + 1
     counts = np.where(tag == 0, (h & 7).astype(np.int64) + 3, cnt9)
     sizes = np.empty(pos.size, dtype=np.int64)
@@ -636,10 +646,10 @@ def _sizes_counts_at(b: np.ndarray, pad: np.ndarray, pos: np.ndarray
         h3 = pad[pp + 2]
         h4 = pad[pp + 3]
         bw = (((h3 >> 5) & 7) + 1).astype(np.int64)
-        pw = bp._CODE_TO_WIDTH32[h3 & 31].astype(np.int64)
+        pw = bp._CODE_TO_WIDTH[h3 & 31]
         pgw = (((h4 >> 5) & 7) + 1).astype(np.int64)
         pl = (h4 & 31).astype(np.int64)
-        cfb = bp._CLOSEST32[np.minimum(pgw + pw, 64)]
+        cfb = bp._CLOSEST[np.minimum(pgw + pw, 64)]
         sizes[p] = 4 + bw + (cnt9[p] * widths[p] + 7) // 8 \
             + (pl * cfb + 7) // 8
     p = np.flatnonzero(tag == 3)  # DELTA
@@ -652,9 +662,10 @@ def _sizes_counts_at(b: np.ndarray, pad: np.ndarray, pos: np.ndarray
     return sizes, counts
 
 
-def _group_walk(bufarr: np.ndarray, gsizes: np.ndarray
+def _group_walk(pad: np.ndarray, gsizes: np.ndarray
                 ) -> tuple[np.ndarray, np.ndarray]:
-    """Per-chunk (starts, counts) from a GROUP directory.
+    """Per-chunk (starts, counts) from a GROUP directory, over a stream
+    zero-padded by ``_PAD``.
 
     Groups are independent spans of whole chunks, so the header walk —
     sequential by nature within a group — runs group-parallel: one
@@ -664,9 +675,6 @@ def _group_walk(bufarr: np.ndarray, gsizes: np.ndarray
     value stream of small-run chunks walks in ~256 vector steps instead
     of ~100k scalar ones, and only visited headers are parsed.
     """
-    m = bufarr.size
-    pad = np.zeros(m + 24, dtype=np.uint8)
-    pad[:m] = bufarr
     goffs = cumsum0(np.asarray(gsizes, dtype=np.int64))
     gends = goffs[1:]
     pos = goffs[:-1].copy()
@@ -674,7 +682,7 @@ def _group_walk(bufarr: np.ndarray, gsizes: np.ndarray
     active = pos < gends
     while active.any():
         p_act = pos[active]
-        sz, ct = _sizes_counts_at(bufarr, pad, p_act)
+        sz, ct = _sizes_counts_at(pad, p_act)
         all_starts.append(p_act)
         all_gidx.append(np.flatnonzero(active))
         all_counts.append(ct)
@@ -725,11 +733,12 @@ def decode_rlev2(buf, n: int, signed: bool = True,
 
     Decodes any spec-conformant stream (cross-implementation: streams
     sliced from ORC C++ / orc-core files decode too, SURVEY.md §5.2.3).
-    Fully batched: a vectorized speculative size/count table reduces the
-    sequential header walk to two scalar loads per chunk; all payloads
-    then decode in per-(kind,width) groups with no per-chunk Python.
-    ``groups`` (per-group byte sizes from :func:`group_chunks`) runs
-    the group-parallel walk — the directory the block format stores.
+    With no directory one scalar walk (:func:`_walk`) finds the run
+    starts, reading only run headers, until ``n`` values are produced;
+    ``groups`` (per-group byte sizes from :func:`group_chunks`, the
+    directory the block format stores) runs the group-parallel walk
+    instead. All payloads then decode in per-(kind, width) batches
+    with no per-run Python. A truncated stream raises ValueError.
 
     ``exact=False`` permits the final run to overshoot ``n`` (the
     row-group seek case: a foreign writer's run crosses the group
@@ -739,36 +748,29 @@ def decode_rlev2(buf, n: int, signed: bool = True,
     if n == 0:
         return np.zeros(0, dtype=_I64)
     want = n
-    bufarr = np.ascontiguousarray(np.frombuffer(bytes(buf), dtype=np.uint8))
-    m = bufarr.size
+    raw = bytes(buf)
+    m = len(raw)
+    b = raw + _PAD
+    bufarr = np.frombuffer(b, dtype=np.uint8)
     if groups is not None:
+        if int(np.sum(groups)) > m:
+            raise ValueError("RLEv2 stream truncated")
         starts, counts = _group_walk(bufarr, groups)
         if int(counts.sum()) != n:
             raise ValueError("group directory does not match stream")
-        h = bufarr[starts].astype(np.int64)
-        tag = h >> 6
     else:
-        sizes_at, counts_at = _speculative_tables(bufarr)
-        # ---- header walk (sequential by nature, O(1) python per chunk)
-        starts_l: list[int] = []
-        append = starts_l.append
-        pos = 0
-        produced = 0
-        while produced < n:
-            if pos >= m:
-                raise ValueError("RLEv2 stream truncated")
-            append(pos)
-            produced += counts_at[pos]
-            pos += sizes_at[pos]
+        starts_l, produced = _walk(b, m, n)
         if produced != n:
             if exact:
                 raise ValueError(f"RLEv2 stream produced {produced} "
                                  f"values, expected {n}")
             n = produced        # decode the overshoot, truncate below
         starts = np.array(starts_l, dtype=np.int64)
-        h = bufarr[starts].astype(np.int64)
-        tag = h >> 6
-        counts = counts_at[starts]
+    h = bufarr[starts].astype(np.int64)
+    tag = h >> 6
+    if groups is None:          # the run counts the walk summed
+        counts = np.where(tag == 0, (h & 7) + 3,
+                          ((h & 1) << 8 | bufarr[starts + 1]) + 1)
     out_offs = cumsum0(counts)[:-1]
     out = np.empty(n, dtype=_I64)
 
@@ -790,17 +792,12 @@ def decode_rlev2(buf, n: int, signed: bool = True,
     # ---- DELTA ------------------------------------------------------------
     dl = np.flatnonzero(tag == 3)
     if dl.size:
-        # varint lengths of the two header varints, parsed only at the
-        # dl.size positions that need them (a 10-byte window argmax per
-        # chunk) — replaces four whole-buffer temporaries and a
-        # reversed minimum.accumulate that scaled with stream bytes,
-        # not DELTA chunk count
-        pad = np.zeros(m + 24, dtype=np.uint8)
-        pad[:m] = bufarr
+        # lengths of the two header varints, from a 10-byte window of
+        # the zero-padded buffer per chunk
         sd = starts[dl]
         cnt_d = counts[dl]
-        l1 = _varint_len_at(pad, sd + 2)
-        l2 = _varint_len_at(pad, sd + 2 + l1)
+        l1 = _varint_len_at(bufarr, sd + 2)
+        l2 = _varint_len_at(bufarr, sd + 2 + l1)
         base_u, _ = vi.decode_varints(gather_spans(bufarr, sd + 2, l1),
                                       dl.size)
         first_u, _ = vi.decode_varints(

@@ -731,6 +731,56 @@ def test_row_groups_decode_as_their_share_of_the_stripe(writer, codec):
     os.unlink(f)
 
 
+@pytest.mark.parametrize("writer", ["engine", "cpp"])
+def test_row_group_seek_inflates_only_its_groups(writer, monkeypatch):
+    """A one-group seek inflates and copies the group's own bytes plus
+    at most one compression chunk and one run per stream: the same
+    bound for the first group as for the one before the last, where a
+    seek that read to the end of the stripe would inflate nearly the
+    whole stream."""
+    import engine.orc_read as orr
+    t = token_table(2000, seed=5)
+    block, stride = 16 * 1024, 100
+    f = tempfile.mktemp(suffix=".orc")
+    if writer == "engine":
+        write_orc(t, f, row_index_stride=stride, compression="zstd",
+                  compression_block=block)
+    else:
+        orc.write_table(t, f, row_index_stride=stride, compression="zstd",
+                        compression_block_size=block)
+    info = read_orc_tail(f)
+    si = info.stripes[0]
+    col = info.types[0].subtypes[info.types[0].field_names.index("tokens")]
+    with open(f, "rb") as fh:
+        win = orr._stripe_window(fh, info, si, [1], [("n_tok", ">=", 0)])
+    os.unlink(f)
+    dec = orr._StripeDecoder(info, si, win, "cpp")
+    for c in (col, col + 1):
+        dec.row_index(c)            # parse (and inflate) the index first
+    inflated = []
+    deframe = orr._deframe
+
+    def counting(buf, comp, stop=None):
+        out = deframe(buf, comp, stop)
+        inflated[-1] += len(out)
+        return out
+    monkeypatch.setattr(orr, "_deframe", counting)
+    inflated.append(0)
+    whole = dec.decode(col, si[5])
+    whole_bytes = inflated.pop()
+    ng = -(-si[5] // stride)
+    parts = []
+    for g in range(ng):
+        inflated.append(0)
+        parts.append(dec.decode(col, min(stride, si[5] - g * stride), g))
+    assert pa.concat_arrays(parts).equals(whole)
+    streams = 3                     # list LENGTH, child DATA, PRESENT
+    bound = 2 * whole_bytes / ng + \
+        streams * (block + orr._MAX_RUN_BYTES)
+    assert whole_bytes > 4 * bound, (whole_bytes, bound)
+    assert max(inflated[:-1]) <= bound, (inflated, bound)
+
+
 def test_reads_orc_cpp_v011_timestamps():
     """ORC C++ 0.11 files write timestamp DATA and SECONDARY as RLEv1;
     a whole-stripe read decodes them under that encoding."""

@@ -42,6 +42,63 @@ def test_rlev2_roundtrip_property(segs):
         assert np.array_equal(got, v[a:b])
 
 
+def _assert_walks_agree(enc, v, signed, sizes, counts):
+    """The no-directory decode and the group-directory decode of one
+    stream land on the same run starts and the input values."""
+    from engine.rle2 import _PAD, _group_walk, _walk, group_chunks
+    enc = bytes(enc)
+    gsizes, gcounts = group_chunks(sizes, counts, max_chunks=3,
+                                   max_values=40)
+    starts, _ = _walk(enc + _PAD, len(enc), v.size)
+    gstarts, _ = _group_walk(np.frombuffer(enc + _PAD, np.uint8), gsizes)
+    assert starts == gstarts.tolist()
+    plain = decode_rlev2(enc, v.size, signed=signed)
+    grouped = decode_rlev2(enc, v.size, signed=signed, groups=gsizes)
+    assert np.array_equal(plain, v)
+    assert np.array_equal(grouped, v)
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.lists(segment, min_size=1, max_size=12), st.booleans())
+def test_rlev2_walk_matches_group_walk_property(segs, signed):
+    v = np.array([x for s in segs for x in s], dtype=np.int64)
+    enc, sizes, counts = encode_rlev2(v, signed=signed, with_sizes=True)
+    _assert_walks_agree(enc, v, signed, sizes, counts)
+
+
+@settings(max_examples=30, deadline=None)
+@given(st.lists(segment, min_size=1, max_size=12))
+def test_rlev2_walk_matches_group_walk_orc_cpp_property(segs):
+    """Same agreement on a DATA stream ORC C++ wrote: its per-run sizes
+    come from the walk's starts, and the group walk, which re-parses
+    every header, must step exactly onto them."""
+    import os
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.orc as orc
+
+    from engine.rle2 import _PAD, _walk
+
+    from .orc_tail import parse_orc
+    v = np.array([x for s in segs for x in s], dtype=np.int64)
+    fd, f = tempfile.mkstemp(suffix=".orc")
+    os.close(fd)
+    try:
+        orc.write_table(pa.table({"x": v}), f, compression="uncompressed")
+        s = parse_orc(f)[0]
+    finally:
+        os.unlink(f)
+    enc = bytes(s["streams"][(1, "DATA")])
+    starts, _ = _walk(enc + _PAD, len(enc), v.size)
+    sizes = np.diff(np.append(starts, len(enc)))
+    h = np.frombuffer(enc, np.uint8)[starts].astype(np.int64)
+    nxt = np.frombuffer(enc + _PAD, np.uint8)[np.array(starts) + 1]
+    counts = np.where(h >> 6 == 0, (h & 7) + 3,
+                      ((h & 1) << 8 | nxt) + 1)
+    _assert_walks_agree(enc, v, True, sizes, counts)
+
+
 @settings(max_examples=100, deadline=None)
 @given(st.lists(i64, min_size=0, max_size=400))
 def test_rlev2_raw_int64_property(xs):

@@ -3,7 +3,7 @@
 import numpy as np
 import pytest
 
-from engine.rle2 import decode_rlev2, encode_rlev2
+from engine.rle2 import _PAD, _walk, decode_rlev2, encode_rlev2
 
 RNG = np.random.default_rng(42)
 
@@ -154,3 +154,37 @@ def test_patched_aligned_rounding_swallows_outliers():
     v[::50] = rng.integers(2 ** 20, 2 ** 22, 8)  # outliers at 100p
     rt(v, aligned=True)
     rt(v, aligned=False)
+
+
+@pytest.mark.parametrize("exact", [True, False])
+def test_every_truncated_prefix_raises_value_error(exact):
+    """A stream cut anywhere inside a run fails with ValueError, never
+    an IndexError from a payload gather past the end. The stream holds
+    all four sub-encodings (tags 0-3) and ends in a SHORT_REPEAT run,
+    whose value bytes are the last thing the header walk would skip."""
+    rng = np.random.default_rng(7)
+    pat = rng.integers(0, 100, 200)
+    pat[[5, 60, 130]] = 2**28
+    sep = [9] * 5
+    v = np.concatenate([sep, rng.integers(-5000, 5000, 100), sep, pat,
+                        sep, np.cumsum(rng.integers(1, 9, 120)), sep,
+                        np.arange(0, 300, 3), sep]).astype(np.int64)
+    enc = rt(v).tobytes()
+    starts, _ = _walk(enc + _PAD, len(enc), len(v))
+    assert {enc[s] >> 6 for s in starts} == {0, 1, 2, 3}
+    for k in range(len(enc)):
+        with pytest.raises(ValueError):
+            decode_rlev2(enc[:k], len(v), exact=exact)
+
+
+def test_truncated_stream_with_directory_raises_value_error():
+    """A group directory that claims more bytes than the stream holds
+    fails as a truncated stream, not with zero bits read past the end."""
+    from engine.rle2 import group_chunks
+    v = np.arange(1000) % 7
+    enc, sizes, counts = encode_rlev2(v, with_sizes=True)
+    gsizes, _ = group_chunks(sizes, counts)
+    assert np.array_equal(decode_rlev2(enc, v.size, groups=gsizes), v)
+    for k in (enc.size - 1, enc.size // 2):
+        with pytest.raises(ValueError, match="truncated"):
+            decode_rlev2(enc[:k], v.size, groups=gsizes)

@@ -12,6 +12,8 @@ import time
 
 import numpy as np
 
+import jobs  # noqa: F401  (allocator tuning, jobs/__init__.py)
+
 INPUT = "/tmp/orc_format_spark_bench/input-r1000000-s42"
 _TBL = None
 _CUM = None

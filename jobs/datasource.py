@@ -21,37 +21,36 @@ whole stack drives through the idiomatic reader/writer interface:
 What Spark's planner hands the source is used the way a native DSv2
 source would:
 
-* **Filter pushdown** — ``pushFilters`` receives Catalyst's
-  translated predicates (EqualTo/GreaterThan/.../In, IsNull/IsNotNull
-  — which Catalyst attaches to nearly every comparison — and nested
-  columns as dotted paths) and forwards the representable conjuncts to the
-  engine's THREE pruning tiers (stripe statistics, per-row-group
-  statistics + bloom filters, ROW_INDEX seek — all in the task,
-  jobs/orc_read.py docstring). Every filter is returned to Spark as
-  well, so Spark re-applies them exactly: the engine tiers prune
-  supersets; correctness never depends on them.
+* **Filters** — one contract for the ``filters`` option, Catalyst's
+  ``pushFilters`` and ``read_orc_dir``. ``schema()`` plans through
+  jobs.orc_read.resolve_scan, so at ``load()`` an op outside
+  ``FILTER_OPS``, a missing literal or an ``in`` without a list
+  raises ValueError, and a filter column the files lack raises
+  KeyError. With a user ``.schema(...)`` nothing is probed: the
+  reader runs the I/O-free check (``check_filters``, ValueError),
+  and a task whose file lacks a filter column raises ValueError
+  unless ``merge_schema`` null-fills it. The filters prune in the
+  engine's three tiers (stripe statistics, row-group statistics and
+  blooms, ROW_INDEX seek; jobs/orc_read.py); option filters then
+  apply exactly in the task, and pushed ones are handed back to
+  Spark, which re-applies them.
 * **Split planning** — ``partitions()`` lists the directory and cuts
   each file into ``split_mb`` byte ranges (default 64 MB) from its
-  size alone (``OrcRangePartition``): no tail is read on the driver,
-  so a million-file listing plans at ``os.stat`` speed, and every
-  file costs at least one task. Each task reads its file's ~KB tail
-  once, claims the stripes whose offset lies in its range, prunes the
-  statistics-precluded ones and decodes the rest
-  (jobs.orc_read.decode_ranges, the task side ``read_orc_dir`` uses
-  too). (DSv2 ``partitions()`` runs in Spark's planning worker, which
-  has no SparkSession, so the tail reads belong in ``read()``.)
-* **Column pruning** — the reader decodes only the fields of the
-  schema Spark passes (pass ``.schema(...)`` or ``columns`` to
-  project); unprojected columns' stream bytes are never read
-  (engine.orc_read.read_orc_stripes I/O projection).
-* **Arrow batches** — ``read()`` yields pyarrow RecordBatches
-  (DataSourceArrowWriter symmetrical on the write side), so rows
-  never pass through Python objects.
-* **Commit protocol** — each write task publishes a uniquely-named
-  part file via tmp+rename; ``commit()`` writes a ``_SUCCESS``
-  manifest and (for overwrite mode) removes pre-existing part files
-  only after every task succeeded; ``abort()`` removes this job's
-  partials. A crashed job leaves the previous contents intact.
+  size alone (``OrcRangePartition``): no tail is read while planning
+  (DSv2 ``partitions()`` runs in a worker with no SparkSession), and
+  every file costs at least one task. Each task reads its file's
+  tail once, claims the stripes whose offset lies in its range and
+  decodes them (jobs.orc_read.decode_ranges, as ``read_orc_dir``).
+* **Column pruning** — only the fields of the schema Spark passes
+  (``.schema(...)`` or ``columns``) are decoded; other columns'
+  stream bytes are never read.
+* **Arrow batches** — ``read()`` yields and the writers take pyarrow
+  RecordBatches, so rows never pass through Python objects.
+* **Commit protocol** — each write task publishes one uniquely-named
+  part file (jobs.orc_write.write_part); ``commit()`` writes a
+  ``_SUCCESS`` manifest and, in overwrite mode, only then removes the
+  older part files; ``abort()`` removes this job's files. A crashed
+  job leaves the previous contents intact.
 
 Path contract: paths must be visible to driver and tasks (shared FS
 or local mode), same as jobs/orc_write.py.
@@ -59,18 +58,14 @@ or local mode), same as jobs/orc_write.py.
 **Known Spark-side caveat (pinned in tests/test_datasource.py):**
 filter pushdown for Python sources is gated behind
 ``spark.sql.python.filterPushdown.enabled`` (default false). With it
-enabled, Spark 4.1 caches the planned read (pickled reader +
-partitions) on the logical relation node; when one ``load()``
-DataFrame is reused by BOTH a filtered and an unfiltered query, the
-unfiltered query can silently reuse the filtered plan (measured:
-``df.count()`` returns the filtered count after ``df.where(...)``
-ran — reader()/pushFilters()/partitions() are not re-invoked at
-all). This is Spark's plan caching, not source state: ``reader()``
-is constructed fresh per planned query. Until Spark fixes the
-reuse, call ``load()`` per query shape when the pushdown conf is on
-(each load() gets its own relation node), or leave the conf at its
-default. ``register(spark, enable_pushdown=True)`` opts in
-explicitly.
+on, Spark 4.1 caches the planned read on the logical relation node:
+when one ``load()`` DataFrame serves BOTH a filtered and an
+unfiltered query, the unfiltered one reuses the filtered plan
+(``df.count()`` returns the filtered count after ``df.where(...)``
+ran; reader()/pushFilters()/partitions() are not re-invoked). Until
+Spark fixes the reuse, call ``load()`` per query shape when the conf
+is on, or leave it off; ``register(spark, enable_pushdown=True)``
+opts in explicitly.
 """
 
 from __future__ import annotations
@@ -196,18 +191,20 @@ class OrcEngineDataSource(DataSource):
       needs the session conf ``register(spark, enable_pushdown=True)``
       sets, and see the plan-reuse caveat.
     * ``filters`` — a JSON conjunction of ``[column, op, literal]``
-      triples: ops ``= < <= > >= starts_with``, ``in`` with a JSON list,
-      and the valueless ``is_null`` / ``not_null``; nested fields as
-      dotted paths. They prune stripes and row groups like pushed
-      filters, but live on THIS load()'s options (no session conf, no
-      plan-reuse hazard), and the task applies them exactly to the
-      decoded rows.
+      triples: ops ``= < <= > >= starts_with``, ``in`` with a JSON
+      list, and the valueless ``is_null`` / ``not_null`` (``[column,
+      op]``); nested fields as dotted paths. They prune like pushed
+      filters but live on THIS load()'s options (no session conf, no
+      plan-reuse hazard), and the task applies them exactly. The
+      contract (module docstring): a bad op or literal raises
+      ValueError when the reader is built, an unknown column KeyError
+      at ``load()``, or with a user schema ValueError in the task.
 
-    Write options: ``compression`` (zlib default | snappy | lz4 |
-    zstd | brotli | none), ``stripe_rows``, ``row_index_stride``,
+    Write options, mapped onto write_orc_dir's keywords by
+    ``_write_options``: ``compression`` (zlib default | snappy | lz4
+    | zstd | brotli | none), ``stripe_rows``, ``row_index_stride``,
     ``bloom_columns`` (comma-separated), ``timestamp_convention``,
-    ``timestamp_instant`` (emit tz-aware columns as
-    TIMESTAMP_INSTANT, see ``engine.orc_file.write_orc``).
+    ``timestamp_instant`` (tz-aware columns as TIMESTAMP_INSTANT).
     """
 
     @classmethod
@@ -221,31 +218,21 @@ class OrcEngineDataSource(DataSource):
         return p
 
     def schema(self):
-        from engine.orc_read import read_orc_tail
-        from jobs.orc_read import list_orc_files
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        use_m = self.options.get("use_manifest", "false").lower() == "true"
-        files = list_orc_files(self._path(), use_manifest=use_m)
-        if self.options.get("merge_schema", "false").lower() == "true":
-            # probe EVERY tail: union-of-fields, widest-of-types
-            # (int widening + float->double, orc-core
-            # ConvertTreeReader semantics). Threaded here — DSv2
-            # schema() runs in the planning worker, which has no
-            # SparkSession to distribute through; the per-file cast
-            # up to this schema happens task-side in decode_ranges.
-            from jobs.orc_read import merged_orc_schema
-            arrow = merged_orc_schema(files, spark=None)
-        else:
-            arrow = read_orc_tail(files[0]).schema()
+        from jobs.orc_read import resolve_scan
         cols = self.options.get("columns")
-        if cols:
-            names = [c.strip() for c in cols.split(",") if c.strip()]
-            missing = [c for c in names if arrow.get_field_index(c) < 0]
-            if missing:
-                raise KeyError(f"columns not in ORC schema: {missing}")
-            import pyarrow as pa
-            arrow = pa.schema([arrow.field(c) for c in names])
+        # merge_schema probes EVERY tail, threaded: DSv2 schema() runs
+        # in the planning worker, which has no SparkSession to
+        # distribute through; the per-file cast up to this schema
+        # happens task-side in decode_ranges
+        _, arrow, _ = resolve_scan(
+            self._path(),
+            [c.strip() for c in cols.split(",") if c.strip()]
+            if cols else None,
+            _parse_option_filters(self.options),
+            merge_schemas=_flag(self.options, "merge_schema"),
+            use_manifest=_flag(self.options, "use_manifest"))
         # LTZ timestamps: match spark.read.orc on the same files
         return from_arrow_schema(arrow, prefer_timestamp_ntz=False)
 
@@ -256,7 +243,7 @@ class OrcEngineDataSource(DataSource):
         # (plus the session conf — register(spark, True) sets it);
         # the default reader still prunes via the ``filters`` option,
         # which needs neither the conf nor pushFilters
-        if self.options.get("pushdown", "false").lower() == "true":
+        if _flag(self.options, "pushdown"):
             return OrcEnginePushdownReader(self._path(), schema,
                                            self.options)
         return OrcEngineReader(self._path(), schema, self.options)
@@ -271,37 +258,18 @@ class OrcEngineDataSource(DataSource):
         return OrcEngineStreamReader(self._path(), schema, self.options)
 
 
+def _flag(options, key: str) -> bool:
+    return options.get(key, "false").lower() == "true"
+
+
 def _parse_option_filters(options) -> list[tuple]:
     """The ``filters`` read option: a JSON list of [column, op,
-    literal] triples (conjunction)."""
-    from jobs.orc_read import FILTER_OPS
+    literal] triples (conjunction; ``[column, op]`` for the valueless
+    ops), checked by jobs.orc_read.check_filters."""
+    from jobs.orc_read import check_filters
     raw = options.get("filters")
-    if not raw:
-        return []
-    spec = json.loads(raw)
-    out = []
-    for item in spec:
-        col, op = item[0], item[1]
-        val = item[2] if len(item) > 2 else None
-        if op not in FILTER_OPS:
-            raise ValueError(f"filters option: unsupported op {op!r}")
-        if op in ("is_null", "not_null"):
-            val = None
-        elif val is None:
-            # fail loud at planning: a missing/null literal would
-            # silently match zero rows downstream (SQL NULL
-            # comparison semantics via an all-null Arrow mask)
-            raise ValueError(
-                f"filters option: op {op!r} on {col!r} needs a "
-                "literal — [column, op, value]")
-        elif op == "in":
-            if not isinstance(val, list):
-                raise ValueError(
-                    f"filters option: op 'in' on {col!r} needs a JSON "
-                    f"list of members, got {val!r}")
-            val = tuple(val)
-        out.append((col, op, val))
-    return out
+    return check_filters((f[0], f[1], f[2] if len(f) > 2 else None)
+                         for f in json.loads(raw)) if raw else []
 
 
 def _read(partition: OrcRangePartition, schema: StructType, options,
@@ -311,11 +279,11 @@ def _read(partition: OrcRangePartition, schema: StructType, options,
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from jobs.orc_read import decode_ranges
-    merge = options.get("merge_schema", "false").lower() == "true"
     ranges = [(partition.path, partition.start, partition.end)] \
         if partition.path else []
     return decode_ranges(ranges, to_arrow_schema(schema), filters, exact,
-                         options.get("convention"), merge)
+                         options.get("convention"),
+                         _flag(options, "merge_schema"))
 
 
 class OrcEngineReader(DataSourceReader):
@@ -337,10 +305,9 @@ class OrcEngineReader(DataSourceReader):
     def partitions(self) -> Sequence[InputPartition]:
         from jobs.orc_read import EmptyOrcDirError, list_orc_files
 
-        use_m = self._options.get("use_manifest",
-                                  "false").lower() == "true"
         try:
-            files = list_orc_files(self._path, use_manifest=use_m)
+            files = list_orc_files(
+                self._path, use_manifest=_flag(self._options, "use_manifest"))
         except EmptyOrcDirError:
             # reaching partitions() means the schema already resolved
             # (user-supplied, or the directory emptied since
@@ -374,64 +341,48 @@ class OrcEnginePushdownReader(OrcEngineReader):
         return filters
 
 
-def _write_part(batches: Iterator, out_dir: str, options,
-                name: str) -> OrcCommitMessage:
-    """Task-side part-file emission shared by batch and stream
-    writers: buffer the task's batches (stripe-flush budget — see
-    jobs/orc_write.py), write tmp, rename (atomic publish)."""
-    import pyarrow as pa
-
-    from engine.orc_file import write_orc
-
-    parts = [b for b in batches if b.num_rows]
-    if not parts:
-        # an empty TASK is normal (selective filters, limit, empty
-        # epochs) and pyspark 4.1 requires write() to return a
-        # WriterCommitMessage — a None return kills the whole job
-        # with DATA_SOURCE_TYPE_MISMATCH. The empty-path sentinel
-        # publishes no file; commit()/abort() skip it.
-        return OrcCommitMessage(path="", n_rows=0, n_bytes=0)
-    tbl = pa.Table.from_batches(parts)
-    blooms = tuple(c.strip() for c in
-                   options.get("bloom_columns", "").split(",") if c.strip())
-    path = os.path.join(out_dir, name)
-    tmp = path + ".tmp"
-    write_orc(
-        tbl, tmp,
+def _write_options(options) -> dict:
+    """The orcx write options as write_orc_dir's keywords (those of
+    engine.orc_file.write_orc)."""
+    return dict(
         stripe_rows=int(options.get("stripe_rows", "1000000")),
         timestamp_convention=options.get("timestamp_convention", "cpp"),
         row_index_stride=int(options.get("row_index_stride", "10000")),
         compression=options.get("compression", "zlib"),
-        bloom_columns=blooms,
-        timestamp_instant=options.get(
-            "timestamp_instant", "false").lower() == "true")
-    os.replace(tmp, path)
-    # mtime AT publish (os.replace keeps the tmp file's write-time
-    # mtime): the stream reader's offset watermark depends on
-    # visibility time, not write time
-    os.utime(path)
-    return OrcCommitMessage(path=path, n_rows=tbl.num_rows,
-                            n_bytes=os.path.getsize(path))
+        bloom_columns=tuple(c.strip() for c in options.get(
+            "bloom_columns", "").split(",") if c.strip()),
+        timestamp_instant=_flag(options, "timestamp_instant"))
 
 
-def _task_part_name(prefix: str = "part") -> str:
+def _publish(batches: Iterator, out_dir: str, write_kw: dict,
+             prefix: str) -> OrcCommitMessage:
+    """One write task of the batch or stream writer: its batches as
+    one uniquely-named part-file (jobs.orc_write.write_part)."""
     from pyspark import TaskContext
+
+    from jobs.orc_write import write_part
     ctx = TaskContext.get()
     pid = ctx.partitionId() if ctx is not None else 0
     # uuid: append-mode jobs and task retries must never collide
-    return f"{prefix}-{pid:05d}-{uuid.uuid4().hex[:12]}.orc"
+    path = os.path.join(out_dir,
+                        f"{prefix}-{pid:05d}-{uuid.uuid4().hex[:12]}.orc")
+    n_rows, n_bytes = write_part(batches, path, **write_kw)
+    # an empty TASK (selective filters, limit, empty epochs) publishes
+    # no file, but pyspark 4.1 requires write() to return a
+    # WriterCommitMessage — a None return kills the whole job with
+    # DATA_SOURCE_TYPE_MISMATCH. commit()/abort() skip the empty path.
+    return OrcCommitMessage(path if n_rows else "", n_rows, n_bytes)
 
 
 class OrcEngineWriter(DataSourceArrowWriter):
     def __init__(self, path: str, options, overwrite: bool):
         self._dir = path
-        self._options = options
         self._overwrite = overwrite
+        self._write_kw = _write_options(options)
         os.makedirs(path, exist_ok=True)
 
     def write(self, iterator: Iterator) -> OrcCommitMessage:
-        return _write_part(iterator, self._dir, self._options,
-                           _task_part_name())
+        return _publish(iterator, self._dir, self._write_kw, "part")
 
     def commit(self, messages: List[Optional[OrcCommitMessage]]) -> None:
         # skip empty-task sentinels (path="") and any None a future
@@ -575,13 +526,11 @@ class OrcEngineStreamWriter(DataSourceStreamArrowWriter):
 
     def __init__(self, path: str, options, schema: StructType):
         self._dir = path
-        self._options = options
-        self._schema = schema
+        self._write_kw = _write_options(options)
         os.makedirs(path, exist_ok=True)
 
     def write(self, iterator: Iterator) -> OrcCommitMessage:
-        return _write_part(iterator, self._dir, self._options,
-                           _task_part_name("stream"))
+        return _publish(iterator, self._dir, self._write_kw, "stream")
 
     def commit(self, messages, batchId: int) -> None:
         done = [m for m in messages if m is not None and m.path]

@@ -42,7 +42,6 @@ from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
 from jobs.table_io import _require_local
 
-SPLIT_DDL = "path string, stripe bigint, n_rows bigint"
 # the filter ops of every pruning tier and of the exact filter;
 # is_null and not_null take no literal
 FILTER_OPS = ("=", "==", "<", "<=", ">", ">=", "in", "starts_with",
@@ -182,6 +181,86 @@ def merged_orc_schema(files: list[str],
             else:
                 fields[f.name] = f.type
     return pa.schema(list(fields.items()))
+
+
+def check_filters(filters) -> list[tuple]:
+    """The I/O-free half of the filter contract, raising ValueError:
+    each op is in ``FILTER_OPS``, a valued op has a literal that is
+    not None (a None compares NULL and would match nothing), and
+    ``in`` has a list or tuple of members (kept as a tuple; a string
+    is not the set of its characters)."""
+    out = []
+    for col, op, val in filters or ():
+        if op not in FILTER_OPS:
+            raise ValueError(f"unsupported op {op!r} on {col!r}")
+        if op in ("is_null", "not_null"):
+            val = None
+        elif val is None:
+            raise ValueError(f"op {op!r} on {col!r} needs a literal")
+        elif op == "in" and not isinstance(val, (list, tuple)):
+            raise ValueError(f"op 'in' on {col!r} needs a list (a JSON "
+                             f"list in orcx) of members, got {val!r}")
+        out.append((col, op, tuple(val) if op == "in" else val))
+    return out
+
+
+def _column_type(schema: pa.Schema, name: str) -> pa.DataType | None:
+    """The type of column ``name``: a top-level field, else a dotted
+    path walking struct fields (``meta.score``); None if neither."""
+    t = pa.struct(list(schema))
+    for part in [name] if name in schema.names else name.split("."):
+        if not pa.types.is_struct(t) or t.get_field_index(part) < 0:
+            return None
+        t = t.field(part).type
+    return t
+
+
+def _typed(val, t: pa.DataType):
+    """A ``str`` literal (every CLI literal is one) in the type of its
+    int, date, float or decimal column; ``in`` members each."""
+    import datetime
+    import decimal
+    if isinstance(val, tuple):
+        return tuple(_typed(m, t) for m in val)
+    for is_kind, cast in ((pa.types.is_integer, int),
+                          (pa.types.is_date, datetime.date.fromisoformat),
+                          (pa.types.is_floating, float),
+                          (pa.types.is_decimal, decimal.Decimal)):
+        if isinstance(val, str) and is_kind(t):
+            return cast(val)
+    return val
+
+
+def resolve_scan(path: str, columns: list[str] | None = None,
+                 filters=None, merge_schemas: bool = False,
+                 use_manifest: bool = False,
+                 spark: SparkSession | None = None
+                 ) -> tuple[list[str], pa.Schema, list[tuple]]:
+    """The driver side of every ORC scan: ``(files, schema, filters)``.
+    Lists the files, probes the schema (the first tail, or every tail
+    with ``merge_schemas``), raises KeyError for a projected column
+    (top level) or filter column (dotted names walk structs) the
+    schema lacks, projects the schema to ``columns``, and returns the
+    filters checked (``check_filters``) with ``str`` literals typed
+    to their column (``_typed``; a ``starts_with`` prefix stays str)."""
+    filters = check_filters(filters)
+    files = list_orc_files(path, use_manifest=use_manifest)
+    if merge_schemas:
+        schema = merged_orc_schema(files, spark=spark)
+    else:
+        from engine.orc_read import read_orc_tail
+        schema = read_orc_tail(files[0]).schema()
+    types = {f[0]: _column_type(schema, f[0]) for f in filters}
+    missing = [c for c in columns or () if c not in schema.names] + \
+        [c for c, t in types.items() if t is None]
+    if missing:
+        raise KeyError(f"columns not in ORC schema {schema.names}: "
+                       f"{missing}")
+    if columns is not None:
+        schema = pa.schema([schema.field(c) for c in columns])
+    return files, schema, [
+        (c, op, v if op == "starts_with" else _typed(v, types[c]))
+        for c, op, v in filters]
 
 
 def byte_ranges(sizes: list[int],
@@ -324,26 +403,28 @@ def decode_ranges(ranges, target: pa.Schema,
     read per file); ``filters`` prune stripes and row groups (a
     superset); ``exact`` then applies exactly to the decoded rows. A
     projected column a file predates null-fills if ``null_fill`` is
-    set, else raises; an ``exact`` column it predates is null in
-    every row, so only ``is_null`` matches there."""
+    set, else raises ValueError; so does an ``exact`` column it
+    predates, which under ``null_fill`` is null in every row, so only
+    ``is_null`` matches there."""
     from engine.orc_read import read_orc_stripes
     names = list(target.names)
     for p, info, stripes in _claimed(ranges, filters):
         if not stripes:
             continue
         got = info.types[0].field_names
-        absent = [c for c in names if c not in got]
-        if absent and not null_fill:
-            raise ValueError(
-                f"{p}: ORC schema {got} lacks projected {names}; "
-                "null-fill columns this file predates with "
-                "allow_missing_columns=True (read_orc_dir) or "
-                "merge_schema=true (orcx)")
 
         def root(c):
             # a nested filter column projects its top-level struct
             return c if c in got else c.split(".")[0]
+        absent = [c for c in names if c not in got]
         predated = [f for f in exact or () if root(f[0]) not in got]
+        if (absent or predated) and not null_fill:
+            raise ValueError(
+                f"{p}: ORC schema {got} lacks projected or filter "
+                f"columns {absent + [f[0] for f in predated]}; "
+                "null-fill columns this file predates with "
+                "allow_missing_columns=True (read_orc_dir) or "
+                "merge_schema=true (orcx)")
         if any(f[1] != "is_null" for f in predated):
             continue
         live = [f for f in exact or () if f not in predated]
@@ -384,8 +465,8 @@ def plan_orc_splits(spark: SparkSession, files: list[str],
                 names=["path", "stripe", "n_rows"])
 
     return _range_frame(spark, files,
-                        spark.sparkContext.defaultParallelism
-                        ).mapInArrow(tails, SPLIT_DDL)
+                        spark.sparkContext.defaultParallelism).mapInArrow(
+        tails, "path string, stripe bigint, n_rows bigint")
 
 
 def read_orc_dir_stats(spark: SparkSession, path: str,
@@ -411,17 +492,13 @@ def read_orc_dir_stats(spark: SparkSession, path: str,
 
     ``use_manifest``: aggregate over the ``_SUCCESS``-committed
     snapshot instead of the listing (see list_orc_files)."""
-    files = list_orc_files(path, use_manifest=use_manifest)
-    from engine.orc_read import read_orc_tail
-    schema = read_orc_tail(files[0]).schema()
+    files, schema, _ = resolve_scan(
+        path, list(dict.fromkeys([*columns, *sums])),
+        use_manifest=use_manifest)
     fields = [pa.field("path", pa.string()),
               pa.field("n_rows", pa.int64())]
     for c in columns:
-        i = schema.get_field_index(c)
-        if i < 0:
-            raise KeyError(f"column {c!r} not in ORC schema "
-                           f"{schema.names}")
-        t = schema.field(i).type
+        t = schema.field(c).type
         if pa.types.is_date(t):
             t = pa.date32()
         elif not (pa.types.is_integer(t) or pa.types.is_floating(t)
@@ -433,11 +510,7 @@ def read_orc_dir_stats(spark: SparkSession, path: str,
         fields.append(pa.field(f"min_{c}", t))
         fields.append(pa.field(f"max_{c}", t))
     for c in sums:
-        i = schema.get_field_index(c)
-        if i < 0:
-            raise KeyError(f"column {c!r} not in ORC schema "
-                           f"{schema.names}")
-        t = schema.field(i).type
+        t = schema.field(c).type
         if pa.types.is_integer(t):
             fields.append(pa.field(f"sum_{c}", pa.int64()))
         elif pa.types.is_floating(t):
@@ -461,9 +534,8 @@ def read_orc_dir_stats(spark: SparkSession, path: str,
                 info = read_orc_tail(p)
                 fs = info.file_stats()
                 sch = info.schema()
-                arrs = [pa.array([p], type=pa.string()),
-                        pa.array([info.num_rows], type=pa.int64())]
-                for c in columns:
+
+                def stats(c):
                     # flattened ids: root=0, top-level col i -> subtree
                     # root at root.subtypes[i]. A schema-evolved file
                     # missing the column yields typed nulls (its
@@ -471,12 +543,14 @@ def read_orc_dir_stats(spark: SparkSession, path: str,
                     # -1 there, which would silently index the LAST
                     # column's stats
                     j = sch.get_field_index(c)
-                    if j < 0:
-                        st = {}
-                    else:
-                        fid = info.types[0].subtypes[j]
-                        st = (fs[fid] if fs and fid < len(fs)
-                              else {}) or {}
+                    if j < 0 or not fs:
+                        return {}
+                    fid = info.types[0].subtypes[j]
+                    return (fs[fid] if fid < len(fs) else None) or {}
+                arrs = [pa.array([p], type=pa.string()),
+                        pa.array([info.num_rows], type=pa.int64())]
+                for c in columns:
+                    st = stats(c)
                     typ = out_schema.field(f"min_{c}").type
                     for key in ("min", "max"):
                         v = st.get(key)
@@ -487,14 +561,8 @@ def read_orc_dir_stats(spark: SparkSession, path: str,
                             arr = pa.array([v], type=typ)
                         arrs.append(arr)
                 for c in sums:
-                    j = sch.get_field_index(c)
-                    st = {}
-                    if j >= 0:
-                        fid = info.types[0].subtypes[j]
-                        st = (fs[fid] if fs and fid < len(fs)
-                              else {}) or {}
                     arrs.append(pa.array(
-                        [st.get("sum")],
+                        [stats(c).get("sum")],
                         type=out_schema.field(f"sum_{c}").type))
                 yield pa.RecordBatch.from_arrays(
                     arrs, schema=out_schema)
@@ -513,66 +581,49 @@ def read_orc_dir(spark: SparkSession, path: str,
     """Read a directory of ORC files as a DataFrame with this
     engine's decoders. ``convention`` pins the pre-1970 timestamp
     convention (default: keyed per file off ``Footer.writer``,
-    engine/orc_read.py). Schemas must agree across files (checked in
-    the decode tasks against the driver-probed first tail), unless
+    engine/orc_read.py). Schemas must agree with the driver-probed
+    first tail (checked in the decode tasks), unless
     ``allow_missing_columns`` is set: then a file lacking a projected
-    column fills it with typed nulls — the spark.read.orc
+    or filter column reads it as typed nulls — the spark.read.orc
     ``mergeSchema`` ergonomics for a directory written by an evolving
-    job (columns added over time). The column's TYPE still must agree
-    where present; the driver-probed first tail is the reference, so
-    point ``columns`` at the union schema (or probe the newest file
-    first) when schemas differ.
+    job. Types still must agree where present, so point ``columns``
+    at the union schema (or name the newest file first).
 
     ``merge_schemas``: probe EVERY tail and read at the
     union-of-fields, widest-of-types schema (merged_orc_schema —
-    int8→int16→int32→int64 and float→double drift casts up per file,
-    orc-core ConvertTreeReader semantics; missing columns null-fill
-    as with allow_missing_columns). The probe distributes as a Spark
-    job above 64 files, so the driver never fans a huge listing
-    through threads.
+    int8→…→int64 and float→double drift casts up per file, orc-core
+    ConvertTreeReader semantics; missing columns null-fill). The probe
+    runs as a Spark job above 64 files.
 
     ``parallelism``: about how many byte ranges to cut the files into
     (default: the context's defaultParallelism), in proportion to
     their sizes and at least one per file (``byte_ranges``). Each
-    range decodes in one task — one task per file when there are at
-    least this many equal files, ``parallelism`` tasks sharing the
-    stripes of a single big file — up to Spark's leaf parallelism
-    (``spark.sql.leafNodeDefaultParallelism``, default
-    defaultParallelism), past which a task takes several ranges.
+    range decodes in one task, up to Spark's leaf parallelism
+    (``spark.sql.leafNodeDefaultParallelism``), past which a task
+    takes several ranges.
 
     ``filters``: [(column, op, literal)] conjunction, ops
     ``FILTER_OPS``, applied inside the decode tasks in THREE tiers
-    (decode_ranges): each task drops the statistics-precluded stripes
-    of its range before any stripe byte is read (claim_stripes); it
-    then drops statistics-precluded ROW GROUPS inside its stripes and
-    seeks directly to the survivors via the ROW_INDEX positions
-    (engine.orc_read.row_groups_matching); finally the same predicates
-    apply exactly to the decoded Arrow rows, so the result is exact,
-    not a superset, and only matching rows leave the task. A filter
-    column need not be in ``columns``; a dotted one (``meta.score``)
-    prunes on the nested field's own statistics. A filter or
-    projected column missing from the probed schema raises KeyError,
-    an unknown op ValueError, before any Spark job runs.
+    (decode_ranges): stripes the statistics preclude are dropped
+    before any stripe byte is read (claim_stripes), then row groups
+    (engine.orc_read.row_groups_matching, seeking to the survivors via
+    ROW_INDEX), and finally the predicates apply exactly to the
+    decoded rows. A filter column need not be projected; a dotted one
+    (``meta.score``) prunes on the nested field's statistics.
+
+    The filter contract, shared with orcx and the CLI: before any
+    Spark job, ``resolve_scan`` raises ValueError for an op outside
+    ``FILTER_OPS``, a None literal on a valued op or an ``in`` without
+    a list or tuple, and KeyError for a filter or projected column
+    the probed schema lacks; a ``str`` literal on an int, date, float
+    or decimal column takes the column's type. In the tasks, a file
+    lacking a filter column raises ValueError unless columns
+    null-fill, exactly as for a projected column it lacks.
     """
-    files = list_orc_files(path, use_manifest=use_manifest)
-    from engine.orc_read import read_orc_tail
+    files, arrow_schema, filters = resolve_scan(
+        path, columns, filters, merge_schemas, use_manifest, spark)
     if merge_schemas:
-        arrow_schema = merged_orc_schema(files, spark=spark)
         allow_missing_columns = True
-    else:
-        arrow_schema = read_orc_tail(files[0]).schema()
-    bad = [f[1] for f in filters or () if f[1] not in FILTER_OPS]
-    if bad:
-        raise ValueError(f"unsupported filter op {bad[0]!r}")
-    # a nested filter column (meta.score) resolves through its root
-    roots = [f[0] if arrow_schema.get_field_index(f[0]) >= 0
-             else f[0].split(".")[0] for f in filters or ()]
-    missing = [c for c in (columns or []) + roots
-               if arrow_schema.get_field_index(c) < 0]
-    if missing:
-        raise KeyError(f"columns not in ORC schema: {missing}")
-    if columns is not None:
-        arrow_schema = pa.schema([arrow_schema.field(c) for c in columns])
     # prefer_timestamp_ntz=False: Spark's own ORC reader maps the
     # plain `timestamp` kind to TIMESTAMP (LTZ) — match it, so this
     # reader is a drop-in for spark.read.orc on the same files

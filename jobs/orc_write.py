@@ -56,38 +56,52 @@ def write_orc_dir(df: DataFrame, out_dir: str,
     """
     out_dir = _require_local(out_dir)
     os.makedirs(out_dir, exist_ok=True)
+    options = dict(stripe_rows=stripe_rows,
+                   timestamp_convention=timestamp_convention,
+                   row_index_stride=row_index_stride,
+                   compression=compression,
+                   bloom_columns=tuple(bloom_columns),
+                   timestamp_instant=timestamp_instant)
 
     def kernel(batches):
         import pyarrow as pa
         from pyspark import TaskContext
-
-        from engine.orc_file import write_orc
-        parts = [b for b in batches if b.num_rows]
-        if not parts:
-            return
         pid = TaskContext.get().partitionId()
-        tbl = pa.Table.from_batches(parts)
         path = os.path.join(out_dir, f"part-{pid:05d}.orc")
-        # attempt-unique temp name: a speculative/retried attempt of
-        # the same partition must not interleave writes into a shared
-        # tmp file (same hazard engine/orc_concat.py fixed); the last
-        # os.replace wins atomically
-        tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-        try:
-            write_orc(tbl, tmp, stripe_rows=stripe_rows,
-                      timestamp_convention=timestamp_convention,
-                      row_index_stride=row_index_stride,
-                      compression=compression,
-                      bloom_columns=tuple(bloom_columns),
-                      timestamp_instant=timestamp_instant)
-            os.replace(tmp, path)  # atomic publish, no partials on crash
-        finally:
-            if os.path.exists(tmp):  # failed attempt: drop the partial
-                os.unlink(tmp)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([path]), pa.array([pid], type=pa.int64()),
-             pa.array([tbl.num_rows], type=pa.int64()),
-             pa.array([os.path.getsize(path)], type=pa.int64())],
-            names=["path", "part_id", "n_rows", "n_bytes"])
+        n_rows, n_bytes = write_part(batches, path, **options)
+        if n_rows:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([path]), pa.array([pid], type=pa.int64()),
+                 pa.array([n_rows], type=pa.int64()),
+                 pa.array([n_bytes], type=pa.int64())],
+                names=["path", "part_id", "n_rows", "n_bytes"])
 
     return df.mapInArrow(kernel, MANIFEST_DDL)
+
+
+def write_part(batches, path: str, **options) -> tuple[int, int]:
+    """Publish the rows of ``batches`` as ONE ORC file at ``path``
+    (engine.orc_file.write_orc ``options``) and return its ``(n_rows,
+    n_bytes)``; no rows write nothing and return ``(0, 0)``. The
+    write goes to an attempt-unique temp name, so a speculative or
+    retried attempt of the same part never interleaves into a shared
+    temp file, and is unlinked if the write fails; ``os.replace``
+    publishes atomically (the last attempt wins) and ``os.utime``
+    stamps the publish time as the file's mtime, the watermark of the
+    orcx stream reader."""
+    import pyarrow as pa
+
+    from engine.orc_file import write_orc
+    parts = [b for b in batches if b.num_rows]
+    if not parts:
+        return 0, 0
+    tbl = pa.Table.from_batches(parts)
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    try:
+        write_orc(tbl, tmp, **options)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+    os.utime(path)
+    return tbl.num_rows, os.path.getsize(path)

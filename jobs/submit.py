@@ -53,64 +53,6 @@ def package(repo_root: str | None = None, out: str | None = None) -> str:
     return out
 
 
-def _type_filter_literals(input_path: str,
-                          filters: list[tuple],
-                          merge_schemas: bool = False) -> list[tuple]:
-    """Coerce string CLI literals to the filter column's ORC kind
-    (probed from the first file's tail, or — with ``merge_schemas`` —
-    from the union-of-fields, widest-of-types merged schema, so a
-    filter on a column only later generations carry still types): int
-    for integer/date kinds, float for float/double, str for string
-    kinds. Unknown columns or kinds pass through unchanged
-    (read_orc_dir raises/keeps)."""
-    if not filters:
-        return filters
-    import pyarrow as pa
-    from engine.orc_read import read_orc_tail
-    from jobs.orc_read import list_orc_files, merged_orc_schema
-    files = list_orc_files(input_path)
-    schema = merged_orc_schema(files, spark=None) if merge_schemas \
-        else read_orc_tail(files[0]).schema()
-    def _resolve(name):
-        i = schema.get_field_index(name)
-        if i >= 0:
-            return schema.field(i).type
-        t = None
-        for part in name.split("."):    # nested struct member
-            fields = schema if t is None else \
-                (list(t) if pa.types.is_struct(t) else [])
-            match = [f for f in fields if f.name == part]
-            if not match:
-                return None
-            t = match[0].type
-        return t
-
-    typed = []
-    for name, op, val in filters:
-        t = _resolve(name)
-        if val is None or t is None or op == "starts_with":
-            # a prefix is a string whatever the column; non-string
-            # columns keep (stats tier) and filter exactly downstream
-            typed.append((name, op, val))
-            continue
-        if pa.types.is_integer(t) or pa.types.is_date(t):
-            cast = int
-        elif pa.types.is_floating(t):
-            cast = float
-        elif pa.types.is_decimal(t):
-            # a str literal would read as type-mismatched by the
-            # decimal stats/bloom tiers (unprunable keep); Decimal
-            # literals engage them
-            import decimal
-            cast = decimal.Decimal
-        else:
-            cast = str
-        val = [cast(m) for m in val] if isinstance(val, (list, tuple)) \
-            else cast(val)
-        typed.append((name, op, val))
-    return typed
-
-
 def _spark(app: str):
     from pyspark.sql import SparkSession
     os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
@@ -256,7 +198,8 @@ def main(argv: list[str] | None = None) -> int:
             compression=a.compression,
             row_index_stride=a.row_index_stride,
             bloom_columns=tuple(a.bloom_columns.split(","))
-            if a.bloom_columns else ()).collect()
+            if a.bloom_columns else (),
+            timestamp_instant=a.timestamp_instant).collect()
         print(json.dumps({"files": len(manifest),
                           "rows": sum(m["n_rows"] for m in manifest),
                           "bytes": sum(m["n_bytes"] for m in manifest)}))
@@ -294,12 +237,8 @@ def main(argv: list[str] | None = None) -> int:
                 # col:in:a,b,c — a comma-separated member list
                 val = v.split(",") if op == "in" else v
             filters.append((name, op, val))
-        # type the literals against the FILE schema, not the string's
-        # shape: an auto-int'd literal on a string column would feed a
-        # type-mismatched value into the pruning tiers (and digit-only
-        # string keys / float literals were inexpressible before)
-        filters = _type_filter_literals(
-            a.input, filters, merge_schemas=a.merge_schemas) or None
+        # the string literals type against the probed (or merged)
+        # schema in read_orc_dir (jobs.orc_read.resolve_scan)
         df = read_orc_dir(spark, a.input, columns=cols,
                           parallelism=a.parallelism,
                           filters=filters,

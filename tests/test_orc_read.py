@@ -175,10 +175,18 @@ def test_stripe_stats_and_pruning_own_writer():
     assert stripes_matching(info2, [("x", "is_null", None)]) == [0]
 
 
+def _claimed(path, filters=None) -> list[int]:
+    """The stripes of ``path`` a whole-file byte range claims after
+    statistics pruning by ``filters`` (the decode tasks' plan)."""
+    from jobs.orc_read import claim_stripes
+    return claim_stripes(read_orc_tail(path), 0, os.path.getsize(path),
+                         filters)
+
+
 def test_stripe_pruning_reads_java_stats(spark):
     """Spark/orc-core-written files carry the same Metadata; pruning
     + exact residual filter through the distributed reader."""
-    from jobs.orc_read import plan_orc_splits, read_orc_dir
+    from jobs.orc_read import read_orc_dir
     from pyspark.sql import functions as F
     n = 100000
     df = (spark.range(n)
@@ -189,9 +197,8 @@ def test_stripe_pruning_reads_java_stats(spark):
        .orc(out))
     files = sorted(os.path.join(out, p) for p in os.listdir(out)
                    if p.startswith("part-") and not p.endswith(".crc"))
-    total = plan_orc_splits(spark, files).count()
-    pruned = plan_orc_splits(spark, files,
-                             [("id", ">=", n - 5000)]).count()
+    total = sum(len(_claimed(f)) for f in files)
+    pruned = sum(len(_claimed(f, [("id", ">=", n - 5000)])) for f in files)
     assert pruned < total
     got = read_orc_dir(spark, out, columns=["s"],
                        filters=[("id", ">=", n - 5000)])
@@ -308,12 +315,11 @@ def test_distributed_read_matches_spark_reader(spark, java_orc_dir):
 
 
 def test_distributed_read_projection_and_plan(spark, java_orc_dir):
-    from jobs.orc_read import plan_orc_splits, read_orc_dir
+    from jobs.orc_read import read_orc_dir
     df, files = java_orc_dir
     out_dir = os.path.dirname(files[0])
-    splits = plan_orc_splits(spark, files).collect()
-    assert {s["path"] for s in splits} == set(files)
-    assert sum(s["n_rows"] for s in splits) == df.count()
+    assert sum(read_orc_tail(f).stripes[i][5]
+               for f in files for i in _claimed(f)) == df.count()
     got = read_orc_dir(spark, out_dir, columns=["doc_id", "val"])
     assert got.columns == ["doc_id", "val"]
     assert got.count() == df.count()
@@ -926,7 +932,7 @@ def test_nested_filter_distributed_java_writer(spark):
     """orc-core-written struct columns prune on nested statistics
     through the distributed reader, and the exact residual filter
     applies Spark-side (dotted F.col resolves the nested field)."""
-    from jobs.orc_read import plan_orc_splits, read_orc_dir
+    from jobs.orc_read import read_orc_dir
     from pyspark.sql import functions as F
     n = 60_000
     df = (spark.range(n).withColumn(
@@ -940,9 +946,9 @@ def test_nested_filter_distributed_java_writer(spark):
        .orc(out))
     files = sorted(os.path.join(out, p) for p in os.listdir(out)
                    if p.startswith("part-") and not p.endswith(".crc"))
-    total = plan_orc_splits(spark, files).count()
-    pruned = plan_orc_splits(
-        spark, files, [("meta.score", ">=", n - 4000)]).count()
+    total = sum(len(_claimed(f)) for f in files)
+    pruned = sum(len(_claimed(f, [("meta.score", ">=", n - 4000)]))
+                 for f in files)
     assert pruned < total
     got = read_orc_dir(spark, out, columns=["meta"],
                        filters=[("meta.score", ">=", n - 4000)])
@@ -963,6 +969,42 @@ def test_nested_filter_unknown_path_raises():
     with pytest.raises(KeyError):
         _filter_columns(info, [("doc_id.x", ">", 0)])
     os.unlink(f)
+
+
+def test_read_orc_dir_filter_contract(spark, tmp_path):
+    """read_orc_dir checks its filters before any Spark job: a None
+    literal on a valued op and an ``in`` with a string raise
+    ValueError (no longer an empty result, or the string read as the
+    set of its characters), and a dotted typo raises KeyError; a str
+    literal on an int or struct int column is typed to it."""
+    from jobs.orc_read import read_orc_dir, resolve_scan
+    orc.write_table(_nested_table(200), str(tmp_path / "n.orc"))
+    d = str(tmp_path)
+    sc = spark.sparkContext
+    sc.setJobGroup("filter-contract", "no job may run")
+    try:
+        for bad in ([("meta.score", ">=", None)],
+                    [("doc_id", "in", "abc")]):
+            with pytest.raises(ValueError):
+                read_orc_dir(spark, d, filters=bad)
+        with pytest.raises(KeyError, match="meta.scorez"):
+            read_orc_dir(spark, d, filters=[("meta.scorez", ">", 0)])
+        assert sc.statusTracker().getJobIdsForGroup(
+            "filter-contract") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    _, schema, typed = resolve_scan(
+        d, ["doc_id"], [("meta.score", "in", ["3", "5"]),
+                        ("doc_id", "starts_with", "doc-0000"),
+                        ("doc_id", "=", "7")])
+    assert schema.names == ["doc_id"]
+    assert typed == [("meta.score", "in", (3, 5)),
+                     ("doc_id", "starts_with", "doc-0000"),
+                     ("doc_id", "=", "7")]
+    got = read_orc_dir(spark, d, columns=["doc_id"],
+                       filters=[("meta.score", "in", ["3", "5"])])
+    assert sorted(r[0] for r in got.collect()) == ["doc-0000003",
+                                                   "doc-0000005"]
 
 
 # --- schema evolution: missing-column null-fill -----------------------

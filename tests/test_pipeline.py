@@ -309,6 +309,51 @@ def test_submit_export_orc(spark, token_parquet, tmp_path):
     assert spark.read.orc(out).count() == 4000
 
 
+def test_submit_export_orc_timestamp_instant(spark, tmp_path):
+    """export-orc --timestamp-instant reaches write_orc_dir: a Spark
+    (tz-aware) timestamp column is written as TIMESTAMP_INSTANT (kind
+    18); without the flag it stays plain TIMESTAMP (kind 9)."""
+    import glob
+
+    from engine.orc_read import read_orc_tail
+    from jobs.submit import main as submit_main
+    src = str(tmp_path / "ts.parquet")
+    (spark.sql("select timestamp'2020-01-02 03:04:05' as ts, 7 as id")
+     .write.parquet(src))
+    kinds = {}
+    for flag in ([], ["--timestamp-instant"]):
+        out = str(tmp_path / f"orc{len(flag)}")
+        assert submit_main(["export-orc", "--input", src,
+                            "--output", out] + flag) == 0
+        files = glob.glob(out + "/part-*.orc")
+        kinds[bool(flag)] = {t.kind for f in files
+                             for t in read_orc_tail(f).types}
+    assert 18 in kinds[True] and 9 not in kinds[True]
+    assert 9 in kinds[False] and 18 not in kinds[False]
+
+
+def test_submit_import_orc_reads_one_tail(spark, token_parquet, tmp_path,
+                                          monkeypatch):
+    """import-orc with typed filters reads exactly one file tail on the
+    driver: the literals type inside read_orc_dir's own probe."""
+    import engine.orc_read
+    from jobs.submit import main as submit_main
+    orcdir = str(tmp_path / "orcdir")
+    assert submit_main(["export-orc", "--input", token_parquet,
+                        "--output", orcdir, "--partitions", "2"]) == 0
+    calls = []
+    real = engine.orc_read.read_orc_tail
+
+    def counted(*a, **k):
+        calls.append(a)
+        return real(*a, **k)
+    monkeypatch.setattr(engine.orc_read, "read_orc_tail", counted)
+    assert submit_main(["import-orc", "--input", orcdir,
+                        "--output", str(tmp_path / "imp"),
+                        "--filter", "n_tok:>=:100"]) == 0
+    assert len(calls) == 1
+
+
 def test_submit_compact_orc(spark, token_parquet, tmp_path):
     # compact-orc CLI: many small part-files -> fewer, zero-decode
     import glob
@@ -380,9 +425,9 @@ def test_submit_import_orc_typed_filters(spark, token_parquet, tmp_path):
     assert spark.read.parquet(out2).count() == 1
     # the regression shape: a digit-only literal on a STRING column
     # stays str; numeric strings on int columns coerce to int
-    from jobs.submit import _type_filter_literals
-    typed = _type_filter_literals(
-        orcdir, [("doc_id", "=", "123"), ("n_tok", ">=", "100")])
+    from jobs.orc_read import resolve_scan
+    _, _, typed = resolve_scan(
+        orcdir, filters=[("doc_id", "=", "123"), ("n_tok", ">=", "100")])
     assert typed == [("doc_id", "=", "123"), ("n_tok", ">=", 100)]
 
 
@@ -398,8 +443,8 @@ def test_submit_import_orc_merge_schemas(spark, token_parquet,
 
     from pyspark.sql import functions as F
 
+    from jobs.orc_read import resolve_scan
     from jobs.orc_write import write_orc_dir
-    from jobs.submit import _type_filter_literals
     from jobs.submit import main as submit_main
 
     tok = spark.read.parquet(token_parquet).select("doc_id", "n_tok")
@@ -419,8 +464,8 @@ def test_submit_import_orc_merge_schemas(spark, token_parquet,
             shutil.move(f, f"{d}/gen{i}-{os.path.basename(f)}")
     # literal on the generation-1-only column types as int via the
     # merged schema (first-file probe would pass it through as str)
-    typed = _type_filter_literals(d, [("flag", ">=", "100")],
-                                  merge_schemas=True)
+    _, _, typed = resolve_scan(d, filters=[("flag", ">=", "100")],
+                               merge_schemas=True)
     assert typed == [("flag", ">=", 100)]
     out = str(tmp_path / "imp")
     rc = submit_main(["import-orc", "--input", d, "--output", out,

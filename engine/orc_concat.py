@@ -21,16 +21,18 @@ What the rewritten tail preserves:
   footerLength, numberOfRows), offsets rebased to the output.
 * **Type tree** — copied raw from the first input (inputs are
   checked for semantic type equality first).
-* **File-level ColumnStatistics** — recombined across inputs:
-  numberOfValues sums, hasNull ORs, and typed min/max merge for
-  int/double/string/date/timestamp/decimal kinds. A column whose
-  min/max any input omitted while holding values (e.g. the NaN
-  convention for floats) stays omitted in the output — the same
-  conservative poisoning rule as the writer (engine/orc_file.py).
-  Statistics sums (IntegerStatistics/DoubleStatistics field 3) merge
-  by adding, and only when EVERY input carried one — an omitted
-  input sum means overflow (the writers' omit-on-overflow
-  convention), so the merged sum is omitted too rather than guessed.
+* **File-level ColumnStatistics** — each input's footer statistics
+  fold through the writer's own function (engine.orc_file.
+  _merge_stats), so concat and write_orc share one rule set:
+  numberOfValues sums, hasNull ORs (an absent hasNull counts as
+  true), typed min/max merge; a column whose min/max any input
+  omitted while holding values (the NaN convention for floats) stays
+  omitted; a sum (IntegerStatistics/DoubleStatistics field 3) is kept
+  only when EVERY input holding values carried one — an omitted sum
+  means overflow — and the total fits.
+* **Tail** — Metadata, Footer and PostScript come from the writer's
+  tail function (engine.orc_file.file_tail), with the first input's
+  writer id and writerVersion.
 
 ROW_INDEX, bloom filter streams, dictionaries and all data bytes are
 untouched — readers seek inside the copied stripes exactly as before
@@ -39,58 +41,13 @@ untouched — readers seek inside the copied stripes exactly as before
 
 from __future__ import annotations
 
-import decimal
 import os
-import shutil
 
-from .orc_file import (MAGIC, STAT_DATE, STAT_DEC, STAT_DOUBLE, STAT_INT,
-                       STAT_STRING, STAT_TS, _col_stats_pb, _frame,
-                       _sum_ok, pb_bytes, pb_varint)
-from .orc_read import (COMP_NONE, K_BYTE, K_CHAR, K_DATE, K_DECIMAL,
-                       K_DOUBLE, K_FLOAT, K_INT, K_LONG, K_SHORT,
-                       K_STRING, K_TIMESTAMP, K_TIMESTAMP_INSTANT,
-                       K_VARCHAR, OrcFileInfo, _deframe, _fields,
-                       _parse_col_stats, read_orc_tail)
-
-# ColumnStatistics min/max field number for each stat-capable kind;
-# everything else (bool buckets, binary sums, containers) carries
-# counts only after a merge
-_KIND_TO_STAT = {
-    K_BYTE: STAT_INT, K_SHORT: STAT_INT, K_INT: STAT_INT,
-    K_LONG: STAT_INT,
-    K_FLOAT: STAT_DOUBLE, K_DOUBLE: STAT_DOUBLE,
-    K_STRING: STAT_STRING, K_VARCHAR: STAT_STRING, K_CHAR: STAT_STRING,
-    K_DATE: STAT_DATE,
-    K_TIMESTAMP: STAT_TS, K_TIMESTAMP_INSTANT: STAT_TS,
-    K_DECIMAL: STAT_DEC,
-}
+from .orc_file import MAGIC, _merge_stats, file_tail, pb_bytes, pb_varint
+from .orc_read import OrcFileInfo, read_orc_tail
 
 _CODEC_NAMES = {0: "none", 1: "zlib", 2: "snappy", 3: "lzo", 4: "lz4",
                 5: "zstd", 6: "brotli"}
-
-
-def _tail_regions(info: OrcFileInfo) -> tuple[bytes, bytes, int]:
-    """(decompressed footer bytes, decompressed metadata bytes,
-    PostScript writerVersion) from a parsed tail — the raw regions
-    OrcFileInfo walked in __init__."""
-    data = info.data
-    ps_len = data[-1]
-    footer_len = metadata_len = 0
-    writer_version = 0
-    for fno, _, v in _fields(data[-1 - ps_len: -1]):
-        if fno == 1:
-            footer_len = v
-        elif fno == 5:
-            metadata_len = v
-        elif fno == 6:
-            writer_version = v
-    footer = _deframe(data[-1 - ps_len - footer_len: -1 - ps_len],
-                      info.compression)
-    meta = _deframe(
-        data[-1 - ps_len - footer_len - metadata_len:
-             -1 - ps_len - footer_len],
-        info.compression) if metadata_len else b""
-    return footer, meta, writer_version
 
 
 def _type_signature(info: OrcFileInfo) -> tuple:
@@ -99,59 +56,40 @@ def _type_signature(info: OrcFileInfo) -> tuple:
                  for t in info.types)
 
 
-def _merge_file_stats(infos: list[OrcFileInfo]) -> list[bytes]:
-    """Recombined file-level ColumnStatistics messages (flattened
-    column order), one per column of the shared type tree."""
+def _stat_unit(d: dict) -> tuple:
+    """A parsed ColumnStatistics dict (engine.orc_read.
+    _parse_col_stats) as a ``(n_values, has_null, stat)`` unit; an
+    absent hasNull (legacy third-party writer) reads as unknown ->
+    conservatively true, like orc-core."""
+    stat = None
+    if "min" in d and "max" in d:
+        stat = (d["kind"], d["min"], d["max"]) + (
+            (d["sum"],) if "sum" in d else ())
+    return d["n"], d.get("has_null", True), stat
+
+
+def _merge_file_stats(infos: list[OrcFileInfo]) -> list[tuple]:
+    """Recombined file-level statistics units (flattened column
+    order), one per column of the shared type tree."""
     n_cols = len(infos[0].types)
-    out = []
-    for ci in range(n_cols):
-        n = 0
-        has_null = False
-        poisoned = False
-        mn = mx = None
-        total = 0
-        have_sum = True  # int sums add only if EVERY input carried one
-        for info in infos:
-            if ci >= len(info._file_stats_raw):
-                # the same-writer precondition (checked in concat_orc)
-                # makes a missing footer ColumnStatistics an anomaly;
-                # silently merging would undercount numberOfValues and
-                # could report hasNull=false despite nulls in the
-                # copied stripes — fail loud instead of lying to
-                # third-party tail readers
-                raise ValueError(
-                    f"concat_orc: an input carries no footer "
-                    f"ColumnStatistics for column {ci} (got "
-                    f"{len(info._file_stats_raw)} stat messages for "
-                    f"{n_cols} columns); merged file statistics would "
-                    "be wrong — decode-and-rewrite this file instead")
-            d = _parse_col_stats(info._file_stats_raw[ci])
-            n += d["n"]
-            # absent hasNull (legacy third-party writer) reads as
-            # unknown -> conservatively true, like orc-core
-            has_null = has_null or d.get("has_null", True)
-            if "sum" in d:
-                total += d["sum"]
-            elif d["n"] > 0:
-                have_sum = False
-            if "min" not in d or "max" not in d:
-                if d["n"] > 0:
-                    poisoned = True  # values but no bounds (e.g. NaN)
-                continue
-            mn = d["min"] if mn is None else min(mn, d["min"])
-            mx = d["max"] if mx is None else max(mx, d["max"])
-        fno = _KIND_TO_STAT.get(infos[0].types[ci].kind)
-        stat = None
-        if fno is not None and not poisoned and mn is not None:
-            if fno == STAT_DEC and not isinstance(mn, decimal.Decimal):
-                stat = None  # mismatched parse: stay conservative
-            elif fno in (STAT_INT, STAT_DOUBLE) and have_sum \
-                    and _sum_ok(fno, total):
-                stat = (fno, mn, mx, total)
-            else:
-                stat = (fno, mn, mx)
-        out.append(_col_stats_pb(n, has_null, stat))
-    return out
+    for info in infos:
+        if len(info._file_stats_raw) < n_cols:
+            # the same-writer precondition (checked in concat_orc)
+            # makes a missing footer ColumnStatistics an anomaly;
+            # silently merging would undercount numberOfValues and
+            # could report hasNull=false despite nulls in the copied
+            # stripes — fail loud instead of lying to third-party
+            # tail readers
+            raise ValueError(
+                f"concat_orc: an input carries no footer "
+                f"ColumnStatistics for column "
+                f"{len(info._file_stats_raw)} (got "
+                f"{len(info._file_stats_raw)} stat messages for "
+                f"{n_cols} columns); merged file statistics would "
+                "be wrong — decode-and-rewrite this file instead")
+    return [_merge_stats(_stat_unit(st) for st in col)
+            for col in zip(*(info.file_stats()[:n_cols]
+                             for info in infos))]
 
 
 def concat_orc(in_paths: list[str], out_path: str) -> dict:
@@ -185,14 +123,6 @@ def concat_orc(in_paths: list[str], out_path: str) -> dict:
                 f"{p}: writer id {info.writer} != {ref.writer} "
                 "(timestamp-convention resolution is per file)")
 
-    comp_name = _CODEC_NAMES[ref.compression]
-
-    def region(raw: bytes) -> bytes:
-        if ref.compression == COMP_NONE or not raw:
-            return raw
-        return _frame(raw, ref.block_size, comp_name)[0]
-
-    footers = [_tail_regions(i) for i in infos]
     # attempt-unique temp name: two concurrent attempts of one task
     # (speculative execution, a zombie executor racing a retry) must
     # write disjoint files — a SHARED tmp path would interleave their
@@ -209,8 +139,7 @@ def concat_orc(in_paths: list[str], out_path: str) -> dict:
         with open(tmp, "wb") as out:
             out.write(MAGIC)
             pos = len(MAGIC)
-            for path, info, (_, meta, _wv) in zip(in_paths, infos,
-                                                  footers):
+            for path, info in zip(in_paths, infos):
                 with open(path, "rb") as f:
                     for si in info.stripes:
                         off, ilen, dlen, flen, rows = (
@@ -226,37 +155,18 @@ def concat_orc(in_paths: list[str], out_path: str) -> dict:
                         total_rows += rows
                         n_stripes += 1
                 # per-stripe StripeStatistics copied raw, stripe order
-                for fno, _, v in _fields(meta):
-                    if fno == 1:
-                        metadata += pb_bytes(1, bytes(v))
-            content_len = pos
-            meta_region = region(metadata)
-            out.write(meta_region)
+                metadata += b"".join(pb_bytes(1, bytes(v))
+                                     for v in info._stripe_stats_raw())
             # type tree raw from the first input (semantic equality
-            # checked)
-            types_raw = b"".join(pb_bytes(4, bytes(v))
-                                 for fno, _, v in _fields(footers[0][0])
-                                 if fno == 4)
-            footer = pb_varint(1, len(MAGIC)) \
-                + pb_varint(2, content_len) \
-                + stripes_pb + types_raw + pb_varint(6, total_rows)
-            for cs in _merge_file_stats(infos):
-                footer += pb_bytes(7, cs)
-            footer += pb_varint(8, ref.row_index_stride)
-            if ref.writer:
-                footer += pb_varint(9, ref.writer)
-            footer = region(footer)
-            out.write(footer)
-            # writerVersion copied from the first input (reader quirk
-            # switches key off it; the copied stripes ARE that
+            # checked); writer id and writerVersion from it too (reader
+            # quirk switches key off them; the copied stripes ARE that
             # writer's)
-            ps = pb_varint(1, len(footer)) \
-                + pb_varint(2, ref.compression) \
-                + pb_varint(3, ref.block_size) + pb_varint(4, 0) \
-                + pb_varint(4, 12) + pb_varint(5, len(meta_region)) \
-                + pb_varint(6, footers[0][2]) + pb_bytes(8000, MAGIC)
-            out.write(ps)
-            out.write(bytes([len(ps)]))
+            out.write(file_tail(
+                pos, stripes_pb, metadata,
+                b"".join(pb_bytes(4, bytes(v)) for v in ref._types_raw),
+                total_rows, _merge_file_stats(infos),
+                ref.row_index_stride, _CODEC_NAMES[ref.compression],
+                ref.block_size, ref.writer, ref.writer_version))
     except BaseException:
         # unique-named tmps are never reused by a retry (unlike the
         # old shared name): delete on ANY failure, or each failing

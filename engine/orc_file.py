@@ -13,6 +13,19 @@ descriptor, reference-extract/orc_proto_descriptor.txt):
     Footer(pb)                 incl file-level aggregated statistics
     PostScript(pb)  +  1 trailing byte = len(PostScript)
 
+Statistics have one representation, the unit ``(n_values, has_null,
+stat)`` with ``stat`` = ``(field_no, min, max[, sum])`` or None, and
+one fold, :func:`_merge_stats`. Row-group units (the ROW_INDEX
+entries) fold into the stripe's Metadata stat, stripe units into the
+Footer's file stat, and engine/orc_concat.py folds its inputs' file
+stats into the concatenated Footer: orc-core's index -> stripe ->
+file cascade (``indexStatistics``, ``stripeColStatistics``,
+``fileStatistics``; reference-extract/javap/TreeWriterBase.txt:8-10).
+One fold keeps every tier's range a cover of the tiers under it,
+which min/max pruning at each tier relies on. The Metadata, Footer
+and PostScript of both writers come from one function,
+:func:`file_tail`.
+
 The protobuf layer is hand-rolled (varint / length-delimited only —
 exactly what the ORC tail needs), mirroring tests/orc_tail.py's
 hand-rolled parser on the read side. Compression: NONE (default),
@@ -161,9 +174,7 @@ def _col_stats_pb(nv: int, has_null: bool, stat) -> bytes:
 
 
 def _minmax(vals: pa.Array):
-    """(min, max) of a non-null arrow array, or None when empty."""
-    if len(vals) == 0:
-        return None
+    """(min, max) of a non-empty, non-null arrow array."""
     import pyarrow.compute as pc
     mm = pc.min_max(vals)
     return mm["min"].as_py(), mm["max"].as_py()
@@ -222,13 +233,11 @@ def _concat(bufs: list[bytes]) -> tuple[bytes, list[int]]:
     return b"".join(bufs), offs
 
 
-def _int_stat(v: np.ndarray) -> tuple:
-    """Whole-array (STAT_INT, min, max, sum|None) — sum omitted when
-    an int64 accumulation could overflow (float64 magnitude guard)."""
-    mn, mx = int(v.min()), int(v.max())
-    est = abs(float(np.sum(v, dtype=np.float64)))
-    sm = int(np.sum(v, dtype=np.int64)) if est < 2.0 ** 62 else None
-    return (STAT_INT, mn, mx, sm)
+def _group_stats(vgb: np.ndarray, stat_fn) -> list:
+    """One stat per value group: ``stat_fn(s, e)`` over values
+    ``[s, e)`` of a group that holds some, None for an empty one."""
+    return [stat_fn(int(s), int(e)) if e > s else None
+            for s, e in zip(vgb[:-1], vgb[1:])]
 
 
 def _int_stats(v: np.ndarray, vgb: np.ndarray, fno: int) -> list:
@@ -237,20 +246,75 @@ def _int_stats(v: np.ndarray, vgb: np.ndarray, fno: int) -> list:
     field) is omitted when a float64 magnitude estimate says an int64
     accumulation could overflow, matching ORC writers' omit-on-
     overflow convention."""
-    out = []
-    for s, e in zip(vgb[:-1], vgb[1:]):
-        if e <= s:
-            out.append(None)
-            continue
+    def stat(s, e):
         seg = v[s:e]
         mn, mx = int(seg.min()), int(seg.max())
         if fno != STAT_INT:
-            out.append((fno, mn, mx))
-            continue
+            return (fno, mn, mx)
         est = abs(float(np.sum(seg, dtype=np.float64)))
-        sm = int(np.sum(seg, dtype=np.int64)) if est < 2.0 ** 62 else None
-        out.append((fno, mn, mx, sm))
-    return out
+        return (fno, mn, mx,
+                int(np.sum(seg, dtype=np.int64)) if est < 2.0 ** 62
+                else None)
+    return _group_stats(vgb, stat)
+
+
+def _float_stat(seg: np.ndarray) -> tuple | None:
+    """DoubleStatistics of one group. ORC writers omit min/max when
+    NaN is present (None here); the sum rides along when finite — an
+    inf/NaN sum would poison SUM-from-tails, so it is omitted like
+    the integer overflow convention."""
+    mn = float(seg.min())
+    if math.isnan(mn):
+        return None
+    with np.errstate(over="ignore"):   # inf sum -> omitted slot
+        sm = float(np.sum(seg, dtype=np.float64))
+    return (STAT_DOUBLE, mn, float(seg.max()),
+            sm if math.isfinite(sm) else None)
+
+
+def _merge_stats(units) -> tuple[int, bool, tuple | None]:
+    """Fold ``(n_values, has_null, stat)`` units into one — the single
+    statistics merge of every tier (row groups -> stripe -> file ->
+    concatenated file). ``n`` adds and ``has_null`` ORs. min/max merge
+    only when every unit holding values carries a stat of one kind: a
+    unit with values but no stat deliberately omitted it (floats with
+    NaN), and bounds built from the other units would exclude its
+    values, so stats-based filters would drop matching rows. The sum
+    is kept only when every such unit carries one and the total passes
+    ``_sum_ok`` (an omitted sum means overflow)."""
+    n, has_null, stats, omitted = 0, False, [], False
+    for nv, hn, st in units:
+        n += nv
+        has_null = has_null or hn
+        if st is not None:
+            stats.append(st)
+        elif nv:
+            omitted = True
+    if omitted or not stats or len({s[0] for s in stats}) > 1:
+        return n, has_null, None
+    fno = stats[0][0]
+    stat = (fno, min(s[1] for s in stats), max(s[2] for s in stats))
+    if all(len(s) > 3 and s[3] is not None for s in stats):
+        total = sum(s[3] for s in stats)
+        if _sum_ok(fno, total):
+            stat += (total,)
+    return n, has_null, stat
+
+
+def _run_positions(rstarts: np.ndarray, roffs: np.ndarray,
+                   starts: np.ndarray, bits: bool = False) -> list:
+    """ROW_INDEX positions of value offsets ``starts`` in a byte-RLE
+    stream whose runs begin at value ``rstarts`` and byte ``roffs``:
+    ``[run offset, values into run]``, plus ``bit`` for a bit stream
+    (PRESENT, boolean DATA), whose ``starts`` count bits, eight to a
+    byte-RLE value. An empty stream (every row null) seeks to 0."""
+    idx = starts // 8 if bits else starts
+    if rstarts.size == 0:
+        return [[0, 0, 0] if bits else [0, 0] for _ in idx]
+    j = np.searchsorted(rstarts, idx, side="right") - 1
+    return [[int(roffs[k]), int(i - rstarts[k])]
+            + ([int(s % 8)] if bits else [])
+            for k, i, s in zip(j, idx, starts)]
 
 
 def _encode_column(arr: pa.Array, ts_conv: str = "cpp",
@@ -264,6 +328,7 @@ def _encode_column(arr: pa.Array, ts_conv: str = "cpp",
     When given, every stream is encoded per group and concatenated,
     and ``_Col.rg`` carries one ``(positions, nv, has_null, stat)``
     RowIndexEntry per group. When None, single-segment (no index).
+    Either way ``_Col.stat`` is the fold of the per-group stats.
     """
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
@@ -274,6 +339,7 @@ def _encode_column(arr: pa.Array, ts_conv: str = "cpp",
     ng = len(gbl) - 1
 
     streams = []
+    pres_pos = [[] for _ in range(ng)]
     if arr.null_count:
         # the PRESENT bit stream CANNOT be segmented at group
         # boundaries (bit counts aren't byte-aligned for arbitrary
@@ -283,24 +349,14 @@ def _encode_column(arr: pa.Array, ts_conv: str = "cpp",
         valid = ~np.asarray(arr.is_null())
         pres, rstarts, roffs = rle1.encode_bool(valid, return_runs=True)
         streams.append((PRESENT, pres.tobytes()))
-        if index and ng:
-            bidx = gbl[:-1] // 8
-            j = np.searchsorted(rstarts, bidx, side="right") - 1
-            pres_pos = [
-                [int(roffs[k]), int(bidx[i] - rstarts[k]),
-                 int(gbl[i] % 8)]
-                for i, k in enumerate(j)]
-        else:
-            pres_pos = [[] for _ in range(ng)]
+        if index:
+            pres_pos = _run_positions(rstarts, roffs, gbl[:-1], bits=True)
         cs = np.concatenate(([0], np.cumsum(valid, dtype=np.int64)))
         nn_g = cs[gbl[1:]] - cs[gbl[:-1]]
         vals = arr.drop_null()
-        hn = True
     else:
-        pres_pos = [[] for _ in range(ng)]
         nn_g = np.diff(gbl)
         vals = arr
-        hn = False
     hn_g = np.diff(gbl) != nn_g
     # value-coordinate group boundaries (rows minus preceding nulls)
     vgb = np.concatenate(([0], np.cumsum(nn_g)))
@@ -316,28 +372,18 @@ def _encode_column(arr: pa.Array, ts_conv: str = "cpp",
                 else [[o] for o in offs]), data
 
     def done(kind, encoding=ENC_DIRECT_V2, pos=None, stat_g=None,
-             stat=None, **kw) -> _Col:
+             **kw) -> _Col:
+        # one unit per group; the stripe stat is their fold (a stripe
+        # without a row index is the one-group case, gbl = [0, n])
+        units = [(int(nn_g[g]), bool(hn_g[g]),
+                  stat_g[g] if stat_g else None) for g in range(ng)]
         rg = None
         if index:
-            if stat_g is None:
-                stat_g = [None] * ng
-            if pos is None:
-                pos = [[] for _ in range(ng)]
-            rg = [(pres_pos[g] + pos[g], int(nn_g[g]), bool(hn_g[g]),
-                   stat_g[g]) for g in range(ng)]
-            # only aggregate when EVERY group with values produced a
-            # stat: a non-empty group with stat=None means the type
-            # deliberately omitted it (floats with NaN — ORC omits
-            # min/max for the whole stripe then); aggregating over the
-            # remaining groups would write a min/max that excludes the
-            # NaN-bearing groups' values and filters would silently
-            # drop matching rows
-            if stat is None and all(
-                    stat_g[g] is not None or nn_g[g] == 0
-                    for g in range(ng)):
-                stat = _agg_stats(stat_g)
-        return _Col(kind, streams, encoding, n_values=nv, has_null=hn,
-                    stat=stat, rg=rg, **kw)
+            rg = [(pres_pos[g] + (pos[g] if pos else []),) + units[g]
+                  for g in range(ng)]
+        n_values, has_null, stat = _merge_stats(units)
+        return _Col(kind, streams, encoding, n_values=n_values,
+                    has_null=has_null, stat=stat, rg=rg, **kw)
 
     if pa.types.is_struct(t):
         # struct children carry one value per NON-NULL struct row
@@ -392,14 +438,6 @@ def _encode_column(arr: pa.Array, ts_conv: str = "cpp",
         data, rstarts, roffs = rle1.encode_byte_rle(tags,
                                                     return_runs=True)
         streams.append((DATA, data.tobytes()))
-        pos = None
-        if index and ng:
-            if rstarts.size == 0:      # every row null -> empty stream
-                pos = [[0, 0] for _ in range(ng)]
-            else:
-                j = np.searchsorted(rstarts, vgb[:-1], side="right") - 1
-                pos = [[int(roffs[k]), int(vgb[i] - rstarts[k])]
-                       for i, k in enumerate(j)]
         dense = t.mode == "dense"
         if dense:
             voffs = np.asarray(vals.offsets, dtype=np.int64)
@@ -416,7 +454,8 @@ def _encode_column(arr: pa.Array, ts_conv: str = "cpp",
                     ([0], np.cumsum(m, dtype=np.int64)))[vgb]
             children.append(_encode_column(child, ts_conv, child_gb,
                                            ts_instant))
-        return done(K_UNION, ENC_DIRECT, subtypes=children, pos=pos)
+        return done(K_UNION, ENC_DIRECT, subtypes=children,
+                    pos=_run_positions(rstarts, roffs, vgb[:-1]))
     if t == pa.bool_():
         # boolean DATA is a bit stream (MSB-first bits, byte-RLE'd —
         # the PRESENT framing); positions are [stream offset, bytes
@@ -424,78 +463,40 @@ def _encode_column(arr: pa.Array, ts_conv: str = "cpp",
         bits = np.asarray(vals, dtype=bool)
         data, rstarts, roffs = rle1.encode_bool(bits, return_runs=True)
         streams.append((DATA, data.tobytes()))
-        pos = None
-        if index and ng:
-            if rstarts.size == 0:      # every row null -> empty stream
-                pos = [[0, 0, 0] for _ in range(ng)]
-            else:
-                bidx = vgb[:-1] // 8
-                j = np.searchsorted(rstarts, bidx, side="right") - 1
-                pos = [[int(roffs[k]), int(bidx[i] - rstarts[k]),
-                        int(vgb[i] % 8)] for i, k in enumerate(j)]
-        return done(K_BOOLEAN, ENC_DIRECT, pos=pos)
+        return done(K_BOOLEAN, ENC_DIRECT, pos=_run_positions(
+            rstarts, roffs, vgb[:-1], bits=True))
     if t == pa.int8():
         # tinyint DATA is byte-RLE, not RLEv2 (ORC spec; orc C++
         # ByteColumnReader) — raw two's-complement bytes
         v8 = np.asarray(vals).view(np.uint8)
         data, rstarts, roffs = rle1.encode_byte_rle(v8, return_runs=True)
         streams.append((DATA, data.tobytes()))
-        pos = None
-        if index and ng:
-            if rstarts.size == 0:      # every row null -> empty stream
-                pos = [[0, 0] for _ in range(ng)]
-            else:
-                j = np.searchsorted(rstarts, vgb[:-1], side="right") - 1
-                pos = [[int(roffs[k]), int(vgb[i] - rstarts[k])]
-                       for i, k in enumerate(j)]
-        v = np.asarray(vals, dtype=np.int64)
-        stat = _int_stat(v) if nv else None
-        return done(K_BYTE, ENC_DIRECT, pos=pos, stat=stat,
-                    stat_g=_int_stats(v, vgb, STAT_INT) if index else None)
+        return done(K_BYTE, ENC_DIRECT,
+                    pos=_run_positions(rstarts, roffs, vgb[:-1]),
+                    stat_g=_int_stats(np.asarray(vals, dtype=np.int64),
+                                      vgb, STAT_INT))
     if t in _INT_KINDS:
         v = np.asarray(vals, dtype=np.int64)
         pos, data = groups(lambda s, e: rle2.encode_rlev2(
             v[s:e], signed=True).tobytes(), 2)
         streams.append((DATA, data))
-        stat = _int_stat(v) if nv else None
-        return done(_INT_KINDS[t], pos=pos, stat=stat,
-                    stat_g=_int_stats(v, vgb, STAT_INT) if index else None)
+        return done(_INT_KINDS[t], pos=pos,
+                    stat_g=_int_stats(v, vgb, STAT_INT))
     if pa.types.is_floating(t):
         double = t == pa.float64()
         v = np.asarray(vals, dtype=np.float64 if double else np.float32)
         streams.append((DATA, T.encode_floats(v, double=double).tobytes()))
         w = 8 if double else 4
-        pos = [[int(s) * w] for s in vgb[:-1]]
-        # ORC writers omit double min/max when NaN is present; the
-        # sum (DoubleStatistics field 3) rides along when finite —
-        # an inf/NaN sum would poison SUM-from-tails, so it is
-        # omitted like the integer overflow convention
-        stat = None
-        with np.errstate(over="ignore"):   # inf sum -> omitted slot
-            if nv and not np.isnan(mn := float(v.min())):
-                stat = (STAT_DOUBLE, mn, float(v.max()),
-                        sm if np.isfinite(
-                            sm := float(np.sum(v, dtype=np.float64)))
-                        else None)
-            stat_g = None
-            if index:
-                stat_g = [
-                    (STAT_DOUBLE, float(v[s:e].min()),
-                     float(v[s:e].max()),
-                     gs if np.isfinite(gs := float(
-                         np.sum(v[s:e], dtype=np.float64))) else None)
-                    if e > s and not np.isnan(v[s:e].min()) else None
-                    for s, e in zip(vgb[:-1], vgb[1:])]
         return done(K_DOUBLE if double else K_FLOAT, ENC_DIRECT,
-                    pos=pos, stat=stat, stat_g=stat_g)
+                    pos=[[int(s) * w] for s in vgb[:-1]],
+                    stat_g=_group_stats(
+                        vgb, lambda s, e: _float_stat(v[s:e])))
     if pa.types.is_date32(t):
         v = np.asarray(vals.cast(pa.int32()), dtype=np.int64)
         pos, data = groups(
             lambda s, e: T.encode_date(v[s:e]).tobytes(), 2)
         streams.append((DATA, data))
-        stat = (STAT_DATE, int(v.min()), int(v.max())) if nv else None
-        return done(K_DATE, pos=pos, stat=stat,
-                    stat_g=_int_stats(v, vgb, STAT_DATE) if index else None)
+        return done(K_DATE, pos=pos, stat_g=_int_stats(v, vgb, STAT_DATE))
     if pa.types.is_timestamp(t):
         # tz-aware Arrow timestamps are instants -> TIMESTAMP_INSTANT
         # (same stream layout, UTC epoch base; readers skip the
@@ -508,12 +509,10 @@ def _encode_column(arr: pa.Array, ts_conv: str = "cpp",
         sec, soffs = _concat([s.tobytes() for _, s in segs])
         streams.append((DATA, data))
         streams.append((SECONDARY, sec))
-        pos = [[d, 0, s, 0] for d, s in zip(doffs, soffs)]
-        stat = (STAT_TS, int(ns.min()), int(ns.max())) if nv else None
         return done(K_TIMESTAMP_INSTANT if (t.tz and ts_instant)
                     else K_TIMESTAMP,
-                    pos=pos, stat=stat,
-                    stat_g=_int_stats(ns, vgb, STAT_TS) if index else None)
+                    pos=[[d, 0, s, 0] for d, s in zip(doffs, soffs)],
+                    stat_g=_int_stats(ns, vgb, STAT_TS))
     if pa.types.is_decimal(t):
         buf = vals.buffers()[1]
         raw = np.frombuffer(buf, dtype=np.uint64,
@@ -527,25 +526,13 @@ def _encode_column(arr: pa.Array, ts_conv: str = "cpp",
             signed=True).tobytes() for s, e in zip(vgb[:-1], vgb[1:])])
         streams.append((DATA, data))
         streams.append((SECONDARY, sec))
-        pos = [[d, s, 0] for d, s in zip(doffs, soffs)]
-        stat = None
-        if nv:
-            mn, mx = _i128_minmax(lo, hi)
-            stat = (STAT_DEC, _dec_val(mn, t.scale),
-                    _dec_val(mx, t.scale))
-        stat_g = None
-        if index:
-            stat_g = []
-            for s, e in zip(vgb[:-1], vgb[1:]):
-                if e > s:
-                    gmn, gmx = _i128_minmax(lo[s:e], hi[s:e])
-                    stat_g.append((STAT_DEC, _dec_val(gmn, t.scale),
-                                   _dec_val(gmx, t.scale)))
-                else:
-                    stat_g.append(None)
-        return done(K_DECIMAL, pos=pos,
+
+        def dec_stat(s, e):
+            mn, mx = _i128_minmax(lo[s:e], hi[s:e])
+            return (STAT_DEC, _dec_val(mn, t.scale), _dec_val(mx, t.scale))
+        return done(K_DECIMAL, pos=[[d, s, 0] for d, s in zip(doffs, soffs)],
                     precision=t.precision, scale=t.scale,
-                    stat=stat, stat_g=stat_g)
+                    stat_g=_group_stats(vgb, dec_stat))
     if pa.types.is_binary(t) or pa.types.is_large_binary(t):
         data, lens = strings.arrow_bytes_lengths(vals)
         streams.append((DATA, data.tobytes()))
@@ -558,16 +545,8 @@ def _encode_column(arr: pa.Array, ts_conv: str = "cpp",
     if pa.types.is_string(t) or pa.types.is_large_string(t):
         varr = vals.cast(pa.large_string())
         enc = strings.encode_strings(varr)
-        stat = None
-        if nv:
-            mn, mx = _minmax(vals)
-            stat = (STAT_STRING, mn, mx)
-        stat_g = None
-        if index:
-            stat_g = []
-            for s, e in zip(vgb[:-1], vgb[1:]):
-                mm = _minmax(varr.slice(s, e - s))
-                stat_g.append((STAT_STRING, mm[0], mm[1]) if mm else None)
+        stat_g = _group_stats(vgb, lambda s, e: (
+            STAT_STRING,) + _minmax(varr.slice(s, e - s)))
         if enc["kind"] == "DICTIONARY_V2":
             # dictionary streams are stripe-wide; only the row (index)
             # DATA stream is segmented, so a dict column's positions
@@ -580,8 +559,7 @@ def _encode_column(arr: pa.Array, ts_conv: str = "cpp",
             streams.append((LENGTH, enc["length"].tobytes()))
             streams.append((DICTIONARY_DATA, enc["dict_data"].tobytes()))
             return done(K_STRING, ENC_DICTIONARY_V2, pos=dpos,
-                        stat=stat, stat_g=stat_g,
-                        dict_size=int(enc["dict_size"]))
+                        stat_g=stat_g, dict_size=int(enc["dict_size"]))
         _bytes, lens = strings.arrow_bytes_lengths(varr)
         lpos, ldata = groups(lambda s, e: rle2.encode_rlev2(
             lens[s:e], signed=False).tobytes(), 2)
@@ -589,25 +567,8 @@ def _encode_column(arr: pa.Array, ts_conv: str = "cpp",
         streams.append((DATA, enc["data"].tobytes()))
         streams.append((LENGTH, ldata))
         pos = [[int(b)] + lp for b, lp in zip(boffs, lpos)]
-        return done(K_STRING, pos=pos, stat=stat, stat_g=stat_g)
+        return done(K_STRING, pos=pos, stat_g=stat_g)
     raise NotImplementedError(f"ORC writer: unsupported type {t}")
-
-
-def _agg_stats(stat_g: list) -> tuple | None:
-    """Aggregate per-group stats to a stripe stat (min of mins, ...);
-    sums add only when EVERY group carried one (an omitted group sum
-    means overflow — the aggregate would be wrong, so it is omitted)."""
-    present = [s for s in stat_g if s is not None]
-    if not present:
-        return None
-    fno = present[0][0]
-    mn = min(s[1] for s in present)
-    mx = max(s[2] for s in present)
-    if all(len(s) > 3 and s[3] is not None for s in present):
-        total = sum(s[3] for s in present)
-        if _sum_ok(fno, total):
-            return (fno, mn, mx, total)
-    return (fno, mn, mx)
 
 
 def _sum_ok(fno: int, total) -> bool:
@@ -707,6 +668,13 @@ def _frame(data: bytes, block: int,
         out += body
         cum[i + 1] = len(out)
     return bytes(out), cum
+
+
+def _region(raw: bytes, block: int, compression: str) -> bytes:
+    """A tail or index region as stored: chunk-framed (:func:`_frame`)
+    unless uncompressed or empty."""
+    return _frame(raw, block, compression)[0] \
+        if compression != "none" and raw else raw
 
 
 def _state_slots(col: _Col, kind: int) -> int:
@@ -838,6 +806,36 @@ def _bloom_index_pb(arr: pa.Array, col: _Col, stride: int,
     return out
 
 
+def file_tail(content_len: int, stripes_pb: bytes, metadata: bytes,
+              types_pb: bytes, n_rows: int, stats: list,
+              row_index_stride: int, compression: str, block: int,
+              writer: int = 0, writer_version: int = 6) -> bytes:
+    """The bytes after a file's last stripe: Metadata, Footer,
+    PostScript and its length byte — the tail of write_orc and of
+    engine/orc_concat.concat_orc. ``stripes_pb``: the Footer's
+    StripeInformation messages; ``metadata``: the StripeStatistics
+    messages; ``types_pb``: the Type messages; ``stats``: one
+    ``(n_values, has_null, stat)`` unit per flattened column. Both
+    regions are chunk-framed at ``block`` under ``compression``.
+    ``writer`` (Footer field 9, omitted at its proto default 0) and
+    ``writer_version`` (PostScript field 6) name the writer of the
+    stripes."""
+    metadata = _region(metadata, block, compression)
+    footer = pb_varint(1, len(MAGIC)) + pb_varint(2, content_len) \
+        + stripes_pb + types_pb + pb_varint(6, n_rows) \
+        + b"".join(pb_bytes(7, _col_stats_pb(*u)) for u in stats) \
+        + pb_varint(8, row_index_stride) \
+        + (pb_varint(9, writer) if writer else b"")
+    footer = _region(footer, block, compression)
+    ps = pb_varint(1, len(footer)) \
+        + pb_varint(2, _CHUNK_CODECS[compression][0]
+                    if compression != "none" else 0) \
+        + pb_varint(3, block) + pb_varint(4, 0) + pb_varint(4, 12) \
+        + pb_varint(5, len(metadata)) + pb_varint(6, writer_version) \
+        + pb_bytes(8000, MAGIC)
+    return metadata + footer + ps + bytes([len(ps)])
+
+
 def write_orc(table: pa.Table, path: str,
               stripe_rows: int = 1_000_000,
               timestamp_convention: str = "cpp",
@@ -895,28 +893,16 @@ def write_orc(table: pa.Table, path: str,
                          "(none|zlib|snappy|lz4|zstd|brotli)")
     comp = compression != "none"
     B = compression_block
-
-    def region(raw: bytes) -> bytes:
-        return _frame(raw, B, compression)[0] if comp and raw else raw
-
     table = table.combine_chunks()
     out = bytearray(MAGIC)
     stripes_pb = b""
     total_rows = table.num_rows
-    n_stripes = 0
-    stats_cols: list[_Col] | None = None
-    # file-level statistics accumulate across ALL stripes (per flattened
-    # column index): numberOfValues is the sum of per-stripe non-null
-    # counts and hasNull the OR — readers that trust file stats (COUNT
-    # pushdown, hasNull-based IS NULL pruning) see the whole file, not
-    # just the last stripe
-    agg_nvals: list[int] = []
-    agg_hasnull: list[bool] = []
-    agg_stat: list[tuple | None] = []
-    # Metadata section: one StripeStatistics (repeated ColumnStatistics,
-    # flattened pre-order) per stripe — what planning-time stripe
-    # pruning reads (engine.orc_read.stripes_matching)
-    metadata = b""
+    cols: list[_Col] = []
+    # per stripe, one (n_values, has_null, stat) unit per flattened
+    # column: the Metadata section's StripeStatistics (what
+    # planning-time stripe pruning reads, engine.orc_read.
+    # stripes_matching), folded per column into the file statistics
+    stripe_units: list[list[tuple]] = []
 
     for s0 in range(0, max(total_rows, 1), stripe_rows):
         chunk = table.slice(s0, stripe_rows)
@@ -931,41 +917,10 @@ def write_orc(table: pa.Table, path: str,
              for i in range(chunk.num_columns)],
             names=chunk.column_names), timestamp_convention, gb,
             ts_instant=timestamp_instant)
-        cols: list[_Col] = []
+        cols = []
         _flatten(root, cols)
-        if not agg_nvals:
-            agg_nvals = [0] * len(cols)
-            agg_hasnull = [False] * len(cols)
-            agg_stat = [None] * len(cols)
-            stat_poisoned = [False] * len(cols)
-        for i, c in enumerate(cols):
-            agg_nvals[i] += c.n_values
-            agg_hasnull[i] = agg_hasnull[i] or c.has_null
-            # a stripe WITH values but WITHOUT a stat deliberately
-            # omitted it (floats with NaN); a file min/max built from
-            # the other stripes would exclude this stripe's values and
-            # stats-based filters would silently drop matching rows —
-            # omit the file stat entirely, like ORC writers do
-            if c.stat is None and c.n_values > 0:
-                stat_poisoned[i] = True
-            if stat_poisoned[i]:
-                agg_stat[i] = None
-            elif c.stat is not None:
-                if agg_stat[i] is None:
-                    agg_stat[i] = c.stat
-                else:
-                    prev = agg_stat[i]
-                    merged = (prev[0], min(prev[1], c.stat[1]),
-                              max(prev[2], c.stat[2]))
-                    # file sum only if every stripe carried one
-                    if len(prev) > 3 and prev[3] is not None \
-                            and len(c.stat) > 3 and c.stat[3] is not None \
-                            and _sum_ok(prev[0], prev[3] + c.stat[3]):
-                        merged += (prev[3] + c.stat[3],)
-                    agg_stat[i] = merged
-        metadata += pb_bytes(1, b"".join(
-            pb_bytes(1, _col_stats_pb(c.n_values, c.has_null, c.stat))
-            for c in cols))
+        stripe_units.append([(c.n_values, c.has_null, c.stat)
+                             for c in cols])
         if comp:
             # frame every data stream FIRST: the per-stream chunk-start
             # offsets rewrite the row-index positions to their 2-slot
@@ -988,7 +943,7 @@ def write_orc(table: pa.Table, path: str,
             # column order, listed ahead of the data streams (ORC
             # readers locate streams by the cumulative footer lengths)
             for ci, c in enumerate(cols):
-                ri = region(_row_index_pb(c))
+                ri = _region(_row_index_pb(c), B, compression)
                 out += ri
                 index_len += len(ri)
                 sf += pb_bytes(1, pb_varint(1, ROW_INDEX) + pb_varint(2, ci)
@@ -997,9 +952,9 @@ def write_orc(table: pa.Table, path: str,
             for name in bloom_columns:
                 j = chunk.column_names.index(name)
                 c = root.subtypes[j]
-                bi = region(_bloom_index_pb(
+                bi = _region(_bloom_index_pb(
                     chunk.column(j).combine_chunks(), c,
-                    row_index_stride, bloom_fpp))
+                    row_index_stride, bloom_fpp), B, compression)
                 out += bi
                 index_len += len(bi)
                 sf += pb_bytes(1, pb_varint(1, BLOOM_FILTER_UTF8)
@@ -1017,33 +972,20 @@ def write_orc(table: pa.Table, path: str,
                            + (pb_varint(2, c.dict_size)
                               if c.dict_size else b""))
         sf += pb_str(3, "UTC")
-        sf = region(sf)
+        sf = _region(sf, B, compression)
         out += sf
         stripes_pb += pb_bytes(3, pb_varint(1, offset)
                                + pb_varint(2, index_len)
                                + pb_varint(3, data_len)
                                + pb_varint(4, len(sf))
                                + pb_varint(5, chunk.num_rows))
-        stats_cols = cols
-        n_stripes += 1
 
-    content_len = len(out)
-    metadata = region(metadata)
-    out += metadata
-    footer = pb_varint(1, len(MAGIC)) + pb_varint(2, content_len) \
-        + stripes_pb + _type_tree(stats_cols or []) \
-        + pb_varint(6, total_rows)
-    for nv, hn, st in zip(agg_nvals, agg_hasnull, agg_stat):
-        footer += pb_bytes(7, _col_stats_pb(nv, hn, st))
-    footer += pb_varint(8, row_index_stride)
-    footer = region(footer)
-    out += footer
-    comp_kind = _CHUNK_CODECS[compression][0] if comp else 0
-    ps = pb_varint(1, len(footer)) + pb_varint(2, comp_kind) \
-        + pb_varint(3, B) + pb_varint(4, 0) + pb_varint(4, 12) \
-        + pb_varint(5, len(metadata)) + pb_varint(6, 6) \
-        + pb_bytes(8000, MAGIC)
-    out += ps
-    out.append(len(ps))
+    metadata = b"".join(pb_bytes(1, b"".join(
+        pb_bytes(1, _col_stats_pb(*u)) for u in units))
+        for units in stripe_units)
+    out += file_tail(len(out), stripes_pb, metadata, _type_tree(cols),
+                     total_rows, [_merge_stats(u)
+                                  for u in zip(*stripe_units)],
+                     row_index_stride, compression, B)
     with open(path, "wb") as f:
         f.write(bytes(out))

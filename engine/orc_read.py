@@ -36,6 +36,7 @@ stripe open.
 
 from __future__ import annotations
 
+import datetime
 import decimal
 import zlib
 
@@ -229,6 +230,7 @@ class OrcFileInfo:
         self.block_size = ps.get(3, 256 * 1024)
         metadata_len = ps.get(5, 0)
         self.metadata_len = metadata_len
+        self.writer_version = ps.get(6, 0)
         # Metadata (per-stripe ColumnStatistics) sits just before the
         # Footer; keep the raw slice, parse lazily in stripe_stats()
         self._meta_raw = data[-1 - ps_len - footer_len - metadata_len:
@@ -241,6 +243,7 @@ class OrcFileInfo:
         self.writer = 0  # proto default = ORC_JAVA
         self.row_index_stride = 0
         self._file_stats_raw: list = []
+        self._types_raw: list = []
         self.types: list[_TypeNode] = []
         self.stripes: list[dict] = []
         for fno, wt, v in _fields(footer):
@@ -250,6 +253,7 @@ class OrcFileInfo:
                     si[f2] = v2
                 self.stripes.append(si)
             elif fno == 4:  # Type
+                self._types_raw.append(v)
                 t = _TypeNode()
                 for f2, w2, v2 in _fields(v):
                     if f2 == 1:
@@ -329,16 +333,16 @@ class OrcFileInfo:
         if self._stripe_stats is None:
             if not self.metadata_len:
                 return None
-            md = _deframe(self._meta_raw, self.compression)
-            out = []
-            for fno, _, v in _fields(md):
-                if fno != 1:        # StripeStatistics
-                    continue
-                cols = [_parse_col_stats(v2) for f2, _, v2 in _fields(v)
-                        if f2 == 1]
-                out.append(cols)
-            self._stripe_stats = out
+            self._stripe_stats = [
+                [_parse_col_stats(v2) for f2, _, v2 in _fields(v)
+                 if f2 == 1] for v in self._stripe_stats_raw()]
         return self._stripe_stats
+
+    def _stripe_stats_raw(self) -> list:
+        """The Metadata section's raw StripeStatistics messages, in
+        stripe order."""
+        md = _deframe(self._meta_raw, self.compression)
+        return [v for fno, _, v in _fields(md) if fno == 1]
 
     def file_stats(self) -> list[dict] | None:
         """Footer file-level ColumnStatistics -> one stat dict
@@ -357,7 +361,9 @@ def _zz(u: int) -> int:
 
 
 def _parse_col_stats(v) -> dict:
-    """One ColumnStatistics message -> {n, has_null, min, max}.
+    """One ColumnStatistics message -> {n, has_null, kind, min, max,
+    sum}: ``kind`` is the field number of the typed statistics
+    sub-message read (engine.orc_file's ``STAT_*``).
 
     ``has_null`` is set only when the optional hasNull field (10) is
     actually present: orc-core treats a MISSING hasNull as
@@ -369,6 +375,8 @@ def _parse_col_stats(v) -> dict:
     import struct
     d = {"n": 0}
     for f2, w2, v2 in _fields(v):
+        if f2 in (2, 3, 4, 6, 7, 9):    # the sub-messages read below
+            d["kind"] = f2
         if f2 == 1:
             d["n"] = v2
         elif f2 == 10:
@@ -486,14 +494,29 @@ def _resolved_filters(info: OrcFileInfo, filters: list[tuple]
     schema-evolved directory that predates the column) contributes no
     pruning — the conservative keep — instead of raising; the jobs
     layer validates projection names against the probed schema
-    driver-side, so a mistyped name still errors there."""
+    driver-side, so a mistyped name still errors there.
+
+    A ``datetime.date`` literal on a DATE column becomes its day
+    count, the unit of DATE statistics and of DATE bloom hashes."""
     out = []
-    for flt in filters:
+    for col, op, val in filters:
         try:
-            out.append((flt, _filter_columns(info, [flt])[0]))
+            f = _filter_columns(info, [(col, op, val)])[0]
         except KeyError:
-            pass
+            continue
+        if info.types[f].kind == K_DATE:
+            val = tuple(map(_days, val)) if op == "in" else _days(val)
+        out.append(((col, op, val), f))
     return out
+
+
+def _days(val):
+    """Days since 1970-01-01 of a ``datetime.date`` (not a datetime);
+    any other literal unchanged."""
+    if isinstance(val, datetime.date) and \
+            not isinstance(val, datetime.datetime):
+        return (val - datetime.date(1970, 1, 1)).days
+    return val
 
 
 def _stats_may_match(st: dict | None, op: str, val) -> bool:

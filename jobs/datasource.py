@@ -29,11 +29,14 @@ source would:
   KeyError. With a user ``.schema(...)`` nothing is probed: the
   reader runs the I/O-free check (``check_filters``, ValueError),
   and a task whose file lacks a filter column raises ValueError
-  unless ``merge_schema`` null-fills it. The filters prune in the
-  engine's three tiers (stripe statistics, row-group statistics and
-  blooms, ROW_INDEX seek; jobs/orc_read.py); option filters then
-  apply exactly in the task, and pushed ones are handed back to
-  Spark, which re-applies them.
+  unless ``merge_schema`` null-fills it. The reader types option
+  literals to their column in its own schema, as resolve_scan does
+  (``typed_filters``; a JSON ``"5"`` on an int column is 5); a
+  filter column outside the projection keeps its literal. The
+  filters prune in the engine's three tiers (stripe statistics,
+  row-group statistics and blooms, ROW_INDEX seek;
+  jobs/orc_read.py); option filters then apply exactly in the task,
+  and pushed ones are handed back to Spark, which re-applies them.
 * **Split planning** — ``partitions()`` lists the directory and cuts
   each file into ``split_mb`` byte ranges (default 64 MB) from its
   size alone (``OrcRangePartition``): no tail is read while planning
@@ -288,11 +291,17 @@ def _read(partition: OrcRangePartition, schema: StructType, options,
 
 class OrcEngineReader(DataSourceReader):
     def __init__(self, path: str, schema: StructType, options):
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from jobs.orc_read import typed_filters
         self._path = path
         self._schema = schema
         self._options = options
         self._filters: list[tuple] = []
-        self._opt_filters = _parse_option_filters(options)
+        opt = _parse_option_filters(options)
+        # typed from this reader's schema, which needs no I/O
+        self._opt_filters = typed_filters(
+            opt, to_arrow_schema(schema)) if opt else opt
         mb = float(options.get("split_mb", "64"))
         if not (mb > 0 and math.isfinite(mb)):
             raise ValueError(f"split_mb must be a positive number, "

@@ -231,6 +231,18 @@ def _typed(val, t: pa.DataType):
     return val
 
 
+def typed_filters(filters: list[tuple], schema: pa.Schema) -> list[tuple]:
+    """``filters`` with ``str`` literals typed to their column in
+    ``schema`` (``_typed``). A ``starts_with`` prefix, and a literal
+    on a column ``schema`` lacks, stay as they are."""
+    out = []
+    for c, op, v in filters:
+        t = _column_type(schema, c)
+        out.append((c, op, v if op == "starts_with" or t is None
+                    else _typed(v, t)))
+    return out
+
+
 def resolve_scan(path: str, columns: list[str] | None = None,
                  filters=None, merge_schemas: bool = False,
                  use_manifest: bool = False,
@@ -242,7 +254,7 @@ def resolve_scan(path: str, columns: list[str] | None = None,
     (top level) or filter column (dotted names walk structs) the
     schema lacks, projects the schema to ``columns``, and returns the
     filters checked (``check_filters``) with ``str`` literals typed
-    to their column (``_typed``; a ``starts_with`` prefix stays str)."""
+    to their column (``typed_filters``)."""
     filters = check_filters(filters)
     files = list_orc_files(path, use_manifest=use_manifest)
     if merge_schemas:
@@ -250,17 +262,16 @@ def resolve_scan(path: str, columns: list[str] | None = None,
     else:
         from engine.orc_read import read_orc_tail
         schema = read_orc_tail(files[0]).schema()
-    types = {f[0]: _column_type(schema, f[0]) for f in filters}
     missing = [c for c in columns or () if c not in schema.names] + \
-        [c for c, t in types.items() if t is None]
+        [c for c in dict.fromkeys(f[0] for f in filters)
+         if _column_type(schema, c) is None]
     if missing:
         raise KeyError(f"columns not in ORC schema {schema.names}: "
                        f"{missing}")
+    filters = typed_filters(filters, schema)
     if columns is not None:
         schema = pa.schema([schema.field(c) for c in columns])
-    return files, schema, [
-        (c, op, v if op == "starts_with" else _typed(v, types[c]))
-        for c, op, v in filters]
+    return files, schema, filters
 
 
 def byte_ranges(sizes: list[int],

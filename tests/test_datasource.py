@@ -872,3 +872,17 @@ def test_failed_write_task_leaves_no_file(tmp_path, monkeypatch):
     with pytest.raises(OSError, match="disk full"):
         w.write(iter([batch]))
     assert os.listdir(d) == []
+
+
+def test_option_filter_str_literal_is_typed(spark_ds, orc_dir):
+    """A JSON str literal in the orcx ``filters`` option is typed to
+    its column from the reader's schema, as read_orc_dir types it, so
+    both return the same rows (untyped, the task's exact filter
+    compared int32 with string and raised)."""
+    from jobs.orc_read import read_orc_dir
+    flt = [["n_tok", ">=", "1490"]]
+    ox = (spark_ds.read.format("orcx").option("filters", json.dumps(flt))
+          .load(orc_dir))
+    eng = read_orc_dir(spark_ds, orc_dir, filters=[tuple(f) for f in flt])
+    assert sorted(r.n_tok for r in ox.collect()) == \
+        sorted(r.n_tok for r in eng.collect()) == list(range(1490, 1500))

@@ -1945,3 +1945,36 @@ def test_review_fixes_decimal_precision_zero_bloom_stats_domain(spark):
     by = {os.path.basename(r.path): r for r in st2}
     assert by["new.orc"].min_b == 0 and by["new.orc"].max_b == 9
     assert by["old.orc"].min_b is None and by["old.orc"].n_rows == 5
+
+
+def test_date_literal_prunes_stripes(spark, tmp_path):
+    """A ``datetime.date`` literal on a DATE column prunes like its
+    day count (DATE statistics and bloom hashes are day counts), and
+    read_orc_dir, which types the str literal "1972-06-19" to a date,
+    decodes only the matching stripe and returns exactly the matching
+    rows."""
+    import datetime
+
+    from engine.orc_read import stripes_matching
+    from jobs.orc_read import _claimed, read_orc_dir, resolve_scan
+    days = np.arange(1000, dtype=np.int32)
+    p = str(tmp_path / "part-0.orc")
+    write_orc(pa.table({"d": pa.array(days, type=pa.date32()),
+                        "i": pa.array(days)}), p,
+              stripe_rows=100, row_index_stride=50, bloom_columns=("d",))
+    info = read_orc_tail(p)
+    lit = datetime.date(1972, 6, 19)                 # day 900
+    assert stripes_matching(info, [("d", ">=", lit)]) == [9]
+    assert stripes_matching(info, [("d", "in", (lit,))]) == [9]
+    assert stripes_matching(info, [("d", ">=", 900)]) == [9]
+    files, _, flt = resolve_scan(str(tmp_path),
+                                 filters=[("d", ">=", "1972-06-19")])
+    assert flt == [("d", ">=", lit)]
+    assert [s for _, _, s in _claimed(
+        [(p, 0, os.path.getsize(p))], flt)] == [[9]]
+    got = read_orc_dir(spark, str(tmp_path),
+                       filters=[("d", ">=", "1972-06-19")])
+    assert sorted(r.i for r in got.collect()) == list(range(900, 1000))
+    eq = read_orc_dir(spark, str(tmp_path),
+                      filters=[("d", "=", "1972-06-19")])
+    assert [r.i for r in eq.collect()] == [900]

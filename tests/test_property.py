@@ -238,6 +238,136 @@ def test_concat_equals_whole_property(chunks, stripe_rows):
                 os.unlink(p)
 
 
+def _tier_table(n: int, seed: int, null_rate: float, null_group: int,
+                stride: int, specials: bool):
+    """Eight columns of ``n`` rows from ``seed``: nulls at
+    ``null_rate`` plus every row of row group ``null_group`` (none
+    past the end); ``specials`` injects NaN, +-inf and ints near
+    +-2^62. Other ints stay within +-2^54, so no partial sum of up to
+    300 of them reaches 2^63 and a sum's presence does not depend on
+    the order of the fold (each ORC tier omits a sum that overflows)."""
+    import decimal
+
+    import pyarrow as pa
+    rng = np.random.default_rng(seed)
+
+    def mask():
+        m = rng.random(n) < null_rate
+        m[null_group * stride:(null_group + 1) * stride] = True
+        return m
+    big = rng.integers(-2 ** 54, 2 ** 54, n)
+    f = rng.normal(size=n) * 1e3
+    if specials:
+        big[rng.integers(0, n, 2)] = [2 ** 62 - 1, -2 ** 62]
+        f[rng.integers(0, n, 3)] = [np.nan, np.inf, -np.inf]
+    return pa.table({
+        "i": pa.array(big, type=pa.int64(), mask=mask()),
+        "s16": pa.array(big % 30000, type=pa.int16(), mask=mask()),
+        "f": pa.array(f, type=pa.float64(), mask=mask()),
+        "dec": pa.array([decimal.Decimal(f"{int(v) * 10 ** 19 + 7}E-4")
+                         for v in big], type=pa.decimal128(38, 4),
+                        mask=mask()),
+        "s": pa.array([f"k{int(v) % 997:04d}" for v in big],
+                      type=pa.string(), mask=mask()),
+        "d": pa.array((big % 40000 - 10000).astype(np.int32),
+                      type=pa.date32(), mask=mask()),
+        "ts": pa.array(big // 1000, type=pa.timestamp("ns"), mask=mask()),
+        "b": pa.array(big % 2 == 0, type=pa.bool_(), mask=mask()),
+    })
+
+
+def _assert_units_agree(got, want):
+    """Two (n, has_null, stat) units agree: n, has_null, the stat kind,
+    min, max and the presence of a sum exactly; a double sum up to
+    rounding (a fold adds in a different order)."""
+    import math
+    assert got[:2] == want[:2]
+    assert (got[2] is None) == (want[2] is None)
+    if got[2] is not None:
+        assert got[2][:3] == want[2][:3]
+        assert len(got[2]) == len(want[2])
+        if len(got[2]) > 3 and got[2][3] != want[2][3]:
+            assert isinstance(got[2][3], float) and math.isclose(
+                got[2][3], want[2][3], rel_tol=1e-9, abs_tol=1e-6)
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.integers(1, 300), st.integers(0, 2 ** 32 - 1),
+       st.sampled_from([0.0, 0.2, 0.9]), st.integers(0, 12),
+       st.integers(1, 64), st.integers(1, 120), st.booleans(),
+       st.integers(1, 4))
+def test_statistics_tiers_agree_property(n, seed, null_rate, null_group,
+                                         stride, stripe_rows, specials,
+                                         n_parts):
+    """Every statistics tier of a written file is the fold of the tier
+    under it: each stripe's Metadata stat folds its ROW_INDEX entry
+    stats, the footer folds the stripe stats, and the footer holds the
+    column's own count, nullness, min and max. A concat_orc of files
+    written from consecutive stripe-aligned slices has the stripe
+    stats and the footer stats of one write_orc of all rows."""
+    import datetime
+    import os
+    import tempfile
+
+    from engine.orc_concat import _stat_unit, concat_orc
+    from engine.orc_file import _merge_stats, write_orc
+    from engine.orc_read import _StripeDecoder, _stripe_window, read_orc_tail
+
+    tbl = _tier_table(n, seed, null_rate, null_group, stride, specials)
+    kw = dict(stripe_rows=stripe_rows, row_index_stride=stride)
+    tmp = tempfile.mkdtemp()
+    try:
+        whole = os.path.join(tmp, "whole.orc")
+        write_orc(tbl, whole, **kw)
+        info = read_orc_tail(whole)
+        stripes = [[_stat_unit(c) for c in s] for s in info.stripe_stats()]
+        footer = [_stat_unit(c) for c in info.file_stats()]
+        with open(whole, "rb") as fh:
+            for si, units in zip(info.stripes, stripes):
+                # a resolvable filter makes the window read ROW_INDEX
+                win = _stripe_window(fh, info, si,
+                                     list(range(tbl.num_columns)),
+                                     [("i", "not_null", None)])
+                dec = _StripeDecoder(info, si, win, "cpp")
+                for c, unit in enumerate(units):
+                    _assert_units_agree(_merge_stats(
+                        _stat_unit(e["stats"]) for e in dec.row_index(c)),
+                        unit)
+        for c, unit in enumerate(footer):
+            _assert_units_agree(_merge_stats(s[c] for s in stripes), unit)
+        root = info.types[0]
+        for name, c in zip(root.field_names, root.subtypes):
+            col = tbl.column(name)
+            vals = col.drop_null().to_pylist()
+            n_c, has_null, stat = footer[c]
+            assert (n_c, has_null) == (len(vals), col.null_count > 0)
+            if name == "b" or not vals or name == "f" and any(
+                    v != v for v in vals):
+                assert stat is None, name   # no stat kind, or NaN
+                continue
+            if name == "d":
+                vals = [(v - datetime.date(1970, 1, 1)).days for v in vals]
+            elif name == "ts":
+                vals = col.drop_null().cast("int64").to_pylist()
+            assert stat and stat[1:3] == (min(vals), max(vals)), name
+        step = max(1, -(-len(info.stripes) // n_parts)) * stripe_rows
+        cuts = list(range(0, n, step)) + [n]
+        parts = []
+        for a, b in zip(cuts[:-1], cuts[1:]):
+            parts.append(os.path.join(tmp, f"part-{a}.orc"))
+            write_orc(tbl.slice(a, b - a), parts[-1], **kw)
+        merged = os.path.join(tmp, "merged.orc")
+        concat_orc(parts, merged)
+        m = read_orc_tail(merged)
+        assert m.stripe_stats() == info.stripe_stats()
+        for got, want in zip(m.file_stats(), footer, strict=True):
+            _assert_units_agree(_stat_unit(got), want)
+    finally:
+        for f in os.listdir(tmp):
+            os.unlink(os.path.join(tmp, f))
+        os.rmdir(tmp)
+
+
 @settings(max_examples=200, deadline=None)
 @given(st.lists(st.tuples(st.integers(4, 10 ** 7),
                           st.lists(st.integers(0, 10 ** 7), max_size=40)),

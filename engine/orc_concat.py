@@ -43,11 +43,12 @@ from __future__ import annotations
 
 import os
 
-from .orc_file import MAGIC, _merge_stats, file_tail, pb_bytes, pb_varint
+from .orc_file import (_CHUNK_CODECS, MAGIC, _merge_stats, file_tail,
+                       pb_bytes, pb_varint)
 from .orc_read import OrcFileInfo, read_orc_tail
 
-_CODEC_NAMES = {0: "none", 1: "zlib", 2: "snappy", 3: "lzo", 4: "lz4",
-                5: "zstd", 6: "brotli"}
+_CODEC_NAMES = {0: "none"} | {k: name for name, (k, _)
+                              in _CHUNK_CODECS.items()}
 
 
 def _type_signature(info: OrcFileInfo) -> tuple:

@@ -640,9 +640,12 @@ def _brotli_chunk(chunk: bytes) -> bytes:
     return bytes(pa.Codec("brotli").compress(chunk))
 
 
+# name -> (CompressionKind, chunk compressor); the engine reads LZO but
+# has no LZO compressor, so an LZO region (concat_orc's tail) is framed
+# as stored originals, which every reader inflates under any kind
 _CHUNK_CODECS = {"zlib": (1, _zlib_chunk), "snappy": (2, _snappy_chunk),
-                 "lz4": (4, _lz4_chunk), "zstd": (5, _zstd_chunk),
-                 "brotli": (6, _brotli_chunk)}
+                 "lzo": (3, None), "lz4": (4, _lz4_chunk),
+                 "zstd": (5, _zstd_chunk), "brotli": (6, _brotli_chunk)}
 
 
 def _frame(data: bytes, block: int,
@@ -662,7 +665,7 @@ def _frame(data: bytes, block: int,
     cum = np.zeros(nchunks + 1, dtype=np.int64)
     for i in range(nchunks):
         chunk = data[i * block: (i + 1) * block]
-        comp = comp_fn(chunk)
+        comp = comp_fn(chunk) if comp_fn else chunk
         body, orig = (comp, 0) if len(comp) < len(chunk) else (chunk, 1)
         out += ((len(body) << 1) | orig).to_bytes(3, "little")
         out += body

@@ -1,53 +1,37 @@
 """Distributed encode job (SURVEY.md §3.3): token table -> blocks table.
 
-Pipeline (all custom logic lives inside the Arrow kernel; the Spark
-layer is scan -> one shuffle -> mapInArrow -> collect, ONE write job):
+Each encode task runs the Arrow kernel (engine/blocks.py), streams its
+blocks into data/part-<part_id>.parquet (table_io.write_part) and yields
+ONE lineage row; the driver commits them to the manifest. ONE write job:
 
-    spark.read.parquet(input)
-      -> plan_partitions: token-weighted range buckets on n_tok,
-         heavy values subdivided by a doc_id salt       # skew defusal
-      -> broadcast-join bucket map + repartition(pid)   # ONE shuffle
-      -> mapInArrow(encode_kernel, PARTS_DDL)           # engine/blocks.py
-         each task streams its blocks into
-         data/part-<part_id>.parquet and yields ONE
-         lineage row                                    # table_io.write_part
-      -> collect() the lineage rows + manifest commit   # jobs/table_io.py
+    ntok_range (default)                  doc_range of a parquet scan
+    spark.read.parquet(input)             parquet footers (driver only)
+      -> plan_partitions: token-weighted    -> plan_input_ranges: token-
+         n_tok buckets + doc_id salt           weighted contiguous ranges
+      -> broadcast join + repartition(pid)  -> spark.range(n_ranges) # NO
+         # ONE shuffle                         shuffle; each task reads
+      -> mapInArrow(encode_kernel)          -> its range with pyarrow
 
-Skew story at 10^12 rows: Spark's own RangePartitioner balances ROW
-counts with a nondeterministic sample seed — wrong on both axes here
-(token mass is what must balance, and resume needs reproducible
-partition contents). Instead the driver computes *token-weighted*
-range boundaries from the n_tok histogram (n_tok has at most ~8192
-distinct values, so the groupBy is a tiny map-side-combined agg even
-at 10^12 rows), assigning each n_tok range a contiguous bucket span;
-an n_tok value heavier than one bucket is salted across its span by
-``pmod(xxhash64(doc_id), spans)`` — the north_rule's "salts and
-range-partitions on n_tok". Buckets over-partition ~4x the target so
-hash distribution + dynamic scheduling absorb residual imbalance.
-Every step is a pure function of the input snapshot — no sampling
-seeds — so a resumed run reproduces partition contents exactly.
+Token mass, not row count, must balance, and resume needs reproducible
+partitions, so neither uses Spark's sampled RangePartitioner.
+``ntok_range`` cuts token-weighted buckets from the n_tok histogram
+(<= ~8192 distinct values) and salts a value heavier than one bucket
+across its span by ``pmod(xxhash64(doc_id), spans)`` — the north_rule's
+"salts and range-partitions on n_tok". ``doc_range`` keeps neighboring
+documents together instead, which the outer codec converts into
+cross-document matches (~0.2 bits/token on F-MAIN).
 
-A second strategy, ``doc_range`` (plan_input_ranges), trades that
-content-purity for compression: contiguous token-weighted slabs of the
-input scan order keep neighboring documents together, which the outer
-codec converts into cross-document matches (~0.2 bits/token on
-F-MAIN). Same single-shuffle plan, same balance bound, deterministic
-for a fixed snapshot + scan config.
-
-Resumability: the kernel consults the manifest's committed part ids
-(broadcast) and writes nothing for finished partitions. A part's file
-name is a pure function of its part id and is published atomically, so
-a retried, speculative or re-run task overwrites its own file; the
-table is exactly the files the committed parts list, so a crashed
-run's uncommitted files are never read and no read needs to
-deduplicate. Block ids are pure functions of (part_id, block index) —
-no wall clock, no RNG anywhere in the path.
+Resumability: the kernel skips committed part ids; a part's file name
+(like its block ids) is a pure function of its part id and is published
+atomically, so a re-run task overwrites its own file, and a crashed
+run's uncommitted files are never read.
 """
 
 from __future__ import annotations
 
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from engine.blocks import BLOCKS_DDL, DEFAULT_BLOCK_ROWS, encode_batches
 from jobs import table_io
@@ -96,45 +80,88 @@ def plan_partitions(df: DataFrame, num_buckets: int) -> DataFrame:
                                        "spans int")
 
 
-def plan_input_ranges(df_ord: DataFrame, num_parts: int,
-                      sample_rows: int = 262_144) -> list[int]:
-    """Token-weighted CONTIGUOUS input-order range boundaries (the
-    locality-preserving strategy, ``strategy='doc_range'``).
+def plan_input_ranges(files: list[str], num_parts: int) -> list[list]:
+    """Token-weighted CONTIGUOUS input ranges (``strategy='doc_range'``)
+    from the parquet footers of ``files`` alone — no Spark job.
 
-    ``df_ord`` must carry an ``_ord`` column (monotonically increasing
-    scan position). Returns ``num_parts - 1`` sorted boundary values
-    such that each [boundary, next) slab carries ~equal token mass.
-    Long-sequence skew is defused by the weighting itself: a slab
-    containing heavy docs simply spans fewer docs. Contiguity
-    preserves the corpus' document adjacency inside every block, which
-    the outer codec converts into cross-document matches — measured
-    ~0.2 bits/token better than hash-scattered order on F-MAIN
-    (BENCH.md).
-
-    Deterministic for a fixed input snapshot AND scan configuration:
-    the quantile sample uses a fixed seed and ``_ord`` is a pure
-    function of the scan partitioning (unlike ntok_range, which is a
-    pure function of row CONTENT — use that when resume must survive
-    scan-config changes). The per-row bucket lookup is O(num_parts)
-    inside a codegen'd filter() — fine to a few thousand partitions;
-    beyond that, switch the lookup to a range join against the
-    boundaries table.
+    A row group weighs the ``num_values`` of its ``tokens`` leaf column
+    chunk. Returns ``num_parts`` ranges of ``(file, row_group,
+    row_start, row_stop)`` pieces that tile every row once in path then
+    row order, each within one row group's weight of ``total /
+    num_parts``. A cut inside a row group sits at the row linear
+    interpolation over the group gives, so no task reads a row to agree
+    on it. Ranges are a pure function of the file set and
+    ``num_parts``, not of the scan configuration.
     """
-    rows = df_ord.count()
-    frac = min(1.0, sample_rows / max(rows, 1))
-    sample = (df_ord.select("_ord", "n_tok")
-              .sample(fraction=frac, seed=42)
-              .collect())
-    sample.sort(key=lambda r: r["_ord"])
-    total = sum(r["n_tok"] for r in sample) or 1
-    per = total / num_parts
-    bounds, cum, k = [], 0.0, 1
-    for r in sample:
-        cum += r["n_tok"]
-        if cum >= k * per and k < num_parts:
-            bounds.append(int(r["_ord"]))
-            k += 1
-    return bounds
+    import pyarrow.parquet as pq
+    groups = []                            # (file, group, rows, weight)
+    for f in sorted(files):
+        md = pq.read_metadata(f)
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            groups.append((f, g, rg.num_rows, sum(
+                rg.column(c).num_values for c in range(rg.num_columns)
+                if rg.column(c).path_in_schema.split(".")[0] == "tokens")))
+    total = sum(w for *_, w in groups)
+    # bounds[k]: the global row where range k starts; cut k falls where
+    # the running weight reaches k * total / num_parts (integer math)
+    bounds, row, cum = [0], 0, 0
+    for _, _, n, w in groups:
+        while (len(bounds) < num_parts and w
+               and (cum + w) * num_parts >= len(bounds) * total):
+            bounds.append(row + (len(bounds) * total - cum * num_parts)
+                          * n // (w * num_parts))
+        row, cum = row + n, cum + w
+    bounds += [row] * (num_parts + 1 - len(bounds))
+    ranges, row, k = [[] for _ in range(num_parts)], 0, 0
+    for f, g, n, _ in groups:
+        for k in range(k, num_parts):
+            lo, hi = max(bounds[k], row), min(bounds[k + 1], row + n)
+            if lo < hi:
+                ranges[k].append((f, g, lo - row, hi - row))
+            if bounds[k + 1] > row + n:
+                break
+        row += n
+    return ranges
+
+
+def _parquet_files(df: DataFrame) -> list[str] | None:
+    """The sorted driver-local files of ``df`` when it is a plain,
+    unpartitioned parquet scan (its optimized plan is a LogicalRelation
+    over a HadoopFsRelation), else None."""
+    from urllib.parse import unquote, urlparse
+
+    def kind(o):
+        return o.getClass().getSimpleName()
+    jdf = getattr(df, "_jdf", None)
+    plan = None if jdf is None else jdf.queryExecution().optimizedPlan()
+    if plan is None or kind(plan) != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if (kind(rel), kind(rel.fileFormat()), rel.partitionSchema().length()) \
+            != ("HadoopFsRelation", "ParquetFileFormat", 0):
+        return None
+    urls = [urlparse(u) for u in df.inputFiles()]
+    if any(u.scheme != "file" for u in urls):
+        return None
+    return sorted(unquote(u.path) for u in urls)
+
+
+def _read_pieces(pieces, columns: list[str], schema):
+    """A range's rows (plan_input_ranges) in batches cast to ``schema``.
+    The encoder buffers rows until a block fills, so small batches bound
+    the reader's memory without moving any block boundary."""
+    import pyarrow.parquet as pq
+    for f, g, start, stop in pieces:
+        with pq.ParquetFile(f) as pf:
+            at = 0
+            for b in pf.iter_batches(1024, row_groups=[g], columns=columns):
+                lo, hi = max(start - at, 0), min(stop - at, b.num_rows)
+                at += b.num_rows
+                if lo < hi:
+                    yield b.slice(lo, hi - lo).cast(schema)
+                if at >= stop:
+                    break
 
 
 def portable_salt(col: str = "doc_id"):
@@ -172,9 +199,8 @@ def _kernel(out_path: str, block_rows: int, attempt: int,
             return
         if epoch is not None:
             part = (epoch << 16) | part
-        drop = ("salt", "pid", "_ord")
-        clean = (b.drop_columns([c for c in drop if c in b.schema.names])
-                 for b in batches)
+        clean = (b.drop_columns(["pid"]) if "pid" in b.schema.names
+                 else b for b in batches)
         sums = {"n_rows": 0, "n_values": 0, "n_blocks": 0,
                 "out_bytes": 0, "in_bytes": 0, "wall_ms": 0.0}
 
@@ -209,18 +235,20 @@ def encode_table(spark: SparkSession, df: DataFrame, out_path: str,
     """Run the encode pipeline; returns a metrics dict.
 
     ``df`` must have the input_hint schema (doc_id, tokens, n_tok,
-    source). Each encode task writes its partition's part-file under
-    ``out_path`` and the driver commits the tasks' lineage rows to the
-    manifest: one Spark job after planning, no sink and no re-read.
+    source). Each encode task writes its part-file under ``out_path``
+    and the driver commits the tasks' lineage rows to the manifest.
 
     Partition strategies (both token-weighted, both deterministic):
     - ``ntok_range`` (default): range buckets on n_tok with doc_id
       salting for heavy values — groups similar-length sequences, the
-      north-rule skew defusal.
-    - ``doc_range``: contiguous input-order slabs with token-weighted
-      boundaries — same balance guarantee, but preserves the corpus'
-      document adjacency inside blocks, which compresses ~0.2
-      bits/token better on ordered corpora (see plan_input_ranges).
+      north-rule skew defusal; one shuffle.
+    - ``doc_range``: contiguous input ranges — same balance bound, but
+      keeps the corpus' document adjacency inside blocks (~0.2
+      bits/token better on ordered corpora). A plain parquet scan is
+      planned from its footers into ``num_partitions`` ranges
+      (plan_input_ranges) that the tasks read themselves; any other
+      frame is encoded one part per partition of its own, in order,
+      and ``num_partitions`` does not apply. Neither runs a shuffle.
 
     ``salt_expr`` (ntok_range only) overrides the heavy-value salt
     column (default ``pmod(xxhash64(doc_id), SALT_BUCKETS)``); pass
@@ -235,49 +263,22 @@ def encode_table(spark: SparkSession, df: DataFrame, out_path: str,
     if attempt is None:
         attempt = len(table_io.commits(out_path))
 
-    if strategy == "doc_range":
-        # 8 slabs per physical partition: slab->partition hashing is
-        # balls-in-bins, so over-partitioning bounds the token-mass
-        # variance (same trick as BUCKETS_PER_PART below); contiguity
-        # within each slab (input scan order, NOT lexicographic
-        # doc_id — ids may group by source prefix) is what the codec
-        # needs
-        n_slabs = num_partitions * 8
-        ordered = df.withColumn("_ord", F.monotonically_increasing_id())
-        bounds = plan_input_ranges(ordered, n_slabs)
-        if len(bounds) < n_slabs - 1:
-            # tiny/skewed sample: fewer boundaries than requested is
-            # fine (slabs merge) but must not pass silently, and an
-            # EMPTY boundary list would collapse every row into slab 0
-            import warnings
-            warnings.warn(
-                f"plan_input_ranges returned {len(bounds)} boundaries "
-                f"for {n_slabs} slabs"
-                + ("; falling back to round-robin slabs"
-                   if not bounds else ""))
-        if bounds:
-            # slab id by JVM-side binary search over the boundary
-            # splits (O(log n) per row) — a literal-array filter is
-            # O(n) per row and stops scaling past a few thousand
-            # slabs (r2 verdict #5). _ord fits a double exactly below
-            # 2^53 (monotonic ids reach that at ~2^20 scan
-            # partitions x 8B rows — far beyond this job's planning
-            # horizon).
-            from pyspark.ml.feature import Bucketizer
-            splits = [float("-inf")] + [float(b) for b in bounds] \
-                + [float("inf")]
-            buck = Bucketizer(splits=splits, inputCol="_ord_d",
-                              outputCol="_slab_d")
-            salted = (buck.transform(
-                ordered.withColumn("_ord_d",
-                                   F.col("_ord").cast("double")))
-                .withColumn("pid", F.col("_slab_d").cast("int"))
-                .drop("_ord_d", "_slab_d"))
-        else:
-            salted = ordered.withColumn(
-                "pid", F.pmod(F.col("_ord"), F.lit(n_slabs)).cast("int"))
-        parted = (salted.repartition(num_partitions, "pid")
-                  .sortWithinPartitions("pid", "_ord"))
+    task = kernel = _kernel(out_path, block_rows, attempt, codec, skip)
+    files = _parquet_files(df) if strategy == "doc_range" else None
+    if files is not None:
+        # partition id = range index = part id; each task reads its own
+        # rows: no Spark scan, shuffle, sort or JVM -> Python handoff
+        ranges = plan_input_ranges(files, num_partitions)
+        cols, schema = df.columns, to_arrow_schema(df.schema)
+
+        def task(ids):
+            for _ in ids:       # a worker that leaves input unread exits
+                pass
+            pieces = ranges[TaskContext.get().partitionId()]
+            return kernel(_read_pieces(pieces, cols, schema))
+        parted = spark.range(len(ranges), numPartitions=len(ranges))
+    elif strategy == "doc_range":
+        parted = df
     else:
         num_buckets = num_partitions * BUCKETS_PER_PART
         bucket_map = plan_partitions(df, num_buckets)
@@ -302,9 +303,8 @@ def encode_table(spark: SparkSession, df: DataFrame, out_path: str,
         # bits/token on F-MAIN
         parted = (salted.repartition(num_partitions, "pid")
                   .sortWithinPartitions("pid", "n_tok", "doc_id"))
-    kernel = _kernel(out_path, block_rows, attempt, codec, skip)
     new_parts = sorted((r.asDict() for r in
-                        parted.mapInArrow(kernel, PARTS_DDL).collect()),
+                        parted.mapInArrow(task, PARTS_DDL).collect()),
                        key=lambda p: p["part_id"])
     if new_parts:
         table_io.commit(out_path, new_parts,

@@ -1,4 +1,4 @@
-"""Shared Spark session fixture for pipeline tests."""
+"""Shared Spark session and token-table fixtures for pipeline tests."""
 
 import pytest
 
@@ -18,3 +18,11 @@ def spark():
          .getOrCreate())
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="module")
+def token_parquet(spark, tmp_path_factory):
+    from jobs.synth import write_token_table
+    path = str(tmp_path_factory.mktemp("input") / "tokens.parquet")
+    write_token_table(spark, path, rows=4000, partitions=4, seed=42)
+    return path

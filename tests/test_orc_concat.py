@@ -71,6 +71,30 @@ def test_concat_three_readers(tmp_path, compression):
         want.column("i").to_pylist()
 
 
+def test_concat_lzo_java_writer(spark, tmp_path):
+    """orc-core LZO inputs: the stripes copy raw and the tail is framed
+    as stored originals (no LZO compressor here), which the engine's
+    LZO reader inflates; write_orc still refuses to write LZO."""
+    from pyspark.sql import functions as F
+    paths = []
+    for i in range(2):
+        d = str(tmp_path / f"lzo{i}")
+        (spark.range(i * 3000, (i + 1) * 3000).toDF("x")
+         .withColumn("s", F.concat(F.lit("key"), F.col("x") % 97))
+         .coalesce(1).write.option("compression", "lzo").orc(d))
+        paths += [os.path.join(d, p) for p in os.listdir(d)
+                  if p.startswith("part-") and p.endswith(".orc")]
+    assert [read_orc_tail(p).compression for p in paths] == [3, 3]
+    out = str(tmp_path / "merged.orc")
+    m = concat_orc(paths, out)
+    assert m["n_rows"] == 6000 and read_orc_tail(out).compression == 3
+    want = pa.concat_tables([read_orc(p) for p in paths])
+    assert read_orc(out).to_pylist() == want.to_pylist()
+    assert read_orc(out).column("x").to_pylist() == list(range(6000))
+    with pytest.raises(ValueError, match="compression"):
+        write_orc(_mk(0, 10), str(tmp_path / "w.orc"), compression="lzo")
+
+
 def test_merged_file_stats(tmp_path):
     paths, want = _write_parts(str(tmp_path))
     out = str(tmp_path / "m.orc")

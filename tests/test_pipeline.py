@@ -7,19 +7,10 @@ import os
 import shutil
 
 import numpy as np
-import pytest
 
 from jobs import table_io
 from jobs.decode import decode_table, verify_identity
 from jobs.encode import encode_table, read_blocks
-from jobs.synth import write_token_table
-
-
-@pytest.fixture(scope="module")
-def token_parquet(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("input") / "tokens.parquet")
-    write_token_table(spark, path, rows=4000, partitions=4, seed=42)
-    return path
 
 
 def test_e2e_bit_identity(spark, token_parquet, tmp_path):
@@ -131,16 +122,12 @@ def _job_ids(spark, group, fn):
 def test_reads_and_encode_run_no_extra_jobs(spark, token_parquet,
                                             tmp_path, monkeypatch):
     # a lookup on a committed table is ONE Spark job (no duplicate
-    # probe), and encode_table runs exactly its planning jobs plus the
-    # write job: nothing after the write (no sink re-read for lineage)
-    from pyspark.sql import functions as F
-
+    # probe), and a doc_range encode of a parquet scan is ONE job: its
+    # ranges come from the footers, and nothing runs after the write
+    # (no sink re-read for lineage)
     from jobs.decode import lookup_doc_ids
-    from jobs.encode import plan_input_ranges
     out = str(tmp_path / "blocks")
     df = spark.read.parquet(token_parquet)
-    _, plan_jobs = _job_ids(spark, "plan", lambda: plan_input_ranges(
-        df.withColumn("_ord", F.monotonically_increasing_id()), 32))
     at_commit = []
     real_commit = table_io.commit
 
@@ -153,7 +140,7 @@ def test_reads_and_encode_run_no_extra_jobs(spark, token_parquet,
     _, enc_jobs = _job_ids(spark, "encode", lambda: encode_table(
         spark, df, out, num_partitions=4, block_rows=500,
         strategy="doc_range"))
-    assert len(enc_jobs) == len(plan_jobs) + 1, (enc_jobs, plan_jobs)
+    assert len(enc_jobs) == 1, enc_jobs
     assert sorted(at_commit) == enc_jobs
     doc = df.first()["doc_id"]
     rows, jobs = _job_ids(spark, "lookup", lambda: lookup_doc_ids(
@@ -235,40 +222,55 @@ def test_doc_range_strategy_bit_identity_and_balance(spark, token_parquet,
 
 
 def test_doc_range_degenerate_bounds_fallback(spark, tmp_path):
-    # ADVICE r2 #4: a tiny input can yield no boundaries at all; the
-    # encode must warn and fall back to round-robin slabs instead of
-    # silently collapsing everything into slab 0
-    import warnings
-
+    # a tiny in-memory frame (no parquet footers to plan from) encodes
+    # one part per partition of its own, losing no row
     rows = [(f"d{i}", [1, 2, 3], 3, "s") for i in range(3)]
     df = spark.createDataFrame(
         rows, "doc_id string, tokens array<int>, n_tok int, source string")
     out = str(tmp_path / "blocks_tiny")
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        m = encode_table(spark, df, out, num_partitions=2, block_rows=10,
-                         strategy="doc_range")
+    m = encode_table(spark, df, out, num_partitions=2, block_rows=10,
+                     strategy="doc_range")
     assert m["n_rows"] == 3
-    assert any("boundaries" in str(x.message) for x in w)
     dec = decode_table(spark, out)
     assert verify_identity(df, dec)["identical"]
 
 
 def test_doc_range_empty_input(spark, tmp_path):
-    # empty-bounds fallback (round-robin) + a zero-row encode must
-    # complete with zeroed metrics, not crash
-    import warnings
-
+    # a zero-row encode must complete with zeroed metrics, not crash
     df = spark.createDataFrame(
         [], "doc_id string, tokens array<int>, n_tok int, source string")
     out = str(tmp_path / "blocks_empty")
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        m = encode_table(spark, df, out, num_partitions=2,
-                         strategy="doc_range")
+    m = encode_table(spark, df, out, num_partitions=2,
+                     strategy="doc_range")
     assert m["n_rows"] == 0 and m["n_parts"] == 0
-    assert any("round-robin" in str(x.message) for x in w)
     assert decode_table(spark, out).count() == 0
+
+
+def test_doc_range_resume_rewrites_only_missing_part(spark, token_parquet,
+                                                     tmp_path):
+    # footer-planned ranges are a pure function of the input files, so
+    # a resumed run re-encodes exactly the part the manifest lacks
+    import json
+
+    out = str(tmp_path / "blocks_resume")
+    df = spark.read.parquet(token_parquet)
+    encode_table(spark, df, out, num_partitions=4, block_rows=500,
+                 strategy="doc_range")
+    [commit] = glob.glob(os.path.join(out, "_manifest", "commit-*.json"))
+    with open(commit) as f:
+        entry = json.load(f)
+    lost = entry["parts"].pop(2)["part_id"]
+    with open(commit, "w") as f:
+        json.dump(entry, f)
+    files = {p: os.path.join(out, table_io.part_file(p)) for p in range(4)}
+    for f in files.values():
+        os.utime(f, ns=(10 ** 9, 10 ** 9))
+    m = encode_table(spark, df, out, num_partitions=4, block_rows=500,
+                     strategy="doc_range", resume=True)
+    assert m["n_parts_skipped"] == 3 and m["n_rows"] == 4000, m
+    assert {p for p, f in files.items()
+            if os.stat(f).st_mtime_ns != 10 ** 9} == {lost}
+    assert verify_identity(df, decode_table(spark, out))["identical"]
 
 
 def test_ntok_range_block_determinism(spark, token_parquet, tmp_path):

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from jobs.decode import decode_table
-from jobs.encode import encode_table, plan_partitions
+from jobs.encode import encode_table, plan_partitions, read_blocks
 from jobs.synth import write_token_table
 
 
@@ -83,53 +83,51 @@ def test_encode_single_shuffle(spark, setup, tmp_path):
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
-def test_doc_range_slab_lookup_is_binary_search(spark, tmp_path):
-    # r2 verdict #9: the slab lookup must not be an O(num_slabs)
-    # per-row literal-array filter. With Bucketizer the plan carries a
-    # single bucketizer UDF (JVM binary search over the splits), and
-    # no size(filter(array<literals>)) expression — pinned here at a
-    # slab count where the array form would already hurt.
-    import numpy as np
-    import pyarrow as pa
-
-    from jobs.encode import encode_table
-    rng = np.random.default_rng(5)
-    n = 6000
-    toks = [rng.integers(0, 50000, rng.integers(3, 30)).astype(np.int32)
-            for _ in range(n)]
-    t = pa.table({
-        "doc_id": pa.array([f"d{i:06d}" for i in range(n)]),
-        "tokens": pa.array([list(map(int, x)) for x in toks],
-                           type=pa.list_(pa.int32())),
-        "n_tok": pa.array([len(x) for x in toks], type=pa.int32()),
-        "source": pa.array(["s"] * n)})
-    inp = str(tmp_path / "tok")
-    spark.createDataFrame(t).write.parquet(inp)
+def test_doc_range_encode_is_one_job_without_exchange(spark, setup, tmp_path,
+                                                     monkeypatch):
+    # a doc_range encode of a parquet scan plans its ranges from the
+    # footers and reads them inside the tasks: one job, one stage, and
+    # no Exchange in the write job's plan
+    inp, _ = setup
     df = spark.read.parquet(inp)
-    plans = []
-    orig = df.sparkSession.sparkContext  # noqa: F841  (session reuse)
-    # capture the executed plan of the partitioning subjob by hooking
-    # mapInArrow's parent: simplest robust probe — run encode and
-    # inspect the final blocks scan plan is overkill; instead build
-    # the salted frame exactly as encode_table does and explain it
-    from pyspark.ml.feature import Bucketizer
+    plans, real = [], type(df).collect
 
-    from jobs.encode import plan_input_ranges
-    from pyspark.sql import functions as F
-    ordered = df.withColumn("_ord", F.monotonically_increasing_id())
-    bounds = plan_input_ranges(ordered, 64 * 8)  # 512 slabs
-    assert len(bounds) > 100  # enough slabs that O(n)/row would bite
-    splits = [float("-inf")] + [float(b) for b in bounds] \
-        + [float("inf")]
-    buck = Bucketizer(splits=splits, inputCol="_ord_d",
-                      outputCol="_slab_d")
-    out = buck.transform(
-        ordered.withColumn("_ord_d", F.col("_ord").cast("double")))
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "bucketizer_" in plan          # JVM binary-search UDF
-    assert "filter(" not in plan          # no per-row array scan
-    # and the real encode over the same data stays correct
-    outp = str(tmp_path / "blocks512")
-    m = encode_table(spark, df, outp, num_partitions=4,
-                     strategy="doc_range", resume=False)
-    assert m["n_rows"] == n
+    def collect(self):
+        plans.append(plan_of(self))
+        return real(self)
+
+    monkeypatch.setattr(type(df), "collect", collect)
+    sc = spark.sparkContext
+    sc.setJobGroup("doc_range_plan", "doc_range_plan")
+    try:
+        encode_table(spark, df, str(tmp_path / "blocks"), num_partitions=4,
+                     block_rows=500, strategy="doc_range")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("doc_range_plan")
+    assert len(jobs) == 1 and len(plans) == 1, (jobs, plans)
+    assert "Exchange" not in plans[0], plans[0]
+    assert len(sc.statusTracker().getJobInfo(jobs[0]).stageIds) == 1
+
+
+def test_doc_range_ranges_ignore_scan_config(spark, token_parquet,
+                                             tmp_path):
+    # the ranges are a pure function of the input files: scan splits of
+    # 128 MB and 64 KB give the same blocks, payload bytes included
+    rows = []
+    for i, split in enumerate(("134217728", "65536")):
+        spark.conf.set("spark.sql.files.maxPartitionBytes", split)
+        try:
+            out = str(tmp_path / f"blocks{i}")
+            encode_table(spark, spark.read.parquet(token_parquet), out,
+                         num_partitions=4, block_rows=500,
+                         strategy="doc_range")
+        finally:
+            spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        rows.append(sorted(
+            (r["block_id"], r["h"]) for r in read_blocks(spark, out)
+            .select("block_id",
+                    F.xxhash64("tokens.data", "doc_id.data",
+                               "n_rows", "n_values").alias("h"))
+            .collect()))
+    assert rows[0] == rows[1]

@@ -2,6 +2,8 @@
 the identity under decode(encode(x)) for arbitrary inputs — the
 reference's round-trip fixture strategy generalized (SURVEY.md §5.1)."""
 
+import os
+
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
@@ -394,3 +396,56 @@ def test_byte_ranges_claim_each_stripe_once_property(files, parallelism):
         info = SimpleNamespace(stripes=[{1: o} for o in offsets])
         claimed = [i for a, b in mine for i in claim_stripes(info, a, b)]
         assert sorted(claimed) == list(range(len(offsets)))
+
+
+# a parquet row-group layout: a file's groups, each a list of its rows'
+# n_tok (a row holds at least one token, as a token sequence does)
+_groups = st.lists(st.one_of(
+    st.just([]),                                        # 0-row group
+    st.lists(st.integers(1, 9), min_size=1, max_size=1),  # one row
+    st.lists(st.integers(1, 9), min_size=2, max_size=12)),
+    min_size=0, max_size=4)
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.lists(_groups, min_size=1, max_size=3), st.integers(1, 40))
+def test_plan_input_ranges_property(layout, num_parts):
+    # footer-planned doc_range ranges tile every row once, in path then
+    # row order, and balance token weight to within one row group's
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from jobs.encode import plan_input_ranges
+    with tempfile.TemporaryDirectory() as d:
+        files, ntok = [], {}
+        for i, groups in enumerate(layout):
+            f = os.path.join(d, f"part-{i}.parquet")
+            schema = pa.schema([("tokens", pa.list_(pa.int32())),
+                                ("n_tok", pa.int32())])
+            with pq.ParquetWriter(f, schema) as w:
+                for g, lens in enumerate(groups):
+                    w.write_table(pa.table({
+                        "tokens": [[1] * n for n in lens],
+                        "n_tok": pa.array(lens, pa.int32())},
+                        schema=schema))
+                    ntok[f, g] = lens
+            files.append(f)
+        ranges = plan_input_ranges(files[::-1], num_parts)
+        assert ranges == plan_input_ranges(files, num_parts)
+    assert len(ranges) == num_parts
+    rows = [(f, g, r) for f, g, s, e in (p for rg in ranges for p in rg)
+            for r in range(s, e)]
+    assert rows == [(f, g, r) for (f, g), lens in sorted(ntok.items())
+                    for r in range(len(lens))]
+    # the planner sees group weights only: a piece weighs its share of
+    # its group's tokens. Interpolated cuts miss by less than one row's
+    # share, which is at most one row group's weight
+    w = {k: sum(v) for k, v in ntok.items()}
+    total = sum(w.values())
+    row_w = max((w[k] / len(v) for k, v in ntok.items() if v), default=0)
+    assert row_w <= max(w.values(), default=0)
+    for rg in ranges:
+        got = sum(w[f, g] * (e - s) / len(ntok[f, g]) for f, g, s, e in rg)
+        assert abs(got - total / num_parts) <= row_w + 1e-9, (rg, w)

@@ -1,6 +1,11 @@
-"""Shared numpy helpers for batch scatter/gather of variable-length spans."""
+"""Shared helpers: numpy scatter/gather of variable-length spans, and
+the one atomic file publish."""
 
 from __future__ import annotations
+
+import os
+import uuid
+from contextlib import contextmanager
 
 import numpy as np
 
@@ -68,9 +73,19 @@ def gather_spans(src: np.ndarray, starts: np.ndarray, lens: np.ndarray
     return src[span_positions(starts, lens)]
 
 
-def scatter_spans(dst: np.ndarray, starts: np.ndarray, lens: np.ndarray,
-                  values: np.ndarray) -> None:
-    """Write concatenated ``values`` into dst at the given spans."""
-    if len(lens) == 0:
-        return
-    dst[span_positions(starts, lens)] = values
+@contextmanager
+def publish(path: str):
+    """Yield a temp path to write ``path``'s content to; a clean exit
+    publishes it at ``path`` with ``os.replace``, any failure unlinks
+    it and leaves ``path`` as it was. The name is hidden
+    (``.<name>.<uuid>.tmp``: no listing or Hadoop reader sees it) and
+    attempt-unique: concurrent attempts of one task never interleave
+    into one file, and the last replace wins whole."""
+    head, name = os.path.split(path)
+    tmp = os.path.join(head, f".{name}.{uuid.uuid4().hex}.tmp")
+    try:
+        yield tmp
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.unlink(tmp)

@@ -43,6 +43,7 @@ from __future__ import annotations
 
 import os
 
+from ._util import publish
 from .orc_file import (_CHUNK_CODECS, MAGIC, _merge_stats, file_tail,
                        pb_bytes, pb_varint)
 from .orc_read import OrcFileInfo, read_orc_tail
@@ -98,8 +99,10 @@ def concat_orc(in_paths: list[str], out_path: str) -> dict:
     ``out_path`` by raw stripe copy + tail rewrite. All inputs must
     share the type tree, compression kind/block size, row-index
     stride and writer id (fail-loud otherwise — a mixed directory
-    needs a decode-and-rewrite, not a concat). Returns a manifest
-    dict {n_files, n_stripes, n_rows, n_bytes}."""
+    needs a decode-and-rewrite, not a concat). Publishes through
+    engine._util.publish: a failed merge leaves ``out_path`` as it
+    was. Returns a manifest dict {n_files, n_stripes, n_rows,
+    n_bytes}."""
     if not in_paths:
         raise ValueError("concat_orc needs at least one input")
     infos = [read_orc_tail(p) for p in in_paths]
@@ -124,61 +127,41 @@ def concat_orc(in_paths: list[str], out_path: str) -> dict:
                 f"{p}: writer id {info.writer} != {ref.writer} "
                 "(timestamp-convention resolution is per file)")
 
-    # attempt-unique temp name: two concurrent attempts of one task
-    # (speculative execution, a zombie executor racing a retry) must
-    # write disjoint files — a SHARED tmp path would interleave their
-    # writes and os.replace could publish a torn output. With unique
-    # names the last os.replace wins atomically (both attempts wrote
-    # identical content).
-    import uuid as _uuid
-    tmp = f"{out_path}.{_uuid.uuid4().hex}.tmp"
     stripes_pb = b""
     metadata = b""
     total_rows = 0
     n_stripes = 0
-    try:
-        with open(tmp, "wb") as out:
-            out.write(MAGIC)
-            pos = len(MAGIC)
-            for path, info in zip(in_paths, infos):
-                with open(path, "rb") as f:
-                    for si in info.stripes:
-                        off, ilen, dlen, flen, rows = (
-                            si[1], si[2], si[3], si[4], si[5])
-                        f.seek(off)
-                        _copy_exact(f, out, ilen + dlen + flen, path)
-                        stripes_pb += pb_bytes(3, pb_varint(1, pos)
-                                               + pb_varint(2, ilen)
-                                               + pb_varint(3, dlen)
-                                               + pb_varint(4, flen)
-                                               + pb_varint(5, rows))
-                        pos += ilen + dlen + flen
-                        total_rows += rows
-                        n_stripes += 1
-                # per-stripe StripeStatistics copied raw, stripe order
-                metadata += b"".join(pb_bytes(1, bytes(v))
-                                     for v in info._stripe_stats_raw())
-            # type tree raw from the first input (semantic equality
-            # checked); writer id and writerVersion from it too (reader
-            # quirk switches key off them; the copied stripes ARE that
-            # writer's)
-            out.write(file_tail(
-                pos, stripes_pb, metadata,
-                b"".join(pb_bytes(4, bytes(v)) for v in ref._types_raw),
-                total_rows, _merge_file_stats(infos),
-                ref.row_index_stride, _CODEC_NAMES[ref.compression],
-                ref.block_size, ref.writer, ref.writer_version))
-    except BaseException:
-        # unique-named tmps are never reused by a retry (unlike the
-        # old shared name): delete on ANY failure, or each failing
-        # attempt of a flaky compaction leaks a fresh orphan in the
-        # output directory
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
-        raise
-    os.replace(tmp, out_path)
+    with publish(out_path) as tmp, open(tmp, "wb") as out:
+        out.write(MAGIC)
+        pos = len(MAGIC)
+        for path, info in zip(in_paths, infos):
+            with open(path, "rb") as f:
+                for si in info.stripes:
+                    off, ilen, dlen, flen, rows = (
+                        si[1], si[2], si[3], si[4], si[5])
+                    f.seek(off)
+                    _copy_exact(f, out, ilen + dlen + flen, path)
+                    stripes_pb += pb_bytes(3, pb_varint(1, pos)
+                                           + pb_varint(2, ilen)
+                                           + pb_varint(3, dlen)
+                                           + pb_varint(4, flen)
+                                           + pb_varint(5, rows))
+                    pos += ilen + dlen + flen
+                    total_rows += rows
+                    n_stripes += 1
+            # per-stripe StripeStatistics copied raw, stripe order
+            metadata += b"".join(pb_bytes(1, bytes(v))
+                                 for v in info._stripe_stats_raw())
+        # type tree raw from the first input (semantic equality
+        # checked); writer id and writerVersion from it too (reader
+        # quirk switches key off them; the copied stripes ARE that
+        # writer's)
+        out.write(file_tail(
+            pos, stripes_pb, metadata,
+            b"".join(pb_bytes(4, bytes(v)) for v in ref._types_raw),
+            total_rows, _merge_file_stats(infos),
+            ref.row_index_stride, _CODEC_NAMES[ref.compression],
+            ref.block_size, ref.writer, ref.writer_version))
     return {"n_files": len(in_paths), "n_stripes": n_stripes,
             "n_rows": total_rows, "n_bytes": os.path.getsize(out_path)}
 

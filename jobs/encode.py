@@ -2,7 +2,9 @@
 
 Each encode task runs the Arrow kernel (engine/blocks.py), streams its
 blocks into data/part-<part_id>.parquet (table_io.write_part) and yields
-ONE lineage row; the driver commits them to the manifest. ONE write job:
+ONE lineage row; the driver commits them to the manifest. ONE write job,
+its rows reaching the kernel through :func:`map_input` (as
+write_orc_dir's do):
 
     ntok_range (default)                  doc_range of a parquet scan
     spark.read.parquet(input)             parquet footers (driver only)
@@ -10,7 +12,7 @@ ONE lineage row; the driver commits them to the manifest. ONE write job:
          n_tok buckets + doc_id salt           weighted contiguous ranges
       -> broadcast join + repartition(pid)  -> spark.range(n_ranges) # NO
          # ONE shuffle                         shuffle; each task reads
-      -> mapInArrow(encode_kernel)          -> its range with pyarrow
+      -> map_input(encode_kernel)           -> its range with pyarrow
 
 Token mass, not row count, must balance, and resume needs reproducible
 partitions, so neither uses Spark's sampled RangePartitioner.
@@ -21,10 +23,10 @@ across its span by ``pmod(xxhash64(doc_id), spans)`` — the north_rule's
 documents together instead, which the outer codec converts into
 cross-document matches (~0.2 bits/token on F-MAIN).
 
-Resumability: the kernel skips committed part ids; a part's file name
-(like its block ids) is a pure function of its part id and is published
-atomically, so a re-run task overwrites its own file, and a crashed
-run's uncommitted files are never read.
+Resumability: committed parts never reach the kernel; a part's file
+name (like its block ids) is a pure function of its part id and is
+published atomically, so a re-run task overwrites its own file, and a
+crashed run's uncommitted files are never read.
 """
 
 from __future__ import annotations
@@ -85,7 +87,8 @@ def plan_input_ranges(files: list[str], num_parts: int) -> list[list]:
     from the parquet footers of ``files`` alone — no Spark job.
 
     A row group weighs the ``num_values`` of its ``tokens`` leaf column
-    chunk. Returns ``num_parts`` ranges of ``(file, row_group,
+    chunk, or its row count in files without a ``tokens`` column.
+    Returns ``num_parts`` ranges of ``(file, row_group,
     row_start, row_stop)`` pieces that tile every row once in path then
     row order, each within one row group's weight of ``total /
     num_parts``. A cut inside a row group sits at the row linear
@@ -99,9 +102,10 @@ def plan_input_ranges(files: list[str], num_parts: int) -> list[list]:
         md = pq.read_metadata(f)
         for g in range(md.num_row_groups):
             rg = md.row_group(g)
-            groups.append((f, g, rg.num_rows, sum(
-                rg.column(c).num_values for c in range(rg.num_columns)
-                if rg.column(c).path_in_schema.split(".")[0] == "tokens")))
+            tok = [rg.column(c).num_values for c in range(rg.num_columns)
+                   if rg.column(c).path_in_schema.split(".")[0] == "tokens"]
+            groups.append((f, g, rg.num_rows,
+                           sum(tok) if tok else rg.num_rows))
     total = sum(w for *_, w in groups)
     # bounds[k]: the global row where range k starts; cut k falls where
     # the running weight reaches k * total / num_parts (integer math)
@@ -150,18 +154,51 @@ def _parquet_files(df: DataFrame) -> list[str] | None:
 def _read_pieces(pieces, columns: list[str], schema):
     """A range's rows (plan_input_ranges) in batches cast to ``schema``.
     The encoder buffers rows until a block fills, so small batches bound
-    the reader's memory without moving any block boundary."""
+    the reader's memory without moving any block boundary. One thread:
+    tasks fill the cores, and each pyarrow pool thread grows a malloc
+    arena (+50 MB worker RSS on orc_roundtrip)."""
     import pyarrow.parquet as pq
     for f, g, start, stop in pieces:
         with pq.ParquetFile(f) as pf:
             at = 0
-            for b in pf.iter_batches(1024, row_groups=[g], columns=columns):
+            for b in pf.iter_batches(1024, row_groups=[g], columns=columns,
+                                     use_threads=False):
                 lo, hi = max(start - at, 0), min(stop - at, b.num_rows)
                 at += b.num_rows
                 if lo < hi:
                     yield b.slice(lo, hi - lo).cast(schema)
                 if at >= stop:
                     break
+
+
+def map_input(df: DataFrame, kernel, ddl: str, num_parts: int | None = None,
+              skip=frozenset()) -> DataFrame:
+    """``df``'s rows through the mapInArrow ``kernel`` (output ``ddl``):
+    the one rule for how a write job's rows reach its kernel.
+
+    A plain parquet scan is cut into ``num_parts`` ranges from its
+    footers (None: as many as Spark's scan has partitions), and task k
+    reads range k itself with pyarrow: no Spark scan, shuffle or JVM ->
+    Python handoff. Any other frame runs over its own partitions. The
+    partitions in ``skip`` are dropped in the JVM: their kernels see
+    an empty input, so their Python workers are reused."""
+    files = _parquet_files(df)
+    if files is not None:
+        ranges = plan_input_ranges(files, num_parts
+                                   or df.rdd.getNumPartitions())
+        cols, schema = df.columns, to_arrow_schema(df.schema)
+
+        def read_ranges(ids, kernel=kernel):
+            # reading every id drains the input: a worker that leaves
+            # input unread exits instead of being reused
+            pieces = [p for b in ids for i in b.column(0).to_pylist()
+                      for p in ranges[i]]
+            return kernel(_read_pieces(pieces, cols, schema))
+        df, kernel = df.sparkSession.range(
+            len(ranges), numPartitions=len(ranges)), read_ranges
+    if skip:
+        df = df.where(~F.spark_partition_id().isin(*skip))
+    return df.mapInArrow(kernel, ddl)
 
 
 def portable_salt(col: str = "doc_id"):
@@ -185,18 +222,16 @@ PARTS_DDL = ("part_id bigint, file string, n_rows bigint, "
 
 
 def _kernel(out_path: str, block_rows: int, attempt: int,
-            codec: str = "none", skip_parts=frozenset(),
-            epoch: int | None = None):
+            codec: str = "none", epoch: int | None = None):
     """mapInArrow kernel: encode the task's partition into blocks,
     stream them into the part's file (table_io.write_part) and yield
-    its lineage row (PARTS_DDL). ``epoch`` (streaming) makes the part
-    id ``(epoch << 16) | partition``."""
+    its lineage row (PARTS_DDL); an empty partition writes and yields
+    nothing. ``epoch`` (streaming) makes the part id ``(epoch << 16) |
+    partition``."""
     def encode_kernel(batches):
         import pyarrow as pa
         import pyarrow.compute as pc
         part = TaskContext.get().partitionId()
-        if part in skip_parts:
-            return
         if epoch is not None:
             part = (epoch << 16) | part
         clean = (b.drop_columns(["pid"]) if "pid" in b.schema.names
@@ -244,11 +279,9 @@ def encode_table(spark: SparkSession, df: DataFrame, out_path: str,
       north-rule skew defusal; one shuffle.
     - ``doc_range``: contiguous input ranges — same balance bound, but
       keeps the corpus' document adjacency inside blocks (~0.2
-      bits/token better on ordered corpora). A plain parquet scan is
-      planned from its footers into ``num_partitions`` ranges
-      (plan_input_ranges) that the tasks read themselves; any other
-      frame is encoded one part per partition of its own, in order,
-      and ``num_partitions`` does not apply. Neither runs a shuffle.
+      bits/token better on ordered corpora); no shuffle. A plain
+      parquet scan is cut into ``num_partitions`` ranges (map_input);
+      any other frame is encoded one part per partition of its own.
 
     ``salt_expr`` (ntok_range only) overrides the heavy-value salt
     column (default ``pmod(xxhash64(doc_id), SALT_BUCKETS)``); pass
@@ -259,27 +292,11 @@ def encode_table(spark: SparkSession, df: DataFrame, out_path: str,
         num_partitions = spark.sparkContext.defaultParallelism
 
     done = table_io.committed_parts(out_path) if resume else {}
-    skip = set(done)
     if attempt is None:
         attempt = len(table_io.commits(out_path))
 
-    task = kernel = _kernel(out_path, block_rows, attempt, codec, skip)
-    files = _parquet_files(df) if strategy == "doc_range" else None
-    if files is not None:
-        # partition id = range index = part id; each task reads its own
-        # rows: no Spark scan, shuffle, sort or JVM -> Python handoff
-        ranges = plan_input_ranges(files, num_partitions)
-        cols, schema = df.columns, to_arrow_schema(df.schema)
-
-        def task(ids):
-            for _ in ids:       # a worker that leaves input unread exits
-                pass
-            pieces = ranges[TaskContext.get().partitionId()]
-            return kernel(_read_pieces(pieces, cols, schema))
-        parted = spark.range(len(ranges), numPartitions=len(ranges))
-    elif strategy == "doc_range":
-        parted = df
-    else:
+    parted = df
+    if strategy != "doc_range":
         num_buckets = num_partitions * BUCKETS_PER_PART
         bucket_map = plan_partitions(df, num_buckets)
         if salt_expr is None:
@@ -303,9 +320,9 @@ def encode_table(spark: SparkSession, df: DataFrame, out_path: str,
         # bits/token on F-MAIN
         parted = (salted.repartition(num_partitions, "pid")
                   .sortWithinPartitions("pid", "n_tok", "doc_id"))
-    new_parts = sorted((r.asDict() for r in
-                        parted.mapInArrow(task, PARTS_DDL).collect()),
-                       key=lambda p: p["part_id"])
+    new_parts = sorted((r.asDict() for r in map_input(
+        parted, _kernel(out_path, block_rows, attempt, codec), PARTS_DDL,
+        num_partitions, done).collect()), key=lambda p: p["part_id"])
     if new_parts:
         table_io.commit(out_path, new_parts,
                         {"num_partitions": num_partitions,
@@ -313,7 +330,7 @@ def encode_table(spark: SparkSession, df: DataFrame, out_path: str,
     all_parts = list(done.values()) + new_parts
     return {
         "n_parts": len(all_parts),
-        "n_parts_skipped": len(skip),
+        "n_parts_skipped": len(done),
         "n_rows": sum(p["n_rows"] for p in all_parts),
         "n_values": sum(p["n_values"] for p in all_parts),
         "n_blocks": sum(p.get("n_blocks", 0) for p in all_parts),

@@ -16,8 +16,8 @@ re-encode, no shuffle, no row ever crosses the wire:
    = read each byte once, write it once. Incompatible inputs
    (schema/compression/stride drift) fail the task loudly rather
    than producing a mixed file.
-3. **Publish** — tmp + rename per output (crash leaves no torn
-   file); the returned manifest DataFrame has one row per output.
+3. **Publish** — engine._util.publish per output (crash leaves no
+   torn file); the returned manifest DataFrame has one row per output.
    Source files are NOT deleted here — swap/cleanup policy belongs
    to the caller (typically: write compacted dir, atomically point
    the table at it, expire the old one).
@@ -35,7 +35,7 @@ import os
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
-from jobs.orc_read import list_orc_files
+from jobs.orc_read import _dealt_frame, list_orc_files
 from jobs.table_io import _require_local
 
 COMPACT_DDL = ("path string, n_files bigint, n_stripes bigint, "
@@ -69,15 +69,17 @@ def compact_orc_dir(spark: SparkSession, in_dir: str, out_dir: str,
     """Compact every ORC file under ``in_dir`` into ~``target_mb``
     files under ``out_dir``; returns the lazy one-row-per-output
     manifest (collect() runs the job). Paths must be task-visible
-    (shared FS or local mode), as everywhere in jobs/."""
+    (shared FS or local mode), as everywhere in jobs/. The bins reach
+    the tasks as a dealt local relation (jobs.orc_read._dealt_frame):
+    no shuffle."""
     in_dir = _require_local(in_dir)
     out_dir = _require_local(out_dir)
     os.makedirs(out_dir, exist_ok=True)
     bins = plan_bins(list_orc_files(in_dir), target_mb)
-    rows = [(i, b) for i, b in enumerate(bins)]
-    n_tasks = min(len(bins), parallelism
-                  or spark.sparkContext.defaultParallelism)
-    plan = spark.createDataFrame(rows, "bin bigint, paths array<string>")
+    plan = _dealt_frame(spark, pa.table(
+        {"bin": pa.array(range(len(bins)), pa.int64()),
+         "paths": pa.array(bins, pa.list_(pa.string()))}),
+        parallelism or spark.sparkContext.defaultParallelism)
 
     def kernel(batches):
         from engine.orc_concat import concat_orc
@@ -85,13 +87,7 @@ def compact_orc_dir(spark: SparkSession, in_dir: str, out_dir: str,
             for row in batch.to_pylist():
                 out = os.path.join(out_dir,
                                    f"part-{row['bin']:05d}.orc")
-                m = concat_orc(row["paths"], out)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([out], type=pa.string())]
-                    + [pa.array([m[k]], type=pa.int64())
-                       for k in ("n_files", "n_stripes", "n_rows",
-                                 "n_bytes")],
-                    names=["path", "n_files", "n_stripes", "n_rows",
-                           "n_bytes"])
+                yield pa.RecordBatch.from_pylist(
+                    [{"path": out} | concat_orc(row["paths"], out)])
 
-    return plan.repartition(n_tasks).mapInArrow(kernel, COMPACT_DDL)
+    return plan.mapInArrow(kernel, COMPACT_DDL)

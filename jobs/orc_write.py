@@ -1,18 +1,25 @@
 """Distributed ORC file emission (SURVEY.md §2.5 M4, scale-true form).
 
-Each physical partition writes ONE ``part-<pid>.orc`` file with the
-engine's spec-conformant ORC v1 writer (engine/orc_file.py) from
-inside a ``mapInArrow`` kernel — the multi-file layout every
-distributed ORC writer produces (orc-core PhysicalFsWriter, one
-writer per task; reference-extract/javap/PhysicalFsWriter.txt:34-48).
-Nothing funnels through the driver: the kernel's output is a tiny
-per-file manifest row, and readers (``spark.read.orc(dir)``,
-ORC C++/pyarrow per file) scan the directory in parallel.
+Each write task writes ONE ``part-<pid>.orc`` file with the engine's
+spec-conformant ORC v1 writer (engine/orc_file.py) from inside a
+``mapInArrow`` kernel — the multi-file layout every distributed ORC
+writer produces (orc-core PhysicalFsWriter, one writer per task;
+reference-extract/javap/PhysicalFsWriter.txt:34-48). Nothing funnels
+through the driver: the kernel's output is a tiny per-file manifest
+row, and readers (``spark.read.orc(dir)``, ORC C++/pyarrow per file)
+scan the directory in parallel.
 
-Memory: a task buffers its partition before writing (write_orc takes
-a table and slices stripes internally), so partition sizing bounds
-writer memory exactly like ORC's stripe-flush budget — size the
-upstream ``repartition`` so partitions fit the executor arena.
+Input: rows reach the kernel through the encode job's input path
+(jobs.encode.map_input). A plain parquet scan is cut from its footers
+into as many contiguous ranges as Spark's scan has partitions, each
+task reading its own range with pyarrow; any other frame writes one
+file per partition of its own.
+
+Memory: a task buffers its part before writing (write_orc takes a
+table and slices stripes internally), so the part size bounds writer
+memory exactly like ORC's stripe-flush budget: a scan partition's
+worth of rows over a parquet scan, else size the upstream
+``repartition`` so partitions fit the executor arena.
 
 Path contract: ``out_dir`` must be visible to every task (shared FS,
 NFS, or local mode) — same POSIX constraint as jobs/table_io.py; the
@@ -22,10 +29,11 @@ swap-in for object stores is writing to the Hadoop FS API.
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame
 
+from engine._util import publish
+from jobs.encode import map_input
 from jobs.table_io import _require_local
 
 MANIFEST_DDL = "path string, part_id bigint, n_rows bigint, n_bytes bigint"
@@ -38,9 +46,12 @@ def write_orc_dir(df: DataFrame, out_dir: str,
                   compression: str = "zlib",
                   bloom_columns: tuple | list = (),
                   timestamp_instant: bool = False) -> DataFrame:
-    """Write ``df`` as a directory of ORC part-files, one per physical
-    partition; returns the (lazy) per-file manifest DataFrame —
-    ``.collect()`` it to run the write. Empty partitions emit nothing.
+    """Write ``df`` as a directory of ORC part-files, one per partition
+    of ``df`` (``df.rdd.getNumPartitions()``); returns the (lazy)
+    per-file manifest DataFrame — ``.collect()`` it to run the write.
+    Empty parts emit nothing. A plain parquet scan is read by the
+    tasks themselves in path-then-row order (jobs.encode.map_input),
+    one contiguous range per part.
     ``timestamp_convention``: see engine.orc_file.write_orc ("java"
     for files orc-core/Spark must read with pre-1970 instants).
     ``row_index_stride``: rows per ROW_INDEX entry (0 = no index);
@@ -70,25 +81,21 @@ def write_orc_dir(df: DataFrame, out_dir: str,
         path = os.path.join(out_dir, f"part-{pid:05d}.orc")
         n_rows, n_bytes = write_part(batches, path, **options)
         if n_rows:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([path]), pa.array([pid], type=pa.int64()),
-                 pa.array([n_rows], type=pa.int64()),
-                 pa.array([n_bytes], type=pa.int64())],
-                names=["path", "part_id", "n_rows", "n_bytes"])
+            yield pa.RecordBatch.from_pylist([{
+                "path": path, "part_id": pid, "n_rows": n_rows,
+                "n_bytes": n_bytes}])
 
-    return df.mapInArrow(kernel, MANIFEST_DDL)
+    return map_input(df, kernel, MANIFEST_DDL)
 
 
 def write_part(batches, path: str, **options) -> tuple[int, int]:
     """Publish the rows of ``batches`` as ONE ORC file at ``path``
     (engine.orc_file.write_orc ``options``) and return its ``(n_rows,
-    n_bytes)``; no rows write nothing and return ``(0, 0)``. The
-    write goes to an attempt-unique temp name, so a speculative or
-    retried attempt of the same part never interleaves into a shared
-    temp file, and is unlinked if the write fails; ``os.replace``
-    publishes atomically (the last attempt wins) and ``os.utime``
-    stamps the publish time as the file's mtime, the watermark of the
-    orcx stream reader."""
+    n_bytes)``; no rows write nothing and return ``(0, 0)``. The file
+    publishes through engine._util.publish (atomic, the last attempt
+    wins, a failed write leaves nothing), and ``os.utime`` stamps the
+    publish time as its mtime, the watermark of the orcx stream
+    reader."""
     import pyarrow as pa
 
     from engine.orc_file import write_orc
@@ -96,12 +103,7 @@ def write_part(batches, path: str, **options) -> tuple[int, int]:
     if not parts:
         return 0, 0
     tbl = pa.Table.from_batches(parts)
-    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-    try:
+    with publish(path) as tmp:
         write_orc(tbl, tmp, **options)
-        os.replace(tmp, path)
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
     os.utime(path)
     return tbl.num_rows, os.path.getsize(path)

@@ -28,6 +28,8 @@ import os
 import time
 import uuid
 
+from engine._util import publish
+
 
 def _require_local(path: str) -> str:
     """This manifest backend walks the table path with ``os`` — correct
@@ -70,34 +72,25 @@ def write_part(path: str, part_id: int, batches) -> str | None:
     None when there were no batches and nothing was written.
 
     The block payloads are already codec-wrapped, so the file is
-    uncompressed and without dictionary pages. The write goes to a
-    hidden, attempt-unique temp file and publishes with ``os.replace``:
-    speculative or retried attempts of one part never interleave, the
-    last one wins atomically, and a failed attempt leaves no partial.
+    uncompressed and without dictionary pages. The file publishes
+    through engine._util.publish: speculative or retried attempts of
+    one part never interleave, the last one wins atomically, and a
+    failed attempt leaves no partial.
     """
     import pyarrow.parquet as pq
+    batches = iter(batches)
+    first = next(batches, None)
+    if first is None:
+        return None
     file = part_file(part_id)
     dst = os.path.join(_require_local(path), file)
-    ddir, base = os.path.split(dst)
-    os.makedirs(ddir, exist_ok=True)
-    tmp = os.path.join(ddir, f".{base}.{uuid.uuid4().hex}.tmp")
-    writer = None
-    try:
+    os.makedirs(os.path.dirname(dst), exist_ok=True)
+    with publish(dst) as tmp, pq.ParquetWriter(
+            tmp, first.schema, compression="none", use_dictionary=False,
+            write_statistics=STATS_COLUMNS) as writer:
+        writer.write_batch(first)
         for batch in batches:
-            if writer is None:
-                writer = pq.ParquetWriter(
-                    tmp, batch.schema, compression="none",
-                    use_dictionary=False, write_statistics=STATS_COLUMNS)
             writer.write_batch(batch)
-        if writer is None:
-            return None
-        writer.close()
-        os.replace(tmp, dst)
-    finally:
-        if writer is not None:
-            writer.close()
-        if os.path.exists(tmp):
-            os.unlink(tmp)
     return file
 
 
@@ -122,7 +115,8 @@ def commit(path: str, parts: list[dict], snapshot_meta: dict | None = None
     """Append a commit entry recording finished input partitions.
 
     ``parts``: [{part_id, file, n_rows, n_values, n_blocks, out_bytes,
-    in_bytes, wall_ms}, ...]. Atomic via write-to-temp + rename.
+    in_bytes, wall_ms}, ...]. Atomic: publishes through
+    engine._util.publish.
     """
     mdir = _manifest_dir(path)
     os.makedirs(mdir, exist_ok=True)
@@ -132,10 +126,8 @@ def commit(path: str, parts: list[dict], snapshot_meta: dict | None = None
         "parts": parts,
     }
     name = f"commit-{int(time.time() * 1e3)}-{uuid.uuid4().hex[:8]}.json"
-    tmp = os.path.join(mdir, "." + name + ".tmp")
-    with open(tmp, "w") as f:
+    with publish(os.path.join(mdir, name)) as tmp, open(tmp, "w") as f:
         json.dump(entry, f)
-    os.replace(tmp, os.path.join(mdir, name))
     return name
 
 
@@ -152,12 +144,6 @@ def part_files(path: str) -> list[str]:
             "table was written by an earlier engine revision — "
             "re-encode it")
     return [os.path.join(root, parts[k]["file"]) for k in sorted(parts)]
-
-
-def snapshot_id(path: str) -> str:
-    """Deterministic id of the current committed state."""
-    parts = committed_parts(path)
-    return f"{len(parts)}:{sum(p.get('n_rows', 0) for p in parts.values())}"
 
 
 def commits(path: str) -> list[str]:

@@ -262,3 +262,90 @@ def test_concat_tmp_name_attempt_unique(tmp_path):
     got = read_orc(out)
     assert got.num_rows == 1200
     assert not [f for f in os.listdir(tmp_path) if ".tmp" in f]
+
+
+def test_compaction_runs_no_shuffle(spark, tmp_path):
+    """The bins reach the merge tasks as a dealt local relation: the
+    compaction's executed plan has no Exchange, and output names stay
+    part-<bin>.orc."""
+    from jobs.orc_compact import compact_orc_dir
+    in_dir = tmp_path / "small"
+    in_dir.mkdir()
+    paths, want = _write_parts(str(in_dir), k=6)
+    out_dir = str(tmp_path / "big")
+    man = compact_orc_dir(spark, str(in_dir), out_dir,
+                          target_mb=2 * os.path.getsize(paths[0]) / 2 ** 20)
+    plan = man._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    rows = sorted(man.collect(), key=lambda r: r.path)
+    assert [os.path.basename(r.path) for r in rows] == \
+        [f"part-{b:05d}.orc" for b in range(3)]
+    assert [r.n_files for r in rows] == [2, 2, 2]
+    _assert_equal(pa.concat_tables(read_orc(r.path) for r in rows), want)
+
+
+def _fail_table_part(d, monkeypatch):
+    from jobs import table_io
+
+    def batches():
+        yield pa.record_batch({"part_id": pa.array([0], pa.int64())})
+        raise OSError("injected")
+    table_io.write_part(d, 0, batches())
+
+
+def _fail_commit(d, monkeypatch):
+    from jobs import table_io
+    table_io.commit(d, [{"part_id": 1, "file": object()}])
+
+
+def _fail_orc_part(d, monkeypatch):
+    import engine.orc_file
+    from jobs.orc_write import write_part
+
+    def broken(tbl, path, **kw):
+        with open(path, "wb") as f:
+            f.write(b"ORC partial")
+        raise OSError("injected")
+    monkeypatch.setattr(engine.orc_file, "write_orc", broken)
+    write_part(iter([_mk(0).to_batches()[0]]), os.path.join(d, "p.orc"))
+
+
+def _fail_concat(d, monkeypatch):
+    import engine.orc_concat as oc
+
+    def boom(infos):
+        raise OSError("injected")
+    monkeypatch.setattr(oc, "_merge_file_stats", boom)
+    concat_orc([os.path.join(d, "p.orc")] * 2, os.path.join(d, "m.orc"))
+
+
+@pytest.mark.parametrize("fail", [_fail_table_part, _fail_commit,
+                                  _fail_orc_part, _fail_concat],
+                         ids=["table_io.write_part", "table_io.commit",
+                              "orc_write.write_part", "concat_orc"])
+def test_failed_publish_leaves_directory_as_it_was(tmp_path, monkeypatch,
+                                                   fail):
+    """Every part-file, commit and merge publishes through one helper:
+    a writer that fails mid-write leaves no temp file and no changed
+    file behind, also where it would have replaced a published one."""
+    from jobs import table_io
+    from jobs.orc_write import write_part
+    d = str(tmp_path)
+    table_io.write_part(d, 0, iter(
+        [pa.record_batch({"part_id": pa.array([7], pa.int64())})]))
+    table_io.commit(d, [{"part_id": 0, "file": table_io.part_file(0)}])
+    write_part(iter([_mk(0).to_batches()[0]]), os.path.join(d, "p.orc"))
+    concat_orc([os.path.join(d, "p.orc")] * 2, os.path.join(d, "m.orc"))
+
+    def snapshot():
+        out = {}
+        for root, _, files in os.walk(d):
+            for f in files:
+                with open(os.path.join(root, f), "rb") as fh:
+                    out[os.path.relpath(os.path.join(root, f), d)] = \
+                        fh.read()
+        return out
+    before = snapshot()
+    with pytest.raises((OSError, TypeError)):
+        fail(d, monkeypatch)
+    assert snapshot() == before

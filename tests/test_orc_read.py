@@ -1978,3 +1978,38 @@ def test_date_literal_prunes_stripes(spark, tmp_path):
     eq = read_orc_dir(spark, str(tmp_path),
                       filters=[("d", "=", "1972-06-19")])
     assert [r.i for r in eq.collect()] == [900]
+
+
+def test_write_orc_dir_footer_and_partition_paths_agree(spark, tmp_path):
+    """The parquet-storable columns of a mixed table, written by
+    write_orc_dir over a plain parquet scan (tasks read footer-planned
+    ranges) and over ``repartition(2)`` (Spark's handoff), read back
+    equal through read_orc_dir and through orc-core."""
+    from collections import Counter
+
+    import pyarrow.parquet as pq
+
+    from jobs.orc_read import read_orc_dir
+    from jobs.orc_write import write_orc_dir
+    t = _mixed_table(5000).drop_columns(["ts"])   # Spark rejects ns
+    inp = tmp_path / "in"
+    inp.mkdir()
+    for i, (a, b) in enumerate(((0, 3500), (3500, 5000))):
+        pq.write_table(t.slice(a, b - a), str(inp / f"part-{i}.parquet"),
+                       row_group_size=1000)
+    df = spark.read.parquet(str(inp))
+    outs = {"footer": str(tmp_path / "footer"),
+            "partition": str(tmp_path / "partition")}
+    write_orc_dir(df, outs["footer"]).collect()
+    write_orc_dir(df.repartition(2), outs["partition"]).collect()
+
+    def rows(frame):
+        return Counter(
+            tuple(tuple(v) if isinstance(v, list) else
+                  bytes(v) if isinstance(v, bytearray) else v
+                  for v in r) for r in frame.select(*t.column_names)
+            .collect())
+    want = rows(df)
+    for out in outs.values():
+        assert rows(read_orc_dir(spark, out)) == want, out
+        assert rows(spark.read.orc(out)) == want, out

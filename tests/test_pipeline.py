@@ -7,6 +7,7 @@ import os
 import shutil
 
 import numpy as np
+import pytest
 
 from jobs import table_io
 from jobs.decode import decode_table, verify_identity
@@ -82,6 +83,50 @@ def test_resume_after_partial_commit(spark, token_parquet, tmp_path):
     assert on_disk == sorted(table_io.part_files(out))
     assert sorted(os.listdir(os.path.join(out, "data"))) == \
         [os.path.basename(f) for f in on_disk]
+
+
+def _worker_probe(batches):
+    import time
+
+    import pyarrow as pa
+    for _ in batches:
+        pass
+    time.sleep(1)       # every task at once: one Python worker each
+    yield pa.RecordBatch.from_pylist([{"pid": os.getpid()}])
+
+
+@pytest.mark.parametrize("strategy", ["ntok_range", "doc_range"])
+def test_resume_keeps_python_workers(spark, token_parquet, tmp_path,
+                                     strategy):
+    # a resumed run drops its committed parts in the JVM, so their
+    # tasks drain an empty input and PySpark reuses their workers: no
+    # worker alive before the run exits during it (the doc_range frame
+    # is not a plain scan, so it runs over its own partitions)
+    out = str(tmp_path / "blocks")
+    df = spark.read.parquet(token_parquet)
+    if strategy == "doc_range":
+        df = df.repartition(8)
+    encode_table(spark, df, out, num_partitions=8, block_rows=2000,
+                 strategy=strategy)
+    parts = table_io.committed_parts(out)
+    mdir = os.path.join(out, "_manifest")
+    for f in os.listdir(mdir):
+        os.remove(os.path.join(mdir, f))
+    table_io.commit(out, list(parts.values())[1:])
+    n = spark.sparkContext.defaultParallelism
+    pids = {r["pid"] for r in spark.range(n, numPartitions=n)
+            .mapInArrow(_worker_probe, "pid bigint").collect()}
+    m = encode_table(spark, df, out, num_partitions=8, block_rows=2000,
+                     strategy=strategy)
+    assert m["n_parts_skipped"] == len(parts) - 1 and m["n_rows"] == 4000
+
+    def alive(pid):
+        try:
+            os.kill(pid, 0)
+        except ProcessLookupError:
+            return False
+        return True
+    assert all(alive(p) for p in pids), pids
 
 
 def test_unlisted_files_are_not_read(spark, token_parquet, tmp_path):

@@ -131,3 +131,47 @@ def test_doc_range_ranges_ignore_scan_config(spark, token_parquet,
                                "n_rows", "n_values").alias("h"))
             .collect()))
     assert rows[0] == rows[1]
+
+
+def test_write_orc_dir_of_parquet_scan_reads_footers(spark, tmp_path):
+    # write_orc_dir over a plain parquet scan: one job of one stage with
+    # no Exchange and no parquet scan in Spark, one file per partition
+    # of the scan, and the part-files in part order hold the input in
+    # path-then-row order (Spark's own scan packs the largest file
+    # first)
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from engine.orc_read import read_orc
+    from jobs.orc_write import write_orc_dir
+    inp = tmp_path / "in"
+    inp.mkdir()
+    start, want = 0, []
+    for i, n in enumerate((300, 3000, 1200, 60)):
+        t = pa.table({"x": pa.array(range(start, start + n), pa.int64()),
+                      "s": [f"v{j % 7}" for j in range(n)]})
+        pq.write_table(t, str(inp / f"part-{i}.parquet"),
+                       row_group_size=500)
+        start += n
+        want.append(t)
+    df = spark.read.parquet(str(inp))
+    n_parts = df.rdd.getNumPartitions()
+    out = str(tmp_path / "orc")
+    man = write_orc_dir(df, out)
+    plan = plan_of(man)
+    assert "Exchange" not in plan and "FileScan" not in plan, plan
+    sc = spark.sparkContext
+    sc.setJobGroup("orc_footer_write", "orc_footer_write")
+    try:
+        man.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("orc_footer_write")
+    assert len(jobs) == 1, jobs
+    assert len(sc.statusTracker().getJobInfo(jobs[0]).stageIds) == 1
+    files = sorted(f for f in os.listdir(out) if f.endswith(".orc"))
+    assert len(files) == n_parts > 1
+    got = pa.concat_tables(read_orc(os.path.join(out, f)) for f in files)
+    assert got.to_pydict() == pa.concat_tables(want).to_pydict()

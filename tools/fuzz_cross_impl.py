@@ -485,7 +485,10 @@ def run_spark_seed(spark, seed: int) -> list[str]:
     Randomly also: write through the orcx WRITE path instead of
     write_orc; cross-read the dir with spark.read.orc (orc-core, a
     third independent reader); widen one column's type in the later
-    chunks and read with merge_schema=true."""
+    chunks and read with merge_schema=true; and (drawn last, so the
+    earlier draws keep their shapes) write the table through
+    write_orc_dir over a parquet scan and read it back with both
+    read_orc_dir and orc-core."""
     import json as _json
     rng = np.random.default_rng(10 ** 9 + seed)
     n = int(rng.choice([1, 2, 97, 1000, 20000]))
@@ -588,26 +591,55 @@ def run_spark_seed(spark, seed: int) -> list[str]:
                     f"spark seed={seed}: {surface} multiset mismatch "
                     f"(+{sum(d1.values())}/-{sum(d2.values())}): "
                     f"extra={list(d1)[:2]} missing={list(d2)[:2]}")
+
+        def check_full(label, load):
+            # every row of t, all columns, against the rows ``load`` reads
+            try:
+                rows = load().collect()
+            except Exception:
+                fails.append(f"spark seed={seed} {label} raised: "
+                             + traceback.format_exc(limit=3))
+                return
+            names = list(t.schema.names)
+            got = _multiset([[getattr(r, c) for c in names] for r in rows],
+                            t.schema, names)
+            want_all = _multiset([[row[c] for c in names]
+                                  for row in t.to_pylist()], t.schema, names)
+            if got != want_all:
+                d1, d2 = got - want_all, want_all - got
+                fails.append(
+                    f"spark seed={seed}: {label} mismatch "
+                    f"(+{sum(d1.values())}/-{sum(d2.values())}): "
+                    f"extra={list(d1)[:2]} missing={list(d2)[:2]}")
+
         if not do_widen and not orcx_write:
             # third independent reader: orc-core via spark.read.orc
-            # over the engine-written dir, full-table compare
+            # over the engine-written dir
+            check_full("orc-core read", lambda: spark.read.orc(d))
+        if rng.random() < 0.3:
+            # write_orc_dir over a plain parquet scan of two unequal
+            # files: the tasks read footer-planned ranges themselves
+            import pyarrow.parquet as pq
+
+            from jobs.orc_write import write_orc_dir
+            pdir, odir = os.path.join(d, "pq"), os.path.join(d, "pq_orc")
+            os.makedirs(pdir)
+            for j, (a, b) in enumerate(((0, n // 3), (n // 3, n))):
+                pq.write_table(t.slice(a, b - a),
+                               os.path.join(pdir, f"part-{j}.parquet"),
+                               row_group_size=int(rng.choice([64, 10_000])))
             try:
-                jrows = spark.read.orc(d).collect()
-                jgot = _multiset([[getattr(r, c) for c in t.schema.names]
-                                  for r in jrows], t.schema,
-                                 list(t.schema.names))
-                jwant = _multiset([[row[c] for c in t.schema.names]
-                                   for row in t.to_pylist()], t.schema,
-                                  list(t.schema.names))
-                if jgot != jwant:
-                    d1, d2 = jgot - jwant, jwant - jgot
-                    fails.append(
-                        f"spark seed={seed}: orc-core read mismatch "
-                        f"(+{sum(d1.values())}/-{sum(d2.values())}): "
-                        f"extra={list(d1)[:2]} missing={list(d2)[:2]}")
+                write_orc_dir(spark.read.parquet(pdir), odir,
+                              compression=str(rng.choice(
+                                  ["none", "zlib", "zstd"]))).collect()
             except Exception:
-                fails.append(f"spark seed={seed} orc-core read raised: "
+                fails.append(f"spark seed={seed} write_orc_dir raised: "
                              + traceback.format_exc(limit=3))
+            else:
+                check_full("write_orc_dir -> read_orc_dir",
+                           lambda: read_orc_dir(spark, odir))
+                check_full("write_orc_dir -> orc-core read",
+                           lambda: spark.read.orc(odir))
     return fails
 
 

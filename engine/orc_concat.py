@@ -76,19 +76,12 @@ def _merge_file_stats(infos: list[OrcFileInfo]) -> list[tuple]:
     n_cols = len(infos[0].types)
     for info in infos:
         if len(info._file_stats_raw) < n_cols:
-            # the same-writer precondition (checked in concat_orc)
-            # makes a missing footer ColumnStatistics an anomaly;
-            # silently merging would undercount numberOfValues and
-            # could report hasNull=false despite nulls in the copied
-            # stripes — fail loud instead of lying to third-party
-            # tail readers
+            # merging without them would undercount numberOfValues and
+            # could report hasNull=false despite nulls in the stripes
             raise ValueError(
-                f"concat_orc: an input carries no footer "
-                f"ColumnStatistics for column "
-                f"{len(info._file_stats_raw)} (got "
-                f"{len(info._file_stats_raw)} stat messages for "
-                f"{n_cols} columns); merged file statistics would "
-                "be wrong — decode-and-rewrite this file instead")
+                "concat_orc: an input carries no footer ColumnStatistics "
+                f"for column {len(info._file_stats_raw)} of {n_cols}; "
+                "decode-and-rewrite this file instead")
     return [_merge_stats(_stat_unit(st) for st in col)
             for col in zip(*(info.file_stats()[:n_cols]
                              for info in infos))]
@@ -130,7 +123,6 @@ def concat_orc(in_paths: list[str], out_path: str) -> dict:
     stripes_pb = b""
     metadata = b""
     total_rows = 0
-    n_stripes = 0
     with publish(out_path) as tmp, open(tmp, "wb") as out:
         out.write(MAGIC)
         pos = len(MAGIC)
@@ -148,7 +140,6 @@ def concat_orc(in_paths: list[str], out_path: str) -> dict:
                                            + pb_varint(5, rows))
                     pos += ilen + dlen + flen
                     total_rows += rows
-                    n_stripes += 1
             # per-stripe StripeStatistics copied raw, stripe order
             metadata += b"".join(pb_bytes(1, bytes(v))
                                  for v in info._stripe_stats_raw())
@@ -162,7 +153,8 @@ def concat_orc(in_paths: list[str], out_path: str) -> dict:
             total_rows, _merge_file_stats(infos),
             ref.row_index_stride, _CODEC_NAMES[ref.compression],
             ref.block_size, ref.writer, ref.writer_version))
-    return {"n_files": len(in_paths), "n_stripes": n_stripes,
+    return {"n_files": len(in_paths),
+            "n_stripes": sum(len(info.stripes) for info in infos),
             "n_rows": total_rows, "n_bytes": os.path.getsize(out_path)}
 
 

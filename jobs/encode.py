@@ -6,8 +6,8 @@ ONE lineage row; the driver commits them to the manifest. ONE write job,
 its rows reaching the kernel through :func:`map_input` (as
 write_orc_dir's do):
 
-    ntok_range (default)                  doc_range of a parquet scan
-    spark.read.parquet(input)             parquet footers (driver only)
+    ntok_range (default)                  doc_range of a plain parquet
+    spark.read.parquet(input)             scan: its footers (driver only)
       -> plan_partitions: token-weighted    -> plan_input_ranges: token-
          n_tok buckets + doc_id salt           weighted contiguous ranges
       -> broadcast join + repartition(pid)  -> spark.range(n_ranges) # NO
@@ -77,17 +77,18 @@ def plan_partitions(df: DataFrame, num_buckets: int) -> DataFrame:
         hi = min((cum + w) * num_buckets // total_w, num_buckets - 1)
         rows.append((r["n_tok"], lo, max(1, hi - lo + 1)))
         cum += w
-    spark = df.sparkSession
-    return spark.createDataFrame(rows, "n_tok int, bucket_start int, "
-                                       "spans int")
+    return df.sparkSession.createDataFrame(
+        rows, "n_tok int, bucket_start int, spans int")
 
 
-def plan_input_ranges(files: list[str], num_parts: int) -> list[list]:
-    """Token-weighted CONTIGUOUS input ranges (``strategy='doc_range'``)
-    from the parquet footers of ``files`` alone — no Spark job.
+def plan_input_ranges(files: list[str], num_parts: int,
+                      weight: str | None = "tokens") -> list[list]:
+    """Weight-balanced CONTIGUOUS input ranges (map_input) from the
+    parquet footers of ``files`` alone — no Spark job.
 
-    A row group weighs the ``num_values`` of its ``tokens`` leaf column
-    chunk, or its row count in files without a ``tokens`` column.
+    A row group weighs the ``num_values`` of its ``weight`` column's
+    leaf chunks (for a list column such as ``tokens``, its element
+    count), or its row count when ``weight`` is None.
     Returns ``num_parts`` ranges of ``(file, row_group,
     row_start, row_stop)`` pieces that tile every row once in path then
     row order, each within one row group's weight of ``total /
@@ -102,10 +103,10 @@ def plan_input_ranges(files: list[str], num_parts: int) -> list[list]:
         md = pq.read_metadata(f)
         for g in range(md.num_row_groups):
             rg = md.row_group(g)
-            tok = [rg.column(c).num_values for c in range(rg.num_columns)
-                   if rg.column(c).path_in_schema.split(".")[0] == "tokens"]
-            groups.append((f, g, rg.num_rows,
-                           sum(tok) if tok else rg.num_rows))
+            w = rg.num_rows if weight is None else sum(
+                rg.column(c).num_values for c in range(rg.num_columns)
+                if rg.column(c).path_in_schema.split(".")[0] == weight)
+            groups.append((f, g, rg.num_rows, w))
     total = sum(w for *_, w in groups)
     # bounds[k]: the global row where range k starts; cut k falls where
     # the running weight reaches k * total / num_parts (integer math)
@@ -130,13 +131,33 @@ def plan_input_ranges(files: list[str], num_parts: int) -> list[list]:
 
 
 def _parquet_files(df: DataFrame) -> list[str] | None:
-    """The sorted driver-local files of ``df`` when it is a plain,
+    """The sorted driver-local files of ``df`` when its tasks may read
+    them with pyarrow and get Spark's rows, else None: a plain,
     unpartitioned parquet scan (its optimized plan is a LogicalRelation
-    over a HadoopFsRelation), else None."""
+    over a HadoopFsRelation) whose every file's footer has exactly
+    ``df``'s column names, in order, and Spark types. Spark's reader
+    null-fills, matches names case-insensitively and may rebase dates
+    and timestamps between calendars (footer metadata, read options),
+    so a scan with a missing, renamed or reordered column, or with a
+    date or time column anywhere, is not one."""
     from urllib.parse import unquote, urlparse
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
 
     def kind(o):
         return o.getClass().getSimpleName()
+
+    def temporal(t):
+        return pa.types.is_temporal(t) or any(
+            temporal(t.field(i).type) for i in range(t.num_fields))
+
+    def spark_type(t):      # None: none, or one Spark's reader rebases
+        try:
+            return None if temporal(t) else from_arrow_type(t).simpleString()
+        except (TypeError, NotImplementedError):
+            return None
     jdf = getattr(df, "_jdf", None)
     plan = None if jdf is None else jdf.queryExecution().optimizedPlan()
     if plan is None or kind(plan) != "LogicalRelation":
@@ -148,7 +169,12 @@ def _parquet_files(df: DataFrame) -> list[str] | None:
     urls = [urlparse(u) for u in df.inputFiles()]
     if any(u.scheme != "file" for u in urls):
         return None
-    return sorted(unquote(u.path) for u in urls)
+    want = [(f.name, f.dataType.simpleString()) for f in df.schema]
+    files = sorted(unquote(u.path) for u in urls)
+    for f in files:
+        if [(c.name, spark_type(c.type)) for c in pq.read_schema(f)] != want:
+            return None
+    return files
 
 
 def _read_pieces(pieces, columns: list[str], schema):
@@ -172,20 +198,22 @@ def _read_pieces(pieces, columns: list[str], schema):
 
 
 def map_input(df: DataFrame, kernel, ddl: str, num_parts: int | None = None,
-              skip=frozenset()) -> DataFrame:
+              skip=frozenset(), weight: str | None = None) -> DataFrame:
     """``df``'s rows through the mapInArrow ``kernel`` (output ``ddl``):
     the one rule for how a write job's rows reach its kernel.
 
-    A plain parquet scan is cut into ``num_parts`` ranges from its
-    footers (None: as many as Spark's scan has partitions), and task k
-    reads range k itself with pyarrow: no Spark scan, shuffle or JVM ->
+    A plain parquet scan (:func:`_parquet_files`) is cut into
+    ``num_parts`` contiguous ranges of about equal ``weight``
+    (:func:`plan_input_ranges`; None: row count) from its footers
+    (None: as many as Spark's scan has partitions), and task k reads
+    range k itself with pyarrow: no Spark scan, shuffle or JVM ->
     Python handoff. Any other frame runs over its own partitions. The
     partitions in ``skip`` are dropped in the JVM: their kernels see
     an empty input, so their Python workers are reused."""
     files = _parquet_files(df)
     if files is not None:
-        ranges = plan_input_ranges(files, num_parts
-                                   or df.rdd.getNumPartitions())
+        ranges = plan_input_ranges(
+            files, num_parts or df.rdd.getNumPartitions(), weight)
         cols, schema = df.columns, to_arrow_schema(df.schema)
 
         def read_ranges(ids, kernel=kernel):
@@ -241,13 +269,10 @@ def _kernel(out_path: str, block_rows: int, attempt: int,
 
         def tally(blocks):
             for b in blocks:
-                lin = b.column("lineage")
-                for k, col in (("n_rows", b.column("n_rows")),
-                               ("n_values", b.column("n_values")),
-                               ("out_bytes", lin.field("out_bytes")),
-                               ("in_bytes", lin.field("in_bytes")),
-                               ("wall_ms", lin.field("wall_ms"))):
-                    sums[k] += pc.sum(col).as_py()
+                for k in ("n_rows", "n_values"):
+                    sums[k] += pc.sum(b.column(k)).as_py()
+                for k in ("out_bytes", "in_bytes", "wall_ms"):
+                    sums[k] += pc.sum(b.column("lineage").field(k)).as_py()
                 sums["n_blocks"] += b.num_rows
                 yield b
 
@@ -310,7 +335,6 @@ def encode_table(spark: SparkSession, df: DataFrame, out_path: str,
                       F.col("bucket_start")
                       + F.pmod("salt", F.col("spans")),
                       F.pmod("salt", F.lit(num_buckets))).cast("int"))
-                  .drop("bucket_start", "spans")
                   .select("doc_id", "tokens", "n_tok", "source", "pid"))
         # in-partition sort (no extra shuffle): makes BLOCK contents a
         # pure function of the snapshot (shuffle arrival order is not
@@ -322,21 +346,16 @@ def encode_table(spark: SparkSession, df: DataFrame, out_path: str,
                   .sortWithinPartitions("pid", "n_tok", "doc_id"))
     new_parts = sorted((r.asDict() for r in map_input(
         parted, _kernel(out_path, block_rows, attempt, codec), PARTS_DDL,
-        num_partitions, done).collect()), key=lambda p: p["part_id"])
+        num_partitions, done, "tokens").collect()),
+        key=lambda p: p["part_id"])
     if new_parts:
         table_io.commit(out_path, new_parts,
                         {"num_partitions": num_partitions,
                          "block_rows": block_rows, "attempt": attempt})
     all_parts = list(done.values()) + new_parts
-    return {
-        "n_parts": len(all_parts),
-        "n_parts_skipped": len(done),
-        "n_rows": sum(p["n_rows"] for p in all_parts),
-        "n_values": sum(p["n_values"] for p in all_parts),
-        "n_blocks": sum(p.get("n_blocks", 0) for p in all_parts),
-        "out_bytes": sum(p.get("out_bytes", 0) for p in all_parts),
-        "in_bytes": sum(p.get("in_bytes", 0) for p in all_parts),
-    }
+    return {"n_parts": len(all_parts), "n_parts_skipped": len(done)} | {
+        k: sum(p.get(k, 0) for p in all_parts)
+        for k in ("n_rows", "n_values", "n_blocks", "out_bytes", "in_bytes")}
 
 
 def read_blocks(spark: SparkSession, out_path: str) -> DataFrame:

@@ -64,14 +64,14 @@ def plan_bins(files: list[str], target_mb: float = 256.0
 
 
 def compact_orc_dir(spark: SparkSession, in_dir: str, out_dir: str,
-                    target_mb: float = 256.0,
-                    parallelism: int | None = None) -> DataFrame:
+                    target_mb: float = 256.0) -> DataFrame:
     """Compact every ORC file under ``in_dir`` into ~``target_mb``
     files under ``out_dir``; returns the lazy one-row-per-output
     manifest (collect() runs the job). Paths must be task-visible
     (shared FS or local mode), as everywhere in jobs/. The bins reach
     the tasks as a dealt local relation (jobs.orc_read._dealt_frame):
-    no shuffle."""
+    no shuffle, and one merge task per bin up to Spark's leaf
+    parallelism."""
     in_dir = _require_local(in_dir)
     out_dir = _require_local(out_dir)
     os.makedirs(out_dir, exist_ok=True)
@@ -79,7 +79,7 @@ def compact_orc_dir(spark: SparkSession, in_dir: str, out_dir: str,
     plan = _dealt_frame(spark, pa.table(
         {"bin": pa.array(range(len(bins)), pa.int64()),
          "paths": pa.array(bins, pa.list_(pa.string()))}),
-        parallelism or spark.sparkContext.defaultParallelism)
+        spark.sparkContext.defaultParallelism)
 
     def kernel(batches):
         from engine.orc_concat import concat_orc

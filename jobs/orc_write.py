@@ -10,10 +10,11 @@ row, and readers (``spark.read.orc(dir)``, ORC C++/pyarrow per file)
 scan the directory in parallel.
 
 Input: rows reach the kernel through the encode job's input path
-(jobs.encode.map_input). A plain parquet scan is cut from its footers
-into as many contiguous ranges as Spark's scan has partitions, each
-task reading its own range with pyarrow; any other frame writes one
-file per partition of its own.
+(jobs.encode.map_input). A plain parquet scan whose files all match
+the frame's schema, with no date or time column, is cut from its
+footers into as many contiguous, row-balanced ranges as Spark's scan
+has partitions, each task reading its own range with pyarrow; any
+other frame writes one file per partition of its own.
 
 Memory: a task buffers its part before writing (write_orc takes a
 table and slices stripes internally), so the part size bounds writer
@@ -49,9 +50,12 @@ def write_orc_dir(df: DataFrame, out_dir: str,
     """Write ``df`` as a directory of ORC part-files, one per partition
     of ``df`` (``df.rdd.getNumPartitions()``); returns the (lazy)
     per-file manifest DataFrame — ``.collect()`` it to run the write.
-    Empty parts emit nothing. A plain parquet scan is read by the
-    tasks themselves in path-then-row order (jobs.encode.map_input),
-    one contiguous range per part.
+    Empty parts emit nothing. A plain parquet scan whose every file
+    has exactly ``df``'s columns and types, none a date or time
+    (jobs.encode._parquet_files), is read by the tasks themselves in
+    path-then-row order (jobs.encode.map_input), one contiguous range
+    of about equal row count per part; any other frame, through
+    Spark's reader.
     ``timestamp_convention``: see engine.orc_file.write_orc ("java"
     for files orc-core/Spark must read with pre-1970 instants).
     ``row_index_stride``: rows per ROW_INDEX entry (0 = no index);

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from engine.blocks import DEFAULT_BLOCK_ROWS
 from jobs import table_io
-from jobs.encode import PARTS_DDL, SALT_BUCKETS, _kernel
+from jobs.encode import PARTS_DDL, SALT_BUCKETS, _kernel, map_input
 
 
 def start_streaming_encode(spark: SparkSession, input_dir: str,
@@ -44,10 +44,9 @@ def start_streaming_encode(spark: SparkSession, input_dir: str,
             return
         salted = df.withColumn(
             "pid", F.pmod(F.xxhash64("doc_id"), F.lit(SALT_BUCKETS)))
-        rows = (salted.repartition(num_partitions, "pid")
-                .mapInArrow(_kernel(out_path, block_rows, 0, codec,
-                                    epoch=epoch), PARTS_DDL)
-                .collect())
+        rows = map_input(salted.repartition(num_partitions, "pid"),
+                         _kernel(out_path, block_rows, 0, codec,
+                                 epoch=epoch), PARTS_DDL).collect()
         if rows:
             table_io.commit(out_path,
                             [r.asDict() | {"epoch": epoch} for r in rows],

@@ -142,7 +142,6 @@ def main(argv: list[str] | None = None) -> int:
     sc.add_argument("--target-mb", type=float, default=256.0,
                     help="approximate output file size; inputs are "
                          "first-fit binned in name order")
-    sc.add_argument("--parallelism", type=int, default=None)
 
     ss = sub.add_parser("synth")
     ss.add_argument("--output", required=True)
@@ -211,8 +210,7 @@ def main(argv: list[str] | None = None) -> int:
         spark = _spark("orc-format-spark-compact-orc")
         from jobs.orc_compact import compact_orc_dir
         manifest = compact_orc_dir(spark, a.input, a.output,
-                                   target_mb=a.target_mb,
-                                   parallelism=a.parallelism).collect()
+                                   target_mb=a.target_mb).collect()
         print(json.dumps({"files_out": len(manifest),
                           "files_in": sum(m["n_files"] for m in manifest),
                           "rows": sum(m["n_rows"] for m in manifest),

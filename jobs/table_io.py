@@ -95,18 +95,13 @@ def write_part(path: str, part_id: int, batches) -> str | None:
 
 
 def committed_parts(path: str) -> dict[int, dict]:
-    """part_id -> lineage summary for every committed input partition."""
-    mdir = _manifest_dir(path)
+    """part_id -> lineage summary for every committed input partition
+    (a later commit of a part wins)."""
     out: dict[int, dict] = {}
-    if not os.path.isdir(mdir):
-        return out
-    for name in sorted(os.listdir(mdir)):
-        if not name.endswith(".json"):
-            continue
-        with open(os.path.join(mdir, name)) as f:
-            entry = json.load(f)
-        for p in entry["parts"]:
-            out[int(p["part_id"])] = p
+    for name in commits(path):
+        with open(os.path.join(_manifest_dir(path), name)) as f:
+            for p in json.load(f)["parts"]:
+                out[int(p["part_id"])] = p
     return out
 
 

@@ -1980,36 +1980,86 @@ def test_date_literal_prunes_stripes(spark, tmp_path):
     assert [r.i for r in eq.collect()] == [900]
 
 
+def _rows(frame, columns):
+    from collections import Counter
+    return Counter(
+        tuple(tuple(v) if isinstance(v, list) else
+              bytes(v) if isinstance(v, bytearray) else v
+              for v in r) for r in frame.select(*columns).collect())
+
+
 def test_write_orc_dir_footer_and_partition_paths_agree(spark, tmp_path):
     """The parquet-storable columns of a mixed table, written by
     write_orc_dir over a plain parquet scan (tasks read footer-planned
     ranges) and over ``repartition(2)`` (Spark's handoff), read back
-    equal through read_orc_dir and through orc-core."""
-    from collections import Counter
-
+    equal through read_orc_dir and through orc-core. Dates stay on
+    Spark's reader, which may rebase them (the next test)."""
     import pyarrow.parquet as pq
 
+    from jobs.encode import _parquet_files
     from jobs.orc_read import read_orc_dir
     from jobs.orc_write import write_orc_dir
-    t = _mixed_table(5000).drop_columns(["ts"])   # Spark rejects ns
+    t = _mixed_table(5000).drop_columns(["ts", "d"])   # Spark rejects ns
     inp = tmp_path / "in"
     inp.mkdir()
     for i, (a, b) in enumerate(((0, 3500), (3500, 5000))):
         pq.write_table(t.slice(a, b - a), str(inp / f"part-{i}.parquet"),
                        row_group_size=1000)
     df = spark.read.parquet(str(inp))
+    assert _parquet_files(df) is not None
     outs = {"footer": str(tmp_path / "footer"),
             "partition": str(tmp_path / "partition")}
     write_orc_dir(df, outs["footer"]).collect()
     write_orc_dir(df.repartition(2), outs["partition"]).collect()
-
-    def rows(frame):
-        return Counter(
-            tuple(tuple(v) if isinstance(v, list) else
-                  bytes(v) if isinstance(v, bytearray) else v
-                  for v in r) for r in frame.select(*t.column_names)
-            .collect())
-    want = rows(df)
+    want = _rows(df, t.column_names)
     for out in outs.values():
-        assert rows(read_orc_dir(spark, out)) == want, out
-        assert rows(spark.read.orc(out)) == want, out
+        assert _rows(read_orc_dir(spark, out), t.column_names) == want, out
+        assert _rows(spark.read.orc(out), t.column_names) == want, out
+
+
+@pytest.mark.parametrize("case", ["superset", "other_case", "merged",
+                                  "reordered", "legacy_dates"])
+def test_write_orc_dir_keeps_spark_reader_semantics(spark, tmp_path, case):
+    """Parquet scans whose files Spark's reader reconciles with the
+    frame (a wider or differently-cased read schema, merged evolved
+    schemas, per-file column order, dates rebased from the legacy
+    calendar) are written from Spark's rows, not the footers: the ORC
+    output reads back as exactly the rows spark.read gives."""
+    import datetime
+
+    import pyarrow.parquet as pq
+
+    from jobs.encode import _parquet_files
+    from jobs.orc_read import read_orc_dir
+    from jobs.orc_write import write_orc_dir
+    inp = str(tmp_path / "in")
+    os.makedirs(inp)
+    a = pa.table({"a": pa.array(range(40), pa.int64()),
+                  "s": [f"v{i % 3}" for i in range(40)]})
+    b = pa.table({"a": pa.array(range(40, 70), pa.int64()),
+                  "s": [f"w{i % 5}" for i in range(30)]})
+    if case == "merged":
+        b = b.append_column("t", pa.array(range(30), pa.int32()))
+    if case == "reordered":
+        b = b.select(["s", "a"])
+    if case == "legacy_dates":
+        spark.conf.set("spark.sql.parquet.datetimeRebaseModeInWrite",
+                       "LEGACY")
+        try:
+            spark.createDataFrame(
+                [(i, datetime.date(1000 + 300 * i, 1, 1)) for i in range(4)],
+                "a bigint, d date").write.mode("overwrite").parquet(inp)
+        finally:
+            spark.conf.unset("spark.sql.parquet.datetimeRebaseModeInWrite")
+    else:
+        pq.write_table(a, os.path.join(inp, "part-0.parquet"))
+        pq.write_table(b, os.path.join(inp, "part-1.parquet"))
+    df = {"superset": spark.read.schema("a bigint, s string, x int"),
+          "other_case": spark.read.schema("A bigint, S string"),
+          "merged": spark.read.option("mergeSchema", "true")}.get(
+        case, spark.read).parquet(inp)
+    assert _parquet_files(df) is None
+    out = str(tmp_path / "orc")
+    write_orc_dir(df, out).collect()
+    assert _rows(read_orc_dir(spark, out), df.columns) == \
+        _rows(df, df.columns)

@@ -617,8 +617,9 @@ def run_spark_seed(spark, seed: int) -> list[str]:
             # over the engine-written dir
             check_full("orc-core read", lambda: spark.read.orc(d))
         if rng.random() < 0.3:
-            # write_orc_dir over a plain parquet scan of two unequal
-            # files: the tasks read footer-planned ranges themselves
+            # write_orc_dir over a parquet scan of two unequal files:
+            # the tasks read footer-planned ranges themselves unless a
+            # date or time column keeps the rows on Spark's reader
             import pyarrow.parquet as pq
 
             from jobs.orc_write import write_orc_dir

@@ -21,9 +21,13 @@ What the rewritten tail preserves:
   footerLength, numberOfRows), offsets rebased to the output.
 * **Type tree** — copied raw from the first input (inputs are
   checked for semantic type equality first).
-* **File-level ColumnStatistics** — each input's footer statistics
+* **File-level ColumnStatistics** — the inputs' stripe statistics
   fold through the writer's own function (engine.orc_file.
-  _merge_stats), so concat and write_orc share one rule set:
+  _merge_stats), the same units write_orc folds into its footer, so
+  the merged footer equals one write_orc of the same stripes (an
+  input's footer can omit a sum its total overflowed while the whole
+  file's fits). When an input lacks per-stripe statistics its footer
+  statistics fold instead. Concat and write_orc share one rule set:
   numberOfValues sums, hasNull ORs (an absent hasNull counts as
   true), typed min/max merge; a column whose min/max any input
   omitted while holding values (the NaN convention for floats) stays
@@ -72,7 +76,9 @@ def _stat_unit(d: dict) -> tuple:
 
 def _merge_file_stats(infos: list[OrcFileInfo]) -> list[tuple]:
     """Recombined file-level statistics units (flattened column
-    order), one per column of the shared type tree."""
+    order), one per column of the shared type tree: the fold of every
+    input's stripe statistics when each input carries them for every
+    stripe and column, else of the inputs' footer statistics."""
     n_cols = len(infos[0].types)
     for info in infos:
         if len(info._file_stats_raw) < n_cols:
@@ -82,9 +88,15 @@ def _merge_file_stats(infos: list[OrcFileInfo]) -> list[tuple]:
                 "concat_orc: an input carries no footer ColumnStatistics "
                 f"for column {len(info._file_stats_raw)} of {n_cols}; "
                 "decode-and-rewrite this file instead")
+    stripes = [info.stripe_stats() for info in infos]
+    if all(ss is not None and len(ss) == len(info.stripes)
+           and all(len(st) >= n_cols for st in ss)
+           for ss, info in zip(stripes, infos)):
+        units = [st for ss in stripes for st in ss]
+    else:
+        units = [info.file_stats() for info in infos]
     return [_merge_stats(_stat_unit(st) for st in col)
-            for col in zip(*(info.file_stats()[:n_cols]
-                             for info in infos))]
+            for col in zip(*(u[:n_cols] for u in units))]
 
 
 def concat_orc(in_paths: list[str], out_path: str) -> dict:

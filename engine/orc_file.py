@@ -991,4 +991,4 @@ def write_orc(table: pa.Table, path: str,
                                   for u in zip(*stripe_units)],
                      row_index_stride, compression, B)
     with open(path, "wb") as f:
-        f.write(bytes(out))
+        f.write(out)

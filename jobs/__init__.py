@@ -1,10 +1,11 @@
 """The Spark layer: DataFrame pipelines that run the ``engine`` codec
 kernels in ``mapInArrow`` tasks.
 
-Importing ``jobs`` tunes the process's allocators. Spark workers
-import it when they unpickle any of its kernels, and the ``bench.py``
-and perfbench drivers import it, so every Spark entry path runs
-tuned; ``import engine`` alone changes no allocator state.
+Importing ``jobs`` tunes the process's allocators and its zip import
+cache. Spark workers import it when they unpickle any of its kernels,
+and the ``bench.py`` and perfbench drivers import it, so every Spark
+entry path runs tuned; ``import engine`` alone changes no process
+state.
 """
 
 import ctypes
@@ -40,5 +41,42 @@ def _tune_arrow() -> None:
         pass
 
 
+def _tune_zipimport() -> None:
+    """Re-read a zip archive's directory only when the archive changed.
+    PySpark calls ``importlib.invalidate_caches()`` before every task
+    (``pyspark.worker_util.setup_spark_files``), and before CPython 3.13
+    that makes each ``zipimporter`` re-read its whole archive: a worker
+    holding a dozen of them over pyspark.zip spent ~0.1 CPU-s of every
+    task there. The first call after this reads each archive once more
+    to record its stat; a changed or unreadable archive (new inode,
+    size or mtime) is still re-read by the stdlib method, and new
+    ``sys.path`` entries still get fresh finders. 3.13's method only
+    drops the cached directory, so it is left alone there."""
+    import os
+    import sys
+    import zipimport
+    if sys.version_info >= (3, 13):
+        return
+    reread = zipimport.zipimporter.invalidate_caches
+    seen = {}   # archive -> its stat when its directory was last read
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            key = (st.st_ino, st.st_size, st.st_mtime_ns)
+        except OSError:
+            key = None
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if key is not None and seen.get(self.archive) == key \
+                and files is not None:
+            self._files = files
+            return
+        seen[self.archive] = key
+        reread(self)
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
 _tune_malloc()
 _tune_arrow()
+_tune_zipimport()

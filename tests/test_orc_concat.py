@@ -112,6 +112,24 @@ def test_merged_file_stats(tmp_path):
     assert fs[0]["n"] == want.num_rows  # root struct count
 
 
+def test_merged_sum_matches_one_write(tmp_path):
+    """Each input's total overflows int64, so its footer omits the sum;
+    the whole file's total fits. The merged footer folds the stripes,
+    as write_orc does, and keeps the sum (0) that one write of the six
+    rows keeps."""
+    t = pa.table({"i": pa.array([4 * 10 ** 18] * 3 + [-4 * 10 ** 18] * 3,
+                                type=pa.int64())})
+    a, b, w, m = (str(tmp_path / f"{n}.orc") for n in "abwm")
+    write_orc(t.slice(0, 3), a, stripe_rows=1)
+    write_orc(t.slice(3), b, stripe_rows=1)
+    write_orc(t, w, stripe_rows=1)
+    assert "sum" not in read_orc_tail(a).file_stats()[1]
+    concat_orc([a, b], m)
+    whole = read_orc_tail(w).file_stats()
+    assert whole[1]["sum"] == 0
+    assert read_orc_tail(m).file_stats() == whole
+
+
 def test_nan_poisoned_float_stays_omitted(tmp_path):
     """An input whose float column omitted min/max (NaN convention)
     must poison the merged file stat — bounds built from the clean

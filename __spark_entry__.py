@@ -248,188 +248,129 @@ def _str_codec_query(col_expr: str, out_name: str, mode: str):
     return q
 
 
-def _q_float_roundtrip(spark, sf_dir):
-    """T1 float/double codec: events.value through raw IEEE streams."""
-    import numpy as np
+# ---------------------------------------------------------------------------
+# per-type round trips through the ORC file writer and reader
+# ---------------------------------------------------------------------------
+
+def _orc_file_roundtrip(tbl):
+    """``tbl`` written by engine.orc_file.write_orc (zlib, 1,000-row
+    row groups) to a task-local temp file and read back by
+    engine.orc_read.read_orc: the per-type ORC streams that
+    write_orc_dir, read_orc_dir and orcx run."""
+    import os
+    import tempfile
+
+    from engine.orc_file import write_orc
+    from engine.orc_read import read_orc
+    fd, path = tempfile.mkstemp(suffix=".orc")
+    os.close(fd)
+    try:
+        write_orc(tbl, path, row_index_stride=1000, compression="zlib")
+        return read_orc(path)
+    finally:
+        os.unlink(path)
+
+
+def _orc_roundtrip_kernel(batches):
+    """A task's rows through :func:`_orc_file_roundtrip`, cast back to
+    the input Arrow schema."""
     import pyarrow as pa
-    from engine.types import decode_floats, encode_floats
+    parts = [b for b in batches if b.num_rows]
+    if parts:
+        tbl = pa.Table.from_batches(parts)
+        yield from _orc_file_roundtrip(tbl).cast(tbl.schema).to_batches()
 
-    def kernel(batches):
-        for b in batches:
-            v = b.column("value").to_numpy()
-            dec = decode_floats(encode_floats(v, double=True), len(v))
-            yield pa.RecordBatch.from_arrays(
-                [b.column("event_id"), pa.array(dec, type=pa.float64())],
-                names=["event_id", "value"])
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")         .select("event_id", "value")
-    return ev.mapInArrow(kernel, "event_id bigint, value double")
+def _via_orc(df: DataFrame) -> DataFrame:
+    """``df`` with every task's rows round-tripped through an ORC
+    file (:func:`_orc_roundtrip_kernel`); the schema is unchanged."""
+    return df.mapInArrow(_orc_roundtrip_kernel, df.schema)
+
+
+def _q_float_roundtrip(spark, sf_dir):
+    """T1 double: events.value through an ORC DOUBLE column (raw
+    IEEE-754 DATA stream)."""
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    return _via_orc(ev.select("event_id", "value"))
 
 
 def _q_timestamp_roundtrip(spark, sf_dir):
-    """T3 timestamp codec: events.ts through the seconds-from-2015 +
-    trailing-zero-nanos stream pair; returned as epoch micros."""
-    import numpy as np
-    import pyarrow as pa
-    from engine.types import decode_timestamp, encode_timestamp
-
-    def kernel(batches):
-        for b in batches:
-            us = b.column("ts_us").to_numpy().astype(np.int64)
-            data, sec = encode_timestamp(us * 1000)
-            dec = decode_timestamp(data, sec, len(us)) // 1000
-            yield pa.RecordBatch.from_arrays(
-                [b.column("event_id"), pa.array(dec, type=pa.int64())],
-                names=["event_id", "ts_us"])
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    """T3 timestamp: events.ts through an ORC TIMESTAMP column
+    (seconds from the 2015 epoch + trailing-zero nanos), returned as
+    epoch micros."""
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    return _via_orc(ev.select("event_id", "ts")).select(
         "event_id",
         F.expr("timestampdiff(MICROSECOND, "
                "TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)").alias("ts_us"))
-    return ev.mapInArrow(kernel, "event_id bigint, ts_us bigint")
 
 
 def _q_char_varchar(spark, sf_dir):
-    """S5 char/varchar semantics: CHAR(8) pad + VARCHAR(5) truncate of
-    events.event_type through the binary length-stream codec."""
-    import numpy as np
-    import pyarrow as pa
-    from engine.strings import arrow_bytes_lengths
-    from engine.types import decode_char, encode_char
-
-    def kernel(batches):
-        for b in batches:
-            arr = b.column("event_type")
-            data, lens = arrow_bytes_lengths(arr)
-            c8 = decode_char(encode_char(data, lens, 8, pad=True),
-                             len(arr))
-            v5 = decode_char(encode_char(data, lens, 5, pad=False),
-                             len(arr))
-            yield pa.RecordBatch.from_arrays(
-                [b.column("event_id"), c8.cast(pa.string()),
-                 v5.cast(pa.string())],
-                names=["event_id", "char8", "varchar5"])
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")         .select("event_id", "event_type")
-    return ev.mapInArrow(kernel,
-                         "event_id bigint, char8 string, varchar5 string")
+    """S5 char/varchar: CHAR(8) pad and VARCHAR(5) truncate of
+    events.event_type, applied by Spark as the oracle does, through
+    ORC string columns."""
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    return _via_orc(ev.select(
+        "event_id",
+        F.expr("rpad(substr(event_type, 1, 8), 8, ' ')").alias("char8"),
+        F.expr("substr(event_type, 1, 5)").alias("varchar5")))
 
 
 def _q_date_roundtrip(spark, sf_dir):
-    """T4 date codec: derived days-since-1970 (negatives included)
-    through the RLEv2-signed date stream."""
-    import numpy as np
-    import pyarrow as pa
-    from engine.types import decode_date, encode_date
-
-    def kernel(batches):
-        for b in batches:
-            v = b.column("days").to_numpy().astype(np.int64)
-            dec = decode_date(encode_date(v), len(v))
-            yield pa.RecordBatch.from_arrays(
-                [b.column("doc_id"), pa.array(dec, type=pa.int64())],
-                names=["doc_id", "days"])
-
+    """T4 date: derived pre-1970 dates through an ORC DATE column
+    (RLEv2 signed days), returned as days since 1970."""
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("doc_id"),
-        (F.col("n_chars").cast("long") - 20000).alias("days"))
-    return docs.mapInArrow(kernel, "doc_id string, days bigint")
+        F.expr("date_from_unix_date(CAST(n_chars - 20000 AS INT))")
+        .alias("d"))
+    return _via_orc(docs).select(
+        "doc_id", F.expr("CAST(unix_date(d) AS BIGINT)").alias("days"))
 
 
 def _q_decimal64_roundtrip(spark, sf_dir):
-    """T2 decimal64 fast path: derived unscaled longs through the
-    RLEv2-signed decimal stream (scale lives in the declared type)."""
-    import numpy as np
-    import pyarrow as pa
-    from engine.types import decode_decimal64, encode_decimal64
-
-    def kernel(batches):
-        for b in batches:
-            v = b.column("unscaled").to_numpy().astype(np.int64)
-            dec = decode_decimal64(encode_decimal64(v), len(v))
-            yield pa.RecordBatch.from_arrays(
-                [b.column("doc_id"), pa.array(dec, type=pa.int64())],
-                names=["doc_id", "unscaled"])
-
+    """T2 decimal64: a derived decimal(18,0) through an ORC DECIMAL
+    column (varint mantissas + scale stream), returned as the
+    unscaled long."""
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("doc_id"),
         (F.col("n_chars").cast("long") * 1000003 - 77777)
-        .alias("unscaled"))
-    return docs.mapInArrow(kernel, "doc_id string, unscaled bigint")
+        .cast("decimal(18,0)").alias("d"))
+    return _via_orc(docs).select(
+        "doc_id", F.col("d").cast("long").alias("unscaled"))
 
 
 def _q_decimal128_roundtrip(spark, sf_dir):
-    """T2 decimal128: ~2^90 mantissas through the unbounded zigzag
-    varint stream + RLEv2 scale (engine/decimal128.py); values
-    returned as decimal strings both engines format identically."""
-    import numpy as np
-    import pyarrow as pa
-
-    def kernel(batches):
-        from engine import decimal128 as D
-        for b in batches:
-            nc = b.column("n_chars").to_numpy().astype(np.int64)
-            base = nc.astype(object) * 31 + 7
-            sign = np.where(nc % 2 == 0, -1, 1).astype(object)
-            vals = [int(s * v ** 4 * 99991)
-                    for s, v in zip(sign, base)]
-            lo, hi = D.limbs_from_ints(vals)
-            enc = D.encode_decimal128(
-                lo, hi, scales=np.full(len(vals), 4, dtype=np.int64))
-            lo2, hi2, sc = D.decode_decimal128(enc, len(vals))
-            out = [str(v) for v in D.ints_from_limbs(lo2, hi2)]
-            yield pa.RecordBatch.from_arrays(
-                [b.column("doc_id"), pa.array(out, type=pa.string()),
-                 pa.array(sc.astype(np.int32))],
-                names=["doc_id", "mantissa", "scale"])
-
+    """T2 decimal128: decimal(38,4) values whose mantissas reach past
+    2^64, through an ORC DECIMAL column (engine/decimal128.py
+    varints), returned as the mantissa's decimal string and the
+    declared scale."""
+    b = "CAST(n_chars * 31 + 7 AS DECIMAL(38,0))"
     docs = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("doc_id"), "n_chars")
-    return docs.mapInArrow(
-        kernel, "doc_id string, mantissa string, scale int")
+        F.col("doc_id").cast("string").alias("doc_id"),
+        F.expr(f"CAST(IF(n_chars % 2 = 0, -1, 1) * {b} * {b} * {b} * {b}"
+               " * 99991 * 0.0001 AS DECIMAL(38,4))").alias("d"))
+    return _via_orc(docs).select(
+        "doc_id",
+        F.expr("CAST(CAST(d * 10000 AS DECIMAL(38,0)) AS STRING)")
+        .alias("mantissa"),
+        F.lit(4).alias("scale"))
 
 
 def _q_binary_roundtrip(spark, sf_dir):
-    """T5 binary: UTF-8 bytes of a text prefix through the
-    DATA + LENGTH(RLEv2) stream pair."""
-    import numpy as np
-    import pyarrow as pa
-
-    def kernel(batches):
-        from engine.strings import arrow_bytes_lengths, strings_from_bytes
-        from engine.types import decode_binary, encode_binary
-        for b in batches:
-            arr = b.column("payload")
-            data, lens = arrow_bytes_lengths(arr)
-            enc = encode_binary(data, lens)
-            ddata, dlens = decode_binary(enc, len(arr))
-            out = strings_from_bytes(
-                np.asarray(ddata, dtype=np.uint8), dlens)
-            yield pa.RecordBatch.from_arrays(
-                [b.column("doc_id"), out.cast(pa.string())],
-                names=["doc_id", "payload"])
-
+    """T5 binary: UTF-8 bytes of a text prefix through an ORC BINARY
+    column (DATA + LENGTH streams), decoded back to text."""
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.encode(F.expr("substr(text, 1, 50)"), "UTF-8").alias("payload"))
-    return docs.mapInArrow(kernel, "doc_id string, payload string")
+    return _via_orc(docs).select(
+        "doc_id", F.decode("payload", "UTF-8").alias("payload"))
 
 
 def _q_map_roundtrip(spark, sf_dir):
-    """T6 MAP codec: a derived variable-size map<string,bigint> column
-    through the LENGTH + key/value child stream decomposition
-    (engine/maps.py, javap/MapTreeWriter.txt:3-6), then exploded to
-    entries so the ANSI oracle needs no map support."""
-    import pyarrow as pa
-
-    def kernel(batches):
-        from engine.maps import decode_map, encode_map
-        for b in batches:
-            m = b.column("m")
-            back = decode_map(encode_map(m), len(m))
-            yield pa.RecordBatch.from_arrays(
-                [b.column("doc_id"), back], names=["doc_id", "m"])
-
+    """T6 MAP: a derived variable-size map<string,bigint> through an
+    ORC MAP column (LENGTH + key/value child columns,
+    javap/MapTreeWriter.txt:3-6), then exploded to entries so the
+    ANSI oracle needs no map support."""
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.map_from_arrays(
@@ -437,8 +378,8 @@ def _q_map_roundtrip(spark, sf_dir):
                    "i -> concat('k', i))"),
             F.expr("transform(sequence(0, n_chars % 3), "
                    "i -> CAST(n_chars * (i + 1) AS BIGINT))")).alias("m"))
-    dec = docs.mapInArrow(kernel, "doc_id string, m map<string,bigint>")
-    return dec.select("doc_id", F.explode("m").alias("key", "value"))
+    return _via_orc(docs).select(
+        "doc_id", F.explode("m").alias("key", "value"))
 
 
 def _q_bloom_check(spark, sf_dir):
@@ -494,51 +435,54 @@ def _q_wrapped_roundtrip(spark, sf_dir):
                     lambda a, x: a + x).alias("tok_sum"))
 
 
-def _q_union_roundtrip(spark, sf_dir):
-    """T8 union: tag byte-RLE stream + per-branch child streams
-    (int branch via RLEv2, string branch via DATA+LENGTH), split and
-    scattered back by tag (engine/union.py)."""
+def _union_file_kernel(batches):
+    """The T8 union kernel: per task, an ORC UNION column (tag from
+    the ``tag`` column; variant 0 the int64 ``iv``, variant 1 the
+    string ``sv``) goes with the task's other columns through
+    :func:`_orc_file_roundtrip`, and the dense union read_orc returns
+    is re-extracted to plain u_tag, u_int and u_str columns. Spark has
+    no union type, so the union lives in the file and the kernel."""
     import numpy as np
     import pyarrow as pa
+    parts = [b for b in batches if b.num_rows]
+    if not parts:
+        return
+    tbl = pa.Table.from_batches(parts).combine_chunks()
+    keys = tbl.drop_columns(["tag", "iv", "sv"])
+    u = pa.UnionArray.from_sparse(
+        tbl.column("tag").combine_chunks().cast(pa.int8()),
+        [tbl.column("iv").combine_chunks().cast(pa.int64()),
+         tbl.column("sv").combine_chunks().cast(pa.string())])
+    back = _orc_file_roundtrip(keys.append_column("u", u))
+    bu = back.column("u").combine_chunks()
+    tags = np.asarray(bu.type_codes).astype(np.int32)
+    offs = np.asarray(bu.offsets, dtype=np.int64)
+    m0 = tags == 0
+    u_int = np.zeros(len(tags), dtype=np.int64)
+    u_int[m0] = np.asarray(bu.field(0), dtype=np.int64)[offs[m0]]
+    u_str = bu.field(1).take(pa.array(offs, mask=m0))
+    back = back.drop_columns(["u"]).cast(keys.schema)
+    yield pa.record_batch(
+        [c.combine_chunks() for c in back.columns]
+        + [pa.array(tags), pa.array(u_int, mask=~m0), u_str],
+        names=back.column_names + ["u_tag", "u_int", "u_str"])
 
-    def kernel(batches):
-        from engine import rle2, union
-        from engine.strings import arrow_bytes_lengths, strings_from_bytes
-        from engine.types import decode_binary, encode_binary
-        for b in batches:
-            tags = b.column("tag").to_numpy().astype(np.uint8)
-            n = len(tags)
-            iv = b.column("iv").to_numpy().astype(np.int64)
-            sv = b.column("sv")
-            # encode: TAG stream + branch children holding only their rows
-            tstream = union.encode_tags(tags)
-            b0 = rle2.encode_rlev2(iv[tags == 0], signed=True)
-            sdata, slens = arrow_bytes_lengths(
-                sv.filter(pa.array(tags == 1)).cast("large_string"))
-            b1 = encode_binary(sdata, slens)
-            # decode: tags -> branch decode -> scatter
-            dtags = union.decode_tags(tstream, n)
-            n0 = int((dtags == 0).sum())
-            v0 = rle2.decode_rlev2(b0, n0, signed=True)
-            ddata, dlens = decode_binary(b1, n - n0)
-            s1 = strings_from_bytes(
-                np.asarray(ddata, dtype=np.uint8), dlens)
-            out = np.empty(n, dtype=object)
-            out[dtags == 0] = [str(x) for x in v0.tolist()]
-            out[dtags == 1] = s1.to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [b.column("doc_id"),
-                 pa.array(dtags.astype(np.int32)),
-                 pa.array(out.tolist(), type=pa.string())],
-                names=["doc_id", "tag", "value"])
 
+def _q_union_roundtrip(spark, sf_dir):
+    """T8 union: a union of n_chars * 3 + 1 (tag 0) and source (tag
+    1) built in the kernel, through an ORC UNION column (tag byte-RLE
+    DATA + one child column per tag, :func:`_union_file_kernel`)."""
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.pmod("n_chars", F.lit(2)).cast("int").alias("tag"),
         (F.col("n_chars").cast("long") * 3 + 1).alias("iv"),
         F.col("source").alias("sv"))
-    return docs.mapInArrow(kernel,
-                           "doc_id string, tag int, value string")
+    dec = docs.mapInArrow(
+        _union_file_kernel,
+        "doc_id string, u_tag int, u_int bigint, u_str string")
+    return dec.select(
+        "doc_id", F.col("u_tag").alias("tag"),
+        F.coalesce(F.col("u_int").cast("string"), "u_str").alias("value"))
 
 
 def _q_stride_seek(spark, sf_dir):
@@ -880,60 +824,20 @@ def _q_orc_rowgroup_seek(spark, sf_dir):
 def _q_orc_union_file(spark, sf_dir):
     """T8 as a *file* surface: each partition derives an ORC UNION
     column (tag = n_tok % 2 — variant 0 carries int64 n_tok, variant 1
-    carries string doc_id), writes a real zlib .orc file with the
-    engine writer (tag byte-RLE DATA + dense per-tag children,
-    engine/orc_file.py), reads it back with the engine reader
-    (engine/orc_read.py -> dense Arrow union), and re-extracts the
-    variants to plain columns. Spark has no union type, so the union
-    lives in the file and the Arrow kernel; DuckDB recomputes the
-    extraction arithmetic directly."""
-    import os
-    import tempfile
-
-    tok = (_token_df(spark, sf_dir).select("doc_id", "n_tok")
-           .repartition(4))
-    ddl = ("doc_id string, n_tok int, u_tag int, u_int long, "
-           "u_str string")
-
-    def kernel(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from engine.orc_file import write_orc
-        from engine.orc_read import read_orc
-        parts = [b for b in batches if b.num_rows]
-        if not parts:
-            return
-        tbl = pa.Table.from_batches(parts).combine_chunks()
-        ntok = np.asarray(tbl.column("n_tok"), dtype=np.int64)
-        tags = (ntok % 2).astype(np.int8)
-        u = pa.UnionArray.from_sparse(
-            pa.array(tags),
-            [pa.array(ntok),
-             tbl.column("doc_id").combine_chunks().cast(pa.string())])
-        path = os.path.join(tempfile.mkdtemp(prefix="orc_union_"),
-                            "part.orc")
-        write_orc(pa.table({"doc_id": tbl.column("doc_id"),
-                            "n_tok": tbl.column("n_tok"), "u": u}),
-                  path, row_index_stride=1000, compression="zlib")
-        back = read_orc(path)
-        os.unlink(path)
-        bu = back.column("u").combine_chunks()
-        btags = np.asarray(bu.type_codes).astype(np.int64)
-        offs = np.asarray(bu.offsets, dtype=np.int64)
-        m0 = btags == 0
-        ints = np.asarray(bu.field(0), dtype=np.int64)
-        u_int = np.zeros(len(btags), dtype=np.int64)
-        u_int[m0] = ints[offs[m0]]
-        u_str = bu.field(1).take(pa.array(offs, mask=m0))
-        yield pa.record_batch(
-            [back.column("doc_id").combine_chunks(),
-             back.column("n_tok").combine_chunks(),
-             pa.array(btags.astype(np.int32)),
-             pa.array(u_int, mask=~m0), u_str],
-            names=["doc_id", "n_tok", "u_tag", "u_int", "u_str"])
-
-    return tok.mapInArrow(kernel, ddl)
+    carries string doc_id) and writes it beside doc_id and n_tok to a
+    real zlib .orc file with the engine writer (tag byte-RLE DATA +
+    dense per-tag children, engine/orc_file.py), reads it back with
+    the engine reader (engine/orc_read.py -> dense Arrow union), and
+    re-extracts the variants to plain columns (the write/read step of
+    union_roundtrip, :func:`_union_file_kernel`); DuckDB recomputes
+    the extraction arithmetic directly."""
+    tok = (_token_df(spark, sf_dir).select(
+        "doc_id", "n_tok", (F.col("n_tok") % 2).alias("tag"),
+        F.col("n_tok").alias("iv"), F.col("doc_id").alias("sv"))
+        .repartition(4))
+    return tok.mapInArrow(_union_file_kernel,
+                          "doc_id string, n_tok int, u_tag int, "
+                          "u_int long, u_str string")
 
 
 def _q_orc_lz4_interop(spark, sf_dir):
@@ -1153,13 +1057,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fsst_roundtrip_docid": _str_codec_query(
             "concat(source, '/', CAST(doc_id AS STRING), '/', "
             "CAST(n_chars AS STRING))", "key", "fsst"),   # S4
-        # per-type encoders (SURVEY.md §2.4)
+        # per-type ORC columns (SURVEY.md §2.4), each task's rows
+        # through write_orc -> read_orc
         "float_roundtrip": _q_float_roundtrip,            # T1
         "timestamp_roundtrip": _q_timestamp_roundtrip,    # T3
         "char_varchar_roundtrip": _q_char_varchar,        # S5
         "date_roundtrip": _q_date_roundtrip,              # T4
-        "decimal64_roundtrip": _q_decimal64_roundtrip,    # T2 (fast path)
-        "decimal128_roundtrip": _q_decimal128_roundtrip,  # T2 (big-int)
+        "decimal64_roundtrip": _q_decimal64_roundtrip,    # T2 (18 digits)
+        "decimal128_roundtrip": _q_decimal128_roundtrip,  # T2 (38 digits)
         "binary_roundtrip": _q_binary_roundtrip,          # T5
         "map_roundtrip": _q_map_roundtrip,                # T6 (MAP)
         "union_roundtrip": _q_union_roundtrip,            # T8

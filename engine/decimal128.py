@@ -1,20 +1,21 @@
-"""T2 decimal128: unbounded zigzag base-128 varint mantissa (ORC
-DECIMAL DIRECT encoding) + RLEv2-signed scale stream.
+"""T2 decimal128: the unbounded zigzag base-128 varint mantissas of
+ORC's DECIMAL column, for the full 128-bit range (precision <= 38).
 
 The ORC v1 spec stores a decimal's unscaled value as "an unbounded
 length zigzag encoded base 128 varint" in DATA (orc-core
 SerializationUtils.writeBigInteger, javap/SerializationUtils.txt:21-22)
-with the per-value scale in SECONDARY. The decimal64 fast path
-(engine/types.py) covers precision <= 18; this module covers the full
-128-bit mantissa (precision <= 38) with numpy-vectorized two-limb
-(hi:int64, lo:uint64) arithmetic — no per-value Python in the hot loop.
+with the per-value scale in SECONDARY (RLEv2 signed). The ORC writer
+and reader (engine/orc_file.py, engine/orc_read.py) call these codecs
+for every decimal precision, with numpy-vectorized two-limb
+(hi:int64, lo:uint64) arithmetic — no per-value Python in the hot
+loop — and :func:`rescale_limbs` brings orc-core's per-value scales
+to the declared one on read.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from . import rle2
 
 _MAX_GROUPS = 19  # ceil(129 bits / 7): zigzag of a 128-bit value
 
@@ -95,39 +96,6 @@ def decode_unbounded_varints(buf, n: int) -> tuple[np.ndarray, np.ndarray]:
                 zhi[m] |= g >> np.uint64(64 - shift)
     lo, hi = _unzigzag128(zlo, zhi)
     return lo, hi
-
-
-def limbs_from_ints(values) -> tuple[np.ndarray, np.ndarray]:
-    """Python ints (|v| < 2^127) -> (lo, hi) limb arrays."""
-    lo = np.array([v & 0xFFFFFFFFFFFFFFFF for v in values],
-                  dtype=np.uint64)
-    hi = np.array([(v >> 64) & 0xFFFFFFFFFFFFFFFF for v in values],
-                  dtype=np.uint64).view(np.int64)
-    return lo, hi
-
-
-def ints_from_limbs(lo: np.ndarray, hi: np.ndarray) -> list[int]:
-    return [(int(h) << 64) | int(l)
-            for l, h in zip(lo.tolist(), hi.view(np.int64).tolist())]
-
-
-def encode_decimal128(lo, hi, scales=None) -> dict:
-    """DATA = unbounded zigzag varints; SECONDARY = RLEv2 signed scale
-    per value (as ORC's DecimalTreeWriter)."""
-    lo = np.ascontiguousarray(lo, dtype=np.uint64)
-    out = {"data": encode_unbounded_varints(lo, hi)}
-    if scales is not None:
-        out["secondary"] = rle2.encode_rlev2(
-            np.asarray(scales, dtype=np.int64), signed=True)
-    return out
-
-
-def decode_decimal128(enc: dict, n: int):
-    lo, hi = decode_unbounded_varints(enc["data"], n)
-    scales = None
-    if enc.get("secondary") is not None:
-        scales = rle2.decode_rlev2(enc["secondary"], n, signed=True)
-    return lo, hi, scales
 
 
 def rescale_limbs(lo: np.ndarray, hi: np.ndarray,

@@ -1,8 +1,12 @@
-"""Per-type encoders beyond the token-table core (SURVEY.md §2.4
-T1-T5, S5): float/double, date, timestamp, decimal64, binary,
-char/varchar. Stream layouts follow the ORC v1 spec; each has a
-cross-implementation decode test against files written by ORC C++
-(tests/test_types.py).
+"""Per-type ORC stream codecs beyond the token-table core (SURVEY.md
+§2.4 T1, T3, T4) that the ORC writer and reader (engine/orc_file.py,
+engine/orc_read.py) call: float/double DATA bytes, date days, and the
+timestamp DATA + SECONDARY pair with its two pre-1970 conventions.
+Decimal mantissas live in engine/decimal128.py; the writer emits a
+binary column's DATA + LENGTH pair itself; char and varchar values
+are string columns (engine/strings.py). Stream layouts follow the
+ORC v1 spec; tests/test_types.py round-trips each type through
+write_orc/read_orc and reads files ORC C++ and orc-core wrote.
 """
 
 from __future__ import annotations
@@ -10,10 +14,7 @@ from __future__ import annotations
 import numpy as np
 
 from . import rle2
-from ._util import cumsum0
-from .strings import strings_from_bytes
 
-MILLIS_PER_SECOND = 1000  # javap/TimestampTreeWriter.txt:4
 # ORC timestamp epoch: 2015-01-01 00:00:00 UTC
 # (javap/TimestampTreeWriter.txt:3 BASE_TIMESTAMP_STRING)
 BASE_TIMESTAMP_EPOCH = 1420070400
@@ -35,10 +36,6 @@ def decode_floats(buf, n: int, double: bool = True) -> np.ndarray:
 
 def encode_date(days) -> np.ndarray:
     return rle2.encode_rlev2(np.asarray(days, dtype=np.int64), signed=True)
-
-
-def decode_date(buf, n: int) -> np.ndarray:
-    return rle2.decode_rlev2(buf, n, signed=True)
 
 
 # --- T3: timestamp — DATA seconds from 2015 epoch (signed RLEv2) +
@@ -96,21 +93,13 @@ def encode_timestamp(epoch_nanos, convention: str = "cpp"
     return data, secondary
 
 
-def decode_timestamp(data, secondary, n: int,
-                     convention: str = "cpp") -> np.ndarray:
-    secs = rle2.decode_rlev2(data, n, signed=True)
-    enc = rle2.decode_rlev2(secondary, n, signed=False)
-    return timestamp_from_parts(secs, enc, convention)
-
-
 def timestamp_from_parts(secs_rel: np.ndarray, enc: np.ndarray,
                          convention: str = "cpp") -> np.ndarray:
     """Combine decoded DATA (seconds relative to the 2015 epoch) and
-    SECONDARY (packed nanos) arrays into epoch nanos — the stream-
-    independent half of :func:`decode_timestamp`, used by the ORC
-    stripe decoder, which decodes the two streams itself (under the
-    column's RLE version, from a row group's positions or from each
-    stream's beginning)."""
+    SECONDARY (packed nanos) arrays into epoch nanos — the inverse of
+    :func:`encode_timestamp` once the ORC stripe decoder has decoded
+    the two streams (under the column's RLE version, from a row
+    group's positions or from each stream's beginning)."""
     secs = secs_rel + BASE_TIMESTAMP_EPOCH
     zeros = (enc & 7).astype(np.int64)          # two's-complement & : 0..7
     vals = (enc >> 3).astype(np.int64)          # arithmetic shift: signed
@@ -121,65 +110,3 @@ def timestamp_from_parts(secs_rel: np.ndarray, enc: np.ndarray,
         secs = np.where((secs < 0) & (nanos // 1_000_000 > 0),
                         secs - 1, secs)
     return secs * 1_000_000_000 + nanos
-
-
-# --- T2: decimal64 — RLEv2 unscaled values + declared (precision, scale) --
-
-def encode_decimal64(unscaled) -> np.ndarray:
-    """Decimal64 fast path (precision <= 18, orc-core
-    Decimal64TreeWriter): one RLEv2 signed stream of unscaled longs;
-    the scale lives in the declared type, not the stream."""
-    return rle2.encode_rlev2(np.asarray(unscaled, dtype=np.int64),
-                             signed=True)
-
-
-def decode_decimal64(buf, n: int) -> np.ndarray:
-    return rle2.decode_rlev2(buf, n, signed=True)
-
-
-# --- T5: binary — DATA bytes + LENGTH RLEv2 -------------------------------
-
-def encode_binary(data: np.ndarray, lengths) -> dict:
-    return {"data": np.ascontiguousarray(data, dtype=np.uint8),
-            "length": rle2.encode_rlev2(
-                np.asarray(lengths, dtype=np.int64), signed=False)}
-
-
-def decode_binary(enc: dict, n: int) -> tuple[np.ndarray, np.ndarray]:
-    lengths = rle2.decode_rlev2(enc["length"], n, signed=False)
-    return np.frombuffer(bytes(enc["data"]), dtype=np.uint8), lengths
-
-
-# --- S5: char / varchar — string streams with pad / truncate --------------
-
-def apply_char_semantics(data: np.ndarray, lengths: np.ndarray,
-                         width: int, pad: bool) -> tuple[np.ndarray,
-                                                         np.ndarray]:
-    """CHAR(pad=True) right-pads with spaces; VARCHAR truncates to the
-    declared width. Byte-width semantics (ASCII widths), vectorized."""
-    lengths = np.asarray(lengths, dtype=np.int64)
-    n = len(lengths)
-    offs = cumsum0(lengths)
-    new_len = np.minimum(lengths, width) if not pad \
-        else np.full(n, width, dtype=np.int64)
-    out = np.full(int(new_len.sum()), ord(" "), dtype=np.uint8)
-    new_offs = cumsum0(new_len)
-    take = np.minimum(lengths, width)
-    # gather the kept prefix of each value
-    from ._util import span_positions
-    out[span_positions(new_offs[:-1], take)] = \
-        data[span_positions(offs[:-1], take)]
-    return out, new_len
-
-
-def encode_char(arr_data: np.ndarray, lengths, width: int,
-                pad: bool = True) -> dict:
-    data, new_len = apply_char_semantics(
-        np.asarray(arr_data, dtype=np.uint8),
-        np.asarray(lengths, dtype=np.int64), width, pad)
-    return encode_binary(data, new_len)
-
-
-def decode_char(enc: dict, n: int):
-    data, lengths = decode_binary(enc, n)
-    return strings_from_bytes(data, lengths)

@@ -50,10 +50,13 @@ source would:
 * **Arrow batches** — ``read()`` yields and the writers take pyarrow
   RecordBatches, so rows never pass through Python objects.
 * **Commit protocol** — each write task publishes one uniquely-named
-  part file (jobs.orc_write.write_part); ``commit()`` writes a
-  ``_SUCCESS`` manifest and, in overwrite mode, only then removes the
-  older part files; ``abort()`` removes this job's files. A crashed
-  job leaves the previous contents intact.
+  part file (jobs.orc_write.write_part); ``commit()`` publishes the
+  ``_SUCCESS`` manifest atomically (engine._util.publish: a temp file
+  and ``os.replace``) and, in overwrite mode, only then removes the
+  older part files; ``abort()`` removes this job's files. A job that
+  fails before its manifest is published leaves the previous
+  snapshot, manifest and parts, intact; the streaming writer
+  publishes each epoch's ``_manifest-<batch>.json`` the same way.
 
 Path contract: paths must be visible to driver and tasks (shared FS
 or local mode), same as jobs/orc_write.py.
@@ -383,6 +386,16 @@ def _publish(batches: Iterator, out_dir: str, write_kw: dict,
     return OrcCommitMessage(path if n_rows else "", n_rows, n_bytes)
 
 
+def _write_manifest(path: str, done: list[OrcCommitMessage]) -> None:
+    """Publish the manifest at ``path``: one JSON line per committed
+    part file, written whole or not at all (engine._util.publish)."""
+    from engine._util import publish
+    with publish(path) as tmp, open(tmp, "w") as f:
+        for m in done:
+            f.write(json.dumps({"path": m.path, "n_rows": m.n_rows,
+                                "n_bytes": m.n_bytes}) + "\n")
+
+
 class OrcEngineWriter(DataSourceArrowWriter):
     def __init__(self, path: str, options, overwrite: bool):
         self._dir = path
@@ -397,17 +410,15 @@ class OrcEngineWriter(DataSourceArrowWriter):
         # skip empty-task sentinels (path="") and any None a future
         # API version might surface
         done = [m for m in messages if m is not None and m.path]
-        kept = {m.path for m in done}
+        _write_manifest(os.path.join(self._dir, "_SUCCESS"), done)
         if self._overwrite:
-            # swap AFTER success: a crashed job leaves old data intact
+            # swap AFTER the new manifest is published: a job that
+            # fails before this point leaves the old snapshot intact
+            kept = {m.path for m in done}
             for f in os.listdir(self._dir):
                 full = os.path.join(self._dir, f)
                 if f.endswith(".orc") and full not in kept:
                     os.remove(full)
-        with open(os.path.join(self._dir, "_SUCCESS"), "w") as f:
-            for m in done:
-                f.write(json.dumps({"path": m.path, "n_rows": m.n_rows,
-                                    "n_bytes": m.n_bytes}) + "\n")
 
     def abort(self, messages: List[Optional[OrcCommitMessage]]) -> None:
         for m in messages:
@@ -542,12 +553,9 @@ class OrcEngineStreamWriter(DataSourceStreamArrowWriter):
         return _publish(iterator, self._dir, self._write_kw, "stream")
 
     def commit(self, messages, batchId: int) -> None:
-        done = [m for m in messages if m is not None and m.path]
-        with open(os.path.join(self._dir,
-                               f"_manifest-{batchId:010d}.json"), "w") as f:
-            for m in done:
-                f.write(json.dumps({"path": m.path, "n_rows": m.n_rows,
-                                    "n_bytes": m.n_bytes}) + "\n")
+        _write_manifest(
+            os.path.join(self._dir, f"_manifest-{batchId:010d}.json"),
+            [m for m in messages if m is not None and m.path])
 
     def abort(self, messages, batchId: int) -> None:
         for m in messages:

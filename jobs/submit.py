@@ -8,7 +8,7 @@ Build the dependency zip once:
 Then run against any cluster master:
 
     spark-submit --py-files dist/engine.zip jobs/submit.py \
-        encode --input <parquet> --output <blocks-table> [--codec zlib]
+        encode --input <parquet> --output <blocks-table> [--codec mixed]
     spark-submit --py-files dist/engine.zip jobs/submit.py \
         decode --blocks <blocks-table> --output <parquet>
     spark-submit --py-files dist/engine.zip jobs/submit.py \
@@ -59,7 +59,7 @@ def _spark(app: str):
     return SparkSession.builder.appName(app).getOrCreate()
 
 
-def main(argv: list[str] | None = None) -> int:
+def _parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="orc-format-spark")
     sub = p.add_subparsers(dest="cmd", required=True)
 
@@ -69,7 +69,7 @@ def main(argv: list[str] | None = None) -> int:
     se = sub.add_parser("encode")
     se.add_argument("--input", required=True)
     se.add_argument("--output", required=True)
-    se.add_argument("--codec", default="zlib")
+    se.add_argument("--codec", default="mixed")
     se.add_argument("--partitions", type=int, default=None)
     se.add_argument("--no-resume", action="store_true")
 
@@ -148,8 +148,11 @@ def main(argv: list[str] | None = None) -> int:
     ss.add_argument("--rows", type=int, default=100_000)
     ss.add_argument("--partitions", type=int, default=8)
     ss.add_argument("--seed", type=int, default=42)
+    return p
 
-    a = p.parse_args(argv)
+
+def main(argv: list[str] | None = None) -> int:
+    a = _parser().parse_args(argv)
 
     if a.cmd == "package":
         print(package(out=a.out))

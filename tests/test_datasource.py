@@ -376,6 +376,47 @@ def test_manifest_snapshot_read(spark_ds, orc_dir, tmp_path):
         list_orc_files(str(tmp_path), use_manifest=True)
 
 
+def test_overwrite_commit_failure_keeps_old_snapshot(
+        spark_ds, orc_dir, tmp_path, monkeypatch):
+    """The overwrite commit publishes _SUCCESS whole and only then
+    removes the older parts: when the manifest write raises part-way,
+    the previous snapshot still reads through use_manifest, and no
+    temp file is left in the directory."""
+    import jobs.datasource as ds
+    out = str(tmp_path / "ow_fail")
+    df = spark_ds.read.format("orcx").load(orc_dir).limit(100)
+    df.write.format("orcx").mode("overwrite").save(out)
+
+    def snapshot():
+        return sorted(map(tuple, spark_ds.read.format("orcx")
+                          .option("use_manifest", "true").load(out)
+                          .select("doc_id", "n_tok").collect()))
+    before = snapshot()
+    # a second overwrite job: two tasks publish their parts, then the
+    # driver's commit fails while writing the second manifest line
+    w = OrcEngineDataSource({"path": out}).writer(df.schema,
+                                                  overwrite=True)
+    new = pa.table({"doc_id": pa.array(["new"]),
+                    "n_tok": pa.array(np.array([1], np.int32))})
+    msgs = [w.write(iter(new.to_batches())) for _ in range(2)]
+    real_dumps, calls = json.dumps, []
+
+    def failing_dumps(obj):
+        calls.append(obj)
+        if len(calls) == 2:
+            raise OSError("injected manifest write failure")
+        return real_dumps(obj)
+    monkeypatch.setattr(ds.json, "dumps", failing_dumps)
+    with pytest.raises(OSError, match="injected"):
+        w.commit(msgs)
+    monkeypatch.undo()
+    assert len(calls) == 2
+    assert snapshot() == before
+    assert not [f for f in os.listdir(out) if f.endswith(".tmp")]
+    w.abort(msgs)   # what Spark runs after a failed commit
+    assert snapshot() == before
+
+
 def test_manifest_corruption_raises_even_with_user_schema(
         spark_ds, orc_dir, tmp_path):
     """A user-supplied schema must NOT turn manifest fail-loud

@@ -1,7 +1,9 @@
-"""T6 MAP codec (engine/maps.py) + MAP emission in engine/orc_file.py,
-cross-checked against ORC C++ (pyarrow.orc) and orc-core Java
+"""T6 MAP columns: emission in engine/orc_file.py and decode in
+engine/orc_read.py (LENGTH + key/value child columns), round-tripped
+and cross-checked against ORC C++ (pyarrow.orc) and orc-core Java
 (spark.read.orc)."""
 
+import os
 import tempfile
 
 import numpy as np
@@ -9,8 +11,10 @@ import pyarrow as pa
 import pyarrow.orc as orc
 import pytest
 
-from engine.maps import MAP_TYPE, decode_map, encode_map
+from engine.orc_file import write_orc
+from engine.orc_read import read_orc
 
+MAP_TYPE = pa.map_(pa.string(), pa.int64())
 RNG = np.random.default_rng(23)
 
 
@@ -28,20 +32,32 @@ def _map_array(n, null_rows=False, null_values=False):
     return pa.array(rows, type=MAP_TYPE)
 
 
+def _own(arr: pa.Array) -> pa.Array:
+    """``arr`` through write_orc -> read_orc."""
+    f = tempfile.mktemp(suffix=".orc")
+    write_orc(pa.table({"m": arr}), f, row_index_stride=500,
+              compression="zlib")
+    try:
+        return read_orc(f).column("m").combine_chunks()
+    finally:
+        os.unlink(f)
+
+
 @pytest.mark.parametrize("null_rows,null_values",
                          [(False, False), (True, False), (True, True)])
 def test_map_roundtrip(null_rows, null_values):
     arr = _map_array(3000, null_rows, null_values)
-    enc = encode_map(arr)
-    back = decode_map(enc, len(arr))
+    back = _own(arr)
+    assert back.null_count == arr.null_count
     assert back.to_pylist() == arr.to_pylist()
 
 
 def test_map_roundtrip_sliced():
+    # a sliced MapArray exposes its FULL children with window-absolute
+    # offsets; the writer must encode only the window's entries
     arr = _map_array(2000)
     sl = arr.slice(500, 800)
-    back = decode_map(encode_map(sl), 800)
-    assert back.to_pylist() == sl.to_pylist()
+    assert _own(sl).to_pylist() == sl.to_pylist()
 
 
 def test_map_decode_from_orc_cpp_streams():
@@ -88,7 +104,6 @@ def test_map_decode_from_orc_cpp_streams():
 
 
 def test_map_file_read_by_orc_cpp():
-    from engine.orc_file import write_orc
     arr = _map_array(3000, null_rows=True)
     t = pa.table({"doc_id": pa.array([f"d{i}" for i in range(3000)]),
                   "m": arr})
@@ -101,7 +116,6 @@ def test_map_file_read_by_orc_cpp():
 
 
 def test_map_file_read_by_orc_java(spark):
-    from engine.orc_file import write_orc
     arr = _map_array(1500)
     t = pa.table({"doc_id": pa.array([f"d{i:05d}" for i in range(1500)]),
                   "m": arr})

@@ -221,6 +221,18 @@ def test_submit_package_zip(tmp_path):
     assert not any(n.endswith((".pyc", ".parquet")) for n in names)
 
 
+def test_submit_encode_codec_defaults_to_encode_table():
+    """`submit.py encode` without --codec encodes as encode_table does
+    by default."""
+    import inspect
+
+    from jobs.encode import encode_table
+    from jobs.submit import _parser
+    a = _parser().parse_args(["encode", "--input", "i", "--output", "o"])
+    assert a.codec == \
+        inspect.signature(encode_table).parameters["codec"].default
+
+
 def test_bloom_point_lookup(spark, token_parquet, tmp_path):
     from jobs.decode import lookup_doc_ids
     out = str(tmp_path / "blocks")

@@ -1,15 +1,20 @@
-"""Per-type encoder tests (SURVEY.md §2.4): round-trips + cross-
-implementation decode of streams written by ORC C++ (pyarrow)."""
+"""Per-type ORC columns (SURVEY.md §2.4): round trips through the
+engine's writer and reader (engine/orc_file.py write_orc,
+engine/orc_read.py read_orc), cross-implementation reads of files ORC
+C++ (pyarrow) and orc-core (Spark) wrote, and stream-level pins of the
+codecs in engine/types.py."""
 
 import datetime
+import os
 import tempfile
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.orc as orc
-import pytest
 
 from engine import types as T
+from engine.orc_file import write_orc
+from engine.orc_read import read_orc
 from tests.orc_tail import parse_orc
 
 RNG = np.random.default_rng(31)
@@ -20,6 +25,30 @@ def _orc_stripe(arr, pa_type=None):
     col = pa.array(arr, type=pa_type)
     orc.write_table(pa.table({"x": col}), f, compression="uncompressed")
     return parse_orc(f)[0]
+
+
+def _own(col: pa.Array, **kw) -> pa.Array:
+    """``col`` through write_orc -> read_orc."""
+    f = tempfile.mktemp(suffix=".orc")
+    write_orc(pa.table({"x": col}), f, **kw)
+    try:
+        return read_orc(f).column("x").combine_chunks()
+    finally:
+        os.unlink(f)
+
+
+def _cpp(col: pa.Array) -> pa.Array:
+    """``col`` written by ORC C++, read by read_orc."""
+    f = tempfile.mktemp(suffix=".orc")
+    orc.write_table(pa.table({"x": col}), f)
+    try:
+        return read_orc(f).column("x").combine_chunks()
+    finally:
+        os.unlink(f)
+
+
+def _ns(col: pa.Array) -> np.ndarray:
+    return np.asarray(col.cast(pa.int64()), dtype=np.int64)
 
 
 # --- T1 float/double -------------------------------------------------------
@@ -48,15 +77,18 @@ def test_float_cross_impl():
 
 def test_date_roundtrip_and_cross_impl():
     days = RNG.integers(-30000, 30000, 1500)
-    assert np.array_equal(T.decode_date(T.encode_date(days), 1500), days)
-    dates = [datetime.date(1970, 1, 1) + datetime.timedelta(days=int(d))
-             for d in days]
-    s = _orc_stripe(dates, pa.date32())
-    dec = T.decode_date(s["streams"][(1, "DATA")], 1500)
-    assert np.array_equal(dec, days)
+    col = pa.array(days.astype(np.int32)).cast(pa.date32())
+    for back in (_own(col), _cpp(col)):
+        assert back.type == pa.date32()
+        assert np.array_equal(
+            np.asarray(back.cast(pa.int32()), dtype=np.int64), days)
 
 
 # --- T3 timestamp ----------------------------------------------------------
+
+def _ts(t: np.ndarray) -> pa.Array:
+    return pa.array(t, type=pa.timestamp("ns"))
+
 
 def test_timestamp_roundtrip():
     base = 1_700_000_000 * 1_000_000_000
@@ -68,9 +100,7 @@ def test_timestamp_roundtrip():
     ])
     t = base + RNG.integers(-10 ** 9, 10 ** 9, nanos.size) \
         * 1_000_000_000 + nanos
-    data, sec = T.encode_timestamp(t)
-    dec = T.decode_timestamp(data, sec, t.size)
-    assert np.array_equal(dec, t)
+    assert np.array_equal(_ns(_own(_ts(t), compression="zlib")), t)
 
 
 def test_timestamp_pre1970_roundtrip():
@@ -84,8 +114,7 @@ def test_timestamp_pre1970_roundtrip():
         np.zeros(400, dtype=np.int64)])
     t = secs * 1_000_000_000 + nanos
     t = np.append(t, [-1, -999_999_999, -500_000_000, 0, 1])
-    data, sec = T.encode_timestamp(t)
-    assert np.array_equal(T.decode_timestamp(data, sec, t.size), t)
+    assert np.array_equal(_ns(_own(_ts(t))), t)
 
 
 def test_timestamp_pre1970_cross_impl():
@@ -95,28 +124,30 @@ def test_timestamp_pre1970_cross_impl():
     secs = np.arange(-5000, -2, 7, dtype=np.int64)
     nanos = (np.arange(secs.size, dtype=np.int64) * 123_456_789) % 10 ** 9
     t = secs * 1_000_000_000 + nanos
-    s = _orc_stripe(t.view("datetime64[ns]"), pa.timestamp("ns"))
-    dec = T.decode_timestamp(s["streams"][(1, "DATA")],
-                             s["streams"][(1, "SECONDARY")], t.size)
-    assert np.array_equal(dec, t)
+    assert np.array_equal(_ns(_cpp(_ts(t))), t)
 
 
 def test_timestamp_cross_impl():
-    # pyarrow writes timestamp[ns] ORC columns with the same layout
+    # pyarrow writes timestamp[ns] ORC columns with the same layout:
+    # the engine's streams match ORC C++'s byte for byte
     t = np.array([1_500_000_000_000_000_000 + i * 1_000_003
                   for i in range(1000)], dtype=np.int64)
+    assert np.array_equal(_ns(_cpp(_ts(t))), t)
     s = _orc_stripe(t.view("datetime64[ns]"), pa.timestamp("ns"))
-    dec = T.decode_timestamp(s["streams"][(1, "DATA")],
-                             s["streams"][(1, "SECONDARY")], 1000)
-    assert np.array_equal(dec, t)
+    data, sec = T.encode_timestamp(t)
+    assert data.tobytes() == bytes(s["streams"][(1, "DATA")])
+    assert sec.tobytes() == bytes(s["streams"][(1, "SECONDARY")])
 
 
 # --- T2 decimal64 ----------------------------------------------------------
 
 def test_decimal64_roundtrip():
+    import decimal
     v = RNG.integers(-(10 ** 17), 10 ** 17, 2000)
-    assert np.array_equal(
-        T.decode_decimal64(T.encode_decimal64(v), 2000), v)
+    col = pa.array([decimal.Decimal(int(x)).scaleb(-3) for x in v],
+                   type=pa.decimal128(18, 3))
+    back = _own(col, compression="zlib")
+    assert back.type == col.type and back.equals(col)
 
 
 # --- T5 binary -------------------------------------------------------------
@@ -124,41 +155,25 @@ def test_decimal64_roundtrip():
 def test_binary_roundtrip_and_cross_impl():
     blobs = [RNG.integers(0, 256, RNG.integers(0, 50)).astype(np.uint8)
              .tobytes() for _ in range(800)]
-    data = np.frombuffer(b"".join(blobs), np.uint8)
-    lens = np.array([len(b) for b in blobs], dtype=np.int64)
-    enc = T.encode_binary(data, lens)
-    ddata, dlens = T.decode_binary(enc, 800)
-    assert np.array_equal(dlens, lens)
-    assert ddata.tobytes() == data.tobytes()
-    s = _orc_stripe(blobs, pa.binary())
-    got_lens = T.decode_binary(
-        {"data": b"", "length": s["streams"][(1, "LENGTH")]}, 800)[1]
-    assert np.array_equal(got_lens, lens)
-    assert s["streams"][(1, "DATA")] == data.tobytes()
-
-
-# --- S5 char / varchar -----------------------------------------------------
-
-def test_char_pad_and_varchar_truncate():
-    vals = [b"a", b"abcdef", b"", b"abc"]
-    data = np.frombuffer(b"".join(vals), np.uint8)
-    lens = np.array([len(v) for v in vals], dtype=np.int64)
-    # CHAR(4): pad to 4
-    enc = T.encode_char(data, lens, width=4, pad=True)
-    out = T.decode_char(enc, 4)
-    assert out.to_pylist() == ["a   ", "abcd", "    ", "abc "]
-    # VARCHAR(4): truncate only
-    enc = T.encode_char(data, lens, width=4, pad=False)
-    out = T.decode_char(enc, 4)
-    assert out.to_pylist() == ["a", "abcd", "", "abc"]
+    col = pa.array(blobs, type=pa.binary())
+    for back in (_own(col), _cpp(col)):
+        assert back.to_pylist() == blobs
+    # the engine writer's DATA stream is ORC C++'s, byte for byte
+    f = tempfile.mktemp(suffix=".orc")
+    write_orc(pa.table({"x": col}), f, row_index_stride=0)
+    own = parse_orc(f)[0]["streams"][(1, "DATA")]
+    os.unlink(f)
+    assert own == _orc_stripe(blobs, pa.binary())["streams"][(1, "DATA")]
+    assert own == b"".join(blobs)
 
 
 def test_timestamp_java_convention_roundtrip():
     # orc-core layout (ORC-611 divergence): round-trips exactly through
-    # the matching decoder EXCEPT instants in (-1s, 0) whose sub-second
-    # has a nonzero millisecond part — orc-core itself reads those back
-    # positive (collision with the (0, N) pair); byte-compat means
-    # reproducing that loss faithfully.
+    # write_orc/read_orc (the engine's Footer names the Java writer, so
+    # read_orc applies orc-core's fix-up) EXCEPT instants in (-1s, 0)
+    # whose sub-second has a nonzero millisecond part — orc-core
+    # itself reads those back positive (collision with the (0, N)
+    # pair); byte-compat means reproducing that loss faithfully.
     secs = RNG.integers(-3_000_000_000, 3_000_000_000, 1500)
     nanos = np.concatenate([
         RNG.integers(0, 10 ** 9, 500),
@@ -168,29 +183,23 @@ def test_timestamp_java_convention_roundtrip():
     t = np.append(t, [0, 1, -1_000_000_000, -2_500_000_000,
                       -999_999_000,  # (-1s,0) with ms part == 0: exact
                       1_500_000_000])
-    data, sec = T.encode_timestamp(t, convention="java")
-    got = T.decode_timestamp(data, sec, t.size, convention="java")
+    got = _ns(_own(_ts(t), timestamp_convention="java"))
     garbled = (t < 0) & (t > -10 ** 9) & ((t % 10 ** 9) // 10 ** 6 > 0)
     assert np.array_equal(got[~garbled], t[~garbled])
     # the garbled interval reads back as the positive counterpart —
     # exactly what orc-core does
     assert np.array_equal(got[garbled], t[garbled] % 10 ** 9)
     # the documented example: -1us -> +999999us
-    d2, s2 = T.encode_timestamp(np.array([-1000]), convention="java")
-    assert T.decode_timestamp(d2, s2, 1, convention="java")[0] \
-        == 999_999_000
+    assert _ns(_own(_ts(np.array([-1000])),
+                    timestamp_convention="java"))[0] == 999_999_000
 
 
 def test_timestamp_java_matches_orc_core_streams(spark):
     # byte-level pin: engine java-convention streams == orc-core
     # (spark.write.orc) streams for the same instants, and the engine
-    # decoder reproduces what spark.read.orc returns
+    # reader reproduces what spark.read.orc returns
     import glob
-    import sys
-    import tempfile
 
-    sys.path.insert(0, "tests")
-    from orc_tail import parse_orc
     us = [999_999, -1, 1, -999, -500_000, 500_000, -1_000_000,
           -2_500_000, -999_999, -86_400_000_001, 0]
     df = spark.createDataFrame([(u,) for u in us], "us long").selectExpr(
@@ -201,14 +210,11 @@ def test_timestamp_java_matches_orc_core_streams(spark):
       .option("compression", "none").orc(out)
     f = glob.glob(f"{out}/part-*.orc")[0]
     s = parse_orc(f)[0]
-    n = s["n_rows"]
     t = np.array(us, dtype=np.int64) * 1000
     data, sec = T.encode_timestamp(t, convention="java")
     assert data.tobytes() == bytes(s["streams"][(2, "DATA")])
     assert sec.tobytes() == bytes(s["streams"][(2, "SECONDARY")])
-    dec = T.decode_timestamp(s["streams"][(2, "DATA")],
-                             s["streams"][(2, "SECONDARY")], n,
-                             convention="java")
+    dec = _ns(read_orc(f).column("ts").combine_chunks())
     got = {r["us"]: r["u"] for r in spark.read.orc(out).selectExpr(
         "us", "timestampdiff(MICROSECOND, "
         "TIMESTAMP '1970-01-01 00:00:00Z', ts) AS u").collect()}
@@ -220,9 +226,6 @@ def test_timestamp_java_file_read_by_orc_java(spark):
     # pre-1970 sub-second instants exactly (outside the java-garbled
     # (-1s, 0) ms interval) — the interop gap the cpp convention
     # leaves open by design; default convention unchanged
-    import tempfile
-
-    from engine.orc_file import write_orc
     us = np.array([-2_500_000, -86_400_000_001, -999_999,
                    1_500_000, 0, -123_456_789_123_456], dtype=np.int64)
     t = pa.table({
